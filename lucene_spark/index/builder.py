@@ -59,6 +59,9 @@ from dataclasses import dataclass, field as dc_field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -86,6 +89,10 @@ WAND_SUBS = int(os.environ.get("LUCENE_SPARK_WAND_SUBS", "4"))
 # granularity (blocks become their own single sub-range) and shrinks
 # the nested metadata columns for write-heavy workloads.
 MAX_BUILD_CHUNKS = 512  # cap on serial resume-chunk jobs in phase A
+# the term_dict columns SparkIndex.prefetch_terms reads on the driver
+_DRIVER_TD_SCHEMA = pa.schema(
+    [("field", pa.string()), ("term", pa.string()), ("df", pa.int64())]
+)
 
 
 @dataclass
@@ -1169,9 +1176,6 @@ class SparkIndex:
             from lucene_spark.streaming.incremental import _finish_merge_swap
 
             _finish_merge_swap(index_dir)
-        self.docs = spark.read.parquet(os.path.join(index_dir, "docs"))
-        self.postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-        self.term_dict = spark.read.parquet(os.path.join(index_dir, "term_dict"))
         fc_path = os.path.join(index_dir, "term_dict_fc")
         # front-coded dictionary blocks (B6/.tii): used by terms_from
         # when present; disabled while unmerged delta chunks are
@@ -1200,15 +1204,19 @@ class SparkIndex:
         self._df_cache: dict[tuple[str, str], int] = {}
 
     def _attach_delta(self) -> None:
-        """Union unmerged streaming tiers into the queryable views (an
-        unmerged reference index is likewise searchable across its whole
-        segment list): sealed GENERATIONS (promote_delta output —
-        compacted, sorted mini-indexes) plus live delta micro-batches
-        not yet promoted into any generation. Term stats aggregate
-        across every tier."""
+        """List the index's tiers and open every view over them: the
+        base, each sealed GENERATION (promote_delta output — compacted,
+        sorted mini-indexes) and the live delta micro-batches not yet
+        promoted into any generation (an unmerged reference index is
+        likewise searchable across its whole segment list). The Spark
+        postings/docs/term_dict views union the tiers; the driver-side
+        dictionary reader behind :meth:`prefetch_terms` opens the same
+        tiers' term_dict files here, so both see one snapshot. Term
+        stats aggregate across every tier."""
         spark = self.spark
+        # (root dir, live batch ids — None for a whole-directory tier)
+        tiers: list[tuple[str, list[int] | None]] = [(self.index_dir, None)]
         promoted: set[int] = set()
-        tiers = []  # (postings, docs, term_dict) DataFrames to union
         gen_root = os.path.join(self.index_dir, "gens")
         if os.path.isdir(gen_root):
             for entry in sorted(os.listdir(gen_root)):
@@ -1216,65 +1224,76 @@ class SparkIndex:
                 gmeta = os.path.join(gdir, "meta")
                 if not os.path.exists(os.path.join(gmeta, "_SUCCESS")):
                     continue  # partial generation (crashed promote) — ignored
-                tiers.append(
-                    tuple(
-                        spark.read.parquet(os.path.join(gdir, sub))
-                        for sub in ("postings", "docs", "term_dict")
-                    )
-                )
+                tiers.append((gdir, None))
                 for m in spark.read.parquet(gmeta).collect():
                     promoted.update(json.loads(m["batch_ids"]))
-                    self._delta_docs += m["n_docs"]
-                    for f, fs in json.loads(m["field_stats"]).items():
-                        agg = self._delta_field_stats.setdefault(
-                            f, {"sum_len": 0, "n_docs_with_field": 0}
-                        )
-                        agg["sum_len"] += fs["sum_len"]
-                        agg["n_docs_with_field"] += fs["n_docs_with_field"]
+                    self._add_tier_stats(m)
 
         droot = os.path.join(self.index_dir, "delta")
         meta_dir = os.path.join(droot, "meta")
-        live_batches: list[int] = []
         if os.path.isdir(meta_dir):
+            live_batches: list[int] = []
             for m in spark.read.parquet(meta_dir).collect():
                 bid = int(m["batch_id"])
                 if bid in promoted:
                     continue  # already sealed into a generation
                 live_batches.append(bid)
-                self._delta_docs += m["n_docs"]
-                for f, fs in json.loads(m["field_stats"]).items():
-                    agg = self._delta_field_stats.setdefault(
-                        f, {"sum_len": 0, "n_docs_with_field": 0}
-                    )
-                    agg["sum_len"] += fs["sum_len"]
-                    agg["n_docs_with_field"] += fs["n_docs_with_field"]
+                self._add_tier_stats(m)
             if live_batches:
-                flt = F.col("batch").isin([int(b) for b in live_batches])
-                tiers.append(
-                    (
-                        spark.read.parquet(os.path.join(droot, "postings")).where(flt),
-                        spark.read.parquet(os.path.join(droot, "docs")).where(flt),
-                        spark.read.parquet(os.path.join(droot, "term_dict")).where(flt),
-                    )
-                )
+                tiers.append((droot, live_batches))
 
-        if not tiers:
-            return
-        self._fc_blocks = None  # tier terms aren't front-coded yet
-        for d_post, d_docs, d_td in tiers:
-            self.postings = self.postings.unionByName(
-                d_post.select(self.postings.columns)
-            )
-            self.docs = self.docs.unionByName(d_docs.select(self.docs.columns))
-            self.term_dict = self.term_dict.unionByName(
-                d_td.select(self.term_dict.columns)
-            )
-        self.term_dict = self.term_dict.groupBy("field", "term").agg(
-            F.sum("df").alias("df"),
-            F.sum("cf").alias("cf"),
-            F.sum("n_blocks").alias("n_blocks"),
-            F.max("max_tf").alias("max_tf"),
+        def read(root: str, batches: list[int] | None, sub: str) -> DataFrame:
+            df = spark.read.parquet(os.path.join(root, sub))
+            return df if batches is None else df.where(F.col("batch").isin(batches))
+
+        self.postings, self.docs, self.term_dict = (
+            read(self.index_dir, None, sub) for sub in ("postings", "docs", "term_dict")
         )
+        for root, batches in tiers[1:]:
+            self.postings = self.postings.unionByName(
+                read(root, batches, "postings").select(self.postings.columns)
+            )
+            self.docs = self.docs.unionByName(
+                read(root, batches, "docs").select(self.docs.columns)
+            )
+            self.term_dict = self.term_dict.unionByName(
+                read(root, batches, "term_dict").select(self.term_dict.columns)
+            )
+        # one row per (field, term, tier): the dictionary expansion
+        # source, summed driver-side (index/expansion.py) — expanding
+        # over the aggregate below would add a shuffle job per field
+        self._tier_term_dict = self.term_dict
+        if len(tiers) > 1:
+            self._fc_blocks = None  # tier terms aren't front-coded yet
+            self.term_dict = self.term_dict.groupBy("field", "term").agg(
+                F.sum("df").alias("df"),
+                F.sum("cf").alias("cf"),
+                F.sum("n_blocks").alias("n_blocks"),
+                F.max("max_tf").alias("max_tf"),
+            )
+        parts = []
+        for root, batches in tiers:
+            td = os.path.join(root, "term_dict")
+            dirs = (
+                [td]
+                if batches is None
+                else [os.path.join(td, f"batch={b}") for b in batches]
+            )
+            parts += [
+                pads.dataset(d, schema=_DRIVER_TD_SCHEMA, format="parquet")
+                for d in dirs
+                if os.path.isdir(d)
+            ]
+        self._td_driver = parts[0] if len(parts) == 1 else pads.dataset(parts)
+
+    def _add_tier_stats(self, meta_row) -> None:
+        self._delta_docs += meta_row["n_docs"]
+        for f, fs in json.loads(meta_row["field_stats"]).items():
+            agg = self._delta_field_stats.setdefault(
+                f, {"sum_len": 0, "n_docs_with_field": 0}
+            )
+            agg["sum_len"] += fs["sum_len"]
+            agg["n_docs_with_field"] += fs["n_docs_with_field"]
 
     def refresh_tombstones(self) -> None:
         """(Re)load the logical-delete tombstone table if present."""
@@ -1319,23 +1338,33 @@ class SparkIndex:
         return self._analyzer
 
     def prefetch_terms(self, terms) -> None:
-        """Batch-load df/cf for (field, text) pairs into the driver cache
-        with ONE filtered scan of term_dict (predicate pushdown on the
-        sorted term column → row-group pruning)."""
+        """Batch-load df for (field, text) pairs into the driver cache by
+        reading the tiers' term_dict parquet on the driver — no Spark
+        job, the in-process lookup the reference does against its
+        .tii/.tis pair (SegmentInfo.php:916-1039). One pyarrow scan per
+        field with an ``==`` / range / ``isin`` filter (row-group and
+        file pruning on the sorted term column); df sums across tiers,
+        like the Spark view's groupBy."""
         todo = [(t.field, t.text) for t in terms if (t.field, t.text) not in self._df_cache]
         if not todo:
             return
-        # per-field In filters (flat nodes) — a per-term OR chain
-        # overflows the JVM stack past ~300 terms (1024-term fuzzy)
         by_field: dict = {}
         for f, x in todo:
             by_field.setdefault(f, set()).add(x)
-        cond = None
+        found: dict[tuple[str, str], int] = {}
+        term = pc.field("term")
         for f, texts in by_field.items():
-            c = (F.col("field") == f) & F.col("term").isin(sorted(texts))
-            cond = c if cond is None else (cond | c)
-        rows = self.term_dict.where(cond).select("field", "term", "df").collect()
-        found = {(r["field"], r["term"]): r["df"] for r in rows}
+            texts = sorted(texts)
+            tbl = self._td_driver.to_table(
+                columns=["term", "df"],
+                filter=(pc.field("field") == f)
+                & (term >= texts[0])
+                & (term <= texts[-1])
+                & term.isin(texts),
+            )
+            cols = (tbl.column("term").to_pylist(), tbl.column("df").to_pylist())
+            for x, df in zip(*cols):
+                found[(f, x)] = found.get((f, x), 0) + df
         for key in todo:
             self._df_cache[key] = found.get(key, 0)
 
@@ -1445,8 +1474,11 @@ class SparkIndex:
     ) -> list[str]:
         from lucene_spark.index.expansion import match_terms_regex
 
-        return match_terms_regex(
-            self.term_dict, field, prefix, java_regex, limit, is_match
+        return self._seed_df(
+            field,
+            match_terms_regex(
+                self._tier_term_dict, field, prefix, java_regex, limit, is_match
+            ),
         )
 
     def match_terms_fuzzy(
@@ -1454,8 +1486,17 @@ class SparkIndex:
     ) -> list[str]:
         from lucene_spark.index.expansion import match_terms_fuzzy
 
-        return match_terms_fuzzy(
-            self.term_dict, field, prefix, rest, min_similarity, limit, is_match
+        return self._seed_df(
+            field,
+            match_terms_fuzzy(
+                self._tier_term_dict,
+                field,
+                prefix,
+                rest,
+                min_similarity,
+                limit,
+                is_match,
+            ),
         )
 
     def match_terms_range(
@@ -1463,9 +1504,19 @@ class SparkIndex:
     ) -> list[str]:
         from lucene_spark.index.expansion import match_terms_range
 
-        return match_terms_range(
-            self.term_dict, field, lower, upper, inclusive, limit
+        return self._seed_df(
+            field,
+            match_terms_range(
+                self._tier_term_dict, field, lower, upper, inclusive, limit
+            ),
         )
+
+    def _seed_df(self, field: str, pairs: list[tuple[str, int]]) -> list[str]:
+        """Cache the df of expanded terms (collected with them and summed
+        over tiers) and return the term texts."""
+        for text, df in pairs:
+            self._df_cache[(field, text)] = df
+        return [text for text, _df in pairs]
 
     def avg_field_len(self, field: str) -> float:
         fs = self.stats["fields"][field]

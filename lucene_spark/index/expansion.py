@@ -22,8 +22,11 @@ band (``sim > min_sim - 1e-12``) and callers re-score the surviving
 candidates with the authoritative Python formula, so a last-ulp
 divergence cannot change membership.
 
-All three helpers paginate on truncation (cursor on the last collected
-term) — one Spark job in the normal case, never an unbounded collect.
+All three helpers return sorted ``(term, df)`` pairs and paginate on
+truncation (cursor on the last collected term) — one Spark job per
+field in the normal case, never an unbounded collect. The df rides
+along so the caller can seed its doc-freq cache: the rewritten query's
+optimize and weight math then look up no expanded term again.
 """
 
 from __future__ import annotations
@@ -54,30 +57,45 @@ def _field_slice(td: DataFrame, field: str, prefix: str) -> DataFrame:
     return td.where(cond)
 
 
-def _paged_collect(src: DataFrame, limit: int, is_match=None) -> list[str]:
-    """Sorted term texts of ``src``, collected in (limit + margin)-row
-    pages with a last-term cursor. Stops once MORE THAN ``limit``
-    authoritative matches are in hand (``is_match`` re-checks each
-    candidate with the caller's Python predicate; default: every
-    candidate is a match) or the source is exhausted — so a JVM filter
-    that is a slight superset of the Python predicate can never cause a
-    silently truncated expansion: pagination continues until the
-    reference's own over-limit condition is decidable."""
+def _paged_collect(
+    src: DataFrame, limit: int, is_match=None
+) -> list[tuple[str, int]]:
+    """Sorted ``(term, df)`` of ``src``, collected in (limit + margin)-row
+    pages with a last-term cursor. ``src`` may hold one row per index
+    tier for a term (the unaggregated union of the tiers' dictionaries
+    — an aggregate would add a shuffle, and with it a second job, to
+    every expansion); the df of a term's rows is summed here. A full
+    page leaves its last term to the next one, whose rows may continue
+    there. Stops once MORE THAN ``limit`` authoritative matches are in
+    hand (``is_match`` re-checks each candidate with the caller's
+    Python predicate; default: every candidate is a match) or the
+    source is exhausted — so a JVM filter that is a slight superset of
+    the Python predicate can never cause a silently truncated
+    expansion: pagination continues until the reference's own
+    over-limit condition is decidable."""
     page = limit + _COLLECT_MARGIN
-    out: list[str] = []
+    out: dict[str, int] = {}
     n_match = 0
     cursor: str | None = None
     while True:
-        q = src if cursor is None else src.where(F.col("term") > cursor)
-        rows = q.select("term").orderBy("term").limit(page).collect()
+        q = src if cursor is None else src.where(F.col("term") >= cursor)
+        rows = q.select("term", "df").orderBy("term").limit(page).collect()
+        full = len(rows) == page
+        if full:
+            cursor = rows[-1]["term"]
+            rows = [r for r in rows if r["term"] != cursor]
+            if not rows:  # one term's tier rows fill the page
+                page *= 2
+                continue
         for r in rows:
             t = r["term"]
-            out.append(t)
-            if is_match is None or is_match(t):
-                n_match += 1
-        if len(rows) < page or n_match > limit:
-            return out
-        cursor = rows[-1]["term"]
+            if t not in out:
+                out[t] = 0
+                if is_match is None or is_match(t):
+                    n_match += 1
+            out[t] += r["df"]
+        if not full or n_match > limit:
+            return list(out.items())
 
 
 def match_terms_regex(
@@ -87,8 +105,8 @@ def match_terms_regex(
     java_regex: str,
     limit: int,
     is_match=None,
-) -> list[str]:
-    """Sorted terms of ``field`` matching ``java_regex`` (anchored),
+) -> list[tuple[str, int]]:
+    """Sorted (term, df) of ``field`` matching ``java_regex`` (anchored),
     scanned under ``prefix``. ``is_match`` is the caller's authoritative
     Python predicate (over-limit detection counts ITS matches); the
     returned candidate list is re-verified by the caller."""
@@ -103,8 +121,8 @@ def match_terms_range(
     upper: str | None,
     inclusive: bool,
     limit: int,
-) -> list[str]:
-    """Sorted terms of ``field`` in the [lower, upper] range
+) -> list[tuple[str, int]]:
+    """Sorted (term, df) of ``field`` in the [lower, upper] range
     (bounds optional; ``inclusive`` applies to both ends, matching
     Range.php:138-219). At most ``limit + margin`` terms returned."""
     cond = F.col("field") == field
@@ -163,8 +181,8 @@ def match_terms_fuzzy(
     min_similarity: float,
     limit: int,
     is_match=None,
-) -> list[str]:
-    """Sorted candidate terms of ``field`` whose reference fuzzy
+) -> list[tuple[str, int]]:
+    """Sorted candidate (term, df) of ``field`` whose reference fuzzy
     similarity against ``prefix + rest`` exceeds ``min_similarity``
     (epsilon-banded; callers re-score with the Python formula — the
     over-limit condition counts ``is_match`` hits). The levenshtein +

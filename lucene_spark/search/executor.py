@@ -488,6 +488,11 @@ class SparkSearcher:
         self.index = index
         self.spark = index.spark
 
+    def _empty(self) -> DataFrame:
+        # built only on the paths that return it: createDataFrame is a
+        # driver round trip of its own
+        return self.spark.createDataFrame([], "doc_id long, score double")
+
     # ---- public API --------------------------------------------------
     def search(
         self,
@@ -584,9 +589,8 @@ class SparkSearcher:
             raise TypeError(
                 f"pruning must be 'off', 'auto' or 'force' (got {pruning!r})"
             )
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
         if isinstance(q, (Insignificant, EmptyResult)):
-            return empty
+            return self._empty()
         if (
             pruning != "off"
             and k
@@ -697,7 +701,7 @@ class SparkSearcher:
         else:
             df = self._node_df(q, 1.0, "bm25")
         if df is None:
-            return empty
+            return self._empty()
         out = df.where(F.col("score") != 0.0)
         # logical deletes: skip tombstoned docs at hit-collection time,
         # BEFORE top-score normalization — matching the reference, which

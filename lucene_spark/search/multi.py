@@ -42,6 +42,11 @@ from lucene_spark.search.parser import parse_query
 from lucene_spark.search.query import Query
 
 
+def _texts(pairs: list[tuple[str, int]]) -> list[str]:
+    # the merged df is global; each shard's df cache keeps its own
+    return [text for text, _df in pairs]
+
+
 class _GlobalStatsView:
     """Sub-index proxy that answers corpus-statistics questions (n_docs,
     doc_freq, avg_field_len) with MERGED values while delegating
@@ -164,33 +169,25 @@ class MultiSearcher:
                 yield t
 
     def _merged_term_dict(self) -> DataFrame:
-        """Distinct (field, term) union of the shards' dictionaries —
-        the distributed-expansion source. PERSISTED on first use so a
-        multi-field rewrite's expansions (and each pagination page
-        inside one expansion) re-read the materialized union instead
-        of re-running the dictionary-sized distinct shuffle per call;
-        released by :meth:`unpersist_merged_dict` (or when the
-        sessions' block manager evicts it — it is a dictionary, orders
-        of magnitude smaller than postings)."""
-        if getattr(self, "_merged_td", None) is None:
-            un = reduce(
-                lambda a, b: a.unionByName(b),
-                [ix.term_dict.select("field", "term") for ix in self.indexes],
-            )
-            self._merged_td = un.distinct().persist()
-        return self._merged_td
-
-    def unpersist_merged_dict(self) -> None:
-        """Release the cached cross-shard dictionary union."""
-        if getattr(self, "_merged_td", None) is not None:
-            self._merged_td.unpersist()
-            self._merged_td = None
+        """Union of the shards' per-tier dictionary rows — the
+        distributed-expansion source. No distinct/aggregate shuffle: the
+        expansion collect sums a term's rows on the driver, so one
+        expansion stays one job per field."""
+        return reduce(
+            lambda a, b: a.unionByName(b),
+            [
+                ix._tier_term_dict.select("field", "term", "df")
+                for ix in self.indexes
+            ],
+        )
 
     def match_terms_regex(self, field, prefix, java_regex, limit, is_match=None):
         from lucene_spark.index.expansion import match_terms_regex
 
-        return match_terms_regex(
-            self._merged_term_dict(), field, prefix, java_regex, limit, is_match
+        return _texts(
+            match_terms_regex(
+                self._merged_term_dict(), field, prefix, java_regex, limit, is_match
+            )
         )
 
     def match_terms_fuzzy(
@@ -198,21 +195,25 @@ class MultiSearcher:
     ):
         from lucene_spark.index.expansion import match_terms_fuzzy
 
-        return match_terms_fuzzy(
-            self._merged_term_dict(),
-            field,
-            prefix,
-            rest,
-            min_similarity,
-            limit,
-            is_match,
+        return _texts(
+            match_terms_fuzzy(
+                self._merged_term_dict(),
+                field,
+                prefix,
+                rest,
+                min_similarity,
+                limit,
+                is_match,
+            )
         )
 
     def match_terms_range(self, field, lower, upper, inclusive, limit):
         from lucene_spark.index.expansion import match_terms_range
 
-        return match_terms_range(
-            self._merged_term_dict(), field, lower, upper, inclusive, limit
+        return _texts(
+            match_terms_range(
+                self._merged_term_dict(), field, lower, upper, inclusive, limit
+            )
         )
 
     # ---- merged corpus statistics (driver-side integers) ----
@@ -261,8 +262,8 @@ class MultiSearcher:
         if isinstance(query, Query):
             query = query.rewrite(self)
             # Warm every shard's df cache ONCE before the scatter so the
-            # threads below don't race into duplicate prefetch jobs (the
-            # global-stats view prefetches all shards from whichever
+            # threads below don't race into duplicate dictionary reads
+            # (the global-stats view prefetches all shards from whichever
             # thread asks first; with warm caches that's a no-op).
             self.prefetch_terms(query.query_terms())
 
@@ -280,9 +281,9 @@ class MultiSearcher:
             )
 
         # PARALLEL scatter: each shard's plan construction runs driver-
-        # side Spark jobs (term prefetch misses, WAND seeds, candidate
-        # fetches) that serialized shard-by-shard when this was a plain
-        # loop — on a cluster the per-shard jobs touch disjoint executor
+        # side Spark jobs (WAND seeds, candidate fetches) that
+        # serialized shard-by-shard when this was a plain loop — on a
+        # cluster the per-shard jobs touch disjoint executor
         # sets, so overlapping them is the scatter half of scatter/
         # gather. The tree handed to each thread is primitive and
         # rewrite/optimize are copy-on-write (no shared-tree mutation —

@@ -1,0 +1,165 @@
+"""Query compilation runs no Spark job for plain terms.
+
+``SparkIndex.prefetch_terms`` reads the tiers' term_dict parquet on the
+driver (the reference's in-process .tii/.tis lookup), so parse →
+rewrite → optimize → execute plans a term, AND, NOT or phrase query
+without scheduling anything. Dictionary expansion (wildcard / fuzzy /
+range) is the one compile step that scans on the cluster: one job per
+field, however many terms it matches, because the collected df seeds
+the driver cache.
+"""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from lucene_spark.search.executor import SparkSearcher
+from lucene_spark.search.parser import parse_query
+from lucene_spark.search.query import Term
+
+
+def _next_job_id(spark) -> int:
+    """Id the next Spark job will get (job ids are assigned in
+    submission order; the listener bus is drained first so every
+    submitted job is visible to the status tracker)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    j = max(st.getJobIdsForGroup(None), default=-1) + 1
+    while st.getJobInfo(j) is not None:
+        j += 1
+    return j
+
+
+def _compile_jobs(ix, qstr: str, **kw) -> int:
+    """Spark jobs run by parse → rewrite → optimize → execute (no
+    collect), starting from an empty df cache."""
+    ix._df_cache.clear()
+    first = _next_job_id(ix.spark)
+    q = parse_query(qstr).rewrite(ix).optimize(ix)
+    SparkSearcher(ix).execute(q, k=10, **kw)
+    return _next_job_id(ix.spark) - first
+
+
+@pytest.fixture(scope="module")
+def tiered_index(spark, transcripts_df, tmp_path_factory):
+    """Base + one promoted generation + one live delta batch + tombstones."""
+    from lucene_spark.index import IndexConfig, build_index, load_index
+    from lucene_spark.index.lifecycle import delete_docs
+    from lucene_spark.streaming import IncrementalIndexWriter
+    from lucene_spark.streaming.incremental import promote_delta
+
+    conv = F.col("conv_id")
+    base = transcripts_df.where(conv < "conv00000020")
+    gen = transcripts_df.where((conv >= "conv00000020") & (conv < "conv00000030"))
+    live = transcripts_df.where(conv >= "conv00000030")
+    d = str(tmp_path_factory.mktemp("tiered"))
+    cfg = IndexConfig(seg_size=100)
+    n_base = build_index(spark, base, d, cfg).n_docs
+    w = IncrementalIndexWriter(d, cfg)
+    w.process_batch(gen, 0)
+    promote_delta(load_index(spark, d), cfg)
+    w.process_batch(live, 1)
+    ix = load_index(spark, d)
+    delete_docs(ix, [0, 5, n_base + 1])
+    assert os.path.exists(os.path.join(d, "gens", "gen=0", "meta", "_SUCCESS"))
+    assert os.path.isdir(os.path.join(d, "delta", "term_dict", "batch=1"))
+    assert ix.tombstones is not None
+    return ix
+
+
+def _spark_dict(ix) -> dict[tuple[str, str], int]:
+    rows = (
+        ix.term_dict.groupBy("field", "term").agg(F.sum("df").alias("df")).collect()
+    )
+    return {(r["field"], r["term"]): r["df"] for r in rows}
+
+
+ABSENT = [
+    Term("zzznotaterm", "text"),
+    Term("conv99999999", "conv_id"),
+    Term("spark", "conv_id"),  # present in another field only
+    Term("spark", "nosuchfield"),
+]
+
+
+def test_driver_doc_freq_matches_spark_across_tiers(tiered_index, spark_index):
+    from lucene_spark.search.multi import MultiSearcher
+
+    want = _spark_dict(tiered_index)
+    # every tier contributes: a gen-only and a live-only keyword term
+    assert want[("conv_id", "conv00000025")] > 0
+    assert want[("conv_id", "conv00000035")] > 0
+    terms = [Term(t, f) for f, t in want] + ABSENT
+    tiered_index._df_cache.clear()
+    tiered_index.prefetch_terms(terms)  # one driver read per field
+    for t in terms:
+        assert tiered_index.doc_freq(t) == want.get((t.field, t.text), 0), t
+        assert tiered_index.has_term(t) == ((t.field, t.text) in want), t
+
+    other = _spark_dict(spark_index)
+    ms = MultiSearcher([tiered_index, spark_index])
+    for t in terms:
+        key = (t.field, t.text)
+        assert ms.global_doc_freq(t) == want.get(key, 0) + other.get(key, 0), t
+
+
+@pytest.mark.parametrize("which", ["tiered", "base"])
+@pytest.mark.parametrize(
+    "qstr",
+    [
+        "text:spark",
+        "+text:spark +text:index",
+        "text:spark -text:index",
+        'text:"spark index"',
+    ],
+)
+def test_compile_runs_no_spark_job(tiered_index, spark_index, which, qstr):
+    ix = tiered_index if which == "tiered" else spark_index
+    assert _compile_jobs(ix, qstr) == 0
+
+
+@pytest.mark.parametrize(
+    "qstr", ["text:spa*", "text:spark~", "text:[a TO m]", "spa*"]
+)
+def test_expansion_runs_one_job_per_field(tiered_index, qstr):
+    fields = 1 if qstr.startswith("text:") else len(tiered_index.field_names())
+    assert _compile_jobs(tiered_index, qstr) == fields
+
+
+def _letters(i: int) -> str:
+    return "zqx" + chr(97 + i // 676) + chr(97 + (i // 26) % 26) + chr(97 + i % 26)
+
+
+def test_limit_sized_wildcard_is_one_dictionary_job(spark, tmp_path):
+    """1,000 terms under one prefix: the expansion is one job (not one
+    df lookup per expanded term) and ranks like the exact plan."""
+    from lucene_spark.index import IndexConfig, build_index
+
+    n = 1000
+    rows = [
+        (i, " ".join([_letters(i)] * (1 + i % 3) + ["filler"] * (i % 7)))
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    ix = build_index(
+        spark, df, str(tmp_path / "wide"), IndexConfig(field_policy={"text": "text"})
+    )
+    ix._df_cache.clear()
+    first = _next_job_id(spark)
+    q = parse_query("text:zqx*").rewrite(ix).optimize(ix)
+    searcher = SparkSearcher(ix)
+    auto = searcher.execute(q, k=10)
+    assert _next_job_id(spark) - first == 1
+    assert len(q.query_terms()) == n
+
+    # seeded dfs (auto) vs dfs read afresh from the dictionary (off)
+    ix._df_cache.clear()
+    off = searcher.execute(q, k=10, pruning="off")
+    got = [(r["doc_id"], r["score"]) for r in auto.collect()]
+    want = [(r["doc_id"], r["score"]) for r in off.collect()]
+    assert len(want) == 10
+    assert got == want

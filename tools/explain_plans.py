@@ -282,7 +282,7 @@ def build_sections(spark, e, sf):
             _spans_df(docs),
             "Round 5 (Lee et al. exact-substring dedup, distributed): "
             "one window inventory per corpus token, a map-side-combined "
-            "count on the 120-bit window hash (a corpus-hot boilerplate "
+            "count on the 128-bit window hash (a corpus-hot boilerplate "
             "window only makes a big COUNT — never a pair explosion, "
             "contrast the LSH bucket join), a leftsemi join back, and "
             "one id-keyed exchange for the interval-union window "

@@ -98,75 +98,79 @@ def main():
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(app_name="spans_smoke", master=f"local[{cpus}]",
                       shuffle_partitions=max(2 * cpus, 16))
-    spark.sparkContext.setLogLevel("ERROR")
-    docs = synth_corpus(spark, n_docs)
-    nA, nB, nAB = n_docs // 50, n_docs // 70, n_docs // 350
-
-    # --- span stats ---------------------------------------------------
-    t0 = time.time()
-    stats = duplicated_span_stats(docs, "doc_id", "text", k=K)
-    agg = stats.agg(
-        F.count(F.when(F.col("dup_tokens") > 0, 1)).alias("n_dup_docs"),
-        F.sum("dup_tokens").alias("sum_dup"),
-        F.sum("n_spans").alias("sum_spans"),
-        F.max("dup_frac").alias("max_frac"),
-    ).collect()[0]
-    t_stats = time.time() - t0
-    assert agg["n_dup_docs"] == nA + nB - nAB, (agg["n_dup_docs"], nA + nB - nAB)
-    assert agg["sum_dup"] == 10 * nA + 12 * nB, (agg["sum_dup"], 10 * nA + 12 * nB)
-    assert agg["sum_spans"] == nA + 2 * nB - nAB, (
-        agg["sum_spans"], nA + 2 * nB - nAB,
-    )  # the A∩B adjacent-run merge
-
-    # --- keep-first removal (checkpointed to parquet: the re-scan
-    # below must time the scan of the CLEANED corpus, not a lazy
-    # recompute of the whole removal pipeline — and a parquet handoff
-    # is both the production shape between pipeline phases and ~3×
-    # lighter on local disk than caching raw rows) ---------------------
-    t0 = time.time()
+    # removed on every exit: at tens of millions of docs the
+    # checkpoint is several GB, and a failed assert must not leak it
     ckpt = tempfile.mkdtemp(prefix="spans_smoke_ckpt_")
-    remove_duplicated_spans(docs, "doc_id", "text", k=K).write.mode(
-        "overwrite"
-    ).parquet(ckpt)
-    cleaned = spark.read.parquet(ckpt)
-    row = cleaned.agg(
-        F.count("*").alias("n"),
-        F.sum("removed_tokens").alias("removed"),
-    ).collect()[0]
-    t_remove = time.time() - t0
-    want_removed = 10 * (nA - 1) + 6 * nB
-    assert row["n"] == n_docs, (row["n"], n_docs)
-    assert row["removed"] == want_removed, (row["removed"], want_removed)
+    try:
+        spark.sparkContext.setLogLevel("ERROR")
+        docs = synth_corpus(spark, n_docs)
+        nA, nB, nAB = n_docs // 50, n_docs // 70, n_docs // 350
 
-    # --- idempotence: a second stats pass on the cleaned corpus finds
-    # only the one kept boilerplate copy (df=1 → nothing duplicated) ---
-    t0 = time.time()
-    n_still = (
-        duplicated_span_stats(cleaned, "id", "clean_text", k=K)
-        .where("dup_tokens > 0")
-        .count()
-    )
-    t_recheck = time.time() - t0
-    assert n_still == 0, n_still
+        # --- span stats ---------------------------------------------------
+        t0 = time.time()
+        stats = duplicated_span_stats(docs, "doc_id", "text", k=K)
+        agg = stats.agg(
+            F.count(F.when(F.col("dup_tokens") > 0, 1)).alias("n_dup_docs"),
+            F.sum("dup_tokens").alias("sum_dup"),
+            F.sum("n_spans").alias("sum_spans"),
+            F.max("dup_frac").alias("max_frac"),
+        ).collect()[0]
+        t_stats = time.time() - t0
+        assert agg["n_dup_docs"] == nA + nB - nAB, (agg["n_dup_docs"], nA + nB - nAB)
+        assert agg["sum_dup"] == 10 * nA + 12 * nB, (agg["sum_dup"], 10 * nA + 12 * nB)
+        assert agg["sum_spans"] == nA + 2 * nB - nAB, (
+            agg["sum_spans"], nA + 2 * nB - nAB,
+        )  # the A∩B adjacent-run merge
 
-    n_tokens = n_docs * BASE_TOKS + 6 * nB + 10 * nA
-    out = {
-        "metric": "duplicated_spans_smoke",
-        "n_docs": n_docs,
-        "n_tokens": n_tokens,
-        "cpus": cpus,
-        "k": K,
-        "stats_sec": round(t_stats, 1),
-        "stats_docs_per_sec": round(n_docs / t_stats, 1),
-        "remove_sec": round(t_remove, 1),
-        "recheck_sec": round(t_recheck, 1),
-        "dup_docs": int(agg["n_dup_docs"]),
-        "removed_tokens": int(row["removed"]),
-        "all_asserts": "green",
-    }
-    print(json.dumps(out), flush=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    spark.stop()
+        # --- keep-first removal (checkpointed to parquet: the re-scan
+        # below must time the scan of the CLEANED corpus, not a lazy
+        # recompute of the whole removal pipeline — and a parquet handoff
+        # is both the production shape between pipeline phases and ~3×
+        # lighter on local disk than caching raw rows) ---------------------
+        t0 = time.time()
+        remove_duplicated_spans(docs, "doc_id", "text", k=K).write.mode(
+            "overwrite"
+        ).parquet(ckpt)
+        cleaned = spark.read.parquet(ckpt)
+        row = cleaned.agg(
+            F.count("*").alias("n"),
+            F.sum("removed_tokens").alias("removed"),
+        ).collect()[0]
+        t_remove = time.time() - t0
+        want_removed = 10 * (nA - 1) + 6 * nB
+        assert row["n"] == n_docs, (row["n"], n_docs)
+        assert row["removed"] == want_removed, (row["removed"], want_removed)
+
+        # --- idempotence: a second stats pass on the cleaned corpus finds
+        # only the one kept boilerplate copy (df=1 → nothing duplicated) ---
+        t0 = time.time()
+        n_still = (
+            duplicated_span_stats(cleaned, "id", "clean_text", k=K)
+            .where("dup_tokens > 0")
+            .count()
+        )
+        t_recheck = time.time() - t0
+        assert n_still == 0, n_still
+
+        n_tokens = n_docs * BASE_TOKS + 6 * nB + 10 * nA
+        out = {
+            "metric": "duplicated_spans_smoke",
+            "n_docs": n_docs,
+            "n_tokens": n_tokens,
+            "cpus": cpus,
+            "k": K,
+            "stats_sec": round(t_stats, 1),
+            "stats_docs_per_sec": round(n_docs / t_stats, 1),
+            "remove_sec": round(t_remove, 1),
+            "recheck_sec": round(t_recheck, 1),
+            "dup_docs": int(agg["n_dup_docs"]),
+            "removed_tokens": int(row["removed"]),
+            "all_asserts": "green",
+        }
+        print(json.dumps(out), flush=True)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+        spark.stop()
 
 
 if __name__ == "__main__":
