@@ -20,3 +20,8 @@ Package map
 """
 
 __version__ = "0.1.0"
+
+from lucene_spark import _worker
+
+# once per Python worker process; a no-op on the driver (see _worker)
+_worker.install()

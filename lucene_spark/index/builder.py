@@ -465,7 +465,7 @@ def _invert_segment(cfg: IndexConfig):
     policy = cfg.field_policy
     store_pos = cfg.store_positions
 
-    def invert(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def invert(key, pdf):
         seg_id = int(key[0])
         pdf = pdf.sort_values("doc_id")
         doc_ids_all = pdf["doc_id"].to_numpy(np.int64)

@@ -66,7 +66,16 @@ def _window_occurrences(
     SQL-oracle parity: a collision there is recall noise, not a
     correctness break, and candidates are Jaccard-verified; this op's
     oracle groups by the shingle string, so the engine-side key choice
-    is free."""
+    is free.
+
+    Threat model: non-adversarial. The key assumes corpora whose text
+    was not crafted against it (crawls, transcripts, user documents).
+    Both seeds are public constants and xxhash64 is not a keyed
+    cryptographic hash, so anyone who can add text to the corpus can
+    compute windows that collide with a victim's window and have
+    remove_duplicated_spans delete the victim's text. For corpora an
+    attacker can write into, the key must be a keyed hash (e.g. an
+    HMAC with a per-run secret) instead."""
     docs = df.select(
         F.col(id_col).alias("id"),
         tokens(text_col).alias("toks"),
