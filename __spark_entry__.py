@@ -444,80 +444,24 @@ def _ft_wand(spark, sf_dir):
     )
 
 
-def _ft_wand_or(spark, sf_dir):
-    """OR-of-terms block-max WAND (true WAND: segment-granular
-    cross-term bounds, metadata-only aggregation) — exactness proven
-    against the same oracle as ft_bool_or."""
+def _forced(spark, sf_dir, qs: str) -> DataFrame:
+    """``qs`` through search(..., pruning='force'): the routed pruned
+    plan with the df and corpus-size thresholds ignored — for every
+    multi-term shape that is the co-grouped range kernel
+    (topk_and_cogrouped: one binary-level shuffle grouped by
+    BLOCK_DOC_RANGE doc range, per-range decode + intersect + score +
+    top-k inside applyInPandas). At sf0.01 'auto' keeps the exact plan,
+    so these rows are the only end-to-end oracle check the kernel gets.
+    The kernel is exact, so it carries the exact query's oracle."""
     ix = _index_for(spark, sf_dir)
     searcher = SparkSearcher(ix)
     return _rounded_topk(
         spark,
         lambda m: searcher.search(
-            "table spark vector", k=m, score_mode="bm25",
-            default_field="text", pruning="force",
+            qs, k=m, score_mode="bm25", default_field="text",
+            pruning="force",
         ).collect(),
     )
-
-
-def _ft_wand_and(spark, sf_dir):
-    """Block-max pruning for a required conjunction with a prohibited
-    term (`+table +spark -vector`, the round-3 scale path for hot-AND
-    queries: topk_wand_and — bucket-granular presence + cross-term
-    bounds, θ seeded from exact hits in the best buckets). Exactness
-    proven against the same oracle shape as ft_bool_not."""
-    ix = _index_for(spark, sf_dir)
-    searcher = SparkSearcher(ix)
-    return _rounded_topk(
-        spark,
-        lambda m: searcher.search(
-            "+table +spark -vector", k=m, score_mode="bm25",
-            default_field="text", pruning="force",
-        ).collect(),
-    )
-
-
-def _cogroup_call(spark, sf_dir, required: list[bool], pro: list[str]):
-    """Shared driver for the cogroup gates: score `table`/`spark`
-    (+ optional prohibition) through :func:`topk_and_cogrouped` — the
-    co-grouped range-intersection kernel that is the hot-conjunction /
-    uniform-impact-OR default at scale (BASELINE.md §7.1). At sf0.01
-    the normal router picks the intersect path (rarest df ≤ bound), so
-    these gates call the kernel DIRECTLY: the driver's hash compare is
-    the only end-to-end oracle check the cogroup plan gets."""
-    from lucene_spark.search.executor import topk_and_cogrouped
-    from lucene_spark.search.similarity import bm25_idf
-
-    ix = _index_for(spark, sf_dir)
-    terms = [Term("table", "text"), Term("spark", "text")]
-    weights = [bm25_idf(ix.doc_freq(t), ix.n_docs) for t in terms]
-    pro_terms = [Term(t, "text") for t in pro]
-
-    def rows_fn(m):
-        out, _ = topk_and_cogrouped(
-            ix, terms, weights, required, pro_terms, k=m
-        )
-        return out.collect()
-
-    return _rounded_topk(spark, rows_fn)
-
-
-def _ft_cogroup_and(spark, sf_dir):
-    """`+table +spark -vector` through the co-grouped range kernel
-    (topk_and_cogrouped, n_req=2): one binary-level shuffle grouped by
-    BLOCK_DOC_RANGE doc range, per-range decode+intersect+score+top-k
-    inside applyInPandas. Same oracle as ft_wand_and."""
-    return _cogroup_call(spark, sf_dir, [True, True], ["vector"])
-
-
-def _ft_cogroup_or(spark, sf_dir):
-    """`table spark` as a PURE disjunction through the cogroup kernel
-    (n_req=0 degenerate case — the bounded-shuffle OR strategy for
-    uniform-impact corpora where WAND bounds cannot prune). Same oracle
-    as ft_bool_or restricted to the two terms. Rotated out of the
-    50-slot gate registry in round 5 for dd_spans — the n_req=0 parity
-    is pinned by test_round3.test_cogroup_pure_disjunction_parity and
-    the fuzzer's strategy-agreement dimension."""
-    return _cogroup_call(spark, sf_dir, [False, False], [])
 
 
 def _ft_and_default(spark, sf_dir):
@@ -676,7 +620,6 @@ _FT_AND_SQL = _sum_topk_sql(
     "term IN ('table','spark')", required=["table", "spark"]
 )
 _FT_OR_SQL = _sum_topk_sql("term IN ('table','spark','vector')")
-_FT_COGROUP_OR_SQL = _sum_topk_sql("term IN ('table','spark')")
 _FT_NOT_SQL = _sum_topk_sql(
     "term = 'table'", required=["table"], prohibited=["vector"]
 )
@@ -2258,45 +2201,6 @@ FROM documents
 """
 
 
-def _mm_dims(spark, sf_dir):
-    """REAL image dimensions from raw bytes: synthesize byte-valid
-    PNG/JPEG fixtures per doc_id, then parse PNG IHDR / JPEG SOFn
-    headers (stdlib-only) through the Arrow/mapInPandas pipeline. The
-    oracle recomputes the dimensions from the fixture id formula
-    (ops/media_headers.fixture_dims), so a header-parse bug on either
-    branch hash-mismatches."""
-    from lucene_spark.ops.multimodal import (
-        attach_synthetic_media,
-        extract_image_dims,
-    )
-
-    payloads = attach_synthetic_media(
-        _docs(spark, sf_dir).select(F.col("doc_id").alias("id")), "id"
-    )
-    d = extract_image_dims(payloads)
-    return d.select(
-        F.col("id").cast("long").alias("id"),
-        "format",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        F.col("channels").cast("long").alias("channels"),
-    )
-
-
-# mirrors lucene_spark/ops/media_headers.py fixture_dims + synth_media:
-# even ids → PNG (RGBA if id%2==0 — always true on the PNG branch),
-# odd ids → JPEG (grayscale when id%3==0 else YCbCr)
-_MM_DIMS_SQL = """
-SELECT doc_id::BIGINT AS id,
-       CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS format,
-       (16 + doc_id % 640)::BIGINT AS width,
-       (16 + (doc_id * 7) % 480)::BIGINT AS height,
-       (CASE WHEN doc_id % 2 = 0 THEN 4
-             WHEN doc_id % 3 = 0 THEN 1 ELSE 3 END)::BIGINT AS channels
-FROM documents
-"""
-
-
 def _mm_audio(spark, sf_dir):
     """REAL audio metadata from raw bytes: synthesize complete 16-bit
     PCM WAVs per doc_id (zeroed sample data, true data-chunk lengths),
@@ -2371,83 +2275,6 @@ SELECT doc_id::BIGINT AS id,
         CASE doc_id % 3 WHEN 0 THEN 600 WHEN 1 THEN 1000
                         ELSE 90000 END)::BIGINT AS duration_ms
 FROM documents
-"""
-
-
-def _mm_resize_plan(spark, sf_dir):
-    """Aspect-preserving resize plan over REAL parsed dimensions: the
-    byte-valid PNG/JPEG fixtures are header-parsed (mm_dims pipeline),
-    then ops.multimodal.plan_resize computes the capped-long-side
-    target geometry as pure Catalyst integer math — no payload read.
-    The oracle recomputes both the fixture dims formula and the resize
-    arithmetic, so either a parse or a planning bug hash-mismatches."""
-    from lucene_spark.ops.multimodal import (
-        attach_synthetic_media,
-        extract_image_dims,
-        plan_resize,
-    )
-
-    payloads = attach_synthetic_media(
-        _docs(spark, sf_dir).select(F.col("doc_id").alias("id")), "id"
-    )
-    plan = plan_resize(extract_image_dims(payloads), max_side=100)
-    return plan.select(
-        F.col("id").cast("long").alias("id"),
-        "width", "height", "out_width", "out_height",
-        F.col("scaled").cast("long").alias("scaled"),
-    )
-
-
-_MM_RESIZE_SQL = """
-WITH dims AS (
-  SELECT doc_id::BIGINT AS id,
-         (16 + doc_id % 640)::BIGINT AS width,
-         (16 + (doc_id * 7) % 480)::BIGINT AS height
-  FROM documents
-)
-SELECT id, width, height,
-       CASE WHEN GREATEST(width, height) <= 100 THEN width
-            ELSE GREATEST(1, (width * 100) // GREATEST(width, height))
-       END AS out_width,
-       CASE WHEN GREATEST(width, height) <= 100 THEN height
-            ELSE GREATEST(1, (height * 100) // GREATEST(width, height))
-       END AS out_height,
-       (GREATEST(width, height) > 100)::BIGINT AS scaled
-FROM dims
-"""
-
-
-def _mm_frame_plan(spark, sf_dir):
-    """Uniform frame-sample plan over REAL parsed video durations: the
-    byte-valid MP4 fixtures are box-walked to mvhd (mm_video pipeline),
-    then ops.multimodal.plan_frame_samples explodes n uniform sample
-    timestamps per video — metadata-only Catalyst math; the frame
-    extraction itself is the decode_real seam."""
-    from lucene_spark.ops.multimodal import (
-        attach_synthetic_video,
-        extract_video_meta,
-        plan_frame_samples,
-    )
-
-    payloads = attach_synthetic_video(
-        _docs(spark, sf_dir).select(F.col("doc_id").alias("id")), "id"
-    )
-    plan = plan_frame_samples(extract_video_meta(payloads), n_frames=5)
-    return plan.select(
-        F.col("id").cast("long").alias("id"), "frame_idx", "ts_ms"
-    )
-
-
-_MM_FRAME_SQL = """
-WITH v AS (
-  SELECT doc_id::BIGINT AS id,
-         ((1000 + (doc_id * 17) % 9000) * 1000 //
-          CASE doc_id % 3 WHEN 0 THEN 600 WHEN 1 THEN 1000
-                          ELSE 90000 END)::BIGINT AS duration_ms
-  FROM documents
-)
-SELECT v.id, t.i::BIGINT AS frame_idx, (v.duration_ms * t.i) // 5 AS ts_ms
-FROM v, range(0, 5) AS t(i)
 """
 
 
@@ -2706,20 +2533,19 @@ def _ft_term_strategies(spark, sf_dir):
 
 
 def _ft_or_strategies(spark, sf_dir):
-    """`table spark vector` exact + forced block-max WAND (former
-    ft_bool_or + ft_wand_or)."""
+    """`table spark vector` through the exact plan and the forced
+    pure-OR (n_req=0) cogroup kernel."""
     return _tag(_ft_bool_or(spark, sf_dir), "exact").unionByName(
-        _tag(_ft_wand_or(spark, sf_dir), "wand")
+        _tag(_forced(spark, sf_dir, "table spark vector"), "cogroup")
     )
 
 
 def _ft_and_strategies(spark, sf_dir):
-    """`+table +spark -vector` through forced bucket WAND AND the
-    co-grouped range-intersection kernel (former ft_wand_and +
-    ft_cogroup_and; the plain-exact run of the same query keeps its own
-    oracle in ft_bool_not's shape via ft_bool_and/ft_bool_not)."""
-    return _tag(_ft_wand_and(spark, sf_dir), "wand").unionByName(
-        _tag(_ft_cogroup_and(spark, sf_dir), "cogroup")
+    """`+table +spark -vector` through the exact plan and the forced
+    AND-NOT cogroup kernel (n_req=2, one prohibited term)."""
+    qs = "+table +spark -vector"
+    return _tag(_searched(spark, sf_dir, qs), "exact").unionByName(
+        _tag(_forced(spark, sf_dir, qs), "cogroup")
     )
 
 
@@ -2956,7 +2782,7 @@ def oracle_sql() -> dict[str, str]:
         # hash-checks every kernel's exactness claim in one row
         "ft_term_topk": _strategies_sql(_FT_TERM_SQL, ["exact", "wand"]),
         "ft_bool_and": _FT_AND_SQL,
-        "ft_bool_or": _strategies_sql(_FT_OR_SQL, ["exact", "wand"]),
+        "ft_bool_or": _strategies_sql(_FT_OR_SQL, ["exact", "cogroup"]),
         "ft_bool_not": _FT_NOT_SQL,
         "ft_phrase": _strategies_sql(_FT_PHRASE_SQL, ["exact", "cogroup"]),
         "ft_phrase_sloppy": _strategies_sql(
@@ -2970,7 +2796,7 @@ def oracle_sql() -> dict[str, str]:
         "ft_transcripts_bool": _FT_TRANSCRIPTS_SQL,
         "ft_phrase_scoped": _FT_PHRASE_SCOPED_SQL,
         "ft_wand_and": _strategies_sql(
-            _FT_WAND_AND_SQL, ["wand", "cogroup"]
+            _FT_WAND_AND_SQL, ["exact", "cogroup"]
         ),
         "ft_and_default": _FT_AND_SQL,
         "ft_presort_limit": _FT_PRESORT_SQL,

@@ -131,10 +131,10 @@ def main() -> None:
             runs.append(time.time() - t0)
         timings["q_wand_term"] = round(min(runs), 3)
 
-        # pruned hot conjunction (round-3 path): at this sf the router
-        # picks the selectivity-ordered intersection (rarest df under
-        # the collect bound); at 40M+ the same call routes to the
-        # co-grouped range kernel — both measured vs q_not's exact plan
+        # pruned hot conjunction: 'force' routes every multi-term shape
+        # to the co-grouped range kernel at any corpus size (the plan
+        # 'auto' picks past its thresholds) — measured vs q_not's exact
+        # plan
         runs = []
         for _ in range(reps):
             t0 = time.time()

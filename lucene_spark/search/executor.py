@@ -22,10 +22,14 @@ into a declarative DataFrame plan that Catalyst executes:
   Arrow-batched
 - top-k: ORDER BY score DESC, doc_id ASC LIMIT k (Spark's TakeOrdered)
 
-Block-max pruning for single-term/OR BM25 top-k lives in
-``topk_term_pruned`` — it scans only block METADATA first, derives a
-provable score threshold from the k best block upper bounds, and decodes
-only surviving blocks.
+Two pruned BM25 top-k kernels sit next to the exact plan, both exact by
+construction: single-term block-max WAND (:func:`topk_wand`) scans only
+block METADATA first, derives a provable score threshold from the k best
+block upper bounds, and decodes only surviving blocks; every multi-term
+shape (OR, AND, AND-NOT) and every phrase runs a co-grouped range kernel
+(:func:`topk_and_cogrouped`, :func:`topk_phrase_cogrouped`) that shuffles
+the compressed block binaries once by doc range and emits each range's
+top-k.
 """
 
 from __future__ import annotations
@@ -102,9 +106,9 @@ def decode_postings(
     ``doc_filter`` (an int64 array of doc ids — sorted here, broadcast
     to the executors) drops every non-matching posting INSIDE the kernel,
     before the Arrow transfer back to the JVM. This is the candidate-
-    fetch primitive: when a hot term's contribution is needed only on
-    a known candidate set (MAXSCORE non-essential terms, conjunction
-    intersection against a rare required term), the blocks still
+    fetch primitive: when a term's positions are needed only on a
+    known candidate set (a phrase next to a rare required term, the
+    '+conv_id:X +text:"a b"' shape), the blocks still
     decode — delta/varbyte streams can't be entered mid-block — but
     the rows that flow into the score aggregation shrink from df(term)
     to |candidates ∩ postings|, often 100×+ fewer (BASELINE.md §6.1:
@@ -429,6 +433,11 @@ RANGE_PRUNE_QUANTUM = 64  # docs per conjunction-pruning bucket
 # terms (e.g. a conv_id keyword, whose docs are contiguous) cover far
 # fewer buckets and prune correspondingly more
 
+RAREST_FETCH_MAX_DF = 1_000_000  # collect the rarest required term's
+# doc ids to the driver (≤ 8 MB of int64) as the in-kernel doc_filter
+# of a sibling phrase's position decode — the '+conv_id:X +text:"a b"'
+# shape; above it only the block-span restriction applies
+
 
 def _conjunction_restricted_postings(ix, all_terms, rare, rare_buckets=None):
     """Posting blocks of ``all_terms`` restricted to doc ranges where
@@ -513,8 +522,11 @@ class SparkSearcher:
         are ordered by the docs table's column values (id ASC tiebreak)
         instead of score.
 
-        ``pruning``: block-max WAND policy for eligible BM25 top-k
-        queries — 'off' | 'auto' | 'force' (see :meth:`execute`).
+        ``pruning``: pruned top-k policy for eligible BM25 queries —
+        'off' (exact plan), 'auto' (the routed plan — single-term WAND
+        or a cogroup kernel — past the df and corpus-size thresholds) or
+        'force' (the same routed plan, thresholds ignored); see
+        :meth:`execute`.
 
         ``default_operator``: 'OR' | 'AND' — bare query terms optional
         vs required (``QueryParser::setDefaultOperator``; string queries
@@ -561,19 +573,26 @@ class SparkSearcher:
     ) -> DataFrame:
         """Execute an optimized primitive tree.
 
-        ``pruning`` selects the block-max WAND path for eligible queries
-        (BM25, k>0, no tombstones, single-term or pure-OR MultiTerm):
+        ``pruning`` selects a pruned top-k plan for eligible queries
+        (BM25, k>0, no tombstones; a phrase, a single term, a pure-OR
+        MultiTerm, or a MultiTerm with at least one required term). The
+        routed plan is block-max WAND for a single term and the
+        co-grouped range kernel for a phrase and for every multi-term
+        shape:
 
         - ``'off'``   — always the exact full-scan plan;
-        - ``'auto'``  (default) — pruned strategies only where measured
-          to win: exact phrases route to the cogroup range kernel past
-          AUTO_PRUNING_MIN_DF; WAND / pruned conjunctions additionally
-          require n_docs >= AUTO_PRUNING_MIN_DOCS, because below that
-          the exact decode is already faster than the extra bound jobs
-          (measured at 868k turns: exact term 0.57 s vs WAND 1.67 s,
-          while at 40M+ WAND/cogroup win 2-25x — BASELINE.md §7.5/§8.1);
-          results are identical either way (the strategies are exact);
-        - ``'force'`` — pruned path whenever eligible (bench/validation).
+        - ``'auto'``  (default) — the routed plan only where measured
+          to win: exact phrases past AUTO_PRUNING_MIN_DF (sloppy ones
+          also need PHRASE_COGROUP_MIN_DOCS); terms and MultiTerms past
+          AUTO_PRUNING_MIN_DF and n_docs >= AUTO_PRUNING_MIN_DOCS,
+          because below that the exact decode is already faster than
+          the extra jobs (measured at 868k turns: exact term 0.57 s vs
+          WAND 1.67 s, while at 40M+ WAND/cogroup win 2-25x —
+          BASELINE.md §7.5/§8.1); results are identical either way
+          (the strategies are exact);
+        - ``'force'`` — the same routed plan, ignoring the df and
+          n_docs thresholds (bench/validation). It never selects a
+          plan 'auto' cannot reach.
 
         The value must be one of these strings — a boolean raises, so a
         caller can never pass True and silently get 'off'.
@@ -598,97 +617,9 @@ class SparkSearcher:
             and score_mode == "bm25"
             and self.index.tombstones is None  # bounds ignore deletes
         ):
-            if (
-                isinstance(q, PhraseQuery)
-                and "sub_max_docs" in self.index.postings.columns
-            ):
-                uniq, _slots = _uniq_slots(q.terms)
-                self.index.prefetch_terms(uniq)
-                total_df = sum(self.index.doc_freq(t) for t in uniq)
-                # sloppy freq runs a per-doc fallback on multi-position
-                # docs, so the cogroup kernel needs enough ranges to
-                # parallelize it — on small corpora (< ~122 ranges) the
-                # exact plan's bigger Arrow batches win (wand_bench:
-                # sloppy 10.8 s cogroup vs 6.7 s exact at 200k docs,
-                # while slop=0 cogroup already wins there); 'force'
-                # still routes unconditionally for tests/benches
-                auto_ok = total_df >= AUTO_PRUNING_MIN_DF and (
-                    q.slop == 0
-                    # per-SHARD size under MultiSearcher (routing_n_docs)
-                    # — the cogroup's range-parallelism bound is a local
-                    # property, same as the WAND MIN_DOCS gate below
-                    or getattr(
-                        self.index, "routing_n_docs", self.index.n_docs
-                    )
-                    >= PHRASE_COGROUP_MIN_DOCS
-                )
-                if pruning == "force" or auto_ok:
-                    out, _stats = topk_phrase_cogrouped(self.index, q, k=k)
-                    return out
-            cand = _wand_terms(q)
-            if cand is not None:
-                terms = [t for t, _b in cand]
-                self.index.prefetch_terms(terms)
-                total_df = sum(self.index.doc_freq(t) for t in terms)
-                if pruning == "force" or (
-                    total_df >= AUTO_PRUNING_MIN_DF
-                    and getattr(self.index, "routing_n_docs", self.index.n_docs)
-                    >= AUTO_PRUNING_MIN_DOCS
-                ):
-                    N = self.index.n_docs
-                    weights = [
-                        b * bm25_idf(self.index.doc_freq(t), N) for t, b in cand
-                    ]
-                    if (
-                        pruning != "force"
-                        and len(terms) > 1
-                        and "sub_max_docs" in self.index.postings.columns
-                    ):
-                        # multi-term pure OR in 'auto': the co-grouped
-                        # range kernel (n_req=0) — on the uniform-impact
-                        # transcripts corpus bucket-WAND bounds cannot
-                        # prune an OR (§7.1) and it measured SLOWER than
-                        # exact (10.1 s vs 8.8 s at 13.6M turns) while
-                        # the cogroup plan took 2.2 s. Single-term stays
-                        # on WAND (bounds separate there: 0.36% of
-                        # blocks decoded, scale-invariant). 'force'
-                        # keeps the bucket path for WAND validation.
-                        out, _stats = topk_and_cogrouped(
-                            self.index, terms, weights,
-                            [False] * len(terms), [], k=k,
-                        )
-                    else:
-                        out, _stats = topk_wand(self.index, terms, weights, k=k)
-                    return out
-            else:
-                conj = _wand_and_query(q)
-                if conj is not None:
-                    scorable, pro = conj
-                    terms = [t for t, _m, _r in scorable]
-                    self.index.prefetch_terms(terms + pro)
-                    total_df = sum(self.index.doc_freq(t) for t in terms)
-                    if pruning == "force" or (
-                        total_df >= AUTO_PRUNING_MIN_DF
-                        and getattr(self.index, "routing_n_docs", self.index.n_docs)
-                        >= AUTO_PRUNING_MIN_DOCS
-                    ):
-                        N = self.index.n_docs
-                        # same convention as the exact MultiTerm path:
-                        # per-occurrence idf contributions, whole sum
-                        # scaled once by q.boost
-                        weights = [
-                            q.boost * m * bm25_idf(self.index.doc_freq(t), N)
-                            for t, m, _r in scorable
-                        ]
-                        out, _stats = topk_wand_and(
-                            self.index,
-                            terms,
-                            weights,
-                            [r for _t, _m, r in scorable],
-                            pro,
-                            k=k,
-                        )
-                        return out
+            out = self._pruned_topk(q, k, force=pruning == "force")
+            if out is not None:
+                return out
         terms = _collect_terms(q)
         self.index.prefetch_terms(terms)
         if score_mode == "classic":
@@ -735,6 +666,49 @@ class SparkSearcher:
         if k:
             out = out.limit(k)
         return out
+
+    def _pruned_topk(self, q: Query, k: int, force: bool) -> DataFrame | None:
+        """The routed pruned top-k plan for ``q``, or None for the exact
+        plan: phrases → :func:`topk_phrase_cogrouped`; a single term →
+        :func:`topk_wand`; every other eligible MultiTerm (pure OR, AND,
+        AND-NOT) → :func:`topk_and_cogrouped`. ``force`` skips the df and
+        corpus-size thresholds, never the shape check."""
+        ix = self.index
+        # per-SHARD size under MultiSearcher (routing_n_docs): the
+        # kernels' parallelism and job overheads are local properties
+        n_docs = getattr(ix, "routing_n_docs", ix.n_docs)
+        if isinstance(q, PhraseQuery):
+            uniq, _slots = _uniq_slots(q.terms)
+            ix.prefetch_terms(uniq)
+            total_df = sum(ix.doc_freq(t) for t in uniq)
+            # sloppy freq runs a per-doc fallback on multi-position
+            # docs, so the cogroup kernel needs enough ranges to
+            # parallelize it — on small corpora (< ~122 ranges) the
+            # exact plan's bigger Arrow batches win (wand_bench: sloppy
+            # 10.8 s cogroup vs 6.7 s exact at 200k docs, while slop=0
+            # cogroup already wins there)
+            if force or (
+                total_df >= AUTO_PRUNING_MIN_DF
+                and (q.slop == 0 or n_docs >= PHRASE_COGROUP_MIN_DOCS)
+            ):
+                return topk_phrase_cogrouped(ix, q, k=k)[0]
+            return None
+        shape = _pruned_shape(ix, q)
+        if shape is None:
+            return None
+        terms, weights, required, pro = shape
+        total_df = sum(ix.doc_freq(t) for t in terms)
+        if not force and (
+            total_df < AUTO_PRUNING_MIN_DF or n_docs < AUTO_PRUNING_MIN_DOCS
+        ):
+            return None
+        if len(terms) == 1 and not pro:
+            # single term: bounds separate here (0.36% of blocks decoded
+            # at scale, BASELINE.md §7.5)
+            return topk_wand(ix, terms[0], weights[0], k=k)[0]
+        # every multi-term shape: one binary-level shuffle whose cost
+        # does not depend on the impact distribution (BASELINE.md §10.2)
+        return topk_and_cogrouped(ix, terms, weights, required, pro, k=k)[0]
 
     # ---- leaf scoring -------------------------------------------------
     def _leaf_df(
@@ -937,8 +911,8 @@ class SparkSearcher:
                     if ix.doc_freq(rare) * RANGE_PRUNE_QUANTUM * 4 <= N:
                         # row-level cut for phrase children: the
                         # '+conv_id:X +text:"exact phrase"' shape — the
-                        # rare term's doc ids (df-bounded collect, same
-                        # bound as the intersect path) filter the
+                        # rare term's doc ids (df-bounded collect,
+                        # RAREST_FETCH_MAX_DF) filter the
                         # phrase's position decode inside the kernel,
                         # so its Arrow transfer shrinks from df(term)
                         # rows to |candidates ∩ postings|. Collected
@@ -1253,7 +1227,7 @@ PHRASE_COGROUP_MIN_DOCS = 1_000_000  # 'auto' routes SLOPPY phrases to
 
 AUTO_PRUNING_MIN_DF = 65536  # 'auto' pruning: below this, block skipping
 # can't amortize the extra metadata jobs
-AUTO_PRUNING_MIN_DOCS = 4_000_000  # 'auto' WAND / pruned-conjunction
+AUTO_PRUNING_MIN_DOCS = 4_000_000  # 'auto' WAND / multi-term cogroup
 # corpus-size gate: at 868k turns every pruned boolean/term strategy
 # measured SLOWER than the exact plan (extra bound-evaluation jobs
 # dominate a sub-second decode: term 1.67 s vs 0.57 s exact, OR 6.9 s
@@ -1262,39 +1236,58 @@ AUTO_PRUNING_MIN_DOCS = 4_000_000  # 'auto' WAND / pruned-conjunction
 # stay conservative. The cogroup PHRASE kernel is NOT behind this gate
 # — it already wins at 200k docs (df-gated only; sloppy phrases keep
 # their own PHRASE_COGROUP_MIN_DOCS range-parallelism gate).
-CAND_BUCKET = 128  # docs per candidate-restriction bucket for the
-# MAXSCORE split: fine enough that a non-essential block survives only
-# if an essential candidate doc is ~block-distance away, coarse enough
-# that the explode factor on sparse blocks stays ≤ BLOCK_DOC_RANGE/128
-MAXSCORE_CAND_DF_BOUND = 2_000_000  # apply the MAXSCORE candidate
-# restriction only while the essential terms' summed df fits a
-# broadcast (matches the boolean anti-join broadcast bound)
-WAND_BUCKET = 2048  # docs per cross-term bound bucket (~16 blocks):
-# fine enough that a hot term's high-impact region doesn't smear its
-# bound across the whole segment, coarse enough that the bucket tables
-# stay ~n_blocks/16 rows of metadata
+WAND_BUCKET = 2048  # docs per presence bucket (~16 blocks) for the
+# cogroup kernels' metadata-only presence filter: fine enough that a
+# regionally absent required term drops its neighbours' blocks, coarse
+# enough that the bucket table stays ~n_blocks/16 rows of metadata
 
 
-def _wand_terms(q: Query) -> list[tuple[Term, float]] | None:
-    """[(unique term, summed boost)] if ``q`` is WAND-servable: a single
-    term or a pure disjunction (MultiTerm with every sign optional).
-    Duplicate terms are merged by SUMMING their boosts — topk_wand's
-    per-(field, term) weight lookup could otherwise under-bound a
-    duplicated term (weight counted once in ub, twice in scoring) and
-    prune blocks that still hold true top-k docs."""
+def _pruned_shape(
+    index: SparkIndex, q: Query
+) -> tuple[list[Term], list[float], list[bool], list[Term]] | None:
+    """(terms, weights, required, prohibited) if ``q`` is servable by a
+    pruned kernel: a single term, a pure disjunction (MultiTerm with
+    every sign optional), or a MultiTerm with at least one REQUIRED term
+    (signs None = pure conjunction; optional terms ride along in the
+    scoring set, prohibited terms drop their docs). ``None`` for every
+    other shape, and for a term that is both scorable and prohibited —
+    those take the exact plan.
+
+    Duplicated scorable terms merge into one unique term whose weight
+    sums its occurrences (q.boost · idf each) — the exact plan emits one
+    row per occurrence and sums, and the kernels key their weight by
+    (field, term). ``required`` is True if ANY occurrence is required.
+    Reference semantics anchor: MultiTerm required-conjunction scoring,
+    src/Search/Query/MultiTerm.php:333-401."""
+    N = index.n_docs
     if isinstance(q, TermQuery):
-        return [(q.term, q.boost)]
-    if (
-        isinstance(q, MultiTermQuery)
-        and q.signs is not None
-        and all(s is None for s in q.signs)
-    ):
-        merged: dict[tuple[str, str], list] = {}
-        for t in q.terms:
-            e = merged.setdefault((t.field, t.text), [t, 0.0])
-            e[1] += q.boost
-        return [(t, b) for t, b in merged.values()]
-    return None
+        index.prefetch_terms([q.term])
+        return [q.term], [q.boost * bm25_idf(index.doc_freq(q.term), N)], [True], []
+    if not isinstance(q, MultiTermQuery):
+        return None
+    signs = [True] * len(q.terms) if q.signs is None else q.signs
+    if not (all(s is None for s in signs) or any(s is True for s in signs)):
+        return None
+    merged: dict[tuple[str, str], list] = {}
+    pro: dict[tuple[str, str], Term] = {}
+    for t, s in zip(q.terms, signs):
+        key = (t.field, t.text)
+        if s is False:
+            pro.setdefault(key, t)
+            continue
+        e = merged.setdefault(key, [t, 0, False])
+        e[1] += 1
+        e[2] = e[2] or s is True
+    if merged.keys() & pro.keys():
+        return None
+    terms = [t for t, _m, _r in merged.values()]
+    prohibited = list(pro.values())
+    index.prefetch_terms(terms + prohibited)
+    weights = [
+        q.boost * m * bm25_idf(index.doc_freq(t), N) for t, m, _r in merged.values()
+    ]
+    required = [r for _t, _m, r in merged.values()]
+    return terms, weights, required, prohibited
 
 
 # block identity MUST include doc_base: across streaming tiers a base
@@ -1324,518 +1317,135 @@ def _terms_cond(terms: list[Term]) -> Column:
     )
 
 
-def _w_avgdl_exprs(
-    index: SparkIndex, terms: list[Term], weights: list[float]
-) -> tuple[Column, Column]:
-    """Per-row (weight, avgdl) literal lookups keyed on (field, term),
-    as a single map-literal ``element_at`` — NOT a nested WHEN chain,
-    whose expression depth grows with the term count and overflows the
-    JVM stack when a 1024-clause wildcard/fuzzy expansion is forced
-    through the WAND path (same class of fix as _terms_cond)."""
-    sep = "\x00"  # analyzer tokens / field names can't contain NUL
-    w_pairs: list[Column] = []
-    a_pairs: list[Column] = []
-    seen: set[tuple[str, str]] = set()
-    for t, w in zip(terms, weights):
-        k = (t.field, t.text)
-        if k in seen:  # create_map raises on duplicate keys
-            continue
-        seen.add(k)
-        key = F.lit(t.field + sep + t.text)
-        w_pairs += [key, F.lit(float(w))]
-        a_pairs += [key, F.lit(float(index.avg_field_len(t.field)))]
-    row_key = F.concat(F.col("field"), F.lit(sep), F.col("term"))
-    w_expr = F.coalesce(
-        F.element_at(F.create_map(*w_pairs), row_key), F.lit(0.0)
+def _partial(tf: Column, dl: Column, avgdl: float) -> Column:
+    """BM25 term-frequency saturation tf(k1+1)/(tf + k1(1−b+b·dl/avgdl))."""
+    k1, b = float(BM25_K1), float(BM25_B)
+    return (tf * F.lit(k1 + 1.0)) / (
+        tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / F.lit(avgdl))
     )
-    avgdl_expr = F.coalesce(
-        F.element_at(F.create_map(*a_pairs), row_key), F.lit(1.0)
-    )
-    return w_expr, avgdl_expr
 
 
-def _ub_expr(index: SparkIndex, terms: list[Term], weights: list[float]) -> Column:
+def _ub_expr(index: SparkIndex, term: Term, weight: float) -> Column:
     """Block upper bound from the stored Pareto impact pairs: the max of
     partial(tf_j, dl_j) over the block's non-dominated (tf, dl) docs —
     exact per-block max impact, far tighter than partial(max_tf,
     min_dl) which mixes tf and dl of DIFFERENT docs. partial() needs
     avgdl, so the bound is evaluated lazily here (codegen'd
     higher-order expression over the tiny arrays, no UDF)."""
-    k1, b = float(BM25_K1), float(BM25_B)
-    w_expr, avgdl_expr = _w_avgdl_exprs(index, terms, weights)
-    return w_expr * F.array_max(
+    avgdl = float(index.avg_field_len(term.field))
+    return F.lit(float(weight)) * F.array_max(
         F.zip_with(
             F.col("imp_tfs").cast("array<double>"),
             F.col("imp_dls").cast("array<double>"),
-            lambda tf, dl: (tf * F.lit(k1 + 1.0))
-            / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / avgdl_expr)),
+            lambda tf, dl: _partial(tf, dl, avgdl),
         )
     )
 
 
-def _sub_meta(
-    index: SparkIndex, terms: list[Term], weights: list[float]
-) -> DataFrame:
-    """Sub-range-granular block metadata: one row per (block, sub-range)
-    with the sub-range's doc span ``_smin``/``_smax`` and ``_sub`` = the
-    sub-range's EXACT weighted max impact — w·max over its own Pareto
-    (tf, dl) frontier of partial(tf, dl). Bounds built from sub-ranges
-    don't smear a single high-impact doc over the block's whole doc
-    span, which is what made uniform-impact OR disjunctions unprunable
-    at block granularity (BASELINE.md §6.1, round 2). Pre-r3 indexes
-    without the ``sub_*`` columns degrade to one sub-range per block
-    (exactly the round-2 block-granular behavior)."""
-    k1, b = float(BM25_K1), float(BM25_B)
-    base = index.postings.where(_terms_cond(terms))
-    w_expr, avgdl_expr = _w_avgdl_exprs(index, terms, weights)
-    if "sub_max_docs" in base.columns:
-        rows = base.select(
-            *_WAND_META_COLS,
-            F.explode(
-                F.arrays_zip(
-                    "sub_min_docs", "sub_max_docs", "sub_imp_tfs", "sub_imp_dls"
-                )
-            ).alias("_z"),
-        ).select(
-            *_WAND_META_COLS,
-            F.col("_z.sub_min_docs").alias("_smin"),
-            F.col("_z.sub_max_docs").alias("_smax"),
-            F.col("_z.sub_imp_tfs").alias("_sitf"),
-            F.col("_z.sub_imp_dls").alias("_sidl"),
-        )
-    else:  # pre-r3 index: the block is its own (single) sub-range
-        rows = base.select(
-            *_WAND_META_COLS,
-            F.col("doc_base").alias("_smin"),
-            F.col("max_docid").alias("_smax"),
-            F.col("imp_tfs").alias("_sitf"),
-            F.col("imp_dls").alias("_sidl"),
-        )
-    sub = w_expr * F.array_max(
-        F.zip_with(
-            F.col("_sitf").cast("array<double>"),
-            F.col("_sidl").cast("array<double>"),
-            lambda tf, dl: (tf * F.lit(k1 + 1.0))
-            / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / avgdl_expr)),
-        )
-    )
-    return rows.select(
-        *_WAND_META_COLS,
-        "_smin",
-        "_smax",
-        sub.alias("_sub"),
-    )
-
-
-def _bucketed_sub(smeta: DataFrame) -> DataFrame:
-    """Explode sub-range rows into the WAND_BUCKET-quantized doc-range
-    buckets they overlap (column ``_bkt``)."""
-    return smeta.withColumn(
-        "_bkt",
+def _sub_meta(index: SparkIndex, terms: list[Term]) -> DataFrame:
+    """(field, term, _bkt) for every WAND_BUCKET doc-range bucket that
+    one of the terms' posting SUB-ranges overlaps — presence at
+    sub-range granularity, so a bucket covered only by the gap between
+    two of a term's sub-ranges does not count as present. Metadata
+    columns only (the binary streams stay unread)."""
+    return index.postings.where(_terms_cond(terms)).select(
+        "field",
+        "term",
+        F.explode(F.arrays_zip("sub_min_docs", "sub_max_docs")).alias("_z"),
+    ).select(
+        "field",
+        "term",
         F.explode(
             F.sequence(
-                (F.col("_smin") / WAND_BUCKET).cast("long"),
-                (F.col("_smax") / WAND_BUCKET).cast("long"),
+                (F.col("_z.sub_min_docs") / WAND_BUCKET).cast("long"),
+                (F.col("_z.sub_max_docs") / WAND_BUCKET).cast("long"),
             )
-        ),
+        ).alias("_bkt"),
     )
-
-
-def _block_meta(index: SparkIndex, terms: list[Term], weights: list[float]) -> DataFrame:
-    """Metadata-only view of the query terms' posting blocks with the
-    weighted impact upper bound as ``_ub`` (binary streams unread —
-    parquet column pruning)."""
-    return (
-        index.postings.where(_terms_cond(terms))
-        .select(*_WAND_META_COLS, "max_docid", "n", "imp_tfs", "imp_dls")
-        .withColumn("_ub", _ub_expr(index, terms, weights))
-    )
-
-
-def _score_decoded(
-    index: SparkIndex,
-    terms: list[Term],
-    weights: list[float],
-    blocks: DataFrame,
-    doc_filter: "np.ndarray | None" = None,
-) -> DataFrame:
-    """Decode a block subset and emit (qid, doc_id, _s) weighted BM25
-    partial contributions (one row per posting). ``doc_filter`` keeps
-    only candidate docs' rows inside the decode kernel."""
-    import types
-
-    k1, b = float(BM25_K1), float(BM25_B)
-    w_arr = F.array(*[F.lit(float(w)) for w in weights])
-    a_arr = F.array(
-        *[F.lit(float(index.avg_field_len(t.field))) for t in terms]
-    )
-    decoded = decode_postings(
-        types.SimpleNamespace(postings=blocks), terms, doc_filter=doc_filter
-    )
-    partial = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1)
-        * (
-            F.lit(1.0 - b)
-            + F.lit(b) * F.col("dl") / F.element_at(a_arr, F.col("qid") + 1)
-        )
-    )
-    s = F.element_at(w_arr, F.col("qid") + 1) * partial
-    return decoded.select("qid", "doc_id", s.alias("_s"))
 
 
 def topk_wand(
     index: SparkIndex,
-    terms: list[Term],
-    weights: list[float],
+    term: Term,
+    weight: float,
     k: int = 10,
     collect_stats: bool = False,
 ) -> tuple[DataFrame, dict | None]:
-    """Distributed block-max WAND: exact BM25 top-k for a weighted
-    disjunction, decoding only blocks whose upper bound can reach the
-    top-k. score(doc) = sum_t weights[t] * bm25_partial(tf, dl).
+    """Distributed block-max WAND: exact BM25 top-k for ONE weighted
+    term, decoding only blocks whose upper bound can reach the top-k.
+    score(doc) = weight * bm25_partial(tf, dl).
 
-    Per-(term, block) metadata gives ub = w_t * partial(block_max_tf,
-    block_min_dl) (partial increasing in tf, decreasing in dl). Two
-    rounds, both provably exact, and NOTHING block-sized ever reaches
-    the driver — a stop-word term at 10^11 postings flows only through
-    DataFrame aggregations over the metadata columns (parquet column
-    pruning keeps the binary streams unread until decode):
+    Per-block metadata gives ub = weight * max partial over the block's
+    Pareto (tf, dl) impact pairs. Two rounds, both provably exact, and
+    NOTHING block-sized ever reaches the driver — a stop-word term at
+    10^11 postings flows only through DataFrame aggregations over the
+    metadata columns (parquet column pruning keeps the binary streams
+    unread until decode):
 
     1. seed θ: TakeOrdered the top-k blocks by ub (≤ k KEY rows to the
-       driver — bounded by k, not by df), decode them, sum the decoded
-       contributions per doc (a LOWER bound on each doc's true score),
-       θ = kth-largest lower bound (−inf if < k docs). There exist k
-       docs with true score ≥ θ, so the true kth score ≥ θ.
-    2. keep block b of term t iff ub_b + Σ_{t'≠t} segmax_{t',seg(b)}
-       ≥ θ, where segmax is the per-(segment, term) max ub — a
-       metadata-only groupBy joined back to the scan. Every doc d in a
-       dropped block has ub_doc(d) ≤ the dropped bound < θ ≤ true kth
-       score, so no doc of the true top-k (ties included — the filter
-       is ≥, not >) loses a contribution. Decode survivors, sum per
-       doc, TakeOrdered k.
+       driver — bounded by k, not by df), decode them; for one term a
+       doc's decoded score IS its complete score, so θ = kth-largest
+       seed score (−inf if < k docs) and the true kth score ≥ θ.
+    2. keep block b iff ub_b ≥ θ. Every doc d in a dropped block has
+       score(d) ≤ ub_b < θ ≤ true kth score, so no doc of the true
+       top-k (ties included — the filter is ≥, not >) is lost. Decode
+       survivors, TakeOrdered k.
 
-    For a single term the cross-term sum is empty and the filter is the
-    classic per-block ub ≥ θ; for OR-of-terms this is block-max WAND
-    with segment-granular cross-term bounds (reference has no WAND —
-    this is the scale path the north rule asks for). Returns (top-k
+    Multi-term shapes run the co-grouped range kernel instead
+    (:func:`topk_and_cogrouped`): on uniform-impact corpora bucket
+    bounds cannot prune an OR (BASELINE.md §7.1, §10.2). Returns (top-k
     DataFrame (doc_id, score), stats dict when ``collect_stats`` — two
     extra metadata-only count jobs).
     """
+    import types
+
     spark = index.spark
     k = max(int(k), 1)
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    Q = WAND_BUCKET
-
-    cond = _terms_cond(terms)
+    cond = _terms_cond([term])
     meta_cols = _WAND_META_COLS
-    meta = _block_meta(index, terms, weights)
+    meta = (
+        index.postings.where(cond)
+        .select(*meta_cols, "max_docid", "n", "imp_tfs", "imp_dls")
+        .withColumn("_ub", _ub_expr(index, term, weight))
+    )
+    avgdl = float(index.avg_field_len(term.field))
 
     def score_blocks(blocks: DataFrame) -> DataFrame:
-        return _score_decoded(index, terms, weights, blocks).groupBy(
-            "doc_id"
-        ).agg(F.sum("_s").alias("score"))
+        decoded = decode_postings(types.SimpleNamespace(postings=blocks), [term])
+        s = F.lit(float(weight)) * _partial(F.col("tf"), F.col("dl"), avgdl)
+        return decoded.groupBy("doc_id").agg(F.sum(s).alias("score"))
 
-    theta = float("-inf")
-    if len(terms) == 1:
-        # seed θ from the k highest-ub blocks (TakeOrdered — the driver
-        # receives ≤ k key rows regardless of term df); for one term a
-        # doc's decoded sum IS its complete score
-        seed_keys = [
-            tuple(r[c] for c in meta_cols)
-            for r in meta.orderBy(F.col("_ub").desc())
-            .select(*meta_cols)
-            .limit(k)
-            .collect()
-        ]
-        if not seed_keys:
-            return (
-                empty,
-                {"blocks_total": 0, "blocks_decoded": 0, "theta": None}
-                if collect_stats
-                else None,
-            )
-        keys_df = spark.createDataFrame(
-            seed_keys,
-            "field string, term string, seg_id long, block_id long, doc_base long",
+    # seed θ from the k highest-ub blocks (TakeOrdered — the driver
+    # receives ≤ k key rows regardless of term df)
+    seed_keys = [
+        tuple(r[c] for c in meta_cols)
+        for r in meta.orderBy(F.col("_ub").desc())
+        .select(*meta_cols)
+        .limit(k)
+        .collect()
+    ]
+    if not seed_keys:
+        return (
+            spark.createDataFrame([], "doc_id long, score double"),
+            {"blocks_total": 0, "blocks_decoded": 0, "theta": None}
+            if collect_stats
+            else None,
         )
-        seed_blocks = index.postings.where(cond).join(
-            F.broadcast(keys_df), meta_cols
-        )
-        seed_rows = (
-            score_blocks(seed_blocks)
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-            .collect()
-        )
-        if len(seed_rows) >= k:
-            theta = float(seed_rows[k - 1]["score"])
-        # round 2: classic per-block ub ≥ θ (empty cross-term sum)
-        survivors = index.postings.where(cond).where(
-            _ub_expr(index, terms, weights) >= F.lit(theta)
-        )
-    else:
-        # Multi-term disjunction. Cross-term bounds live on QUANTIZED
-        # doc-range buckets (WAND_BUCKET docs) at SUB-RANGE granularity
-        # (_sub_meta): bucketmax_{t,B} = max _sub over t's sub-ranges
-        # overlapping B bounds any contribution t can make to a doc in
-        # B, without smearing one high-impact doc over the block's
-        # whole doc span.
-        #
-        # θ seed: rank buckets by Σ_t bucketmax (the best possible doc
-        # score inside), decode ALL query-term blocks overlapping the
-        # top S buckets, and keep docs INSIDE those buckets — every
-        # contribution of such a doc comes from a block overlapping
-        # its own bucket, so these sums are COMPLETE scores and θ =
-        # kth best is a true lower bound on the kth best overall
-        # (round-2's top-k-blocks seed summed partial scores — far
-        # weaker for ORs whose top docs combine several mid terms).
-        # Bucket choice is HYBRID: the global top-S by Σ bucketmax
-        # (combination docs) ∪ each term's top-S by its own bucketmax
-        # (single-strong-term docs) — ranking by Σ alone collapses θ
-        # when the top combined buckets hold < k strong docs (observed:
-        # θ 0.08 vs true kth 9.4 on a hot∨rare query). S quadruples
-        # while hits < k; θ stays −inf if the whole corpus has < k
-        # matching docs — no pruning, still exact.
-        from pyspark.sql import Window
-
-        smeta = _sub_meta(index, terms, weights)
-        bmeta = _bucketed_sub(smeta)
-        bmax = bmeta.groupBy("_bkt", "field", "term").agg(
-            F.max("_sub").alias("_bmax")
-        )
-        bsum = bmax.groupBy("_bkt").agg(F.sum("_bmax").alias("_bsum"))
-        S = max(WAND_AND_SEED_BUCKETS, 1)
-        seed_bkts: list[int] = []
-        ms: dict[tuple[str, str], float] = {}
-        nul_s = F.lit(None).cast("string")
-        nul_d = F.lit(None).cast("double")
-        nul_l = F.lit(None).cast("long")
-        while True:
-            # one tagged-union collect per round: 'g' global top-S
-            # buckets, 't' per-term top-S buckets, 'm' per-term global
-            # max impact (for the MAXSCORE split below), 'c' occupied
-            # bucket count (loop exit) — 4 tiny aggregations, 1 job
-            w_rn = Window.partitionBy("field", "term").orderBy(
-                F.col("_bmax").desc(), F.col("_bkt").asc()
-            )
-            tag_g = (
-                bsum.orderBy(F.col("_bsum").desc())
-                .limit(S)
-                .select(
-                    F.lit("g").alias("_tag"),
-                    F.col("_bkt"),
-                    nul_s.alias("field"),
-                    nul_s.alias("term"),
-                    nul_d.alias("_val"),
-                )
-            )
-            tag_t = (
-                bmax.withColumn("_rn", F.row_number().over(w_rn))
-                .where(F.col("_rn") <= S)
-                .select(
-                    F.lit("t").alias("_tag"),
-                    F.col("_bkt"),
-                    "field",
-                    "term",
-                    nul_d.alias("_val"),
-                )
-            )
-            tag_m = bmax.groupBy("field", "term").agg(
-                F.max("_bmax").alias("_val")
-            ).select(
-                F.lit("m").alias("_tag"), nul_l.alias("_bkt"), "field", "term", "_val"
-            )
-            tag_c = bsum.agg(F.count("*").alias("_val")).select(
-                F.lit("c").alias("_tag"),
-                nul_l.alias("_bkt"),
-                nul_s.alias("field"),
-                nul_s.alias("term"),
-                F.col("_val").cast("double"),
-            )
-            bkt_set: set[int] = set()
-            n_occ = 0
-            for r in (
-                tag_g.unionByName(tag_t).unionByName(tag_m).unionByName(tag_c)
-            ).collect():
-                if r["_tag"] in ("g", "t"):
-                    bkt_set.add(int(r["_bkt"]))
-                elif r["_tag"] == "m":
-                    ms[(r["field"], r["term"])] = float(r["_val"])
-                else:
-                    n_occ = int(r["_val"])
-            bkt_ids = sorted(bkt_set)
-            if not bkt_ids:
-                break
-            seed_bkts = bkt_ids
-            seed_df = spark.createDataFrame(
-                [(x,) for x in bkt_ids], "_bkt long"
-            )
-            seed_keys = (
-                bmeta.join(F.broadcast(seed_df), "_bkt", "leftsemi")
-                .select(*meta_cols)
-                .distinct()
-            )
-            seed_blocks = index.postings.where(cond).join(seed_keys, meta_cols)
-            seed_rows = (
-                _score_decoded(index, terms, weights, seed_blocks)
-                # broadcast semi-join, NOT an isin literal: bkt_ids can
-                # grow to the full occupied-bucket count (S quadruples
-                # to n_occ when the corpus has < k hits) and a 10^5-id
-                # IN-list blows up plan size/analysis on the driver
-                .withColumn("_bkt", (F.col("doc_id") / Q).cast("long"))
-                .join(F.broadcast(seed_df), "_bkt", "leftsemi")
-                .groupBy("doc_id")
-                .agg(F.sum("_s").alias("score"))
-                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k)
-                .collect()
-            )
-            if len(seed_rows) >= k:
-                theta = float(seed_rows[k - 1]["score"])
-                break
-            if S >= n_occ:  # every occupied bucket examined
-                break
-            S *= 4
-
-        # survivor filter: keep block b of term t iff SOME of its
-        # sub-ranges sr and SOME bucket B overlapped by sr has
-        # _sub(sr) + Σ_{t'≠t} bucketmax_{t',B} ≥ θ. A doc d in a
-        # dropped block: its sub-range sr(d) overlaps its own bucket
-        # B(d), its t-contribution ≤ _sub(sr(d)) and every other
-        # term's contribution ≤ that term's bucketmax at B(d) — so
-        # score(d) ≤ the dropped bound < θ ≤ true kth score, and no
-        # true top-k doc (ties included — the filter is ≥) loses a
-        # contribution: provably exact.
-        keep_keys = (
-            bmeta.join(bmax, ["_bkt", "field", "term"])
-            .join(bsum, "_bkt")
-            .where(
-                F.col("_sub") + (F.col("_bsum") - F.col("_bmax"))
-                >= F.lit(theta)
-            )
-            .select(*meta_cols)
-            .distinct()
-        )
-        survivors = index.postings.where(cond).join(keep_keys, meta_cols)
-
-        # MAXSCORE split (Turtle & Flood): order terms by global max
-        # impact; the longest prefix whose cumulative sum stays < θ is
-        # NON-ESSENTIAL — a doc matching only those terms scores
-        # strictly < θ ≤ true kth, so every top-k doc matches some
-        # ESSENTIAL term. Non-essential blocks then need decoding only
-        # where an essential candidate doc lives (the Spark analogue
-        # of Lucene's skipTo into the cheap term): essential blocks
-        # decode first, their doc ids become the candidate set, and
-        # non-essential survivor blocks are kept only if their doc
-        # range overlaps a candidate (CAND_BUCKET-quantized equi-join;
-        # decoded rows then semi-join candidates doc-exactly, so the
-        # score shuffle carries candidates only). Applied when the
-        # essential side is small enough to broadcast.
-        order = sorted(
-            range(len(terms)),
-            key=lambda i: ms.get((terms[i].field, terms[i].text), float("inf")),
-        )
-        non_ess: list[int] = []
-        acc = 0.0
-        if theta > float("-inf"):
-            for i in order:
-                m = ms.get((terms[i].field, terms[i].text))
-                if m is None or len(non_ess) >= len(terms) - 1:
-                    break
-                if acc + m < theta:
-                    acc += m
-                    non_ess.append(i)
-                else:
-                    break
-        ess_ids = [i for i in range(len(terms)) if i not in set(non_ess)]
-        ess_df = sum(index.doc_freq(terms[i]) for i in ess_ids)
-        if non_ess and ess_df <= MAXSCORE_CAND_DF_BOUND:
-            ess_t = [terms[i] for i in ess_ids]
-            ess_w = [weights[i] for i in ess_ids]
-            non_t = [terms[i] for i in non_ess]
-            non_w = [weights[i] for i in non_ess]
-            # NOT persisted: a .persist() here is never unpersisted (the
-            # returned plan stays lazy), and in a long-lived serving
-            # session each MAXSCORE query would leak one cached plan
-            # until executor storage fills. The essential side is small
-            # (≤ MAXSCORE_CAND_DF_BOUND postings), so the one extra
-            # decode when the final union re-executes it is bounded —
-            # an unbounded cache leak is not.
-            ess_dec = _score_decoded(
-                index, ess_t, ess_w, survivors.where(_terms_cond(ess_t))
-            )
-            # candidate doc ids to the driver: bounded by ess_df ≤
-            # MAXSCORE_CAND_DF_BOUND (≤16 MB of int64) — Arrow collect,
-            # then a sorted array broadcast into the decode kernel
-            cand_ids = np.unique(
-                ess_dec.select("doc_id").toPandas()["doc_id"].to_numpy(np.int64)
-            )
-            cand_b = spark.createDataFrame(
-                [(int(x),) for x in np.unique(cand_ids // CAND_BUCKET)],
-                "_cbkt long",
-            )
-            non_keys = (
-                meta.where(_terms_cond(non_t))
-                .join(keep_keys, meta_cols, "leftsemi")
-                .withColumn(
-                    "_cbkt",
-                    F.explode(
-                        F.sequence(
-                            (F.col("doc_base") / CAND_BUCKET).cast("long"),
-                            (F.col("max_docid") / CAND_BUCKET).cast("long"),
-                        )
-                    ),
-                )
-                .join(F.broadcast(cand_b), "_cbkt", "leftsemi")
-                .select(*meta_cols)
-                .distinct()
-            )
-            non_blocks = index.postings.where(_terms_cond(non_t)).join(
-                non_keys, meta_cols
-            )
-            # rows for non-candidate docs die inside the kernel — the
-            # Arrow transfer and the score shuffle carry candidates only
-            non_dec = _score_decoded(
-                index, non_t, non_w, non_blocks, doc_filter=cand_ids
-            )
-            out = (
-                ess_dec.unionByName(non_dec)
-                .groupBy("doc_id")
-                .agg(F.sum("_s").alias("score"))
-                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k)
-            )
-            stats = None
-            if collect_stats:
-                dec_keys = (
-                    survivors.where(_terms_cond(ess_t))
-                    .select(*meta_cols)
-                    .unionByName(non_keys)
-                )
-                if seed_bkts:
-                    seed_df = spark.createDataFrame(
-                        [(x,) for x in seed_bkts], "_bkt long"
-                    )
-                    dec_keys = dec_keys.unionByName(
-                        bmeta.join(F.broadcast(seed_df), "_bkt", "leftsemi")
-                        .select(*meta_cols)
-                    )
-                stats = {
-                    "blocks_total": meta.count(),
-                    "blocks_decoded": dec_keys.distinct().count(),
-                    "theta": theta,
-                    "essential": [
-                        (terms[i].field, terms[i].text) for i in ess_ids
-                    ],
-                    # block pruning can be impossible (uniform scatter:
-                    # every block overlaps candidates) while the row
-                    # cut is the real win — report both
-                    "rows_total": int(sum(index.doc_freq(t) for t in terms)),
-                    "rows_emitted": ess_dec.count() + non_dec.count(),
-                    "n_candidates": int(len(cand_ids)),
-                }
-            return out, stats
+    keys_df = spark.createDataFrame(
+        seed_keys,
+        "field string, term string, seg_id long, block_id long, doc_base long",
+    )
+    seed_blocks = index.postings.where(cond).join(F.broadcast(keys_df), meta_cols)
+    seed_rows = (
+        score_blocks(seed_blocks)
+        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        .limit(k)
+        .collect()
+    )
+    theta = float(seed_rows[k - 1]["score"]) if len(seed_rows) >= k else float("-inf")
+    survivors = index.postings.where(cond).where(
+        _ub_expr(index, term, weight) >= F.lit(theta)
+    )
     out = (
         score_blocks(survivors)
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
@@ -1851,187 +1461,6 @@ def topk_wand(
     return out, stats
 
 
-WAND_AND_SEED_BUCKETS = 8  # initial θ-seed bucket count for conjunction
-# pruning (quadrupled until ≥ k hits are found or buckets run out); kept
-# small — each seed round decodes only the blocks overlapping the chosen
-# buckets, and the later survivor filter does the real pruning
-
-
-def _wand_and_query(q: Query) -> tuple[list[tuple[Term, int, bool]], list[Term]] | None:
-    """(scorable [(unique term, multiplicity, required?)], prohibited
-    terms) if ``q`` is WAND-AND-servable: a MultiTermQuery with at least
-    one REQUIRED term (signs None = pure conjunction). Optional terms
-    ride along in the scoring set; prohibited terms become the exact
-    anti-join. Multiplicity folds duplicated scorable terms into one
-    weight (the exact path emits one row per occurrence and sums).
-    Reference semantics anchor: selectivity-ordered required-term
-    intersection, src/Search/Query/MultiTerm.php:333-339."""
-    if not isinstance(q, MultiTermQuery):
-        return None
-    signs = q.signs
-    active = [
-        (t, True if signs is None else signs[i]) for i, t in enumerate(q.terms)
-    ]
-    if not any(s is True for _t, s in active):
-        return None
-    merged: dict[tuple[str, str], list] = {}
-    pro: list[Term] = []
-    pro_seen: set[tuple[str, str]] = set()
-    for t, s in active:
-        key = (t.field, t.text)
-        if s is False:
-            if key not in pro_seen:
-                pro_seen.add(key)
-                pro.append(t)
-            continue
-        e = merged.setdefault(key, [t, 0, False])
-        e[1] += 1
-        if s is True:
-            e[2] = True
-    if any(key in pro_seen for key in merged):
-        return None  # term both scorable and prohibited → exact path
-    scorable = [(t, m, r) for t, m, r in merged.values()]
-    return scorable, pro
-
-
-def _restrict_blocks_to_buckets(index: SparkIndex, terms: list[Term], bkts_df):
-    """Postings view of ``terms`` keeping only blocks whose doc range
-    overlaps a bucket in ``bkts_df`` (metadata-only semi-join)."""
-    import types
-
-    cond = _terms_cond(terms)
-    keys = (
-        _bucketed_sub(_sub_meta(index, terms, [0.0] * len(terms)))
-        .join(bkts_df, "_bkt", "leftsemi")
-        .select(*_WAND_META_COLS)
-        .distinct()
-    )
-    return types.SimpleNamespace(
-        postings=index.postings.where(cond).join(keys, _WAND_META_COLS)
-    )
-
-
-RAREST_FETCH_MAX_DF = 1_000_000  # run the conjunction as a selectivity-
-# ordered intersection (decode rarest required term → candidate ids →
-# doc-filtered fetch of the rest) when the rarest required df fits a
-# driver collect (≤8 MB of int64). Reference semantics anchor: the
-# reference intersects MultiTerm postings smallest-first
-# (src/Search/Query/MultiTerm.php:333-339); this is that plan shape,
-# distributed, with the candidate set pushed into the decode kernel.
-INTERSECT_BLOCK_RESTRICT_MAX_BKTS = 65_536  # build the metadata block-
-# overlap restriction only while the candidate bucket list stays a
-# cheap driver-side literal table; past it, candidates are dense enough
-# that every block overlaps anyway (kernel row filtering still applies)
-
-
-def _topk_and_intersect(
-    index: SparkIndex,
-    terms: list[Term],
-    weights: list[float],
-    req_ids: list[int],
-    pro_terms: list[Term],
-    rarest: Term,
-    k: int,
-    collect_stats: bool,
-) -> tuple[DataFrame, dict | None]:
-    """Exact conjunction top-k by candidate fetch: the rarest required
-    term's docs ARE the candidate superset (every hit contains it), so
-    decode it docs-only, collect the ids (df-bounded by
-    RAREST_FETCH_MAX_DF), and decode every term with the candidate set
-    as an in-kernel doc filter. Blocks of the other terms are first
-    pruned to those whose [doc_base, max_docid] span overlaps a
-    candidate bucket — exact from metadata alone; a block overlapping
-    no candidate's id cannot contain one. Cost shape at scale: one
-    full decode of the RAREST postings + a row-filtered fetch of the
-    hot terms whose output is |candidates ∩ postings| rows, not df —
-    the analogue of the reference's smallest-first intersection
-    (MultiTerm.php:333-339) where the '+rare +hot' plan never
-    materializes the hot list."""
-    spark = index.spark
-    cand_ids = np.unique(
-        decode_postings(index, [rarest], docs_only=True)
-        .select("doc_id")
-        .toPandas()["doc_id"]
-        .to_numpy(np.int64)
-    )
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    if len(cand_ids) == 0:
-        return empty, (
-            {"path": "intersect", "blocks_total": 0, "blocks_decoded": 0,
-             "rows_emitted": 0, "n_candidates": 0}
-            if collect_stats
-            else None
-        )
-    others = [t for t in terms if (t.field, t.text) != (rarest.field, rarest.text)]
-    cb = np.unique(cand_ids // CAND_BUCKET)
-    all_cond = _terms_cond(terms)
-    if others and len(cb) <= INTERSECT_BLOCK_RESTRICT_MAX_BKTS:
-        # Arrow-shipped (pandas) rather than a py4j tuple list: the
-        # bucket table can reach 65536 rows at the 1M-df bound
-        cb_df = spark.createDataFrame(
-            pd.DataFrame({"_cbkt": cb.astype(np.int64)})
-        )
-        other_keys = (
-            index.postings.where(_terms_cond(others))
-            .select(*_WAND_META_COLS, "max_docid")
-            .withColumn(
-                "_cbkt",
-                F.explode(
-                    F.sequence(
-                        (F.col("doc_base") / CAND_BUCKET).cast("long"),
-                        (F.col("max_docid") / CAND_BUCKET).cast("long"),
-                    )
-                ),
-            )
-            .join(F.broadcast(cb_df), "_cbkt", "leftsemi")
-            .select(*_WAND_META_COLS)
-            .distinct()
-        )
-        rare_cond = _terms_cond([rarest])
-        blocks = index.postings.where(rare_cond).unionByName(
-            index.postings.where(_terms_cond(others)).join(
-                other_keys, _WAND_META_COLS
-            )
-        )
-    else:
-        blocks = index.postings.where(all_cond)
-    scored = _score_decoded(index, terms, weights, blocks, doc_filter=cand_ids)
-    n_req = len(req_ids)
-    agg = (
-        scored.groupBy("doc_id")
-        .agg(
-            F.sum("_s").alias("score"),
-            F.countDistinct(
-                F.when(F.col("qid").isin(req_ids), F.col("qid"))
-            ).alias("_mr"),
-        )
-        .where(F.col("_mr") == n_req)
-        .drop("_mr")
-    )
-    if pro_terms:
-        # prohibited membership matters only ON candidates — doc-filter
-        # the docs-only decode, so a stop-word NOT costs |candidates|
-        # rows, then always broadcast (bounded by the candidate count)
-        pro_docs = (
-            decode_postings(index, pro_terms, docs_only=True, doc_filter=cand_ids)
-            .select("doc_id")
-            .distinct()
-        )
-        agg = agg.join(F.broadcast(pro_docs), "doc_id", "left_anti")
-    out = agg.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-    stats = None
-    if collect_stats:
-        stats = {
-            "path": "intersect",
-            "blocks_total": index.postings.where(all_cond).count(),
-            "blocks_decoded": blocks.select(*_WAND_META_COLS).count(),
-            "rows_total": int(sum(index.doc_freq(t) for t in terms)),
-            "rows_emitted": scored.count(),
-            "n_candidates": int(len(cand_ids)),
-        }
-    return out, stats
-
-
 def topk_and_cogrouped(
     index: SparkIndex,
     terms: list[Term],
@@ -2041,12 +1470,14 @@ def topk_and_cogrouped(
     k: int = 10,
     collect_stats: bool = False,
 ) -> tuple[DataFrame, dict | None]:
-    """Exact conjunction top-k for HOT required terms by co-grouped
-    range intersection — the 100-TB plan shape for `+hot +hot [-hot]`
-    where every term's df defeats both the candidate collect
-    (:func:`_topk_and_intersect`) and bound-based block pruning
-    (uniform-impact corpora: the 40M transcripts smoke pruned 16% and
-    ran SLOWER than exact — BASELINE.md §7.2).
+    """Exact BM25 top-k for every multi-term shape — pure OR
+    (``required`` all False), AND and AND-NOT — by co-grouped range
+    intersection. Bound-based block pruning cannot prune these shapes on
+    uniform-impact corpora (the 40M transcripts smoke pruned 16% and ran
+    SLOWER than exact — BASELINE.md §7.2), and a candidate collect of
+    the rarest term measured no faster than this kernel even for
+    `+rare +hot` (BASELINE.md §10.2). ``terms`` must be unique;
+    ``weights`` are per-term (q.boost · multiplicity · idf).
 
     The builder splits every posting block at BLOCK_DOC_RANGE doc-id
     boundaries (builder.py:544), so ALL of a doc's postings — every
@@ -2072,10 +1503,8 @@ def topk_and_cogrouped(
     k = max(int(k), 1)
     req_ids = [i for i, r in enumerate(required) if r]
     n_req = len(req_ids)
-    # n_req == 0 is the pure-disjunction degenerate case: no presence
-    # filter (every range can host a hit), hit = any scorable match not
-    # prohibited — the bounded-shuffle OR strategy for uniform-impact
-    # corpora where WAND cannot prune
+    # n_req == 0 is the pure disjunction: no presence filter (every
+    # range can host a hit), hit = any scorable match not prohibited
     k1, b = float(BM25_K1), float(BM25_B)
     all_terms = list(terms) + pro_terms
     # (field, term) → (qid, weight, avgdl); prohibited map to qid -1
@@ -2180,11 +1609,8 @@ def _presence_filtered_src(index: SparkIndex, all_terms, req_terms):
     if not req_terms:
         # pure disjunction: every range can host a hit
         return src
-    bmeta = _bucketed_sub(
-        _sub_meta(index, req_terms, [0.0] * len(req_terms))
-    )
     present = (
-        bmeta.select("_bkt", "field", "term")
+        _sub_meta(index, req_terms)
         .distinct()
         .groupBy("_bkt")
         .agg(F.countDistinct("field", "term").alias("_np"))
@@ -2376,207 +1802,6 @@ def topk_phrase_cogrouped(
     return out, stats
 
 
-def topk_wand_and(
-    index: SparkIndex,
-    terms: list[Term],
-    weights: list[float],
-    required: list[bool],
-    pro_terms: list[Term] | None = None,
-    k: int = 10,
-    collect_stats: bool = False,
-    intersect_max_df: int | None = None,
-    hot_strategy: str = "cogroup",
-) -> tuple[DataFrame, dict | None]:
-    """Distributed block-max pruning for REQUIRED conjunctions — the AND
-    analogue of :func:`topk_wand`, the round-3 answer to the one query
-    shape with no sublinear path (`+table +spark -vector` fully decoded
-    three hot terms). Exact BM25 top-k of
-
-        score(doc) = Σ_t weights[t] · partial_t(doc)
-
-    over docs containing EVERY term with required[i]=True and NONE of
-    ``pro_terms``. Everything flows through metadata aggregations; the
-    driver sees only ≤ S bucket ids and ≤ k seed rows.
-
-    Doc ids quantize to WAND_BUCKET-sized buckets. Per (bucket, term),
-    bucketmax = max block ub over overlapping blocks. Three exact steps:
-
-    1. PRESENCE: a hit contains every required term, and a doc's
-       postings for term t live in a block overlapping the doc's own
-       bucket — so buckets where some required term has NO overlapping
-       block cannot host hits, and every block confined to such buckets
-       drops before any θ is known (the AND-specific filter).
-    2. θ SEED: rank present buckets by Σ_t bucketmax (the best possible
-       hit score inside), decode ALL scorable blocks overlapping the
-       top S buckets, and compute EXACT hit scores for docs inside them
-       (complete by the step-1 argument; conjunction-checked;
-       prohibited docs removed with a bucket-restricted docs-only
-       decode). These are true hit scores, so θ = kth best ⇒ the true
-       kth best ≥ θ. S quadruples (bounded rounds) while hits < k;
-       θ stays −inf if the corpus has < k hits — no pruning, still
-       exact.
-    3. SURVIVORS: keep block b of term t iff some overlapped PRESENT
-       bucket B has ub_b + Σ_{t'≠t} bucketmax_{t',B} ≥ θ. For a true
-       top-k doc d: its bucket B(d) is present, each of its blocks
-       b_t(d) overlaps B(d), ub ≥ w_t·partial_t(d) and bucketmax ≥
-       every other matched term's contribution (unmatched optional
-       terms contribute 0 ≤ bucketmax), so the kept bound ≥ score(d)
-       ≥ θ (ties included — the filter is ≥) and ALL of d's blocks
-       survive ⇒ its conjunction check passes and its score is exact.
-       A doc that lost a required block cannot pass the conjunction
-       check at all, and a doc that lost an optional block only
-       under-counts a score already provably < θ — so the final
-       TakeOrdered k over survivor hits is the exact top-k.
-    """
-    pro_terms = list(pro_terms or [])
-    spark = index.spark
-    k = max(int(k), 1)
-    req_ids = [i for i, r in enumerate(required) if r]
-    n_req = len(req_ids)
-    if n_req == 0:
-        raise ValueError("topk_wand_and needs at least one required term")
-    if intersect_max_df is None:
-        intersect_max_df = RAREST_FETCH_MAX_DF
-    rarest = min(
-        (terms[i] for i in req_ids), key=lambda t: index.doc_freq(t)
-    )
-    if index.doc_freq(rarest) <= intersect_max_df:
-        return _topk_and_intersect(
-            index, terms, weights, req_ids, pro_terms, rarest, k, collect_stats
-        )
-    # every required term hot: candidate collect is off the table, and
-    # bound-based pruning loses on uniform-impact corpora (16% pruned
-    # AND slower than exact at 40M — BASELINE.md §7.2). Default to the
-    # co-grouped range intersection, whose cost is one binary-level
-    # shuffle regardless of impact distribution. The r3 index format
-    # (sub_* columns present) guarantees the block/doc-range invariant
-    # the kernel needs; older indexes keep the bucket path.
-    if hot_strategy == "cogroup" and "sub_max_docs" in index.postings.columns:
-        return topk_and_cogrouped(
-            index, terms, weights, required, pro_terms, k, collect_stats
-        )
-    Q = WAND_BUCKET
-
-    cond = _terms_cond(terms)
-    meta = _block_meta(index, terms, weights)
-    # sub-range granularity (see _sub_meta): presence and bounds both
-    # tighten — a bucket covered only by the GAP between two of a
-    # required term's sub-ranges no longer counts as present, and a
-    # block's high-impact doc no longer lifts buckets it isn't in
-    bmeta = _bucketed_sub(_sub_meta(index, terms, weights))
-    bmax = bmeta.groupBy("_bkt", "field", "term").agg(
-        F.max("_sub").alias("_bmax")
-    )
-    is_req = _terms_cond([terms[i] for i in req_ids])
-    present = (
-        bmax.where(is_req)
-        .groupBy("_bkt")
-        .agg(F.count("*").alias("_np"))
-        .where(F.col("_np") == n_req)
-        .select("_bkt")
-    )
-    # Σ bucketmax over ALL scorable terms, present buckets only (inner
-    # join doubles as the presence filter for everything downstream)
-    bsum = bmax.join(present, "_bkt").groupBy("_bkt").agg(
-        F.sum("_bmax").alias("_bsum")
-    )
-
-    def conjunction_hits(blocks, seed_bkts_df=None):
-        """(doc_id, score) of EXACT conjunction hits in a decoded block
-        subset; when ``seed_bkts_df`` (a `_bkt long` DataFrame) is
-        given, only docs in those buckets (whose contributions are
-        provably complete) are kept — via a broadcast semi-join, not an
-        isin literal (the seed set quadruples toward the full occupied-
-        bucket count when the corpus has < k hits)."""
-        scored = _score_decoded(index, terms, weights, blocks)
-        if seed_bkts_df is not None:
-            scored = (
-                scored.withColumn(
-                    "_bkt", (F.col("doc_id") / Q).cast("long")
-                )
-                .join(F.broadcast(seed_bkts_df), "_bkt", "leftsemi")
-                .drop("_bkt")
-            )
-        agg = (
-            scored.groupBy("doc_id")
-            .agg(
-                F.sum("_s").alias("score"),
-                F.countDistinct(
-                    F.when(F.col("qid").isin(req_ids), F.col("qid"))
-                ).alias("_mr"),
-            )
-            .where(F.col("_mr") == n_req)
-        )
-        if pro_terms:
-            bkts = seed_bkts_df if seed_bkts_df is not None else present
-            pro_src = _restrict_blocks_to_buckets(index, pro_terms, bkts)
-            pro_docs = (
-                decode_postings(pro_src, pro_terms, docs_only=True)
-                .select("doc_id")
-                .distinct()
-            )
-            if (
-                sum(index.doc_freq(t) for t in pro_terms)
-                <= PROHIBITED_BROADCAST_MAX_DF
-            ):
-                pro_docs = F.broadcast(pro_docs)
-            agg = agg.join(pro_docs, "doc_id", "left_anti")
-        return agg.select("doc_id", "score")
-
-    # θ seed from the most promising present buckets
-    theta = float("-inf")
-    S = max(WAND_AND_SEED_BUCKETS, 1)
-    for _ in range(4):
-        top_b = bsum.orderBy(F.col("_bsum").desc()).limit(S).collect()
-        bkt_ids = [r["_bkt"] for r in top_b]
-        if not bkt_ids:
-            break
-        seed_df = spark.createDataFrame(
-            pd.DataFrame({"_bkt": np.asarray(bkt_ids, dtype=np.int64)})
-        )
-        seed_keys = (
-            bmeta.join(F.broadcast(seed_df), "_bkt", "leftsemi")
-            .select(*_WAND_META_COLS)
-            .distinct()
-        )
-        seed_blocks = index.postings.where(cond).join(seed_keys, _WAND_META_COLS)
-        seed_rows = (
-            conjunction_hits(seed_blocks, seed_df)
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-            .collect()
-        )
-        if len(seed_rows) >= k:
-            theta = float(seed_rows[k - 1]["score"])
-            break
-        if len(bkt_ids) < S:  # all present buckets examined; < k hits
-            break
-        S *= 4
-
-    keep_keys = (
-        bmeta.join(bmax, ["_bkt", "field", "term"])
-        .join(bsum, "_bkt")
-        .where(F.col("_sub") + (F.col("_bsum") - F.col("_bmax")) >= F.lit(theta))
-        .select(*_WAND_META_COLS)
-        .distinct()
-    )
-    survivors = index.postings.where(cond).join(keep_keys, _WAND_META_COLS)
-    out = (
-        conjunction_hits(survivors)
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-    stats = None
-    if collect_stats:
-        stats = {
-            "path": "bucket",
-            "blocks_total": meta.count(),
-            "blocks_decoded": survivors.select(*_WAND_META_COLS).count(),
-            "theta": theta,
-        }
-    return out, stats
-
-
 def topk_term_pruned(
     index: SparkIndex, term: Term, k: int = 10, collect_stats: bool = True
 ) -> tuple[list, dict]:
@@ -2586,5 +1811,5 @@ def topk_term_pruned(
     jobs — use it when timing the serving path."""
     index.prefetch_terms([term])
     idf = bm25_idf(index.doc_freq(term), index.n_docs)
-    out, stats = topk_wand(index, [term], [idf], k=k, collect_stats=collect_stats)
+    out, stats = topk_wand(index, term, idf, k=k, collect_stats=collect_stats)
     return out.collect(), (stats or {})

@@ -912,9 +912,3 @@ class PrepFuzzyQuery(Query):
         if self.min_similarity != DEFAULT_MIN_SIMILARITY:
             s += str(round(self.min_similarity, 4))
         return s + _fmt_boost(self)
-
-
-def rewrite_and_optimize(q: Query, reader: IndexReader) -> Query:
-    """Full compile: rewrite → optimize (Index::find steps 3-4,
-    reference: src/Index.php:698)."""
-    return q.rewrite(reader).optimize(reader)

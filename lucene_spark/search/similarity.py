@@ -54,21 +54,6 @@ def bm25_partial(tf: float, dl: float, avgdl: float,
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
-def bm25_score(tf, df, num_docs, dl, avgdl, k1=BM25_K1, b=BM25_B) -> float:
-    return bm25_idf(df, num_docs) * bm25_partial(tf, dl, avgdl, k1, b)
-
-
-# The same BM25 expression as SQL text, shared verbatim by the Spark
-# executor (spark.sql expr) and the DuckDB oracle so the driver's
-# value-hash comparison sees identical arithmetic.
-def bm25_sql(tf: str, df: str, n: str, dl: str, avgdl: str,
-             k1: float = BM25_K1, b: float = BM25_B) -> str:
-    return (
-        f"ln(1.0 + ({n} - {df} + 0.5) / ({df} + 0.5)) * "
-        f"({tf} * ({k1} + 1.0) / ({tf} + {k1} * (1.0 - {b} + {b} * {dl} / {avgdl})))"
-    )
-
-
 # ------------------------------------------------- pluggable similarity
 
 

@@ -83,7 +83,7 @@ def test_wand_filter_is_metadata_only(spark_index):
     t = Term("spark", "text")
     spark_index.prefetch_terms([t])
     idf = bm25_idf(spark_index.doc_freq(t), spark_index.n_docs)
-    df, _ = topk_wand(spark_index, [t], [idf], k=10)
+    df, _ = topk_wand(spark_index, t, idf, k=10)
     p = _plan(df)
     # the survivor filter is the impact-pair bound evaluated IN the scan
     # filter (higher-order expression over the metadata arrays)…
@@ -100,24 +100,29 @@ def test_dedup_lsh_never_cross_joins(spark, spark_index):
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 
 
-def test_cogroup_conjunction_plan_shape(spark_index):
+def test_cogroup_conjunction_plan_shape(spark_index, searcher):
     """The co-grouped range intersection must shuffle the block
     BINARIES once (hashpartitioning on _rng into one
     FlatMapGroupsInPandas kernel) and never explode postings into a
     row-level exchange — the property that makes hot-hot conjunctions
-    viable at 100 TB (shuffle bytes ≈ compressed posting lists)."""
+    viable at 100 TB (shuffle bytes ≈ compressed posting lists). Every
+    multi-term shape routed with pruning='force' (pure OR, AND-NOT)
+    must get that same plan."""
     from lucene_spark.search.executor import topk_and_cogrouped
     from lucene_spark.search.similarity import bm25_idf
 
     terms = [Term("spark", "text"), Term("index", "text")]
     w = [bm25_idf(spark_index.doc_freq(t), spark_index.n_docs) for t in terms]
     df, _ = topk_and_cogrouped(spark_index, terms, w, [True, True], k=10)
-    p = _plan(df)
-    assert p.count("FlatMapGroupsInPandas") == 1
-    assert "Exchange hashpartitioning(_rng" in p
-    # no per-posting exchange: doc_id exists only AFTER the kernel, so
-    # a doc_id hash exchange would mean posting rows were shuffled
-    assert "Exchange hashpartitioning(doc_id" not in p
+    plans = {"direct": _plan(df)}
+    for q in ("text:spark text:index", "+text:spark +text:index -text:merge"):
+        plans[q] = _plan(searcher.search(q, k=10, pruning="force"))
+    for q, p in plans.items():
+        assert p.count("FlatMapGroupsInPandas") == 1, q
+        assert p.count("Exchange hashpartitioning(_rng") == 1, q
+        # no per-posting exchange: doc_id exists only AFTER the kernel,
+        # so a doc_id hash exchange would mean posting rows were shuffled
+        assert "Exchange hashpartitioning(doc_id" not in p, q
 
 
 def test_plans_md_invariants_not_stale(spark):

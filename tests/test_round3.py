@@ -52,9 +52,10 @@ def test_boosted_term_wand_parity(spark_index):
 
 
 # ------------------------------------------------- WAND-AND (round 3 #1)
-# Block-max pruning for required conjunctions: pruning='force' on
-# +a +b [-c] queries must return EXACTLY the full-decode result —
-# ids and scores — for every sign mix, k regime, and tier layout.
+# The forced pruned plan for required conjunctions (the cogroup
+# kernel): pruning='force' on +a +b [-c] queries must return EXACTLY
+# the full-decode result — ids and scores — for every sign mix, k
+# regime, and tier layout.
 
 
 def _assert_and_parity(searcher, q, k):
@@ -116,7 +117,8 @@ def test_wand_and_boosted_parity(spark_index):
 
 def test_wand_and_duplicate_required_term(spark_index):
     """'+spark +spark index' — the duplicated required term must carry a
-    doubled weight in the bounds or pruning under-bounds it."""
+    doubled weight into the kernel or its score falls below the exact
+    plan's."""
     q = MultiTermQuery(
         [Term("spark", "text"), Term("spark", "text"), Term("index", "text")],
         [True, True, None],
@@ -166,14 +168,13 @@ def test_wand_and_on_tiered_index(spark, tmp_path_factory):
     # cogroup kernel across tiers: ranges key on doc_base, which is
     # globally unique across tiers, so shared (seg_id, block_id) pairs
     # cannot collide
-    from lucene_spark.search.executor import topk_wand_and
+    from lucene_spark.search.executor import topk_and_cogrouped
 
     terms, weights, req, pro = _and_query_parts(
         ix, "+text:alpha +text:beta -text:gamma"
     )
-    c, st = topk_wand_and(
-        ix, terms, weights, req, pro, k=30,
-        collect_stats=True, intersect_max_df=0,
+    c, st = topk_and_cogrouped(
+        ix, terms, weights, req, pro, k=30, collect_stats=True
     )
     assert st["path"] == "cogroup"
     exact = {
@@ -189,28 +190,17 @@ def test_wand_and_on_tiered_index(spark, tmp_path_factory):
         assert sc_ == pytest.approx(exact[doc], abs=1e-9)
 
 
-# --------------------------------------- intersection fetch (round 3)
-# When the rarest required term's df fits a driver collect, the
-# conjunction runs as a selectivity-ordered intersection: decode the
-# rarest term, push its doc ids into the decode kernel as doc_filter,
-# fetch the other terms' rows on candidates only. Both branches of
-# topk_wand_and must return the exact top-k.
+# ------------------------------------------- cogroup vs exact (round 3)
+# Every multi-term shape with a required term runs the co-grouped range
+# kernel; driven directly it must return the exact top-k.
 
 
 def _and_query_parts(ix, qs):
-    from lucene_spark.search.executor import _wand_and_query
+    from lucene_spark.search.executor import _pruned_shape
     from lucene_spark.search.parser import parse_query
-    from lucene_spark.search.similarity import bm25_idf
 
     q = parse_query(qs).rewrite(ix).optimize(ix)
-    scorable, pro = _wand_and_query(q)
-    terms = [t for t, _m, _r in scorable]
-    N = ix.n_docs
-    weights = [
-        q.boost * m * bm25_idf(ix.doc_freq(t), N) for t, m, _r in scorable
-    ]
-    req = [r for _t, _m, r in scorable]
-    return terms, weights, req, pro
+    return _pruned_shape(ix, q)
 
 
 @pytest.mark.parametrize(
@@ -222,35 +212,22 @@ def _and_query_parts(ix, qs):
     ],
 )
 def test_intersect_and_bucket_paths_agree(spark_index, qs):
-    """All three conjunction strategies — bound-pruned buckets,
-    candidate intersection, co-grouped range kernel — return the same
-    exact top-k."""
-    from lucene_spark.search.executor import topk_wand_and
+    """The co-grouped range kernel returns the exact plan's top-k (ids
+    and 9-decimal scores) for AND, AND-NOT and required+optional."""
+    from lucene_spark.search.executor import topk_and_cogrouped
 
     terms, weights, req, pro = _and_query_parts(spark_index, qs)
-    a, sa = topk_wand_and(
-        spark_index, terms, weights, req, pro, k=25,
-        collect_stats=True, intersect_max_df=0, hot_strategy="bucket",
-    )
-    b, sb = topk_wand_and(
+    c, sc_ = topk_and_cogrouped(
         spark_index, terms, weights, req, pro, k=25, collect_stats=True
     )
-    c, sc_ = topk_wand_and(
-        spark_index, terms, weights, req, pro, k=25,
-        collect_stats=True, intersect_max_df=0,
-    )
-    assert sa["path"] == "bucket" and sb["path"] == "intersect"
     assert sc_["path"] == "cogroup"
-    ra = sorted((r["doc_id"], round(r["score"], 9)) for r in a.collect())
-    rb = sorted((r["doc_id"], round(r["score"], 9)) for r in b.collect())
-    rc = sorted((r["doc_id"], round(r["score"], 9)) for r in c.collect())
-    assert ra == rb == rc
-    # every emitted row is on a candidate doc: emitted ≤ Σ df and the
-    # candidate count equals the rarest required term's df
-    assert sb["rows_emitted"] <= sb["rows_total"]
-    assert sb["n_candidates"] == min(
-        spark_index.doc_freq(t) for t, r in zip(terms, req) if r
+    assert sc_["blocks_decoded"] <= sc_["blocks_total"]
+    exact = SparkSearcher(spark_index).search(
+        qs, k=25, score_mode="bm25", pruning="off"
     )
+    rc = sorted((r["doc_id"], round(r["score"], 9)) for r in c.collect())
+    re_ = sorted((r["doc_id"], round(r["score"], 9)) for r in exact.collect())
+    assert rc == re_
 
 
 def test_doc_filter_kernel(spark_index):

@@ -72,7 +72,7 @@ def _wand_df(ix):
     t = Term("table", "text")
     ix.prefetch_terms([t])
     idf = bm25_idf(ix.doc_freq(t), ix.n_docs)
-    df, _ = topk_wand(ix, [t], [idf], k=10)
+    df, _ = topk_wand(ix, t, idf, k=10)
     return df
 
 

@@ -70,8 +70,8 @@ def main():
         t0 = time.time()
         bool_exact = s.search("+table +spark -vector", k=10).collect()
         t_bool = time.time() - t0
-        # round-3: the same hot conjunction through topk_wand_and —
-        # bucket presence + cross-term bounds instead of a full decode
+        # the same hot conjunction through the routed pruned plan — the
+        # co-grouped range kernel (one binary-level shuffle by doc range)
         t0 = time.time()
         bool_pruned = s.search(
             "+table +spark -vector", k=10, pruning="force"
@@ -100,12 +100,12 @@ def main():
             (r["doc_id"], round(r["score"], 9)) for r in rows
         ], "topk_term_pruned must equal exact"
 
-        from lucene_spark.search.executor import topk_wand_and
+        from lucene_spark.search.executor import topk_and_cogrouped
         from lucene_spark.search.similarity import bm25_idf
 
         and_terms = [Term("table", "text"), Term("spark", "text")]
         and_w = [bm25_idf(ix.doc_freq(t), ix.n_docs) for t in and_terms]
-        _df, and_stats = topk_wand_and(
+        _df, and_stats = topk_and_cogrouped(
             ix, and_terms, and_w, [True, True], [Term("vector", "text")],
             k=10, collect_stats=True,
         )
@@ -182,9 +182,8 @@ def main():
             "wand_blocks_decoded": stats["blocks_decoded"],
             "q_bool_sec": round(t_bool, 2),
             "q_bool_pruned_sec": round(t_bool_pruned, 2),
-            "wand_and_blocks_total": and_stats["blocks_total"],
-            "wand_and_blocks_decoded": and_stats["blocks_decoded"],
-            "wand_and_path": and_stats.get("path"),
+            "and_blocks_total": and_stats["blocks_total"],
+            "and_blocks_decoded": and_stats["blocks_decoded"],
             "q_phrase_exact_sec": round(t_ph_exact, 2),
             "q_phrase_cogroup_sec": round(t_ph_cg, 2),
             "q_sloppy_exact_sec": t_sl_exact,

@@ -1,18 +1,20 @@
-"""Block-max WAND validation on a corpus with REAL tf/dl variance.
+"""Pruned top-k validation on a corpus with REAL tf/dl variance.
 
 The bench transcripts corpus has near-constant token counts per turn,
 so block upper bounds barely separate and pruning cannot pay
 (BASELINE.md §5.5). This tool synthesizes a corpus the way natural text
 behaves — Zipf term frequencies + log-normal document lengths — builds
-an index, and measures the distributed WAND path (topk_wand) against
-the exact full-scan path:
+an index, and times, for every query shape, the exact full-scan plan
+against the routed pruned plan (``pruning='force'``: block-max WAND for
+a single term, the co-grouped range kernel for every multi-term shape
+and every phrase):
 
-- asserts pruned top-k == exact top-k (doc ids and scores at 1e-9);
-- reports blocks_decoded / blocks_total per query (the pruning rate);
-- reports latency for both paths.
+- asserts pruned top-k == exact top-k (scores at 1e-9, tie-robust);
+- reports the routed path and blocks_decoded / blocks_total per query;
+- reports latency for both plans.
 
 Usage: python tools/wand_bench.py [n_docs]   (default 200_000)
-Prints one JSON line; paste into BASELINE.md §5.5.
+Prints one JSON line; paste into BASELINE.md.
 """
 
 from __future__ import annotations
@@ -29,7 +31,6 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql.types import (  # noqa: E402
     LongType,
     StringType,
@@ -41,11 +42,13 @@ from lucene_spark.analysis import Analyzer  # noqa: E402
 from lucene_spark.index.builder import IndexConfig, build_index  # noqa: E402
 from lucene_spark.search.executor import (  # noqa: E402
     SparkSearcher,
+    _pruned_shape,
+    topk_and_cogrouped,
+    topk_phrase_cogrouped,
     topk_wand,
 )
 from lucene_spark.search.parser import parse_query  # noqa: E402
-from lucene_spark.search.query import Term  # noqa: E402
-from lucene_spark.search.similarity import bm25_idf  # noqa: E402
+from lucene_spark.search.query import PhraseQuery  # noqa: E402
 from lucene_spark.session import get_spark  # noqa: E402
 
 VOCAB_SIZE = 30_000
@@ -84,6 +87,20 @@ def varied_corpus(spark, n_docs: int):
     return spark.range(n_docs).mapInPandas(gen, schema)
 
 
+def routed_stats(ix, q) -> dict:
+    """Block counts of the plan pruning='force' routes ``q`` to (the
+    stats jobs run outside the timed window)."""
+    if isinstance(q, PhraseQuery):
+        return topk_phrase_cogrouped(ix, q, k=10, collect_stats=True)[1]
+    terms, weights, required, pro = _pruned_shape(ix, q)
+    if len(terms) == 1 and not pro:
+        stats = topk_wand(ix, terms[0], weights[0], k=10, collect_stats=True)[1]
+        return {**stats, "path": "wand"}
+    return topk_and_cogrouped(
+        ix, terms, weights, required, pro, k=10, collect_stats=True
+    )[1]
+
+
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -113,84 +130,46 @@ def main() -> None:
         s = SparkSearcher(ix)
 
         # Zipf rank 1 = w1 (hottest); w50 mid; w2000 rare. or_hot_rare
-        # is WAND's favorable shape (θ set by the hot term prunes the
-        # hot tail); or_mid is the unfavorable uniform-impact shape.
+        # is WAND's favorable shape for bounds (θ set by the hot term);
+        # or_mid is the uniform-impact shape; the phrases are hot-hot
+        # (no rare term — range pruning can't help the exact plan) and
+        # hot-mid, sloppy ones through the shared quirk-faithful kernel.
         cases = {
             "hot_term": "text:w1",
             "mid_term": "text:w50",
             "rare_term": "text:w2000",
             "or_hot_rare": "text:w1 OR text:w2000",
             "or_mid": "text:w50 OR text:w300 OR text:w2000",
-            # sparse OR: essential-candidate density below CAND_BUCKET
-            # resolution — the MAXSCORE split's favorable shape
             "or_rare": "text:w800 OR text:w1200 OR text:w2000",
-            # round-3 conjunction pruning (topk_wand_and via execute)
             "and_hot_hot": "+text:w1 +text:w5",
             "and_hot_mid": "+text:w1 +text:w50",
             "and_mid_mid": "+text:w50 +text:w300",
+            "and_rare_hot": "+text:w2000 +text:w1",
             "and_not": "+text:w1 +text:w5 -text:w2000",
+            "phrase_hot_hot": '"w1 w2"',
+            "phrase_hot_hot_sloppy": '"w1 w2"~3',
+            "phrase_hot_mid": '"w1 w50"~2',
         }
         for name, qs in cases.items():
             q = parse_query(qs).rewrite(ix).optimize(ix)
             t0 = time.time()
             exact = s.execute(q, k=10, pruning="off").collect()
             t_exact = time.time() - t0
-
-            N = ix.n_docs
-            if name.startswith("and"):
-                from lucene_spark.search.executor import (
-                    _wand_and_query,
-                    topk_wand_and,
-                )
-
-                scorable, pro = _wand_and_query(q)
-                terms = [t for t, _m, _r in scorable]
-                weights = [
-                    q.boost * m * bm25_idf(ix.doc_freq(t), N)
-                    for t, m, _r in scorable
-                ]
-                req = [r for _t, _m, r in scorable]
-                t0 = time.time()
-                df, _ = topk_wand_and(ix, terms, weights, req, pro, k=10)
-                pruned = df.collect()
-                t_pruned = time.time() - t0
-                _df2, stats = topk_wand_and(
-                    ix, terms, weights, req, pro, k=10, collect_stats=True
-                )
-                # co-grouped range intersection (the hot-hot default):
-                # time it separately and assert it matches exact too
-                t0 = time.time()
-                cg, _ = topk_wand_and(
-                    ix, terms, weights, req, pro, k=10, intersect_max_df=0
-                )
-                cg_rows = cg.collect()
-                t_cogroup = time.time() - t0
-                assert sorted(
-                    (round(r["score"], 9) for r in cg_rows), reverse=True
-                ) == sorted(
-                    (round(r["score"], 9) for r in pruned), reverse=True
-                ), f"{name}: cogroup != pruned"
-                stats["cogroup_sec"] = round(t_cogroup, 2)
-            else:
-                terms = [q.term] if hasattr(q, "term") else list(q.terms)
-                weights = [bm25_idf(ix.doc_freq(t), N) for t in terms]
-                t0 = time.time()
-                df, _ = topk_wand(ix, terms, weights, k=10)
-                pruned = df.collect()
-                t_pruned = time.time() - t0
-                # stats jobs are metadata-only but still jobs — keep them
-                # OUT of the timed window
-                _df2, stats = topk_wand(ix, terms, weights, k=10, collect_stats=True)
+            t0 = time.time()
+            pruned = s.execute(q, k=10, pruning="force").collect()
+            t_pruned = time.time() - t0
             # tie-robust: nondeterministic float-sum order can flip
-            # ulp-tied neighbours; scores must match as a multiset and
-            # per-doc where both picked the same doc
+            # ulp-tied neighbours; scores must match as a multiset
             assert sorted(
                 (round(r["score"], 9) for r in exact), reverse=True
             ) == sorted(
                 (round(r["score"], 9) for r in pruned), reverse=True
             ), f"{name}: pruned != exact"
+            stats = routed_stats(ix, q)
+            uniq = {(t.field, t.text): t for t in q.query_terms()}.values()
             out["queries"][name] = {
-                "df": sum(ix.doc_freq(t) for t in terms),
+                "path": stats["path"],
+                "df": sum(ix.doc_freq(t) for t in uniq),
                 "exact_sec": round(t_exact, 2),
                 "pruned_sec": round(t_pruned, 2),
                 "blocks_total": stats["blocks_total"],
@@ -198,50 +177,6 @@ def main() -> None:
                 "pruning_rate": round(
                     1 - stats["blocks_decoded"] / max(1, stats["blocks_total"]), 4
                 ),
-            }
-            # row-level stats (intersect / MAXSCORE paths): where block
-            # pruning is geometrically impossible, the row cut is the
-            # scale metric — emitted rows vs Σ df
-            for extra in (
-                "path", "rows_total", "rows_emitted", "n_candidates", "cogroup_sec"
-            ):
-                if stats.get(extra) is not None:
-                    out["queries"][name][extra] = stats[extra]
-            if stats.get("rows_total"):
-                out["queries"][name]["row_cut_rate"] = round(
-                    1 - stats["rows_emitted"] / max(1, stats["rows_total"]), 4
-                )
-
-        # phrase cases: exact row-level plan vs the co-grouped range
-        # kernel (r3). Both hot-hot (no rare term — range pruning can't
-        # help the exact plan) and hot-mid; sloppy runs the shared
-        # quirk-faithful queue kernel inside the cogroup.
-        from lucene_spark.search.executor import topk_phrase_cogrouped
-
-        phrase_cases = {
-            "phrase_hot_hot": '"w1 w2"',
-            "phrase_hot_hot_sloppy": '"w1 w2"~3',
-            "phrase_hot_mid": '"w1 w50"~2',
-        }
-        for name, qs in phrase_cases.items():
-            q = parse_query(qs).rewrite(ix).optimize(ix)
-            t0 = time.time()
-            exact = s.execute(q, k=10, pruning="off").collect()
-            t_exact = time.time() - t0
-            t0 = time.time()
-            cg, _ = topk_phrase_cogrouped(ix, q, k=10)
-            cg_rows = cg.collect()
-            t_cg = time.time() - t0
-            assert sorted(
-                (round(r["score"], 9) for r in exact), reverse=True
-            ) == sorted(
-                (round(r["score"], 9) for r in cg_rows), reverse=True
-            ), f"{name}: cogroup != exact"
-            uniq_terms = {(t.field, t.text): t for t in q.terms}.values()
-            out["queries"][name] = {
-                "df": sum(ix.doc_freq(t) for t in uniq_terms),
-                "exact_sec": round(t_exact, 2),
-                "cogroup_sec": round(t_cg, 2),
             }
         print(json.dumps(out), flush=True)
     finally:
