@@ -3,8 +3,8 @@ from lucene_spark.codec.varbyte import (
     vb_decode,
     delta_encode,
     delta_decode,
-    encode_posting_block,
-    decode_posting_block,
+    encode_blocks,
+    decode_blocks,
     freq_stream_encode,
     freq_stream_decode,
 )
@@ -29,8 +29,8 @@ __all__ = [
     "vb_decode",
     "delta_encode",
     "delta_decode",
-    "encode_posting_block",
-    "decode_posting_block",
+    "encode_blocks",
+    "decode_blocks",
     "freq_stream_encode",
     "freq_stream_decode",
     "TERMS_PER_BLOCK",

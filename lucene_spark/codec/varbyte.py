@@ -3,10 +3,12 @@
 Wire format matches the reference's VInt codec semantics — LSB-first
 7-bit groups, 0x80 continuation bit on every byte except the last
 (reference: src/Storage/File/AbstractFile.php:281-292 read, :364-372
-write) — but our posting *blocks* store docIDs, TFs and position gaps as
-three separate varbyte streams instead of the reference's interleaved
-``.frq`` stream (AbstractSegmentWriter.php:371-380). Separate streams
-let boolean/AND queries decode docIDs without touching TFs or positions.
+write) — but our posting *blocks* store docIDs, TFs, doc lengths and position
+gaps as four separate varbyte streams instead of the reference's
+interleaved ``.frq`` stream (AbstractSegmentWriter.php:371-380).
+Separate streams let boolean/AND queries decode docIDs without touching
+TFs or positions. :func:`encode_blocks` / :func:`decode_blocks` are the
+one place that knows the block byte layout.
 ``freq_stream_encode/decode`` reproduce the interleaved reference
 encoding exactly for parity tests.
 
@@ -102,56 +104,95 @@ def delta_decode(gaps: np.ndarray, base: int = 0) -> np.ndarray:
     return np.cumsum(g) + np.int64(base)
 
 
-def encode_posting_block(
-    doc_ids: np.ndarray,
+def encode_blocks(
+    docs: np.ndarray,
     tfs: np.ndarray,
-    positions: np.ndarray | None,
-    base: int = 0,
-) -> tuple[bytes, bytes, bytes]:
-    """Pack one posting block (ascending doc_ids) into three streams.
+    dls: np.ndarray,
+    starts: np.ndarray,
+    positions: np.ndarray | None = None,
+) -> tuple[list[bytes], list[bytes], list[bytes], list[bytes] | None]:
+    """Pack a run of posting blocks into per-block varbyte streams —
+    the ONLY writer of the block byte layout (:func:`decode_blocks` is
+    its inverse).
 
-    - docs stream: varbyte(delta(doc_ids, base))
-    - tf stream:   varbyte(tfs)
-    - pos stream:  varbyte(per-doc position gaps, concatenated); per-doc
-      position counts are the TFs, so no extra length stream is needed.
-    """
-    docs_bin = vb_encode(delta_encode(doc_ids, base))
-    tfs_bin = vb_encode(np.asarray(tfs, dtype=np.uint64))
-    if positions is None or len(positions) == 0:
-        pos_bin = b""
-    else:
-        pos = np.asarray(positions, dtype=np.int64)
-        tf = np.asarray(tfs, dtype=np.int64)
-        # delta within each doc's run: subtract previous position, but at
-        # each run start subtract 0 (positions are 1-based like the
-        # reference; gap_0 = first position itself).
-        gaps = np.diff(pos, prepend=np.int64(0))
-        run_starts = np.cumsum(tf) - tf
-        gaps[run_starts] = pos[run_starts]
-        pos_bin = vb_encode(gaps.astype(np.uint64))
-    return docs_bin, tfs_bin, pos_bin
+    ``docs``/``tfs``/``dls`` hold one entry per posting, blocks laid
+    end to end; block i covers postings [starts[i], starts[i+1]) (so
+    starts[0] == 0) with ascending doc ids. ``positions`` concatenates
+    each posting's tf positions (ascending within the posting), or is
+    None when positions are not stored. Per block, returns:
 
+    - docs stream: doc gaps; a block's first gap is always 1 (its first
+      doc id is stored as the block's ``doc_base`` metadata)
+    - tf stream, dl stream: the raw values
+    - pos stream: position gaps that reset at each posting (the first
+      gap is the position itself; 1-based text positions, 0 for a
+      keyword — one 0x00 byte). Per-posting counts are the tfs, so no
+      length stream is needed.
 
-def decode_posting_block(
-    docs_bin: bytes,
-    tfs_bin: bytes,
-    pos_bin: bytes | None,
-    base: int = 0,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
-    doc_ids = delta_decode(vb_decode(docs_bin), base)
-    tfs = vb_decode(tfs_bin).astype(np.int64)
-    positions = None
-    if pos_bin:
-        gaps = vb_decode(pos_bin).astype(np.int64)
-        # prefix-sum within runs: cumsum overall, then subtract the
-        # cumulative sum at each run start (vectorized run-reset cumsum)
+    Each stream encodes ONCE over the whole run and is sliced at block
+    boundaries (varbyte is per-value independent, so this is
+    byte-identical to encoding block by block)."""
+    docs = np.asarray(docs, dtype=np.int64)
+    tfs = np.asarray(tfs, dtype=np.int64)
+    starts = np.asarray(starts, dtype=np.int64)
+    bounds = np.append(starts, len(docs))
+    dgaps = np.diff(docs, prepend=np.int64(0))
+    dgaps[starts] = 1
+    docs_bins = vb_encode_sliced(dgaps, bounds)
+    tfs_bins = vb_encode_sliced(tfs, bounds)
+    dls_bins = vb_encode_sliced(np.asarray(dls, dtype=np.int64), bounds)
+    pos_bins = None
+    if positions is not None:
+        p = np.asarray(positions, dtype=np.int64)
         run_starts = np.cumsum(tfs) - tfs
-        cs = np.cumsum(gaps)
-        offsets = np.zeros(gaps.size, dtype=np.int64)
-        prior = np.where(run_starts > 0, cs[run_starts - 1], 0)
-        offsets[run_starts] = np.diff(prior, prepend=np.int64(0))
-        positions = cs - np.cumsum(offsets)
-    return doc_ids, tfs, positions
+        pgaps = np.diff(p, prepend=np.int64(0))
+        pgaps[run_starts] = p[run_starts]
+        pos_bounds = np.append(run_starts[starts], int(tfs.sum()))
+        pos_bins = vb_encode_sliced(pgaps, pos_bounds)
+    return docs_bins, tfs_bins, dls_bins, pos_bins
+
+
+def decode_blocks(
+    doc_base: np.ndarray,
+    n: np.ndarray,
+    docs_bins,
+    tfs_bins=None,
+    dls_bins=None,
+    pos_bins=None,
+) -> tuple[np.ndarray, np.ndarray | None, np.ndarray | None, np.ndarray | None]:
+    """Batched inverse of :func:`encode_blocks` over a frame of blocks:
+    (doc ids, tfs, dls, flat positions) as int64 arrays, each stream
+    None when its binaries are not given. ``doc_base``/``n`` are the
+    blocks' first doc id and posting count.
+
+    Varbyte is self-delimiting, so each stream's binaries concatenate
+    into ONE :func:`vb_decode` call and the per-block doc-id and
+    per-posting position reconstruction is pure numpy over the flat
+    arrays — no per-block Python (it dominated decode time for
+    stop-word-scale terms). A stream given as empty binaries on some
+    blocks decodes to the concatenated values of the others. Decoding
+    positions needs the tf stream (a posting's run length is its tf)."""
+    n = np.asarray(n, dtype=np.int64)
+    doc_base = np.asarray(doc_base, dtype=np.int64)
+    starts = np.cumsum(n) - n
+    gaps = _vb_decode_all(docs_bins)
+    cs = np.cumsum(gaps)
+    # each block restarts at its doc_base: subtract the running sum
+    # through the block's first gap
+    docs = cs + np.repeat(doc_base - cs[starts], n)
+    tfs = None if tfs_bins is None else _vb_decode_all(tfs_bins)
+    dls = None if dls_bins is None else _vb_decode_all(dls_bins)
+    positions = None
+    if pos_bins is not None:
+        pcs = np.cumsum(_vb_decode_all(pos_bins))
+        run_starts = np.cumsum(tfs) - tfs
+        prior = np.where(run_starts > 0, pcs[run_starts - 1], 0)
+        positions = pcs - np.repeat(prior, tfs)
+    return docs, tfs, dls, positions
+
+
+def _vb_decode_all(bins) -> np.ndarray:
+    return vb_decode(b"".join(bins)).astype(np.int64)
 
 
 def freq_stream_encode(doc_ids: np.ndarray, tfs: np.ndarray, base: int = 0) -> bytes:

@@ -16,10 +16,11 @@ local[32]):
    (``seg_id = doc_id // seg_size``); each segment is inverted locally
    inside one ``applyInPandas`` task — tokenize (vectorized), group by
    (field, term), pack posting blocks of ≤128 docs as delta+varbyte
-   BINARY columns with per-block metadata (max_docid, block_max_tf,
-   block_min_dl) ≙ the reference's ``.frq``/``.prx`` streams plus the
-   skip/block-max extension the north rule asks for (the reference
-   declares but never writes skip data — AbstractSegmentWriter.php:33-57).
+   BINARY columns (``codec.varbyte.encode_blocks``) with per-block
+   metadata (doc span, Pareto (tf, dl) impact pairs) ≙ the reference's
+   ``.frq``/``.prx`` streams plus the skip/block-max extension the north
+   rule asks for (the reference declares but never writes skip data —
+   AbstractSegmentWriter.php:33-57).
    Per-doc field length (dl) is packed into each block so BM25 scoring
    never joins the docs table. Each chunk of segments commits a manifest
    row (lineage + token/posting counts) — a killed build resumes by
@@ -42,9 +43,9 @@ Storage layout under ``index_dir``::
 
     docs/        doc_id + stored cols + len_<f>/norm_<f> per text field
     postings/    field, term, seg_id, block_id, doc_base, max_docid,
-                 n, block_max_tf, block_min_dl, cf, docs_bin, tfs_bin,
-                 dls_bin, pos_bin   (sorted by field, term, doc_base)
-    term_dict/   field, term, df, cf, n_blocks, max_tf
+                 n, imp_tfs, imp_dls, cf, docs_bin, tfs_bin, dls_bin,
+                 pos_bin   (sorted by field, term, doc_base)
+    term_dict/   field, term, df, cf
     manifests/   seg_id, n_docs, n_postings, lineage, per-field token sums
     stats.json   n_docs, per-field {sum_len, n_docs_with_field}, config
 """
@@ -75,20 +76,15 @@ from pyspark.sql.types import (
 
 from lucene_spark.analysis import Analyzer, default_analyzer
 from lucene_spark.codec.norms import encode_norm_array, length_norm
-from lucene_spark.codec.varbyte import vb_encode, vb_encode_sliced
+from lucene_spark.codec.varbyte import encode_blocks
 
 BLOCK_SIZE = 128  # docs per posting block ≙ reference indexInterval
 # (AbstractSegmentWriter.php:30)
 BLOCK_DOC_RANGE = 8192  # max doc-id span per block: sparse terms split
 # at range boundaries so block-max bounds stay doc-local (see
 # _invert_segment packing comment)
-WAND_SUBS = int(os.environ.get("LUCENE_SPARK_WAND_SUBS", "4"))
-# sub-range summaries per posting block (32 postings each at full
-# blocks): per-sub (doc span, Pareto frontier) ceilings localize WAND
-# bounds below block granularity. Env-tunable: 1 disables sub-range
-# granularity (blocks become their own single sub-range) and shrinks
-# the nested metadata columns for write-heavy workloads.
 MAX_BUILD_CHUNKS = 512  # cap on serial resume-chunk jobs in phase A
+CHUNK_CONCURRENCY = 3  # phase-A chunk jobs in flight at once
 # the term_dict columns SparkIndex.prefetch_terms reads on the driver
 _DRIVER_TD_SCHEMA = pa.schema(
     [("field", pa.string()), ("term", pa.string()), ("df", pa.int64())]
@@ -127,8 +123,6 @@ POSTINGS_SCHEMA = StructType(
         StructField("doc_base", LongType()),
         StructField("max_docid", LongType()),
         StructField("n", IntegerType()),
-        StructField("block_max_tf", IntegerType()),
-        StructField("block_min_dl", IntegerType()),
         # Pareto-optimal (tf, dl) impact pairs of the block's docs —
         # no doc has higher tf AND lower dl than a stored pair. The
         # true block score bound is max over pairs of partial(tf, dl),
@@ -138,22 +132,6 @@ POSTINGS_SCHEMA = StructType(
         # avgdl. Typically 1-5 pairs (tf values cluster at 1-3).
         StructField("imp_tfs", ArrayType(IntegerType())),
         StructField("imp_dls", ArrayType(IntegerType())),
-        # Sub-range summaries: the block's postings split into
-        # WAND_SUBS equal runs, each with its own doc span and its own
-        # Pareto (tf, dl) frontier — the sub-range's EXACT max impact
-        # for any monotone scorer, not a (max_tf, min_dl) mix of
-        # different docs (with log-normal doc lengths nearly every
-        # 32-posting run contains one short doc, so the mixed bound
-        # stays uniformly high and prunes nothing). Cross-term WAND
-        # bounds computed from these localize a block's impact to the
-        # sub-range that actually holds it — a single high-impact doc
-        # no longer smears the block's bound over its whole 8192-doc
-        # span, which is what made uniform-impact OR disjunctions
-        # unprunable at block granularity.
-        StructField("sub_min_docs", ArrayType(LongType())),
-        StructField("sub_max_docs", ArrayType(LongType())),
-        StructField("sub_imp_tfs", ArrayType(ArrayType(IntegerType()))),
-        StructField("sub_imp_dls", ArrayType(ArrayType(IntegerType()))),
         StructField("cf", LongType()),
         StructField("docs_bin", BinaryType()),
         StructField("tfs_bin", BinaryType()),
@@ -455,6 +433,16 @@ def pareto_impacts(t: np.ndarray, dl: np.ndarray) -> tuple[np.ndarray, np.ndarra
     return pt[keep_mask], pd_[keep_mask]
 
 
+def postings_term_dict(postings: DataFrame) -> DataFrame:
+    """The term dictionary rows (field, term, df, cf) of a postings
+    table — the one aggregation every writer (build, delta batch,
+    generation promote, merge) stores as ``term_dict``. Per-block
+    counters only (n, cf): no posting stream is read."""
+    return postings.groupBy("field", "term").agg(
+        F.sum("n").alias("df"), F.sum("cf").alias("cf")
+    )
+
+
 def _invert_segment(cfg: IndexConfig):
     """applyInPandas kernel: one segment's docs → packed posting blocks.
 
@@ -516,7 +504,6 @@ def _invert_segment(cfg: IndexConfig):
                     dls[order],
                     pos[order].astype(np.int64),
                 )
-                pos_counts = g_tfs
             else:
                 # sort by (term, doc, position) then collapse equal
                 # (term, doc) runs into tf counts
@@ -538,7 +525,6 @@ def _invert_segment(cfg: IndexConfig):
                 g_dls = dl_s[run_starts]
                 g_tfs = np.bincount(run_ids).astype(np.int64)
                 g_pos = p_s  # all positions, concatenated per (term, doc)
-                pos_counts = g_tfs
 
             # block packing: for each term, split its postings into
             # blocks of <= BLOCK_SIZE docs, ALSO splitting at
@@ -566,57 +552,25 @@ def _invert_segment(cfg: IndexConfig):
             blk_ids = np.cumsum(blk_change) - 1
             blk_starts = np.flatnonzero(blk_change)
             blk_ends = np.append(blk_starts[1:], len(g_terms))
-            # positions offsets per (term,doc) run
-            pos_ends = np.cumsum(pos_counts)
-            pos_starts = pos_ends - pos_counts
-
-            # whole-segment stream encoding: varbyte is per-value
-            # independent, so each stream encodes ONCE and slices at
-            # block boundaries (byte-identical to per-block encoding —
-            # the first doc gap of a block is always 1 because the
-            # stored doc_base is d[0] and decode subtracts the first
-            # gap back out). Per-block vb_encode was the dominant
-            # inverter cost (~150 µs/block × postings/128 blocks).
-            bounds = np.append(blk_starts, len(g_terms))
-            dgaps = np.empty(len(g_docs), dtype=np.int64)
-            if len(g_docs):
-                dgaps[0] = 1
-                dgaps[1:] = g_docs[1:] - g_docs[:-1]
-            dgaps[blk_starts] = 1
-            docs_bins = vb_encode_sliced(dgaps.astype(np.uint64), bounds)
-            tfs_bins = vb_encode_sliced(g_tfs.astype(np.uint64), bounds)
-            dls_bins = vb_encode_sliced(g_dls.astype(np.uint64), bounds)
-            pos_bins = None
-            if store_pos and kind == "text":
-                p_all = g_pos.astype(np.int64)
-                pgaps = np.diff(p_all, prepend=np.int64(0))
-                pgaps[pos_starts] = p_all[pos_starts]
-                pos_bounds = np.append(
-                    pos_starts[blk_starts],
-                    pos_ends[-1] if len(pos_ends) else 0,
-                )
-                pos_bins = vb_encode_sliced(pgaps.astype(np.uint64), pos_bounds)
+            docs_bins, tfs_bins, dls_bins, pos_bins = encode_blocks(
+                g_docs, g_tfs, g_dls, blk_starts, g_pos if store_pos else None
+            )
+            if pos_bins is None:
+                pos_bins = [b""] * len(blk_starts)
             # single-posting blocks (sparse terms after the doc-range
             # split; ~all blocks on hash/URL-heavy vocabularies) take a
             # columnar fast path: every derived stat of a 1-posting
             # block is the posting itself, so the per-block loop below
-            # — whose pareto/sub-summary machinery is pure overhead at
-            # n=1 — runs only for multi-posting blocks. Measured 9.8 s
-            # → ~2 s per 16k-doc segment on a df=1 vocabulary.
+            # — whose pareto machinery is pure overhead at n=1 — runs
+            # only for multi-posting blocks. Measured 9.8 s → ~2 s per
+            # 16k-doc segment on a df=1 vocabulary.
             sizes = blk_ends - blk_starts
             single = np.flatnonzero(sizes == 1)
             multi = np.flatnonzero(sizes > 1)
             if len(single):
                 bs = blk_starts[single]
                 s_doc = g_docs[bs]
-                s_tf = g_tfs[bs].tolist()
-                s_dl = g_dls[bs].tolist()
-                if pos_bins is not None:
-                    s_pos = [pos_bins[b] for b in single.tolist()]
-                elif store_pos and kind == "keyword":
-                    s_pos = [b"\x00"] * len(single)
-                else:
-                    s_pos = [b""] * len(single)
+                sl = single.tolist()
                 sing_frames.append(
                     pd.DataFrame(
                         {
@@ -627,109 +581,48 @@ def _invert_segment(cfg: IndexConfig):
                             "doc_base": s_doc,
                             "max_docid": s_doc,
                             "n": 1,
-                            "block_max_tf": g_tfs[bs],
-                            "block_min_dl": g_dls[bs],
                             "imp_tfs": pd.Series(
-                                [[t] for t in s_tf], dtype=object
+                                [[t] for t in g_tfs[bs].tolist()], dtype=object
                             ),
                             "imp_dls": pd.Series(
-                                [[d] for d in s_dl], dtype=object
-                            ),
-                            "sub_min_docs": pd.Series(
-                                [[d] for d in s_doc.tolist()], dtype=object
-                            ),
-                            "sub_max_docs": pd.Series(
-                                [[d] for d in s_doc.tolist()], dtype=object
-                            ),
-                            "sub_imp_tfs": pd.Series(
-                                [[[t]] for t in s_tf], dtype=object
-                            ),
-                            "sub_imp_dls": pd.Series(
-                                [[[d]] for d in s_dl], dtype=object
+                                [[d] for d in g_dls[bs].tolist()], dtype=object
                             ),
                             "cf": g_tfs[bs],
                             "docs_bin": pd.Series(
-                                [docs_bins[b] for b in single.tolist()],
-                                dtype=object,
+                                [docs_bins[b] for b in sl], dtype=object
                             ),
                             "tfs_bin": pd.Series(
-                                [tfs_bins[b] for b in single.tolist()],
-                                dtype=object,
+                                [tfs_bins[b] for b in sl], dtype=object
                             ),
                             "dls_bin": pd.Series(
-                                [dls_bins[b] for b in single.tolist()],
-                                dtype=object,
+                                [dls_bins[b] for b in sl], dtype=object
                             ),
-                            "pos_bin": pd.Series(s_pos, dtype=object),
+                            "pos_bin": pd.Series(
+                                [pos_bins[b] for b in sl], dtype=object
+                            ),
                         }
                     )
                 )
-            cuts_cache: dict[int, np.ndarray] = {}
             for b in multi.tolist():
                 s, e = blk_starts[b], blk_ends[b]
-                term = g_terms[s]
-                d = g_docs[s:e]
                 t = g_tfs[s:e]
-                dl = g_dls[s:e]
-                # sub-range summaries: WAND_SUBS equal posting runs,
-                # each with its own doc span and Pareto (tf, dl)
-                # frontier (exact per-sub max impact). The block-level
-                # frontier is the pareto of the sub-frontier union —
-                # identical to pareto(whole block) since dominance
-                # within a sub implies dominance in the block
-                cuts = cuts_cache.get(e - s)
-                if cuts is None:
-                    cuts = np.unique(
-                        np.linspace(0, e - s, WAND_SUBS + 1).astype(np.int64)
-                    )
-                    cuts_cache[e - s] = cuts
-                sub_min, sub_max, sub_itf, sub_idl = [], [], [], []
-                f_tf, f_dl = [], []
-                for a, z in zip(cuts[:-1], cuts[1:]):
-                    sub_min.append(int(d[a]))
-                    sub_max.append(int(d[z - 1]))
-                    s_tf, s_dl = pareto_impacts(t[a:z], dl[a:z])
-                    sub_itf.append(s_tf.tolist())
-                    sub_idl.append(s_dl.tolist())
-                    f_tf.append(s_tf)
-                    f_dl.append(s_dl)
-                if len(f_tf) == 1:
-                    imp_tf, imp_dl = f_tf[0], f_dl[0]
-                else:
-                    imp_tf, imp_dl = pareto_impacts(
-                        np.concatenate(f_tf), np.concatenate(f_dl)
-                    )
-                docs_bin = docs_bins[b]
-                tfs_bin = tfs_bins[b]
-                dls_bin = dls_bins[b]
-                if pos_bins is not None:
-                    pos_bin = pos_bins[b]
-                elif store_pos and kind == "keyword":
-                    pos_bin = b"\x00" * (e - s)  # vb(0) is one 0x00 byte
-                else:
-                    pos_bin = b""
+                imp_tf, imp_dl = pareto_impacts(t, g_dls[s:e])
                 out_rows.append(
                     (
                         fname,
-                        str(term),
+                        str(g_terms[s]),
                         seg_id,
                         int(blk_ids[s]),
-                        int(d[0]),
-                        int(d[-1]),
+                        int(g_docs[s]),
+                        int(g_docs[e - 1]),
                         int(e - s),
-                        int(t.max()),
-                        int(dl.min()),
-                        [int(x) for x in imp_tf],
-                        [int(x) for x in imp_dl],
-                        sub_min,
-                        sub_max,
-                        sub_itf,
-                        sub_idl,
+                        imp_tf.tolist(),
+                        imp_dl.tolist(),
                         int(t.sum()),
-                        docs_bin,
-                        tfs_bin,
-                        dls_bin,
-                        pos_bin,
+                        docs_bins[b],
+                        tfs_bins[b],
+                        dls_bins[b],
+                        pos_bins[b],
                     )
                 )
         cols = [f.name for f in POSTINGS_SCHEMA.fields]
@@ -1054,10 +947,7 @@ def build_index(
         with manifest_lock:
             m.write.mode("append").parquet(manifest_path)
 
-    n_workers = min(
-        int(os.environ.get("LUCENE_SPARK_CHUNK_CONCURRENCY", "3")),
-        max(len(pending), 1),
-    )
+    n_workers = min(CHUNK_CONCURRENCY, max(len(pending), 1))
     try:
         if n_workers > 1 and len(pending) > 1:
             with ThreadPoolExecutor(max_workers=n_workers) as ex:
@@ -1086,13 +976,7 @@ def build_index(
 
     # ---- term dictionary (tiny rows: S per term, not posting-sized) ----
     td = (
-        seg_blocks.groupBy("field", "term")
-        .agg(
-            F.sum("n").alias("df"),
-            F.sum("cf").alias("cf"),
-            F.count("*").alias("n_blocks"),
-            F.max("block_max_tf").alias("max_tf"),
-        )
+        postings_term_dict(seg_blocks)
         .repartitionByRange(max(1, n_merge // 4), "field", "term")
         .sortWithinPartitions("field", "term")
     )
@@ -1266,10 +1150,7 @@ class SparkIndex:
         if len(tiers) > 1:
             self._fc_blocks = None  # tier terms aren't front-coded yet
             self.term_dict = self.term_dict.groupBy("field", "term").agg(
-                F.sum("df").alias("df"),
-                F.sum("cf").alias("cf"),
-                F.sum("n_blocks").alias("n_blocks"),
-                F.max("max_tf").alias("max_tf"),
+                F.sum("df").alias("df"), F.sum("cf").alias("cf")
             )
         parts = []
         for root, batches in tiers:

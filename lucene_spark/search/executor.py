@@ -50,7 +50,7 @@ from pyspark.sql.types import (
 )
 
 from lucene_spark.codec.norms import NORM_TABLE
-from lucene_spark.codec.varbyte import vb_decode
+from lucene_spark.codec.varbyte import decode_blocks
 from lucene_spark.index.builder import BLOCK_DOC_RANGE, SparkIndex
 from lucene_spark.search.query import (
     BooleanQuery,
@@ -121,20 +121,6 @@ def decode_postings(
         qid_lists.setdefault((t.field, t.text), []).append(i)
     qid_map = {k: v[0] for k, v in qid_lists.items()}
     dup_map = {v[0]: v[1:] for v in qid_lists.values() if len(v) > 1}
-    # per-field In filters, OR'd across the (few) fields: a flat In
-    # node instead of a per-term OR chain — a left-deep chain overflows
-    # the JVM stack during column conversion past ~300 terms (a fuzzy
-    # rewrite emits up to 1024), and parquet pushes In down just as well
-    by_field: dict[str, list[str]] = {}
-    for t in terms:
-        by_field.setdefault(t.field, []).append(t.text)
-    cond = reduce(
-        lambda a, b: a | b,
-        [
-            (F.col("field") == f) & F.col("term").isin(sorted(set(texts)))
-            for f, texts in by_field.items()
-        ],
-    )
     # explicit projection: mapInPandas consumes whatever it is given, so
     # without this select the parquet scan reads ALL columns — including
     # pos_bin, the largest in the index — even for non-phrase queries.
@@ -144,7 +130,7 @@ def decode_postings(
         cols += ["tfs_bin", "dls_bin"]
     if need_positions:
         cols.append("pos_bin")
-    blocks = index.postings.where(cond).select(*cols)
+    blocks = index.postings.where(_terms_cond(terms)).select(*cols)
     schema = _DECODE_POS_SCHEMA if need_positions else _DECODE_SCHEMA
 
     flt_bc = None
@@ -155,11 +141,6 @@ def decode_postings(
         flt_bc = blocks.sparkSession.sparkContext.broadcast(flt)
 
     def decode(it):
-        # Whole-batch decode: varbyte is self-delimiting, so the batch's
-        # blobs concatenate into ONE vb_decode call per stream; per-block
-        # doc-id reconstruction is pure numpy over the flat arrays. For
-        # stop-word-scale terms (10^5+ blocks) the per-block Python of a
-        # row loop dominates decode time — this kernel has none.
         for pdf in it:
             if len(pdf) == 0:
                 continue
@@ -173,21 +154,19 @@ def decode_postings(
             pdf = pdf[keep]
             qids_row = qids_row[keep]
             n = pdf["n"].to_numpy(np.int64)
-            doc_base = pdf["doc_base"].to_numpy(np.int64)
-            total = int(n.sum())
-            starts = np.cumsum(n) - n
-
-            gaps = vb_decode(b"".join(pdf["docs_bin"])).astype(np.int64)
-            cs = np.cumsum(gaps)
-            prior = cs[starts] - gaps[starts]  # cumsum before each block
-            base = doc_base - gaps[starts]  # block base (doc encoding)
-            docs = cs - np.repeat(prior, n) + np.repeat(base, n)
+            # positions decode BEFORE any doc_filter mask: varbyte
+            # streams can't be entered mid-block, and the per-doc splits
+            # derive from the UNfiltered tf run lengths
+            docs, tfs, dls, pos = decode_blocks(
+                pdf["doc_base"],
+                n,
+                pdf["docs_bin"],
+                None if docs_only else pdf["tfs_bin"],
+                None if docs_only else pdf["dls_bin"],
+                pdf["pos_bin"] if need_positions else None,
+            )
             if docs_only:
-                tfs = np.ones(len(docs), dtype=np.int64)
-                dls = tfs
-            else:
-                tfs = vb_decode(b"".join(pdf["tfs_bin"])).astype(np.int64)
-                dls = vb_decode(b"".join(pdf["dls_bin"])).astype(np.int64)
+                tfs = dls = np.ones(len(docs), dtype=np.int64)
             data = {
                 "qid": np.repeat(qids_row, n),
                 "doc_id": docs,
@@ -196,18 +175,6 @@ def decode_postings(
             }
             res = pd.DataFrame(data)
             if need_positions:
-                # positions: per-(doc) runs of tf gaps, runs reset at
-                # each doc — reconstruct flat then split per doc.
-                # (Decoded BEFORE any doc_filter mask: varbyte streams
-                # can't be entered mid-block, and the splits derive
-                # from the UNfiltered tf run lengths.)
-                pgaps = vb_decode(b"".join(pdf["pos_bin"])).astype(np.int64)
-                run_starts = np.cumsum(tfs) - tfs  # doc-run starts (flat)
-                pcs = np.cumsum(pgaps)
-                prior_p = np.where(run_starts > 0, pcs[run_starts - 1], 0)
-                offs = np.zeros(len(pgaps), dtype=np.int64)
-                offs[run_starts] = np.diff(prior_p, prepend=np.int64(0))
-                pos = pcs - np.cumsum(offs)
                 splits = np.cumsum(tfs)[:-1]
                 res["positions"] = np.split(pos.astype(np.int32), splits)
             if flt_bc is not None:
@@ -259,25 +226,19 @@ def dump_postings(index: SparkIndex, field: str) -> DataFrame:
     )
 
     def decode(it):
-        # whole-batch varbyte decode (see decode_postings): one
-        # vb_decode per stream, per-block reconstruction in numpy
         for pdf in it:
             if len(pdf) == 0:
                 continue
             n = pdf["n"].to_numpy(np.int64)
-            doc_base = pdf["doc_base"].to_numpy(np.int64)
-            starts = np.cumsum(n) - n
-            gaps = vb_decode(b"".join(pdf["docs_bin"])).astype(np.int64)
-            cs = np.cumsum(gaps)
-            prior = cs[starts] - gaps[starts]
-            base = doc_base - gaps[starts]
-            docs = cs - np.repeat(prior, n) + np.repeat(base, n)
+            docs, tfs, dls, _ = decode_blocks(
+                pdf["doc_base"], n, pdf["docs_bin"], pdf["tfs_bin"], pdf["dls_bin"]
+            )
             yield pd.DataFrame(
                 {
                     "term": np.repeat(pdf["term"].to_numpy(dtype=object), n),
                     "doc_id": docs,
-                    "tf": vb_decode(b"".join(pdf["tfs_bin"])).astype(np.int32),
-                    "dl": vb_decode(b"".join(pdf["dls_bin"])).astype(np.int32),
+                    "tf": tfs.astype(np.int32),
+                    "dl": dls.astype(np.int32),
                 }
             )
 
@@ -468,10 +429,9 @@ def _conjunction_restricted_postings(ix, all_terms, rare, rare_buckets=None):
     # per-field In filters (never a per-term OR chain — JVM stack
     # overflow past ~300 terms when an expansion sits in the tree)
     cond = _terms_cond(all_terms)
-    meta_cols = ["field", "term", "seg_id", "block_id", "doc_base"]
     keys = (
         ix.postings.where(cond)
-        .select(*meta_cols, "max_docid")
+        .select(*_WAND_META_COLS, "max_docid")
         .withColumn(
             "_bkt",
             F.explode(
@@ -482,11 +442,11 @@ def _conjunction_restricted_postings(ix, all_terms, rare, rare_buckets=None):
             ),
         )
         .join(rb, "_bkt", "leftsemi")
-        .select(*meta_cols)
+        .select(*_WAND_META_COLS)
         .distinct()
     )
     return types.SimpleNamespace(
-        postings=ix.postings.where(cond).join(keys, meta_cols)
+        postings=ix.postings.where(cond).join(keys, _WAND_META_COLS)
     )
 
 
@@ -1302,9 +1262,9 @@ def _terms_cond(terms: list[Term]) -> Column:
     """Pushdown-friendly (field, term) membership condition: per-field
     In filters OR'd across the (few) fields — NEVER a per-term OR
     chain, which overflows the JVM stack during column conversion past
-    ~300 terms (a wildcard/fuzzy rewrite emits up to 1024; same fix as
-    decode_postings). Semantics identical: a row matches iff its
-    (field, term) equals some query term's."""
+    ~300 terms (a wildcard/fuzzy rewrite emits up to 1024), and parquet
+    pushes In down just as well. A row matches iff its (field, term)
+    equals some query term's."""
     by_field: dict[str, list[str]] = {}
     for t in terms:
         by_field.setdefault(t.field, []).append(t.text)
@@ -1339,28 +1299,6 @@ def _ub_expr(index: SparkIndex, term: Term, weight: float) -> Column:
             F.col("imp_dls").cast("array<double>"),
             lambda tf, dl: _partial(tf, dl, avgdl),
         )
-    )
-
-
-def _sub_meta(index: SparkIndex, terms: list[Term]) -> DataFrame:
-    """(field, term, _bkt) for every WAND_BUCKET doc-range bucket that
-    one of the terms' posting SUB-ranges overlaps — presence at
-    sub-range granularity, so a bucket covered only by the gap between
-    two of a term's sub-ranges does not count as present. Metadata
-    columns only (the binary streams stay unread)."""
-    return index.postings.where(_terms_cond(terms)).select(
-        "field",
-        "term",
-        F.explode(F.arrays_zip("sub_min_docs", "sub_max_docs")).alias("_z"),
-    ).select(
-        "field",
-        "term",
-        F.explode(
-            F.sequence(
-                (F.col("_z.sub_min_docs") / WAND_BUCKET).cast("long"),
-                (F.col("_z.sub_max_docs") / WAND_BUCKET).cast("long"),
-            )
-        ).alias("_bkt"),
     )
 
 
@@ -1524,7 +1462,7 @@ def topk_and_cogrouped(
 
     cond = _terms_cond(all_terms)
     # bucket-granular presence (shared with the phrase kernel): ranges
-    # where some required term has no overlapping sub-range cannot host
+    # where some required term has no overlapping block cannot host
     # hits — their blocks drop before the shuffle (metadata-only;
     # prunes when a required term is regionally absent, e.g. a delta
     # tier or a clustered keyword). n_req == 0 skips the filter.
@@ -1552,15 +1490,11 @@ def topk_and_cogrouped(
         ws = np.asarray(ws, np.float64)
         avs = np.asarray(avs, np.float64)
         n = pdf["n"].to_numpy(np.int64)
-        doc_base = pdf["doc_base"].to_numpy(np.int64)
-        starts = np.cumsum(n) - n
-        gaps = vb_decode(b"".join(pdf["docs_bin"])).astype(np.int64)
-        cs = np.cumsum(gaps)
-        prior = cs[starts] - gaps[starts]
-        base = doc_base - gaps[starts]
-        docs = cs - np.repeat(prior, n) + np.repeat(base, n)
-        tfs = vb_decode(b"".join(pdf["tfs_bin"])).astype(np.float64)
-        dls = vb_decode(b"".join(pdf["dls_bin"])).astype(np.float64)
+        docs, tfs, dls, _ = decode_blocks(
+            pdf["doc_base"], n, pdf["docs_bin"], pdf["tfs_bin"], pdf["dls_bin"]
+        )
+        tfs = tfs.astype(np.float64)
+        dls = dls.astype(np.float64)
         row_q = np.repeat(qids, n)
         row_w = np.repeat(ws, n)
         row_a = np.repeat(avs, n)
@@ -1597,38 +1531,38 @@ def topk_and_cogrouped(
 
 def _presence_filtered_src(index: SparkIndex, all_terms, req_terms):
     """Postings of ``all_terms`` minus blocks confined to WAND_BUCKET
-    buckets where some term of ``req_terms`` has no overlapping
-    sub-range — the presence step shared by the cogroup kernels
-    (conjunction and phrase). Metadata-only and exact: a doc containing
-    every required term has, for each one, a posting block overlapping
-    the doc's own bucket, so all of a hit's blocks always survive.
-    The semi-join runs on _WAND_META_COLS keys only; binary columns are
+    buckets where some term of ``req_terms`` has no block — the
+    presence step shared by the cogroup kernels (conjunction and
+    phrase), pruning on each block's [doc_base, max_docid] span.
+    Metadata-only and exact: a doc containing every required term has,
+    for each one, a posting block spanning the doc's own bucket, so all
+    of a hit's blocks always survive. One span explode serves both
+    sides (required-term presence and the candidate blocks); the
+    semi-join runs on _WAND_META_COLS keys only and binary columns are
     joined back by key — never deduped or exploded (binary-column
     distinct corrupts; see PLANS.md)."""
     src = index.postings.where(_terms_cond(all_terms))
     if not req_terms:
         # pure disjunction: every range can host a hit
         return src
+    spans = src.select(
+        *_WAND_META_COLS,
+        F.explode(
+            F.sequence(
+                (F.col("doc_base") / WAND_BUCKET).cast("long"),
+                (F.col("max_docid") / WAND_BUCKET).cast("long"),
+            )
+        ).alias("_bkt"),
+    )
     present = (
-        _sub_meta(index, req_terms)
-        .distinct()
+        spans.where(_terms_cond(req_terms))
         .groupBy("_bkt")
         .agg(F.countDistinct("field", "term").alias("_np"))
         .where(F.col("_np") == len(req_terms))
         .select("_bkt")
     )
     keep_keys = (
-        src.select(*_WAND_META_COLS, "max_docid")
-        .withColumn(
-            "_bkt",
-            F.explode(
-                F.sequence(
-                    (F.col("doc_base") / WAND_BUCKET).cast("long"),
-                    (F.col("max_docid") / WAND_BUCKET).cast("long"),
-                )
-            ),
-        )
-        .join(present, "_bkt", "leftsemi")
+        spans.join(present, "_bkt", "leftsemi")
         .select(*_WAND_META_COLS)
         .distinct()
     )
@@ -1660,7 +1594,7 @@ def topk_phrase_cogrouped(
 
     Presence filtering (metadata-only, exact): a phrase hit contains
     EVERY unique term, so buckets where some term has no overlapping
-    sub-range cannot host hits and their blocks drop before the
+    block cannot host hits and their blocks drop before the
     shuffle. Reference semantics anchor: Phrase.php:378-491 (exact and
     sloppy freq), scored as the MultiTerm bm25 path scores phrases
     (idf of the min-df term).
@@ -1715,27 +1649,15 @@ def topk_phrase_cogrouped(
             np.int64,
         )
         n = pdf["n"].to_numpy(np.int64)
-        doc_base = pdf["doc_base"].to_numpy(np.int64)
-        starts = np.cumsum(n) - n
-        gaps = vb_decode(b"".join(pdf["docs_bin"])).astype(np.int64)
-        cs = np.cumsum(gaps)
-        prior = cs[starts] - gaps[starts]
-        base = doc_base - gaps[starts]
-        docs = cs - np.repeat(prior, n) + np.repeat(base, n)
-        tfs = vb_decode(b"".join(pdf["tfs_bin"])).astype(np.int64)
         # dls_bin is non-empty ONLY on term-0 blocks (driver projection)
         # and concatenates in pdf-row order — exactly the order of the
         # term-0 posting selector below
-        dls0 = vb_decode(b"".join(pdf["dls_bin"])).astype(np.float64)
-        # positions: per-doc runs of tf gaps, runs reset at each doc —
-        # same reconstruction as decode_postings' need_positions path
-        pgaps = vb_decode(b"".join(pdf["pos_bin"])).astype(np.int64)
-        run_starts = np.cumsum(tfs) - tfs
-        pcs = np.cumsum(pgaps)
-        prior_p = np.where(run_starts > 0, pcs[run_starts - 1], 0)
-        offs = np.zeros(len(pgaps), dtype=np.int64)
-        offs[run_starts] = np.diff(prior_p, prepend=np.int64(0))
-        pos = pcs - np.cumsum(offs)
+        docs, tfs, dls0, pos = decode_blocks(
+            pdf["doc_base"], n, pdf["docs_bin"], pdf["tfs_bin"],
+            pdf["dls_bin"], pdf["pos_bin"],
+        )
+        dls0 = dls0.astype(np.float64)
+        run_starts = np.cumsum(tfs) - tfs  # each posting's position run
 
         row_q = np.repeat(qids, n)  # per posting
         uniq_docs, inv = np.unique(docs, return_inverse=True)

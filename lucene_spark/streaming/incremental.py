@@ -36,6 +36,7 @@ from lucene_spark.index.builder import (
     _docs_with_lengths,
     _invert_segment,
     load_index,
+    postings_term_dict,
 )
 
 DELTA_DIR = "delta"
@@ -127,15 +128,8 @@ class IncrementalIndexWriter:
         blocks.write.mode("overwrite").parquet(
             _delta(self.index_dir, "postings", key)
         )
-        td = (
+        td = postings_term_dict(
             spark.read.parquet(_delta(self.index_dir, "postings", key))
-            .groupBy("field", "term")
-            .agg(
-                F.sum("n").alias("df"),
-                F.sum("cf").alias("cf"),
-                F.count("*").alias("n_blocks"),
-                F.max("block_max_tf").alias("max_tf"),
-            )
         )
         td.write.mode("overwrite").parquet(_delta(self.index_dir, "term_dict", key))
         text_fields = [f for f, k in cfg.field_policy.items() if k in ("text", "keyword")]
@@ -349,18 +343,9 @@ def promote_delta(index: SparkIndex, cfg: IndexConfig | None = None) -> SparkInd
         .write.mode("overwrite")
         .parquet(os.path.join(gdir, "postings"))
     )
-    (
+    postings_term_dict(
         spark.read.parquet(os.path.join(gdir, "postings"))
-        .groupBy("field", "term")
-        .agg(
-            F.sum("n").alias("df"),
-            F.sum("cf").alias("cf"),
-            F.count("*").alias("n_blocks"),
-            F.max("block_max_tf").alias("max_tf"),
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(gdir, "term_dict"))
-    )
+    ).write.mode("overwrite").parquet(os.path.join(gdir, "term_dict"))
     (
         spark.read.parquet(os.path.join(droot, "docs"))
         .where(flt)
@@ -473,15 +458,8 @@ def merge_delta(index: SparkIndex, cfg: IndexConfig | None = None) -> SparkIndex
         n_merge, "field", "term", "doc_base"
     ).sortWithinPartitions("field", "term", "doc_base")
     merged.write.mode("overwrite").parquet(os.path.join(index_dir, "postings_new"))
-    td = (
+    td = postings_term_dict(
         spark.read.parquet(os.path.join(index_dir, "postings_new"))
-        .groupBy("field", "term")
-        .agg(
-            F.sum("n").alias("df"),
-            F.sum("cf").alias("cf"),
-            F.count("*").alias("n_blocks"),
-            F.max("block_max_tf").alias("max_tf"),
-        )
     )
     td.write.mode("overwrite").parquet(os.path.join(index_dir, "term_dict_new"))
     from lucene_spark.codec.frontcode import write_dict_blocks

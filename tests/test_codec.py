@@ -8,8 +8,8 @@ from lucene_spark.codec import (
     vb_decode,
     delta_encode,
     delta_decode,
-    encode_posting_block,
-    decode_posting_block,
+    encode_blocks,
+    decode_blocks,
     freq_stream_encode,
     freq_stream_decode,
     NORM_TABLE,
@@ -45,21 +45,44 @@ def test_delta_roundtrip():
 
 
 def test_posting_block_roundtrip_with_positions():
-    docs = np.array([2, 5, 9], dtype=np.int64)
-    tfs = np.array([2, 1, 3], dtype=np.int64)
-    # 1-based positions, concatenated per doc
-    pos = np.array([1, 4, 2, 3, 7, 9], dtype=np.int64)
-    db, tb, pb = encode_posting_block(docs, tfs, pos, base=0)
-    d2, t2, p2 = decode_posting_block(db, tb, pb, base=0)
-    assert (d2 == docs).all() and (t2 == tfs).all() and (p2 == pos).all()
+    # three blocks laid end to end: [2, 5, 9] [100, 140] [141]
+    docs = np.array([2, 5, 9, 100, 140, 141], dtype=np.int64)
+    tfs = np.array([2, 1, 3, 1, 2, 1], dtype=np.int64)
+    dls = np.array([4, 1, 9, 3, 7, 200], dtype=np.int64)
+    starts = np.array([0, 3, 5])
+    # 1-based positions, concatenated per posting
+    pos = np.array([1, 4, 2, 3, 7, 9, 1, 5, 6, 130], dtype=np.int64)
+    db, tb, lb, pb = encode_blocks(docs, tfs, dls, starts, pos)
+    assert len(db) == len(tb) == len(lb) == len(pb) == 3
+    # a block's first doc gap is 1; position gaps reset at each posting
+    assert vb_decode(db[1]).tolist() == [1, 40]
+    assert vb_decode(pb[1]).tolist() == [1, 5, 1]
+    doc_base, n = docs[starts], np.array([3, 2, 1])
+    d2, t2, l2, p2 = decode_blocks(doc_base, n, db, tb, lb, pb)
+    assert (d2 == docs).all() and (t2 == tfs).all() and (l2 == dls).all()
+    assert (p2 == pos).all()
+    # any subset of blocks decodes on its own
+    d3, t3, _, p3 = decode_blocks(doc_base[1:], n[1:], db[1:], tb[1:], None, pb[1:])
+    assert (d3 == docs[3:]).all() and (t3 == tfs[3:]).all()
+    assert (p3 == pos[6:]).all()
 
 
 def test_posting_block_base_offsets():
-    docs = np.array([1000, 1001], dtype=np.int64)
-    tfs = np.array([1, 1], dtype=np.int64)
-    db, tb, pb = encode_posting_block(docs, tfs, None, base=999)
-    d2, t2, p2 = decode_posting_block(db, tb, pb, base=999)
-    assert (d2 == docs).all() and p2 is None
+    # keyword postings: tf 1, dl 1, position 0 — one 0x00 byte each
+    docs = np.array([1000, 1001, 1005, 9000], dtype=np.int64)
+    ones = np.ones(4, dtype=np.int64)
+    starts = np.array([0, 3])
+    db, tb, lb, pb = encode_blocks(docs, ones, ones, starts, np.zeros(4, np.int64))
+    assert pb == [b"\x00" * 3, b"\x00"]
+    assert db[1] == b"\x01"
+    d2, t2, l2, p2 = decode_blocks([1000, 9000], [3, 1], db, tb, lb, pb)
+    assert (d2 == docs).all() and (t2 == 1).all() and (l2 == 1).all()
+    assert (p2 == 0).all()
+    # positions not stored: no position streams, docs-only decode
+    _, _, _, none = encode_blocks(docs, ones, ones, starts)
+    assert none is None
+    d4, t4, l4, p4 = decode_blocks([1000, 9000], [3, 1], db)
+    assert (d4 == docs).all() and t4 is None and l4 is None and p4 is None
 
 
 def test_freq_stream_reference_parity():

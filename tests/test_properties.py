@@ -7,12 +7,15 @@
 2. The per-block Pareto impact frontier attains the block's true max
    BM25 impact for every (k1, b, avgdl) — the exactness premise of the
    WAND bound.
+3. The posting-block codec (encode_blocks / decode_blocks) round-trips
+   any run of blocks, whole or split at any block boundary.
 """
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from lucene_spark.codec.varbyte import decode_blocks, encode_blocks
 from lucene_spark.index.builder import pareto_impacts
 from lucene_spark.search.phrase import sloppy_phrase_freq
 from lucene_spark.search.similarity import bm25_partial
@@ -178,3 +181,45 @@ def test_bm25_partial_monotone_spotcheck():
     # decreasing in dl
     assert bm25_partial(3, 10, 50.0) > bm25_partial(2, 10, 50.0)
     assert bm25_partial(3, 10, 50.0) > bm25_partial(3, 20, 50.0)
+
+
+# one posting: (doc gap ≥ 1, dl, ascending position-gap list of length tf)
+_posting = st.tuples(
+    st.integers(1, 2**40),
+    st.integers(1, 5000),
+    st.lists(st.integers(1, 300), min_size=1, max_size=6),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    blocks=st.lists(st.lists(_posting, min_size=1, max_size=20), min_size=1,
+                    max_size=8),
+    keyword=st.booleans(),
+    cut=st.integers(0, 8),
+)
+def test_posting_block_codec_round_trip(blocks, keyword, cut):
+    gaps = [g for blk in blocks for g, _dl, _p in blk]
+    docs = np.cumsum(np.asarray(gaps, dtype=np.int64))
+    dls = np.asarray([dl for blk in blocks for _g, dl, _p in blk], np.int64)
+    if keyword:  # keyword postings: tf 1, position 0
+        tfs = np.ones(len(docs), dtype=np.int64)
+        pos = np.zeros(len(docs), dtype=np.int64)
+    else:
+        runs = [np.cumsum(p) for blk in blocks for _g, _dl, p in blk]
+        tfs = np.asarray([len(r) for r in runs], dtype=np.int64)
+        pos = np.concatenate(runs).astype(np.int64)
+    n = np.asarray([len(blk) for blk in blocks], dtype=np.int64)
+    starts = np.cumsum(n) - n
+    db, tb, lb, pb = encode_blocks(docs, tfs, dls, starts, pos)
+    d2, t2, l2, p2 = decode_blocks(docs[starts], n, db, tb, lb, pb)
+    assert (d2 == docs).all() and (t2 == tfs).all() and (l2 == dls).all()
+    assert (p2 == pos).all()
+    # blocks are self-contained: a suffix decodes alone
+    c = min(cut, len(blocks) - 1)
+    lo = int(starts[c])
+    d3, t3, _l, p3 = decode_blocks(
+        docs[starts[c:]], n[c:], db[c:], tb[c:], None, pb[c:]
+    )
+    assert (d3 == docs[lo:]).all() and (t3 == tfs[lo:]).all()
+    assert (p3 == pos[int(tfs[:lo].sum()):]).all()

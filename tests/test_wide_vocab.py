@@ -6,7 +6,7 @@ posting and the inverter's single-posting fast path (builder.py
 - dump_postings round-trip == the explode/groupBy recomputation from
   the raw text (tokenize → invert → pack → merge → decode is lossless);
 - block metadata invariants on n==1 blocks: the Pareto frontier and
-  sub-range summaries of a one-posting block ARE the posting;
+  cf of a one-posting block ARE the posting;
 - positions survive the fast path (a planted two-word phrase is
   findable, and only where planted);
 - the keyword field (multi-posting blocks, slow path) coexists in the
@@ -88,14 +88,10 @@ def test_wide_vocab_index_round_trip(spark, tmp_path):
     assert len(blocks) >= N * 20  # ~every hash token
     rng = np.random.RandomState(7)
     for r in [blocks[i] for i in rng.choice(len(blocks), 200, replace=False)]:
+        tf, dl = dumped[(r["term"], r["doc_base"])]
         assert r["doc_base"] == r["max_docid"]
-        assert list(r["imp_tfs"]) == [r["block_max_tf"]]
-        assert list(r["imp_dls"]) == [r["block_min_dl"]]
-        assert list(r["sub_min_docs"]) == [r["doc_base"]]
-        assert list(r["sub_max_docs"]) == [r["doc_base"]]
-        assert [list(x) for x in r["sub_imp_tfs"]] == [[r["block_max_tf"]]]
-        assert [list(x) for x in r["sub_imp_dls"]] == [[r["block_min_dl"]]]
-        assert r["cf"] == r["block_max_tf"]
+        assert list(r["imp_tfs"]) == [r["cf"]] == [tf]
+        assert list(r["imp_dls"]) == [dl]
 
     # ---- 3. positions through the fast path: the phrase is findable,
     # and exactly where planted

@@ -159,7 +159,7 @@ def build_sections(spark, e, sf):
             "Single-term BM25 top-k (`text:table`)",
             s.search("text:table", k=10),
             "One pruned parquet scan (PushedFilters on (field, term); "
-            "6/14 columns — no pos_bin), one Arrow decode, codegen'd "
+            "7/14 columns — no pos_bin), one Arrow decode, codegen'd "
             "BM25 arithmetic, TakeOrderedAndProject. No join, no "
             "aggregation for a single term.",
         ),
