@@ -1684,75 +1684,12 @@ FROM r
 """
 
 
-def _tx_lang_multi(spark, sf_dir):
-    """10-language marker-argmax language ID (round 4) over a
-    deterministic multilingual fixture: doc doc_id gets the function-
-    word sentence of language (doc_id % 10) prepended to the first 80
-    chars of its English text — the marker block dominates the ratio,
-    so the expected argmax is lang[doc_id % 10] with the English tail
-    as realistic noise. Oracle mirrors the synthesis, the ratios, the
-    threshold, and the (ratio DESC, lang ASC) tie-break exactly."""
-    from lucene_spark.ops.textstats import LANG_MARKERS, lang_id_multi
-
-    langs = sorted(LANG_MARKERS)
-    sents = F.array(*[F.lit(" ".join(LANG_MARKERS[l])) for l in langs])
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.concat_ws(
-            " ",
-            F.element_at(sents, (F.col("doc_id") % 10 + 1).cast("int")),
-            F.substring("text", 1, 80),
-        ).alias("text"),
-    )
-    out = lang_id_multi(docs, "doc_id", "text")
-    return out.select(
-        F.col("id").cast("long").alias("id"), "best_ratio", "lang"
-    )
-
-
-def _tx_lang_multi_sql() -> str:
-    from lucene_spark.ops.textstats import LANG_MARKERS, LANG_MIN_RATIO
-
-    langs = sorted(LANG_MARKERS)
-    sent_arr = ", ".join(f"'{' '.join(LANG_MARKERS[l])}'" for l in langs)
-    ratio_cols = ",\n           ".join(
-        "CASE WHEN len(l) > 0 THEN len(list_filter(l, x -> x IN ("
-        + ", ".join(f"'{m}'" for m in LANG_MARKERS[lang])
-        + f"))) / len(l) ELSE 0.0 END AS r_{lang}"
-        for lang in langs
-    )
-    gmax = "greatest(" + ", ".join(f"r_{lang}" for lang in langs) + ")"
-    case_arms = " ".join(
-        f"WHEN r_{lang} = gmax THEN '{lang}'" for lang in langs
-    )
-    return f"""
-WITH synth AS (
-    SELECT doc_id,
-           concat(([{sent_arr}])[doc_id % 10 + 1], ' ',
-                  substr(text, 1, 80)) AS text
-    FROM documents
-),
-t AS (SELECT doc_id, {TOKEN_SQL} AS l FROM synth),
-r AS (
-    SELECT doc_id,
-           {ratio_cols}
-    FROM t
-),
-g AS (SELECT *, {gmax} AS gmax FROM r)
-SELECT doc_id::BIGINT AS id, round(gmax, 6) AS best_ratio,
-       CASE WHEN gmax < {LANG_MIN_RATIO} THEN 'und' {case_arms}
-            ELSE 'und' END AS lang
-FROM g
-"""
-
-
 def _tx_lang_ngram(spark, sf_dir):
     """Char-trigram naive-Bayes language ID (round 5 — the measured
     upgrade over the function-word argmax; lang_id_ngram docstring has
-    the held-out quality table). Same synthesis shape as
-    _tx_lang_multi: doc doc_id gets the first 100 chars of language
-    (doc_id % 10)'s SEED paragraph prepended to the first 60 chars of
-    its English text, so the expected argmax is langs[doc_id % 10]
+    the held-out quality table). Doc doc_id gets the first 100 chars of
+    language (doc_id % 10)'s SEED paragraph prepended to the first 60
+    chars of its English text, so the expected argmax is langs[doc_id % 10]
     with per-doc variation in the scores. The oracle mirrors the
     synthesis and the generated per-language CASE profiles exactly."""
     from lucene_spark.ops.textstats import LANG_SEED, lang_id_ngram
@@ -2575,28 +2512,18 @@ def _ann_topk_strategies(spark, sf_dir):
 
 
 def _tx_lang_merged(spark, sf_dir):
-    """English-ratio language ID joined with the 10-language marker
-    argmax AND the round-5 char-trigram naive-Bayes classifier over
-    the multilingual fixtures (former tx_lang_id + tx_lang_id_multi,
-    extended with lang_id_ngram) — one row per doc, all three
+    """English-ratio language ID joined with the char-trigram
+    naive-Bayes classifier over the multilingual fixture (former
+    tx_lang_id, extended with lang_id_ngram) — one row per doc, both
     classifiers verified."""
-    multi = _tx_lang_multi(spark, sf_dir).select(
-        "id", "best_ratio", F.col("lang").alias("lang_multi")
-    )
-    return (
-        _tx_lang(spark, sf_dir)
-        .join(multi, "id")
-        .join(_tx_lang_ngram(spark, sf_dir), "id")
-    )
+    return _tx_lang(spark, sf_dir).join(_tx_lang_ngram(spark, sf_dir), "id")
 
 
 def _tx_lang_merged_sql() -> str:
     return f"""
-WITH a AS ({_TX_LANG_SQL}), b AS ({_tx_lang_multi_sql()}),
-     c AS ({_tx_lang_ngram_sql()})
-SELECT a.id, a.stop_ratio, a.lang, b.best_ratio, b.lang AS lang_multi,
-       c.ng_score, c.lang_ngram
-FROM a JOIN b USING (id) JOIN c USING (id)
+WITH a AS ({_TX_LANG_SQL}), c AS ({_tx_lang_ngram_sql()})
+SELECT a.id, a.stop_ratio, a.lang, c.ng_score, c.lang_ngram
+FROM a JOIN c USING (id)
 """
 
 

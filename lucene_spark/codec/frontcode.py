@@ -132,25 +132,12 @@ def write_dict_blocks(index_or_td, path: str | None = None,
     evicted and recomputed from lineage). At dictionary scale this
     removes a full shuffle of every term string."""
     import pandas as pd
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
+
+    from lucene_spark.index.tiers import TERM_DICT_FC_SCHEMA, read_table
 
     td = index_or_td if hasattr(index_or_td, "mapInPandas") else index_or_td.term_dict
     spark = td.sparkSession
-    schema = StructType(
-        [
-            StructField("field", StringType()),
-            StructField("first_term", StringType()),
-            StructField("n_terms", IntegerType()),
-            StructField("terms_bin", BinaryType()),
-        ]
-    )
-    cols = [f.name for f in schema.fields]
+    cols = [f.name for f in TERM_DICT_FC_SCHEMA.fields]
 
     def pack_batches(it):
         for pdf in it:
@@ -172,10 +159,10 @@ def write_dict_blocks(index_or_td, path: str | None = None,
         src = src.repartitionByRange(n, "field", "term").sortWithinPartitions(
             "field", "term"
         )
-    df = src.mapInPandas(pack_batches, schema)
+    df = src.mapInPandas(pack_batches, TERM_DICT_FC_SCHEMA)
     if path:
         df.repartitionByRange(n, "field", "first_term").sortWithinPartitions(
             "field", "first_term"
         ).write.mode("overwrite").parquet(path)
-        df = spark.read.parquet(path)
+        df = read_table(spark, path, "term_dict_fc")
     return df

@@ -39,15 +39,22 @@ local[32]):
    (df, cf) counters (groupBy on (field, term) of S rows/term, never
    posting-sized data).
 
-Storage layout under ``index_dir``::
+Storage layout of the base tier under ``index_dir`` (``index/tiers.py``
+owns the whole layout — sealed generations, the live delta, tombstones,
+meta rows, durability markers — and every table schema)::
 
-    docs/        doc_id + stored cols + len_<f>/norm_<f> per text field
-    postings/    field, term, seg_id, block_id, doc_base, max_docid,
-                 n, imp_tfs, imp_dls, cf, docs_bin, tfs_bin, dls_bin,
-                 pos_bin   (sorted by field, term, doc_base)
-    term_dict/   field, term, df, cf
-    manifests/   seg_id, n_docs, n_postings, lineage, per-field token sums
-    stats.json   n_docs, per-field {sum_len, n_docs_with_field}, config
+    docs/          doc_id + stored cols + len_<f>/norm_<f> per text field
+    postings/      field, term, seg_id, block_id, doc_base, max_docid,
+                   n, imp_tfs, imp_dls, cf, docs_bin, tfs_bin, dls_bin,
+                   pos_bin   (sorted by field, term, doc_base)
+    term_dict/     field, term, df, cf
+    term_dict_fc/  field, first_term, n_terms, terms_bin (front-coded)
+    segments/      seg_chunk=<c>/ phase-A posting blocks, per resume chunk
+    manifests/     seg_id, n_postings, n_tokens, min_doc_id, max_doc_id,
+                   n_blocks, chunk, lineage   (one row per segment)
+    build_plan.json  the resume-chunk span
+    stats.json     n_docs, per-field {kind, sum_len, n_docs_with_field},
+                   analyzer, boosts, build timings
 """
 
 from __future__ import annotations
@@ -64,19 +71,13 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from lucene_spark.analysis import Analyzer, default_analyzer
 from lucene_spark.codec.norms import encode_norm_array, length_norm
 from lucene_spark.codec.varbyte import encode_blocks
+from lucene_spark.index import tiers
+from lucene_spark.index.tiers import POSTINGS_SCHEMA
 
 BLOCK_SIZE = 128  # docs per posting block ≙ reference indexInterval
 # (AbstractSegmentWriter.php:30)
@@ -112,33 +113,6 @@ class IndexConfig:
     # (DocumentWriter.php:106-109, Document.php:16-32, Document/Field.php)
     field_boosts: dict[str, float] = dc_field(default_factory=dict)
     doc_boost_col: str | None = None  # input column with per-doc boost
-
-
-POSTINGS_SCHEMA = StructType(
-    [
-        StructField("field", StringType()),
-        StructField("term", StringType()),
-        StructField("seg_id", LongType()),
-        StructField("block_id", LongType()),
-        StructField("doc_base", LongType()),
-        StructField("max_docid", LongType()),
-        StructField("n", IntegerType()),
-        # Pareto-optimal (tf, dl) impact pairs of the block's docs —
-        # no doc has higher tf AND lower dl than a stored pair. The
-        # true block score bound is max over pairs of partial(tf, dl),
-        # far tighter than partial(max_tf, min_dl), which combines one
-        # doc's tf with ANOTHER doc's dl (Lucene's impacts idea).
-        # Evaluated lazily at query time because partial() depends on
-        # avgdl. Typically 1-5 pairs (tf values cluster at 1-3).
-        StructField("imp_tfs", ArrayType(IntegerType())),
-        StructField("imp_dls", ArrayType(IntegerType())),
-        StructField("cf", LongType()),
-        StructField("docs_bin", BinaryType()),
-        StructField("tfs_bin", BinaryType()),
-        StructField("dls_bin", BinaryType()),
-        StructField("pos_bin", BinaryType()),
-    ]
-)
 
 
 def _emit_len_norm_cols(
@@ -763,19 +737,22 @@ def _resolve_chunk_span(
     The span is PERSISTED (build_plan.json) before any chunk runs and
     reused verbatim on resume: re-deriving it could remap done chunk
     ids to different doc ranges (e.g. after a config or code change)
-    and silently skip never-inverted segments. The MAX_BUILD_CHUNKS cap
-    applies only to FRESH builds — a partial build whose manifests
-    predate build_plan.json ran with the legacy uncapped span, so a
-    plan-less resume with done chunks derives that legacy span (and
-    persists it for subsequent resumes) instead of re-capping.
+    and silently skip never-inverted segments. For the same reason a
+    resume that finds done chunks but no plan file refuses to guess.
+    The MAX_BUILD_CHUNKS cap applies to fresh builds.
     """
     plan_path = os.path.join(index_dir, "build_plan.json")
     if resume and os.path.exists(plan_path):
         with open(plan_path) as fh:
             return int(json.load(fh)["chunk_span"])
+    if done_chunks:
+        raise ValueError(
+            f"cannot resume: {plan_path} is missing but {len(done_chunks)} "
+            "chunks are done; rebuild with resume=False"
+        )
     span = cfg.seg_size * cfg.segments_per_commit
     n_chunks = int(max_doc // span) + 1
-    if not done_chunks and n_chunks > MAX_BUILD_CHUNKS:
+    if n_chunks > MAX_BUILD_CHUNKS:
         span *= -(-n_chunks // MAX_BUILD_CHUNKS)  # ceil division
     with open(plan_path + ".tmp", "w") as fh:
         json.dump({"chunk_span": span}, fh)
@@ -847,7 +824,7 @@ def build_index(
     split_prev = spark.conf.get(split_key)
     target = max(16 << 20, min(128 << 20, total_bytes // max(1, par * 2)))
     spark.conf.set(split_key, str(target))
-    docs = spark.read.parquet(docs_path)
+    docs = tiers.read_table(spark, docs_path, "docs")
     _mark("docs")
 
     # ---- phase A: per-segment inversion, manifest-checkpointed ----
@@ -861,10 +838,8 @@ def build_index(
     # completes, so "chunk id present in manifests" == durable.
     done_chunks: set[int] = set()
     if resume and os.path.exists(os.path.join(manifest_path, "_SUCCESS")):
-        done_chunks = {
-            int(r["chunk"])
-            for r in spark.read.parquet(manifest_path).select("chunk").distinct().collect()
-        }
+        chunks = pads.dataset(manifest_path, format="parquet").to_table(columns=["chunk"])
+        done_chunks = set(chunks.column("chunk").to_pylist())
     # purge orphan chunk dirs (written but never manifested — a build
     # killed between block write and manifest commit) so resume can't
     # duplicate data
@@ -889,11 +864,7 @@ def build_index(
     )
     # Resume-chunk span scales with input: each chunk is one serial
     # Spark job (~seconds of scheduling), so cap their count — at 10^12
-    # turns the configured span alone would mean ~156k serial jobs. The
-    # chosen span is PERSISTED (build_plan.json) before any chunk runs
-    # and reused verbatim on resume: re-deriving it could remap done
-    # chunk ids to different doc ranges (e.g. after a config or code
-    # change) and silently skip never-inverted segments.
+    # turns the configured span alone would mean ~156k serial jobs.
     span = _resolve_chunk_span(index_dir, cfg, max_doc, done_chunks, resume)
     n_chunks = int(max_doc // span) + 1
     pending = [c for c in range(n_chunks) if c not in done_chunks]
@@ -932,7 +903,7 @@ def build_index(
         # manifest rows per segment: lineage + counts (committed per
         # chunk, AFTER its data — "chunk in manifests" == durable)
         m = (
-            spark.read.parquet(chunk_dir)
+            tiers.read_table(spark, chunk_dir, "postings")
             .groupBy("seg_id")
             .agg(
                 F.sum("n").alias("n_postings"),
@@ -964,7 +935,7 @@ def build_index(
     _mark("segments")
 
     # ---- phase B: global merge (pure sort — see module docstring) ----
-    seg_blocks = spark.read.parquet(seg_path).drop("seg_chunk")
+    seg_blocks = tiers.read_table(spark, seg_path, "postings").drop("seg_chunk")
     n_merge = cfg.merge_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
@@ -1002,26 +973,10 @@ def build_index(
     _mark("term_dict")
 
     # ---- stats ----
-    text_like = [
-        f for f, k in cfg.field_policy.items() if k in ("text", "keyword")
-    ]
-    aggs = []
-    for f in text_like:
-        aggs.append(F.sum(F.col(f"len_{f}")).alias(f"sum_len_{f}"))
-        aggs.append(
-            F.sum((F.col(f"len_{f}") > 0).cast("long")).alias(f"cnt_{f}")
-        )
-    row = docs.agg(F.count("*").alias("n_docs"), *aggs).collect()[0]
+    n_docs, fields = tiers.docs_fields(docs, cfg.field_policy)
     stats = {
-        "n_docs": row["n_docs"],
-        "fields": {
-            f: {
-                "kind": cfg.field_policy[f],
-                "sum_len": int(row[f"sum_len_{f}"] or 0),
-                "n_docs_with_field": int(row[f"cnt_{f}"] or 0),
-            }
-            for f in text_like
-        },
+        "n_docs": n_docs,
+        "fields": {f: {"kind": cfg.field_policy[f], **fs} for f, fs in fields.items()},
         "block_size": BLOCK_SIZE,
         # index-time boosts must survive optimize/rebuild — norms are
         # recomputed there from config, and dropping these would
@@ -1055,137 +1010,61 @@ class SparkIndex:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        if os.path.exists(os.path.join(index_dir, "_merge_commit.json")):
-            # a delta merge committed but crashed mid-swap — finish it
-            from lucene_spark.streaming.incremental import _finish_merge_swap
+        from lucene_spark.streaming.incremental import recover_merge
 
-            _finish_merge_swap(index_dir)
-        fc_path = os.path.join(index_dir, "term_dict_fc")
-        # front-coded dictionary blocks (B6/.tii): used by terms_from
-        # when present; disabled while unmerged delta chunks are
-        # attached (their terms aren't packed until merge_delta)
-        self._fc_blocks = (
-            spark.read.parquet(fc_path)
-            if os.path.exists(os.path.join(fc_path, "_SUCCESS"))
-            else None
-        )
+        recover_merge(index_dir)  # finish a merge that crashed mid-swap
         with open(os.path.join(index_dir, "stats.json")) as fh:
             self.stats = json.load(fh)
-        self._delta_docs = 0
-        self._delta_field_stats: dict[str, dict[str, int]] = {}
-        self._attach_delta()
-        self.tombstones = None
+        self._attach_tiers()
         self.refresh_tombstones()
-        a = self.stats["analyzer"]
-        self._analyzer = Analyzer(
-            a["token_pattern"],
-            lowercase=a["lowercase"],
-            stop_words=frozenset(a["stop_words"]),
-            min_length=a["min_length"],
-            translit=a["translit"],
-        )
+        a = dict(self.stats["analyzer"])  # the Analyzer fields, as built
+        a["stop_words"] = frozenset(a["stop_words"])
+        self._analyzer = Analyzer(**a)
         self._default_field: str | None = None
         self._df_cache: dict[tuple[str, str], int] = {}
 
-    def _attach_delta(self) -> None:
-        """List the index's tiers and open every view over them: the
-        base, each sealed GENERATION (promote_delta output — compacted,
-        sorted mini-indexes) and the live delta micro-batches not yet
-        promoted into any generation (an unmerged reference index is
-        likewise searchable across its whole segment list). The Spark
-        postings/docs/term_dict views union the tiers; the driver-side
-        dictionary reader behind :meth:`prefetch_terms` opens the same
-        tiers' term_dict files here, so both see one snapshot. Term
-        stats aggregate across every tier."""
+    def _attach_tiers(self) -> None:
+        """Open every view over the index's tiers (``index/tiers.py``; an
+        unmerged reference index is likewise searchable across its whole
+        segment list): the Spark postings/docs/term_dict views and the
+        driver-side dictionary behind :meth:`prefetch_terms` see the same
+        tiers. Doc counts and field lengths sum across them. No job."""
         spark = self.spark
-        # (root dir, live batch ids — None for a whole-directory tier)
-        tiers: list[tuple[str, list[int] | None]] = [(self.index_dir, None)]
-        promoted: set[int] = set()
-        gen_root = os.path.join(self.index_dir, "gens")
-        if os.path.isdir(gen_root):
-            for entry in sorted(os.listdir(gen_root)):
-                gdir = os.path.join(gen_root, entry)
-                gmeta = os.path.join(gdir, "meta")
-                if not os.path.exists(os.path.join(gmeta, "_SUCCESS")):
-                    continue  # partial generation (crashed promote) — ignored
-                tiers.append((gdir, None))
-                for m in spark.read.parquet(gmeta).collect():
-                    promoted.update(json.loads(m["batch_ids"]))
-                    self._add_tier_stats(m)
-
-        droot = os.path.join(self.index_dir, "delta")
-        meta_dir = os.path.join(droot, "meta")
-        if os.path.isdir(meta_dir):
-            live_batches: list[int] = []
-            for m in spark.read.parquet(meta_dir).collect():
-                bid = int(m["batch_id"])
-                if bid in promoted:
-                    continue  # already sealed into a generation
-                live_batches.append(bid)
-                self._add_tier_stats(m)
-            if live_batches:
-                tiers.append((droot, live_batches))
-
-        def read(root: str, batches: list[int] | None, sub: str) -> DataFrame:
-            df = spark.read.parquet(os.path.join(root, sub))
-            return df if batches is None else df.where(F.col("batch").isin(batches))
-
+        self.catalog = tiers.read_catalog(self.index_dir)
+        self._fields = self.catalog.field_totals(self.stats["fields"])
         self.postings, self.docs, self.term_dict = (
-            read(self.index_dir, None, sub) for sub in ("postings", "docs", "term_dict")
+            self.catalog.read(spark, t) for t in ("postings", "docs", "term_dict")
         )
-        for root, batches in tiers[1:]:
-            self.postings = self.postings.unionByName(
-                read(root, batches, "postings").select(self.postings.columns)
-            )
-            self.docs = self.docs.unionByName(
-                read(root, batches, "docs").select(self.docs.columns)
-            )
-            self.term_dict = self.term_dict.unionByName(
-                read(root, batches, "term_dict").select(self.term_dict.columns)
-            )
         # one row per (field, term, tier): the dictionary expansion
         # source, summed driver-side (index/expansion.py) — expanding
         # over the aggregate below would add a shuffle job per field
         self._tier_term_dict = self.term_dict
-        if len(tiers) > 1:
-            self._fc_blocks = None  # tier terms aren't front-coded yet
+        # front-coded dictionary blocks (B6/.tii): used by terms_from on
+        # a base-only index (tier terms aren't packed until merge_delta)
+        fc_path = os.path.join(self.index_dir, "term_dict_fc")
+        self._fc_blocks = None
+        if self.catalog.upper:
             self.term_dict = self.term_dict.groupBy("field", "term").agg(
                 F.sum("df").alias("df"), F.sum("cf").alias("cf")
             )
-        parts = []
-        for root, batches in tiers:
-            td = os.path.join(root, "term_dict")
-            dirs = (
-                [td]
-                if batches is None
-                else [os.path.join(td, f"batch={b}") for b in batches]
-            )
-            parts += [
-                pads.dataset(d, schema=_DRIVER_TD_SCHEMA, format="parquet")
-                for d in dirs
-                if os.path.isdir(d)
-            ]
+        elif os.path.exists(os.path.join(fc_path, "_SUCCESS")):
+            self._fc_blocks = tiers.read_table(spark, fc_path, "term_dict_fc")
+        parts = [
+            pads.dataset(d, schema=_DRIVER_TD_SCHEMA, format="parquet")
+            for t in self.catalog.tiers
+            for d in t.table_dirs("term_dict")
+            if os.path.isdir(d)
+        ]
         self._td_driver = parts[0] if len(parts) == 1 else pads.dataset(parts)
-
-    def _add_tier_stats(self, meta_row) -> None:
-        self._delta_docs += meta_row["n_docs"]
-        for f, fs in json.loads(meta_row["field_stats"]).items():
-            agg = self._delta_field_stats.setdefault(
-                f, {"sum_len": 0, "n_docs_with_field": 0}
-            )
-            agg["sum_len"] += fs["sum_len"]
-            agg["n_docs_with_field"] += fs["n_docs_with_field"]
 
     def refresh_tombstones(self) -> None:
         """(Re)load the logical-delete tombstone table if present."""
-        from lucene_spark.index.lifecycle import load_tombstones
-
-        self.tombstones = load_tombstones(self.spark, self.index_dir)
+        self.tombstones = tiers.read_tombstones(self.spark, self.index_dir)
 
     # ---------------------------------------------- IndexReader protocol
     @property
     def n_docs(self) -> int:
-        return self.stats["n_docs"] + self._delta_docs
+        return self.stats["n_docs"] + self.catalog.n_docs
 
     def num_docs(self) -> int:
         """≙ reference numDocs() (SearchIndexInterface.php:87): live doc
@@ -1400,8 +1279,6 @@ class SparkIndex:
         return [text for text, _df in pairs]
 
     def avg_field_len(self, field: str) -> float:
-        fs = self.stats["fields"][field]
-        d = self._delta_field_stats.get(field, {})
-        n = fs["n_docs_with_field"] + d.get("n_docs_with_field", 0)
-        s = fs["sum_len"] + d.get("sum_len", 0)
-        return s / n if n else 0.0
+        fs = self._fields[field]
+        n = fs["n_docs_with_field"]
+        return fs["sum_len"] / n if n else 0.0

@@ -31,20 +31,10 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
+from lucene_spark.index import tiers
 from lucene_spark.index.builder import IndexConfig, SparkIndex, build_index
-
-
-def tombstones_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "tombstones")
-
-
-def load_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    p = tombstones_path(index_dir)
-    if os.path.exists(os.path.join(p, "_SUCCESS")):
-        return spark.read.parquet(p)
-    return None
 
 
 def delete_docs(index: SparkIndex, doc_ids: DataFrame | list[int]) -> int:
@@ -55,9 +45,9 @@ def delete_docs(index: SparkIndex, doc_ids: DataFrame | list[int]) -> int:
     Returns the new tombstone generation.
     """
     spark = index.spark
-    p = tombstones_path(index.index_dir)
+    p = tiers.tombstones_dir(index.index_dir)
     gen = 0
-    existing = load_tombstones(spark, index.index_dir)
+    existing = tiers.read_tombstones(spark, index.index_dir)
     if existing is not None:
         gen = existing.agg(F.max("gen")).collect()[0][0] + 1
     if isinstance(doc_ids, list):
@@ -70,7 +60,7 @@ def delete_docs(index: SparkIndex, doc_ids: DataFrame | list[int]) -> int:
 
 
 def deleted_count(index: SparkIndex) -> int:
-    t = load_tombstones(index.spark, index.index_dir)
+    t = tiers.read_tombstones(index.spark, index.index_dir)
     if t is None:
         return 0
     return t.select("doc_id").distinct().count()
@@ -92,7 +82,7 @@ def undelete_all(index: SparkIndex) -> int:
     Returns the number of distinct doc_ids restored.
     """
     n = deleted_count(index)
-    p = tombstones_path(index.index_dir)
+    p = tiers.tombstones_dir(index.index_dir)
     if os.path.exists(p):
         shutil.rmtree(p)
     index.refresh_tombstones()
@@ -110,7 +100,7 @@ def optimize_index(
     spark = index.spark
     cfg = cfg or _config_from_stats(index)
     survivors = index.docs
-    t = load_tombstones(spark, index.index_dir)
+    t = tiers.read_tombstones(spark, index.index_dir)
     if t is not None:
         survivors = survivors.join(
             t.select("doc_id").distinct(), "doc_id", "left_anti"
@@ -132,18 +122,9 @@ def optimize_index(
 
 
 def _config_from_stats(index: SparkIndex) -> IndexConfig:
-    from lucene_spark.analysis import Analyzer
-
-    a = index.stats["analyzer"]
     return IndexConfig(
         field_policy={f: v["kind"] for f, v in index.stats["fields"].items()},
-        analyzer=Analyzer(
-            a["token_pattern"],
-            lowercase=a["lowercase"],
-            stop_words=frozenset(a["stop_words"]),
-            min_length=a["min_length"],
-            translit=a["translit"],
-        ),
+        analyzer=index.analyzer(),  # rebuilt from stats.json on open
         # carry index-time boosts through optimize (norm recompute)
         field_boosts=dict(index.stats.get("field_boosts") or {}),
         doc_boost_col=index.stats.get("doc_boost_col"),

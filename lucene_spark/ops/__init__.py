@@ -39,7 +39,6 @@ from lucene_spark.ops.sampling import (
 from lucene_spark.ops.textstats import (
     fingerprint,
     lang_id,
-    lang_id_multi,
     quality_score,
     token_counts,
 )
@@ -81,7 +80,6 @@ __all__ = [
     "ivf_topk",
     "fingerprint",
     "lang_id",
-    "lang_id_multi",
     "quality_score",
     "token_counts",
 ]

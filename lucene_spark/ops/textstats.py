@@ -19,38 +19,6 @@ LANG_EN_MARKERS = (
     "in", "is", "it", "of", "on", "or", "that", "the", "to", "with",
 )
 
-# Multilingual function-word profiles (round 4): the same marker-ratio
-# heuristic generalized to the 10 most common web languages. ASCII-only
-# marker words on purpose — the shared TOKEN_PATTERN is [a-z0-9]+, so
-# an accented marker could never match; every language here has ample
-# ASCII function words. Keys sorted ascending: the argmax tie-break is
-# (ratio DESC, lang ASC) in BOTH the Spark expression and the SQL
-# oracle. Stdlib-honest: a statistical classifier (fastText & co.)
-# would slot into the same shape (per-language score columns → argmax).
-LANG_MARKERS: dict[str, tuple[str, ...]] = {
-    "de": ("der", "die", "das", "und", "ist", "von", "mit", "den",
-           "nicht", "ein", "eine", "zu", "auf", "im", "sich"),
-    "en": ("the", "and", "of", "to", "in", "is", "that", "for", "it",
-           "with", "as", "was", "on", "are", "this"),
-    "es": ("el", "la", "de", "que", "y", "en", "los", "del", "las",
-           "por", "con", "una", "para", "es", "su"),
-    "fr": ("le", "les", "de", "des", "et", "en", "un", "une", "du",
-           "que", "pour", "dans", "est", "qui", "au"),
-    "id": ("yang", "dan", "di", "itu", "dengan", "untuk", "tidak",
-           "ini", "dari", "dalam", "akan", "pada", "juga", "saya", "ke"),
-    "it": ("il", "di", "che", "e", "un", "una", "per", "con", "del",
-           "le", "si", "non", "sono", "nel", "alla"),
-    "nl": ("de", "het", "een", "en", "van", "ik", "te", "dat", "die",
-           "in", "je", "niet", "zijn", "op", "aan"),
-    "pt": ("o", "a", "de", "que", "e", "do", "da", "em", "um", "uma",
-           "para", "com", "os", "no", "se"),
-    "sv": ("och", "att", "det", "som", "en", "av", "den", "till",
-           "har", "de", "inte", "om", "han", "men", "var"),
-    "tr": ("bir", "ve", "bu", "da", "de", "icin", "ile", "olarak",
-           "cok", "daha", "gibi", "kadar", "sonra", "ama", "ne"),
-}
-LANG_MIN_RATIO = 0.05  # below it the text is 'und' (shared with SQL)
-
 # "BPE-ish" piece pattern: letter runs, single digits, or single
 # non-alphanumeric glyphs — a cheap proxy for subword token counts.
 BPE_PATTERN = "[a-z]+|[0-9]|[^a-z0-9 ]"
@@ -79,44 +47,6 @@ def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         F.col(id_col).alias("id"),
         F.round(ratio, 6).alias("stop_ratio"),
         F.when(ratio >= 0.05, F.lit("en")).otherwise(F.lit("und")).alias("lang"),
-    )
-
-
-def lang_id_multi(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, best_ratio, lang) — 10-language function-word argmax.
-
-    Per language: ratio = |tokens ∩ markers| / |tokens| (LANG_MARKERS).
-    lang = argmax ratio when the max is >= LANG_MIN_RATIO, else 'und';
-    ties break to the alphabetically-first language code — the SQL
-    oracle evaluates its CASE arms in the same order. Pure Catalyst
-    higher-order-function expressions: one projection, no shuffle,
-    no Python."""
-    toks = tokens(text_col)
-    df2 = df.select(F.col(id_col).alias("id"), toks.alias("toks"))
-    n = F.size("toks")
-    def _in_markers(ms):
-        # single-arg lambda builder: a two-parameter lambda would make
-        # F.filter pass (element, INDEX) and bind the index column
-        return lambda t: t.isin(ms)
-
-    entries = []
-    for lang in sorted(LANG_MARKERS):
-        markers = [F.lit(m) for m in LANG_MARKERS[lang]]
-        hits = F.size(F.filter(F.col("toks"), _in_markers(markers)))
-        ratio = F.when(n > 0, hits / n).otherwise(F.lit(0.0))
-        # sort key (-ratio, lang): ascending struct sort = ratio DESC,
-        # lang ASC — the deterministic argmax shared with the oracle
-        entries.append(
-            F.struct((-ratio).alias("neg"), F.lit(lang).alias("lang"))
-        )
-    best = F.sort_array(F.array(*entries))[0]
-    best_ratio = -best["neg"]
-    return df2.select(
-        "id",
-        F.round(best_ratio, 6).alias("best_ratio"),
-        F.when(best_ratio >= LANG_MIN_RATIO, best["lang"])
-        .otherwise(F.lit("und"))
-        .alias("lang"),
     )
 
 
@@ -454,8 +384,8 @@ def lang_id_ngram(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ten languages — the round-4 verdict bar the function-word argmax
     missed (en precision 0.71). One Catalyst projection: shared
     trigram array, one aggregate(element_at(map, tg)) per language, no
-    shuffle, no Python — the same linear-scan shape as lang_id_multi,
-    so the 100-TB story is unchanged."""
+    shuffle, no Python — the same linear-scan shape as lang_id, so the
+    100-TB story is unchanged."""
     norm = F.concat(
         F.lit(" "),
         F.trim(F.regexp_replace(F.lower(F.col(text_col)), "[^a-z]+", " ")),

@@ -36,6 +36,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
+from lucene_spark.index import tiers
 from lucene_spark.index.builder import SparkIndex
 from lucene_spark.search.executor import SparkSearcher
 from lucene_spark.search.parser import parse_query
@@ -221,15 +222,9 @@ class MultiSearcher:
         return sum(ix.doc_freq(term) for ix in self.indexes)
 
     def global_avg_field_len(self, field: str) -> float:
-        s = n = 0
-        for ix in self.indexes:
-            fs = ix.stats["fields"].get(field)
-            if fs is None:
-                continue
-            d = ix._delta_field_stats.get(field, {})
-            s += fs["sum_len"] + d.get("sum_len", 0)
-            n += fs["n_docs_with_field"] + d.get("n_docs_with_field", 0)
-        return s / n if n else 0.0
+        fs = tiers.sum_fields(*(ix._fields for ix in self.indexes)).get(field)
+        n = fs["n_docs_with_field"] if fs else 0
+        return fs["sum_len"] / n if n else 0.0
 
     def search(
         self,

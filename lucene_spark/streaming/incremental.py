@@ -1,25 +1,25 @@
-"""Structured-Streaming incremental index appends (LSM-style delta tier).
+"""Structured-Streaming incremental index appends (LSM-style tiers).
 
 The reference's writer buffers documents and flushes fixed-size segments,
 then geometrically merges them (Writer.php:220-233,642-742 — B7/B8).
-The streaming analog: each micro-batch becomes one DELTA CHUNK — a
-self-contained mini-index (posting blocks + docs + term counters) under
-``delta/…/batch=<id>`` — and a periodic :func:`merge_delta` compacts all
-delta chunks into the base postings (the geometric-merge tier).
+Here each micro-batch becomes one live DELTA batch — a self-contained
+mini-index (posting blocks + docs + term counters);
+:func:`promote_delta` seals live batches into a compact GENERATION at
+O(delta) cost; :func:`merge_delta` folds every tier into the base, and
+:func:`maybe_compact` picks between the two. ``index/tiers.py`` owns the
+layout, the meta rows and the durability markers.
 
 Correctness properties:
 - **idempotent re-processing**: every per-batch write goes to its own
-  ``batch=<id>`` directory with mode=overwrite, and the batch's doc-id
-  base is derived from a meta row written under the same key — a
-  replayed micro-batch (at-least-once foreachBatch) overwrites itself
-  bit-for-bit instead of duplicating.
-- **doc-id continuity**: batch N's ids start at
-  ``base_n_docs + Σ_{b<N} n_docs(b)`` — insertion order across the
+  ``batch=<id>`` directory with mode=overwrite and the doc-id base comes
+  from the durable meta rows, so a replayed micro-batch (at-least-once
+  foreachBatch) overwrites itself bit-for-bit instead of duplicating.
+- **doc-id continuity**: batch N's ids start at the high-water mark of
+  the base and the batches before it — insertion order across the
   stream, matching the reference's monotone docID assignment.
-- **queryable between merges**: :class:`SparkIndex` unions base and
-  delta postings/docs, and aggregates base + delta term counters, so
-  searches see streamed docs immediately (an unmerged reference index
-  is likewise searchable across its segment list).
+- **queryable between merges**: :class:`SparkIndex` unions every tier,
+  so searches see streamed docs immediately (an unmerged reference
+  index is likewise searchable across its segment list).
 """
 
 from __future__ import annotations
@@ -27,8 +27,9 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
+from lucene_spark.index import tiers
 from lucene_spark.index.builder import (
     POSTINGS_SCHEMA,
     IndexConfig,
@@ -38,27 +39,18 @@ from lucene_spark.index.builder import (
     load_index,
     postings_term_dict,
 )
-
-DELTA_DIR = "delta"
-
-
-def _delta(index_dir: str, *parts: str) -> str:
-    return os.path.join(index_dir, DELTA_DIR, *parts)
+# DELTA_DIR is re-exported for callers that locate the live delta
+from lucene_spark.index.tiers import DELTA_DIR, MERGE_MARKER as _MERGE_MARKER  # noqa: F401
 
 
 class IncrementalIndexWriter:
-    """foreachBatch sink appending micro-batches as delta chunks."""
+    """foreachBatch sink appending micro-batches as delta batches."""
 
     def __init__(self, index_dir: str, cfg: IndexConfig | None = None):
         self.index_dir = index_dir
         self.cfg = cfg or IndexConfig()
 
-    # -- doc-id base bookkeeping ------------------------------------
-    def _base_docs(self, spark: SparkSession) -> int:
-        with open(os.path.join(self.index_dir, "stats.json")) as fh:
-            return json.load(fh)["n_docs"]
-
-    def _batch_base(self, spark: SparkSession, batch_id: int) -> int:
+    def _batch_base(self, batch_id: int) -> int:
         # Order matters for crash-consistency against a concurrent
         # merge-swap: read the delta METAS first, stats.json second, and
         # take the max of (stats.n_docs, max(doc_base + n_docs) over
@@ -67,47 +59,23 @@ class IncrementalIndexWriter:
         # read lands on, one of the two sources carries the true
         # next-free id — a plain stats-then-metas sum could read OLD
         # stats and POST-deletion metas and hand out duplicate doc ids.
-        meta_root = _delta(self.index_dir, "meta")
-        high_water = 0
-        if os.path.isdir(meta_root) and any(
-            e.startswith("batch=") for e in os.listdir(meta_root)
-        ):
-            # ONE filtered read of the whole meta dir (tiny rows), not a
-            # per-batch collect loop — keeps the driver cost O(B) total
-            # over a stream's life instead of O(B^2)
-            metas = spark.read.parquet(meta_root).where(
-                F.col("batch_id") < int(batch_id)
-            )
-            if "doc_base" in metas.columns:
-                hw_expr = F.coalesce(
-                    F.max(F.col("doc_base") + F.col("n_docs")), F.lit(0)
-                )
-                base_off = 0
-            else:
-                # pre-doc_base delta format (metas written before the
-                # round-2 writer): batches were stamped contiguously
-                # from the base index's n_docs, so the high-water mark
-                # is base + Σ n_docs over prior batches — degrade to
-                # that instead of failing the meta read on upgrade
-                hw_expr = F.coalesce(F.sum("n_docs"), F.lit(0))
-                base_off = self._base_docs(spark)
-            row = metas.agg(hw_expr.alias("hw")).collect()[0]
-            high_water = base_off + int(row["hw"])
-        return max(self._base_docs(spark), high_water)
+        high_water = tiers.delta_high_water(self.index_dir, int(batch_id))
+        with open(os.path.join(self.index_dir, "stats.json")) as fh:
+            return max(json.load(fh)["n_docs"], high_water)
 
     # -- the sink ----------------------------------------------------
     def process_batch(self, df: DataFrame, batch_id: int) -> None:
         spark = df.sparkSession
         cfg = self.cfg
-        key = f"batch={int(batch_id)}"
-        base = self._batch_base(spark, int(batch_id))
+        base = self._batch_base(batch_id)
+
+        def path(table: str) -> str:
+            return tiers.delta_dir(self.index_dir, table, batch_id)
 
         # micro-batches are small: a single-partition local id stamp
         # keeps insertion order without a shuffle (the batch ALREADY
         # fits one executor's write path; large backfills should use
         # build_index / merge_delta instead)
-        from pyspark.sql import Window
-
         order_cols = [c for c in ("conv_id", "turn_idx") if c in df.columns] or [
             df.columns[0]
         ]
@@ -116,50 +84,19 @@ class IncrementalIndexWriter:
             "doc_id", (F.row_number().over(w) - 1 + F.lit(base)).cast("long")
         )
         docs = _docs_with_lengths(with_id, cfg).persist()
-        n = docs.count()
-
-        docs.write.mode("overwrite").parquet(_delta(self.index_dir, "docs", key))
+        n, fields = tiers.docs_fields(docs, cfg.field_policy)
+        docs.write.mode("overwrite").parquet(path("docs"))
         seg = docs.withColumn(
             "seg_id", (F.col("doc_id") / F.lit(cfg.seg_size)).cast("long")
         )
         blocks = seg.groupBy("seg_id").applyInPandas(
             _invert_segment(cfg), POSTINGS_SCHEMA
         )
-        blocks.write.mode("overwrite").parquet(
-            _delta(self.index_dir, "postings", key)
-        )
-        td = postings_term_dict(
-            spark.read.parquet(_delta(self.index_dir, "postings", key))
-        )
-        td.write.mode("overwrite").parquet(_delta(self.index_dir, "term_dict", key))
-        text_fields = [f for f, k in cfg.field_policy.items() if k in ("text", "keyword")]
-        aggs = [F.sum(F.col(f"len_{f}")).alias(f"sum_len_{f}") for f in text_fields]
-        aggs += [
-            F.sum((F.col(f"len_{f}") > 0).cast("long")).alias(f"cnt_{f}")
-            for f in text_fields
-        ]
-        row = docs.agg(*aggs).collect()[0]
-        meta = spark.createDataFrame(
-            [
-                (
-                    int(batch_id),
-                    int(n),
-                    int(base),
-                    json.dumps(
-                        {
-                            f: {
-                                "sum_len": int(row[f"sum_len_{f}"] or 0),
-                                "n_docs_with_field": int(row[f"cnt_{f}"] or 0),
-                            }
-                            for f in text_fields
-                        }
-                    ),
-                )
-            ],
-            "batch_id long, n_docs long, doc_base long, field_stats string",
-        )
+        blocks.write.mode("overwrite").parquet(path("postings"))
+        td = postings_term_dict(tiers.read_table(spark, path("postings"), "postings"))
+        td.write.mode("overwrite").parquet(path("term_dict"))
         # meta row LAST — its presence marks the batch durable
-        meta.write.mode("overwrite").parquet(_delta(self.index_dir, "meta", key))
+        tiers.write_delta_meta(self.index_dir, batch_id, n, base, fields)
         docs.unpersist()
 
 
@@ -185,10 +122,6 @@ def stream_into_index(
     return w.start()
 
 
-_MERGE_MARKER = "_merge_commit.json"
-_MERGE_TABLES = ("postings", "term_dict", "term_dict_fc", "docs")
-
-
 def _finish_merge_swap(index_dir: str) -> None:
     """Complete a committed merge: swap every staged ``<name>_new`` dir
     into place, install stats, drop ONLY the tiers the merge absorbed.
@@ -196,21 +129,14 @@ def _finish_merge_swap(index_dir: str) -> None:
     anywhere inside the swap is repaired by calling this again (the
     marker written by :func:`merge_delta` is the point of no return).
 
-    Tier cleanup is SCOPED to the marker's ``merged_batch_ids``: a
-    restarted streaming writer may have appended new micro-batches
-    between the commit marker and this swap — those were not in the
-    staged tables and must survive."""
+    Tier cleanup is SCOPED to the marker's batch ids: a restarted
+    streaming writer may have appended new micro-batches between the
+    commit marker and this swap — those were not in the staged tables
+    and must survive."""
     import shutil
 
-    marker = os.path.join(index_dir, _MERGE_MARKER)
-    merged_ids: set[int] | None = None
-    if os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                merged_ids = set(json.load(fh).get("merged_batch_ids") or [])
-        except (OSError, ValueError):
-            merged_ids = None
-    for name in _MERGE_TABLES:
+    merged_ids = tiers.read_merge_marker(index_dir)
+    for name in tiers.BASE_TABLES:
         new = os.path.join(index_dir, name + "_new")
         if os.path.isdir(new):
             cur = os.path.join(index_dir, name)
@@ -220,48 +146,8 @@ def _finish_merge_swap(index_dir: str) -> None:
     stats_new = os.path.join(index_dir, "stats_new.json")
     if os.path.exists(stats_new):
         os.rename(stats_new, os.path.join(index_dir, "stats.json"))  # atomic
-
-    droot = os.path.join(index_dir, DELTA_DIR)
-    if os.path.isdir(droot):
-        if merged_ids is None:
-            shutil.rmtree(droot)
-        else:
-            for sub in ("docs", "postings", "term_dict", "meta"):
-                root = os.path.join(droot, sub)
-                if not os.path.isdir(root):
-                    continue
-                for entry in os.listdir(root):
-                    if (
-                        entry.startswith("batch=")
-                        and int(entry.split("=", 1)[1]) in merged_ids
-                    ):
-                        shutil.rmtree(os.path.join(root, entry))
-            meta_root = os.path.join(droot, "meta")
-            leftover = os.path.isdir(meta_root) and any(
-                e.startswith("batch=") for e in os.listdir(meta_root)
-            )
-            if not leftover:
-                shutil.rmtree(droot)
-    gen_root = os.path.join(index_dir, "gens")
-    if os.path.isdir(gen_root):
-        for entry in list(os.listdir(gen_root)):
-            gdir = os.path.join(gen_root, entry)
-            gmeta = os.path.join(gdir, "meta")
-            if not os.path.exists(os.path.join(gmeta, "_SUCCESS")):
-                shutil.rmtree(gdir)  # crashed promote — garbage either way
-                continue
-            if merged_ids is None:
-                shutil.rmtree(gdir)
-                continue
-            import pandas as _pd
-
-            gen_batches: set[int] = set()
-            for m in _pd.read_parquet(gmeta)["batch_ids"]:
-                gen_batches.update(json.loads(m))
-            if gen_batches <= merged_ids:
-                shutil.rmtree(gdir)
-        if not os.listdir(gen_root):
-            shutil.rmtree(gen_root)
+    tiers.drop_merged(index_dir, merged_ids)
+    marker = os.path.join(index_dir, _MERGE_MARKER)
     if os.path.exists(marker):
         os.remove(marker)
 
@@ -275,98 +161,45 @@ def recover_merge(index_dir: str) -> bool:
     return False
 
 
-def _promoted_batches(spark, index_dir: str) -> set[int]:
-    """Batch ids already sealed into a generation (gen meta rows)."""
-    out: set[int] = set()
-    gen_root = os.path.join(index_dir, "gens")
-    if os.path.isdir(gen_root):
-        for entry in os.listdir(gen_root):
-            gmeta = os.path.join(gen_root, entry, "meta")
-            if os.path.exists(os.path.join(gmeta, "_SUCCESS")):
-                for m in spark.read.parquet(gmeta).collect():
-                    out.update(json.loads(m["batch_ids"]))
-    return out
+def _write_sorted(spark, postings: DataFrame, n_part: int, out: str, td_out: str) -> None:
+    """Write ``postings`` range-partitioned and sorted on (field, term,
+    doc_base) to ``out``, then its term dictionary to ``td_out``."""
+    postings.repartitionByRange(n_part, "field", "term", "doc_base").sortWithinPartitions(
+        "field", "term", "doc_base"
+    ).write.mode("overwrite").parquet(out)
+    postings_term_dict(tiers.read_table(spark, out, "postings")).write.mode(
+        "overwrite"
+    ).parquet(td_out)
 
 
 def promote_delta(index: SparkIndex, cfg: IndexConfig | None = None) -> SparkIndex:
     """Seal the live delta micro-batches into a GENERATION — the cheap
     merge tier. Cost is O(delta) only (no base rewrite): the batches'
     fragmented per-micro-batch posting files are re-range-partitioned
-    and sorted into one compact mini-index under ``gens/gen=<g>/``, and
-    queries union base + generations + any newer delta.
+    and sorted into one compact mini-index, and queries union base +
+    generations + any newer delta.
 
-    Crash-safe and idempotent: the generation's ``meta`` (which records
-    the promoted batch_ids) is written LAST — a crashed promote leaves a
-    meta-less dir that loaders ignore and the next promote overwrites;
-    promoted batches stay in ``delta/`` (loaders skip them via the gen
-    metas) until :func:`merge_delta` compacts everything, so no step
-    here deletes data. Use :func:`maybe_compact` for the geometric
-    policy between this and the full merge.
+    Crash-safe and idempotent: the generation's meta is written LAST
+    (``index/tiers.py``), and no step here deletes data — promoted
+    batches stay in the delta until :func:`merge_delta`. Use
+    :func:`maybe_compact` for the geometric policy between this and the
+    full merge.
     """
     spark = index.spark
-    index_dir = index.index_dir
-    droot = os.path.join(index_dir, DELTA_DIR)
-    meta_dir = _delta(index_dir, "meta")
-    if not os.path.isdir(meta_dir):
+    catalog = tiers.read_catalog(index.index_dir)
+    live = catalog.live
+    if live is None:
         return index
-    promoted = _promoted_batches(spark, index_dir)
-    metas = [
-        m
-        for m in spark.read.parquet(meta_dir).collect()
-        if int(m["batch_id"]) not in promoted
-    ]
-    if not metas:
-        return index
-    batches = [int(m["batch_id"]) for m in metas]
-    gen_root = os.path.join(index_dir, "gens")
-    # next id counts only DURABLE generations (meta present); a
-    # meta-less dir is a crashed promote — reclaim it by overwriting
-    existing = [
-        int(e.split("=", 1)[1])
-        for e in (os.listdir(gen_root) if os.path.isdir(gen_root) else [])
-        if e.startswith("gen=")
-        and os.path.exists(os.path.join(gen_root, e, "meta", "_SUCCESS"))
-    ]
-    gdir = os.path.join(gen_root, f"gen={max(existing, default=-1) + 1}")
-    if os.path.isdir(gdir):  # orphan from a crashed promote
-        import shutil
-
-        shutil.rmtree(gdir)
-    flt = F.col("batch").isin(batches)
+    gdir = catalog.claim_gen_dir()
     n_part = max(1, int(spark.conf.get("spark.sql.shuffle.partitions")) // 4)
-    (
-        spark.read.parquet(os.path.join(droot, "postings"))
-        .where(flt)
-        .drop("batch")
-        .repartitionByRange(n_part, "field", "term", "doc_base")
-        .sortWithinPartitions("field", "term", "doc_base")
-        .write.mode("overwrite")
-        .parquet(os.path.join(gdir, "postings"))
+    _write_sorted(
+        spark, live.read(spark, "postings"), n_part,
+        os.path.join(gdir, "postings"), os.path.join(gdir, "term_dict"),
     )
-    postings_term_dict(
-        spark.read.parquet(os.path.join(gdir, "postings"))
-    ).write.mode("overwrite").parquet(os.path.join(gdir, "term_dict"))
-    (
-        spark.read.parquet(os.path.join(droot, "docs"))
-        .where(flt)
-        .drop("batch")
-        .write.mode("overwrite")
-        .parquet(os.path.join(gdir, "docs"))
-    )
-    n_docs = sum(int(m["n_docs"]) for m in metas)
-    fs_merged: dict[str, dict[str, int]] = {}
-    for m in metas:
-        for f, fs in json.loads(m["field_stats"]).items():
-            agg = fs_merged.setdefault(f, {"sum_len": 0, "n_docs_with_field": 0})
-            agg["sum_len"] += fs["sum_len"]
-            agg["n_docs_with_field"] += fs["n_docs_with_field"]
-    meta = spark.createDataFrame(
-        [(json.dumps(sorted(batches)), n_docs, json.dumps(fs_merged))],
-        "batch_ids string, n_docs long, field_stats string",
-    )
+    live.read(spark, "docs").write.mode("overwrite").parquet(os.path.join(gdir, "docs"))
     # meta LAST — its presence makes the generation durable/visible
-    meta.write.mode("overwrite").parquet(os.path.join(gdir, "meta"))
-    return load_index(spark, index_dir)
+    tiers.write_gen_meta(gdir, live)
+    return load_index(spark, index.index_dir)
 
 
 def maybe_compact(
@@ -380,7 +213,7 @@ def maybe_compact(
     full :func:`merge_delta` compaction once Σ tier docs ≥
     ``full_merge_ratio`` × base docs."""
     base = index.stats["n_docs"]
-    tier_docs = index._delta_docs
+    tier_docs = index.catalog.n_docs
     if tier_docs == 0:
         return index
     if base and tier_docs >= full_merge_ratio * base:
@@ -407,7 +240,7 @@ def merge_delta(index: SparkIndex, cfg: IndexConfig | None = None) -> SparkIndex
     O(base + all tiers). Run it geometrically — :func:`maybe_compact`
     promotes cheap generations until the tiers are worth folding in.
     Absorbs sealed generations AND the live delta (promoted batches are
-    read from their generation, never double-counted from delta/).
+    read from their generation, never double-counted from the delta).
     """
     spark = index.spark
     index_dir = index.index_dir
@@ -416,87 +249,36 @@ def merge_delta(index: SparkIndex, cfg: IndexConfig | None = None) -> SparkIndex
         # after the crashed merge's marker) — fall through and compact
         # them too, honoring this call's contract
         index = load_index(spark, index_dir)
-    droot = os.path.join(index_dir, DELTA_DIR)
-    gen_root = os.path.join(index_dir, "gens")
-    tier_postings = []
-    tier_docs = []
-    metas = []  # rows with n_docs + field_stats (delta metas + gen metas)
-    if os.path.isdir(gen_root):
-        for entry in sorted(os.listdir(gen_root)):
-            gdir = os.path.join(gen_root, entry)
-            gmeta = os.path.join(gdir, "meta")
-            if not os.path.exists(os.path.join(gmeta, "_SUCCESS")):
-                continue
-            tier_postings.append(spark.read.parquet(os.path.join(gdir, "postings")))
-            tier_docs.append(spark.read.parquet(os.path.join(gdir, "docs")))
-            metas.extend(spark.read.parquet(gmeta).collect())
-    if os.path.isdir(os.path.join(droot, "meta")):
-        promoted = _promoted_batches(spark, index_dir)
-        live = [
-            m
-            for m in spark.read.parquet(os.path.join(droot, "meta")).collect()
-            if int(m["batch_id"]) not in promoted
-        ]
-        if live:
-            flt = F.col("batch").isin([int(m["batch_id"]) for m in live])
-            tier_postings.append(
-                spark.read.parquet(os.path.join(droot, "postings")).where(flt)
-            )
-            tier_docs.append(
-                spark.read.parquet(os.path.join(droot, "docs")).where(flt)
-            )
-            metas.extend(live)
-    if not tier_postings:
+    catalog = tiers.read_catalog(index_dir)
+    if not catalog.upper:
         return index
 
+    def staged(name: str) -> str:
+        return os.path.join(index_dir, name + "_new")
+
     n_merge = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    base_postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-    merged = base_postings
-    for tp in tier_postings:
-        merged = merged.unionByName(tp.select(base_postings.columns))
-    merged = merged.repartitionByRange(
-        n_merge, "field", "term", "doc_base"
-    ).sortWithinPartitions("field", "term", "doc_base")
-    merged.write.mode("overwrite").parquet(os.path.join(index_dir, "postings_new"))
-    td = postings_term_dict(
-        spark.read.parquet(os.path.join(index_dir, "postings_new"))
+    _write_sorted(
+        spark, catalog.read(spark, "postings"), n_merge,
+        staged("postings"), staged("term_dict"),
     )
-    td.write.mode("overwrite").parquet(os.path.join(index_dir, "term_dict_new"))
     from lucene_spark.codec.frontcode import write_dict_blocks
 
     # write_dict_blocks re-sorts its input itself (ordering is its own
     # correctness requirement)
     write_dict_blocks(
-        spark.read.parquet(os.path.join(index_dir, "term_dict_new")),
-        os.path.join(index_dir, "term_dict_fc_new"),
+        tiers.read_table(spark, staged("term_dict"), "term_dict"),
+        staged("term_dict_fc"),
     )
-    base_docs = spark.read.parquet(os.path.join(index_dir, "docs"))
-    all_docs = base_docs
-    for td_ in tier_docs:
-        all_docs = all_docs.unionByName(td_.select(base_docs.columns))
-    all_docs.write.mode("overwrite").parquet(os.path.join(index_dir, "docs_new"))
+    catalog.read(spark, "docs").write.mode("overwrite").parquet(staged("docs"))
 
     with open(os.path.join(index_dir, "stats.json")) as fh:
         stats = json.load(fh)
-    for m in metas:
-        stats["n_docs"] += m["n_docs"]
-        for f, fs in json.loads(m["field_stats"]).items():
-            if f in stats["fields"]:
-                stats["fields"][f]["sum_len"] += fs["sum_len"]
-                stats["fields"][f]["n_docs_with_field"] += fs["n_docs_with_field"]
+    stats["n_docs"] += catalog.n_docs
+    stats["fields"] = catalog.field_totals(stats["fields"])
     with open(os.path.join(index_dir, "stats_new.json"), "w") as fh:
         json.dump(stats, fh)
 
     # point of no return: from here the staged tables are authoritative
-    merged_ids: set[int] = set()
-    for m in metas:  # delta metas carry batch_id; gen metas a batch_ids list
-        if "batch_id" in m.__fields__:
-            merged_ids.add(int(m["batch_id"]))
-        else:
-            merged_ids.update(json.loads(m["batch_ids"]))
-    marker = os.path.join(index_dir, _MERGE_MARKER)
-    with open(marker + ".tmp", "w") as fh:
-        json.dump({"merged_batch_ids": sorted(merged_ids)}, fh)
-    os.rename(marker + ".tmp", marker)
+    tiers.write_merge_marker(index_dir, catalog.batches)
     _finish_merge_swap(index_dir)
     return load_index(spark, index_dir)

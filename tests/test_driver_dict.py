@@ -1,12 +1,14 @@
-"""Query compilation runs no Spark job for plain terms.
+"""Opening an index and compiling a query run no Spark job for plain terms.
 
-``SparkIndex.prefetch_terms`` reads the tiers' term_dict parquet on the
-driver (the reference's in-process .tii/.tis lookup), so parse →
-rewrite → optimize → execute plans a term, AND, NOT or phrase query
-without scheduling anything. Dictionary expansion (wildcard / fuzzy /
-range) is the one compile step that scans on the cluster: one job per
-field, however many terms it matches, because the collected df seeds
-the driver cache.
+``load_index`` lists the tiers from their meta rows on the driver and
+opens every table with its declared or footer schema (index/tiers.py),
+so it schedules nothing. ``SparkIndex.prefetch_terms`` reads the tiers'
+term_dict parquet on the driver (the reference's in-process .tii/.tis
+lookup), so parse → rewrite → optimize → execute plans a term, AND, NOT
+or phrase query without scheduling anything. Dictionary expansion
+(wildcard / fuzzy / range) is the one compile step that scans on the
+cluster: one job per field, however many terms it matches, because the
+collected df seeds the driver cache.
 """
 
 from __future__ import annotations
@@ -163,3 +165,82 @@ def test_limit_sized_wildcard_is_one_dictionary_job(spark, tmp_path):
     want = [(r["doc_id"], r["score"]) for r in off.collect()]
     assert len(want) == 10
     assert got == want
+
+
+# ------------------------------------------------------------ opening
+
+
+@pytest.mark.parametrize("which", ["tiered", "base"])
+def test_load_index_runs_no_spark_job(tiered_index, spark_index, which):
+    from lucene_spark.index import load_index
+
+    ix = tiered_index if which == "tiered" else spark_index
+    first = _next_job_id(ix.spark)
+    opened = load_index(ix.spark, ix.index_dir)
+    assert _next_job_id(ix.spark) - first == 0
+    assert opened.n_docs == ix.n_docs
+    if which == "tiered":
+        assert len(opened.catalog.tiers) == 3 and opened.tombstones is not None
+
+
+def test_declared_schemas_equal_inferred(tiered_index):
+    """Every table of every tier opened with its declared (or, for docs,
+    parquet-footer) schema has exactly the schema Spark infers — so
+    skipping inference changes no column or type. Meta rows carry the
+    declared pyarrow schema."""
+    import pyarrow.parquet as pq
+
+    from lucene_spark.index import tiers
+
+    spark, d = tiered_index.spark, tiered_index.index_dir
+    base = ("docs", "postings", "term_dict", "term_dict_fc", "tombstones")
+    tables = [(os.path.join(d, t), t) for t in base]
+    tables.append((os.path.join(d, "segments"), "postings"))  # build phase A
+    for sub in ("gens/gen=0", "delta"):
+        tables += [(os.path.join(d, sub, t), t) for t in ("docs", "postings", "term_dict")]
+    for path, table in tables:
+        declared = tiers.read_table(spark, path, table).schema
+        assert declared == spark.read.parquet(path).schema, path
+
+    spark_types = {"int64": "bigint", "string": "string"}
+    for meta_dir, schema in [
+        (os.path.join(d, "gens", "gen=0", "meta"), tiers.GEN_META_SCHEMA),
+        (os.path.join(d, "delta", "meta"), tiers.DELTA_META_SCHEMA),
+    ]:
+        for f in tiers._parquet_files(meta_dir):
+            assert pq.read_schema(f).remove_metadata() == schema, f
+        inferred = spark.read.parquet(meta_dir).schema
+        assert [
+            (c.name, c.dataType.simpleString()) for c in inferred if c.name != "batch"
+        ] == [(c.name, spark_types[str(c.type)]) for c in schema], meta_dir
+
+
+def test_tier_views_hold_the_per_tier_rows(tiered_index):
+    """The tiered postings / docs / term_dict views hold the same rows as
+    a union of inferring reads of the base, generation 0 and live batch 1
+    (batch 0 was promoted into generation 0)."""
+    spark, d = tiered_index.spark, tiered_index.index_dir
+
+    def union(table):
+        parts = [
+            spark.read.parquet(os.path.join(d, table)),
+            spark.read.parquet(os.path.join(d, "gens", "gen=0", table)),
+            spark.read.parquet(os.path.join(d, "delta", table))
+            .where(F.col("batch") == 1)
+            .drop("batch"),
+        ]
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p.select(out.columns))
+        return out
+
+    for table, view in [
+        ("postings", tiered_index.postings),
+        ("docs", tiered_index.docs),
+        ("term_dict", tiered_index._tier_term_dict),
+    ]:
+        want = union(table)
+        assert view.columns == want.columns, table
+        assert view.count() == want.count() > 0, table
+        assert view.exceptAll(want).count() == 0, table
+        assert want.exceptAll(view).count() == 0, table

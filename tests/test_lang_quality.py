@@ -1,12 +1,11 @@
 """Language-ID quality measurement (round-4 verdict #5).
 
 A labeled fixture of natural-prose snippets — 12 per language for the
-10 languages lang_id_multi supports — measured for per-language
+10 languages lang_id_ngram supports — measured for per-language
 precision and recall. The snippets are ordinary everyday prose
 (weather, food, travel, work) written for this fixture; no external
-data. The floor asserted here (>= 0.90 precision AND recall per
-language) is the round-4 verdict's bar for keeping the function-word
-profile; the measured table is printed so BASELINE.md can cite it.
+data. The floor asserted here is >= 0.90 precision AND recall per
+language; the measured table is printed so BASELINE.md can cite it.
 """
 
 from __future__ import annotations
@@ -205,24 +204,6 @@ def test_lang_id_ngram_quality_floor(spark):
     for lang, s in stats.items():
         assert s["precision"] >= 0.90, (lang, s, confusions)
         assert s["recall"] >= 0.90, (lang, s, confusions)
-
-
-def test_lang_id_multi_measured_weakness(spark):
-    """The function-word argmax stays (it is gated and has its exact
-    SQL oracle), but its measured quality on real prose is the reason
-    it must not be used as a classifier: this records the measurement
-    so a regression in EITHER direction is visible. It still must
-    beat chance comfortably overall."""
-    from lucene_spark.ops.textstats import lang_id_multi
-
-    stats, confusions = _measure(spark, lang_id_multi)
-    n_total = sum(len(v) for v in LABELED.values())
-    accuracy = 1 - len(confusions) / n_total
-    print(f"\nlang_id_multi held-out accuracy: {accuracy:.3f}")
-    assert accuracy >= 0.60, (accuracy, confusions)
-    # the documented misfire that motivated the n-gram upgrade:
-    # English function words leak into other languages' prose
-    assert stats["en"]["precision"] < 0.90, stats["en"]
 
 
 def test_lang_id_ngram_junk_is_und(spark):

@@ -2,6 +2,7 @@
 finished chunks (north rule: per-partition segment manifests with
 lineage + counts; resume unit = chunk of segments_per_commit segments)."""
 
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -20,7 +21,12 @@ def test_resume_skips_done_chunks(spark, transcripts_df, tmp_path):
     cfg = IndexConfig(seg_size=50, segments_per_commit=2)
     span = cfg.seg_size * cfg.segments_per_commit  # docs per chunk
 
-    # simulate a partial run: docs written, only chunk 0 inverted+manifested
+    # simulate a partial run: docs written, the chunk span planned (a
+    # build persists build_plan.json before any chunk runs), only chunk 0
+    # inverted+manifested
+    os.makedirs(d)
+    with open(os.path.join(d, "build_plan.json"), "w") as fh:
+        json.dump({"chunk_span": span}, fh)
     df = assign_doc_ids(transcripts_df, ["conv_id", "turn_idx"])
     docs = _docs_with_lengths(df, cfg)
     docs.write.mode("overwrite").parquet(os.path.join(d, "docs"))

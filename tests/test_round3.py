@@ -267,24 +267,28 @@ def test_doc_filter_kernel(spark_index):
 
 
 # ---------------------------------------------------------- ADVICE #2
-def test_batch_base_falls_back_without_doc_base(spark, tmp_path):
-    """Delta metas written by the pre-round-2 writer lack doc_base; the
-    writer must degrade to base + Σ n_docs instead of failing."""
+def test_batch_base_falls_back_without_doc_base(tmp_path):
+    """A batch's doc-id base is the catalog's high-water mark: the max of
+    stats n_docs and doc_base + n_docs over the durable batches numbered
+    below it — a later-numbered batch (9) never moves it."""
+    from lucene_spark.index import tiers
     from lucene_spark.streaming.incremental import IncrementalIndexWriter
 
     d = str(tmp_path / "ix")
     os.makedirs(d)
     with open(os.path.join(d, "stats.json"), "w") as fh:
         json.dump({"n_docs": 100}, fh)
-    meta_dir = os.path.join(d, "delta", "meta")
-    for bid, nd in [(0, 7), (1, 5), (9, 99)]:
-        spark.createDataFrame(
-            [(bid, nd)], "batch_id long, n_docs long"
-        ).write.parquet(os.path.join(meta_dir, f"batch={bid}"))
+    metas = [(0, 7, 100), (1, 5, 107), (9, 99, 500)]  # (batch, n_docs, doc_base)
+    for bid, nd, db in metas:
+        tiers.write_delta_meta(d, bid, nd, db, {})
     w = IncrementalIndexWriter(d)
-    # prior batches 0 and 1 → 100 + 7 + 5 (batch 9 is not prior to 3)
-    assert w._batch_base(spark, 3) == 112
-    assert w._batch_base(spark, 0) == 100
+    prior = max(db + nd for bid, nd, db in metas if bid < 3)
+    assert w._batch_base(3) == max(100, prior) == 112
+    assert w._batch_base(0) == 100
+    # the stats side wins once a merge folded the batches into the base
+    with open(os.path.join(d, "stats.json"), "w") as fh:
+        json.dump({"n_docs": 120}, fh)
+    assert w._batch_base(3) == 120
 
 
 # ---------------------------------------------------------- ADVICE #3
@@ -304,14 +308,13 @@ def test_chunk_span_legacy_resume(tmp_path):
     assert span > 1 and (max_doc // span) + 1 <= MAX_BUILD_CHUNKS
     # plan persisted and honored on a later resume, even with done work
     assert _resolve_chunk_span(d1, cfg, max_doc, {0, 1}, resume=True) == span
-    # legacy resume: manifests exist but no build_plan.json → the
-    # ORIGINAL uncapped span (seg_size * segments_per_commit), persisted
-    d2 = str(tmp_path / "legacy")
+    # done chunks but no build_plan.json: guessing a span could remap
+    # chunk ids and skip segments, so the resume refuses and names the file
+    d2 = str(tmp_path / "planless")
     os.makedirs(d2)
-    span2 = _resolve_chunk_span(d2, cfg, max_doc, {0, 1, 2}, resume=True)
-    assert span2 == cfg.seg_size * cfg.segments_per_commit == 1
-    with open(os.path.join(d2, "build_plan.json")) as fh:
-        assert json.load(fh)["chunk_span"] == 1
+    with pytest.raises(ValueError, match="build_plan.json"):
+        _resolve_chunk_span(d2, cfg, max_doc, {0, 1, 2}, resume=True)
+    assert not os.path.exists(os.path.join(d2, "build_plan.json"))
 
 
 # ---------------------------------------------------------- ADVICE #4

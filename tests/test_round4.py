@@ -413,10 +413,11 @@ class TestPositionAwareDocFilter:
 
 
 class TestMultilingualLangId:
-    """Round-4: 10-language function-word argmax (ops.lang_id_multi)."""
+    """10-language char-trigram language ID (ops.lang_id_ngram) on
+    everyday sentences and on junk."""
 
     def test_real_sentences(self, spark):
-        from lucene_spark.ops import lang_id_multi
+        from lucene_spark.ops.textstats import LANG_NGRAM_MIN_SCORE, lang_id_ngram
 
         samples = [
             ("de", "der hund und die katze sind nicht mit dem auto zu "
@@ -445,22 +446,22 @@ class TestMultilingualLangId:
             "id long, text string",
         )
         out = {
-            r["id"]: (r["lang"], r["best_ratio"])
-            for r in lang_id_multi(df, "id", "text").collect()
+            r["id"]: (r["lang"], r["best_score"])
+            for r in lang_id_ngram(df, "id", "text").collect()
         }
         for i, (want_lang, _t) in enumerate(samples):
-            got_lang, ratio = out[i]
-            assert got_lang == want_lang, (want_lang, got_lang, ratio)
-            assert ratio >= 0.05
+            got_lang, score = out[i]
+            assert got_lang == want_lang, (want_lang, got_lang, score)
+            assert score >= LANG_NGRAM_MIN_SCORE
 
     def test_und_on_gibberish(self, spark):
-        from lucene_spark.ops import lang_id_multi
+        from lucene_spark.ops.textstats import lang_id_ngram
 
         df = spark.createDataFrame(
             [(0, "zzqx vvkpt lmnor aaa111 brzk xyzzy"), (1, "")],
             "id long, text string",
         )
-        out = {r["id"]: r["lang"] for r in lang_id_multi(df, "id", "text").collect()}
+        out = {r["id"]: r["lang"] for r in lang_id_ngram(df, "id", "text").collect()}
         assert out == {0: "und", 1: "und"}
 
 

@@ -11,7 +11,8 @@ and every phrase):
 
 - asserts pruned top-k == exact top-k (scores at 1e-9, tie-robust);
 - reports the routed path and blocks_decoded / blocks_total per query;
-- reports latency for both plans.
+- reports warm latency for both plans (each is run once untimed
+  before its timed run).
 
 Usage: python tools/wand_bench.py [n_docs]   (default 200_000)
 Prints one JSON line; paste into BASELINE.md.
@@ -152,6 +153,11 @@ def main() -> None:
         }
         for name, qs in cases.items():
             q = parse_query(qs).rewrite(ix).optimize(ix)
+            # one untimed run of each plan first: a path's first use in
+            # the session (Python worker start, kernel imports, codegen)
+            # would otherwise be charged to whichever row reaches it first
+            for mode in ("off", "force"):
+                s.execute(q, k=10, pruning=mode).collect()
             t0 = time.time()
             exact = s.execute(q, k=10, pruning="off").collect()
             t_exact = time.time() - t0
