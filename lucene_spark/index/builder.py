@@ -22,9 +22,9 @@ local[32]):
    rule asks for (the reference declares but never writes skip data —
    AbstractSegmentWriter.php:33-57).
    Per-doc field length (dl) is packed into each block so BM25 scoring
-   never joins the docs table. Each chunk of segments commits a manifest
-   row (lineage + token/posting counts) — a killed build resumes by
-   skipping segments whose manifest row exists.
+   never joins the docs table. Each chunk of segments commits manifest
+   rows (segment ids + lineage) — a killed build resumes by skipping
+   chunks whose manifest rows exist.
 
 3. Phase B (merge ≙ SegmentMerger k-way merge, SegmentMerger.php:202-245):
    because segments are doc-range DISJOINT, merging posting blocks is a
@@ -50,8 +50,8 @@ meta rows, durability markers — and every table schema)::
     term_dict/     field, term, df, cf
     term_dict_fc/  field, first_term, n_terms, terms_bin (front-coded)
     segments/      seg_chunk=<c>/ phase-A posting blocks, per resume chunk
-    manifests/     seg_id, n_postings, n_tokens, min_doc_id, max_doc_id,
-                   n_blocks, chunk, lineage   (one row per segment)
+    manifests/     seg_id, chunk, lineage   (one row per segment, written
+                   on the driver once the chunk's blocks are)
     build_plan.json  the resume-chunk span
     stats.json     n_docs, per-field {kind, sum_len, n_docs_with_field},
                    analyzer, boosts, build timings
@@ -70,6 +70,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
@@ -880,9 +881,8 @@ def build_index(
     # Chunk pipelines run CONCURRENTLY (a small thread pool submitting
     # independent Spark jobs): chunks touch disjoint doc ranges and
     # write to their own seg_chunk=<c> dirs, so the only shared sink is
-    # the manifest dir — its appends stay serialized under a lock
-    # (concurrent append jobs to one path share the committer's
-    # _temporary staging and can corrupt each other). Durability
+    # the manifest dir — each chunk renames its own file into it under a
+    # lock, on the driver, with no Spark job. Durability
     # semantics are unchanged: a chunk's manifest commits only after
     # its data write, in the same thread. Serially, each chunk paid
     # scheduling + commit + stage-tail barriers with the cluster idle
@@ -900,23 +900,23 @@ def build_index(
         )
         blocks = part.groupBy("seg_id").applyInPandas(invert, POSTINGS_SCHEMA)
         blocks.write.mode("overwrite").parquet(chunk_dir)
-        # manifest rows per segment: lineage + counts (committed per
-        # chunk, AFTER its data — "chunk in manifests" == durable)
-        m = (
-            tiers.read_table(spark, chunk_dir, "postings")
-            .groupBy("seg_id")
-            .agg(
-                F.sum("n").alias("n_postings"),
-                F.sum("cf").alias("n_tokens"),
-                F.min("doc_base").alias("min_doc_id"),
-                F.max("max_docid").alias("max_doc_id"),
-                F.count("*").alias("n_blocks"),
-            )
-            .withColumn("chunk", F.lit(c).cast("long"))
-            .withColumn("lineage", F.lit(f"docs_parquet:{docs_path}"))
+        # one manifest row per segment of the chunk's doc range, written
+        # on the driver AFTER its data ("chunk in manifests" == durable)
+        last = min((c + 1) * span, max_doc + 1) - 1
+        segs = list(range(c * span // cfg.seg_size, last // cfg.seg_size + 1))
+        rows = pa.table(
+            {
+                "seg_id": pa.array(segs, pa.int64()),
+                "chunk": pa.array([c] * len(segs), pa.int64()),
+                "lineage": [f"docs_parquet:{docs_path}"] * len(segs),
+            }
         )
         with manifest_lock:
-            m.write.mode("append").parquet(manifest_path)
+            os.makedirs(manifest_path, exist_ok=True)
+            tmp = os.path.join(manifest_path, f"_chunk-{c}.tmp")
+            pq.write_table(rows, tmp)
+            os.rename(tmp, os.path.join(manifest_path, f"part-chunk-{c:05d}.parquet"))
+            open(os.path.join(manifest_path, "_SUCCESS"), "w").close()
 
     n_workers = min(CHUNK_CONCURRENCY, max(len(pending), 1))
     try:
@@ -1070,15 +1070,13 @@ class SparkIndex:
         """≙ reference numDocs() (SearchIndexInterface.php:87): live doc
         count, i.e. :attr:`n_docs` (= count()/maxDoc(), which keeps
         counting deleted docs until optimize) minus logical deletes."""
-        from lucene_spark.index.lifecycle import deleted_count
-
-        return self.n_docs - deleted_count(self)
+        return self.n_docs - len(tiers.tombstone_ids(self.index_dir))
 
     def is_deleted(self, doc_id: int) -> bool:
         """≙ reference isDeleted($id) (SearchIndexInterface.php:97)."""
         if self.tombstones is None:
             return False
-        return self.tombstones.where(F.col("doc_id") == int(doc_id)).limit(1).count() > 0
+        return len(tiers.tombstone_ids(self.index_dir, doc_id)) > 0
 
     def has_deletions(self) -> bool:
         """≙ reference hasDeletions() (SearchIndexInterface.php:295)."""

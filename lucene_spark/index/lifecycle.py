@@ -12,7 +12,8 @@ Reference semantics (study citations):
 
 Spark shape:
 - :func:`delete_docs` appends a generation-numbered tombstone parquet
-  under ``tombstones/`` (≙ ``.del`` generations; Iceberg row-level
+  under ``tombstones/`` (≙ ``.del`` generations, numbered from the
+  parquet footers' ``gen`` statistics; Iceberg row-level
   deletes fill the same role on a real lakehouse). The searcher
   anti-joins hits against tombstones at collection time — exactly where
   the reference checks its bitmap — so scores (idf, norms, avgdl) are
@@ -46,10 +47,7 @@ def delete_docs(index: SparkIndex, doc_ids: DataFrame | list[int]) -> int:
     """
     spark = index.spark
     p = tiers.tombstones_dir(index.index_dir)
-    gen = 0
-    existing = tiers.read_tombstones(spark, index.index_dir)
-    if existing is not None:
-        gen = existing.agg(F.max("gen")).collect()[0][0] + 1
+    gen = tiers.next_tombstone_gen(index.index_dir)
     if isinstance(doc_ids, list):
         df = spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
     else:
@@ -60,10 +58,8 @@ def delete_docs(index: SparkIndex, doc_ids: DataFrame | list[int]) -> int:
 
 
 def deleted_count(index: SparkIndex) -> int:
-    t = tiers.read_tombstones(index.spark, index.index_dir)
-    if t is None:
-        return 0
-    return t.select("doc_id").distinct().count()
+    """Distinct tombstoned doc ids, counted on the driver (no Spark job)."""
+    return len(tiers.tombstone_ids(index.index_dir))
 
 
 def undelete_all(index: SparkIndex) -> int:

@@ -27,6 +27,8 @@ import shutil
 from dataclasses import dataclass, field as dc_field
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -116,6 +118,40 @@ def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
     if os.path.exists(os.path.join(p, SUCCESS)):
         return read_table(spark, p, "tombstones")
     return None
+
+
+def _tombstone_files(index_dir: str) -> list[str]:
+    p = tombstones_dir(index_dir)
+    return _parquet_files(p) if os.path.exists(os.path.join(p, SUCCESS)) else []
+
+
+def tombstone_ids(index_dir: str, doc_id: int | None = None) -> pa.Array:
+    """The distinct tombstoned doc ids (only ``doc_id``, if given), read
+    with pyarrow on the driver."""
+    files = _tombstone_files(index_dir)
+    if not files:
+        return pa.array([], pa.int64())
+    flt = None if doc_id is None else pads.field("doc_id") == int(doc_id)
+    ids = pads.dataset(files, format="parquet").to_table(["doc_id"], filter=flt)
+    return pc.unique(ids.column("doc_id"))
+
+
+def next_tombstone_gen(index_dir: str) -> int:
+    """One past the highest tombstone ``gen``, taken from the parquet
+    footers' column statistics (a row group without them is read); 0
+    when nothing is tombstoned."""
+    top = -1
+    for path in _tombstone_files(index_dir):
+        f = pq.ParquetFile(path)
+        col = f.schema_arrow.get_field_index("gen")
+        for rg in range(f.metadata.num_row_groups):
+            st = f.metadata.row_group(rg).column(col).statistics
+            if st is None or not st.has_min_max:
+                gens = f.read_row_group(rg, columns=["gen"]).column("gen")
+                top = max(top, pc.max(gens).as_py())
+            else:
+                top = max(top, st.max)
+    return top + 1
 
 
 def sum_fields(*parts: dict) -> dict[str, dict[str, int]]:

@@ -251,10 +251,7 @@ def _phrase_freq_batch(
     offsets: list[int],
     slop: int,
     n_rows: int,
-    sf,
     sf_np,
-    default_sloppy: bool,
-    two_slot_delta,
 ) -> "np.ndarray":
     """Per-row phrase frequency over flat position arrays — the ONE
     kernel body shared by the phrase pandas UDF (:meth:`_phrase_df`)
@@ -271,18 +268,10 @@ def _phrase_freq_batch(
     shifted_pos) as one int64 key and reduce with sort-based np.isin —
     no per-row Python (Phrase.php:378-415 semantics).
 
-    slop > 0 — vectorized NECESSARY-condition prefilter (the exact
-    kernel's intersection dilated by 2·slop+1 shifts), then the
-    quirk-faithful candidate queue only on surviving rows. The
-    dominant 2-slot shape ("a b"~n) is vectorized: single-position
-    docs compute in one batched expression, multi-position docs run
-    sloppy_phrase_freq_2slot (bit-identical to the Python queue up to
-    the 24-position escape threshold, fuzz-asserted in test_properties;
-    beyond it the closed form gives value parity at 1e-9 with a
-    different float accumulation order — see phrase.py); other slot
-    counts fall back to
-    phrase.sloppy_phrase_freq — the single source of truth shared
-    with the model (Phrase.php:425-491 semantics).
+    slop > 0 — :func:`phrase.sloppy_freq_batch`, the closed form of the
+    reference's candidate queue (Phrase.php:425-491) for any slot count
+    and any Similarity's ``sf_np``; a row's value depends on its own
+    positions only, whatever batch it arrives in.
     """
     n_slots = len(slot_qid)
     if slop == 0:
@@ -301,65 +290,12 @@ def _phrase_freq_batch(
             freq[rws] = counts
         return freq
 
-    from lucene_spark.search.phrase import sloppy_phrase_freq
+    from lucene_spark.search.phrase import sloppy_freq_batch
 
-    bias = slop + max(offsets) + 2  # keys stay positive
-    width = 2 * slop + 1
-    shifts = np.arange(-slop, slop + 1, dtype=np.int64)
-    common = None
-    for i in range(n_slots):
-        rows, flat, _lens, _b = qid_cache[slot_qid[i]]
-        starts = flat - offsets[i] + bias
-        keys = (np.repeat(rows, width) << np.int64(32)) | (
-            np.repeat(starts, width) + np.tile(shifts, len(flat))
-        )
-        keys = np.unique(keys)
-        common = keys if common is None else common[np.isin(common, keys)]
-    out = np.zeros(n_rows, dtype=np.float64)
-    if common is None or not len(common):
-        return out
-    rs = np.unique(common >> np.int64(32))
-    if two_slot_delta is not None:
-        # the dominant "a b"~n shape, ANY Similarity: single-position
-        # docs in one expression; multi-position docs through the
-        # BATCHED closed form (one flat (doc, i, j) expansion per
-        # kernel call — round 5 replaced the per-doc Python loop that
-        # dominated sloppy wall time at 149M turns; the closed form's
-        # value parity with the reference queue is fuzz-asserted at
-        # 1e-9 in test_properties, multiplicity structure is
-        # sf-independent so custom Similarities route here too)
-        from lucene_spark.search.phrase import _sloppy_2slot_closed_batch
-
-        _ra, fa, la, ba = qid_cache[slot_qid[0]]
-        _rb, fb, lb, bb = qid_cache[slot_qid[1]]
-        single = rs[(la[rs] == 1) & (lb[rs] == 1)]
-        if len(single):
-            d = np.abs(fb[bb[single]] - fa[ba[single]] - two_slot_delta)
-            out[single] = np.where(d <= slop, sf_np(d), 0.0)
-        multi = rs[(la[rs] != 1) | (lb[rs] != 1)]
-        if len(multi):
-            out[multi] = _sloppy_2slot_closed_batch(
-                fa, ba[multi], la[multi],
-                fb, bb[multi], lb[multi],
-                two_slot_delta, slop, sf_np=sf_np,
-            )
-    else:
-        # 3+-slot sloppy phrases: the reference's candidate queue has
-        # no known closed form past two slots — per-doc loop with the
-        # loud candidate budget (hot-hot docs raise instead of hanging)
-        for r in rs:
-            positions = [
-                list(
-                    qid_cache[slot_qid[i]][1][
-                        qid_cache[slot_qid[i]][3][int(r)] : qid_cache[
-                            slot_qid[i]
-                        ][3][int(r) + 1]
-                    ]
-                )
-                for i in range(n_slots)
-            ]
-            out[int(r)] = sloppy_phrase_freq(positions, offsets, slop, sf=sf)
-    return out
+    slots = [
+        (qid_cache[j][1], qid_cache[j][3][:-1], qid_cache[j][2]) for j in slot_qid
+    ]
+    return sloppy_freq_batch(slots, offsets, slop, sf_np)
 
 
 def _uniq_slots(terms: list[Term]) -> tuple[list[Term], list[int]]:
@@ -641,12 +577,11 @@ class SparkSearcher:
             uniq, _slots = _uniq_slots(q.terms)
             ix.prefetch_terms(uniq)
             total_df = sum(ix.doc_freq(t) for t in uniq)
-            # sloppy freq runs a per-doc fallback on multi-position
-            # docs, so the cogroup kernel needs enough ranges to
-            # parallelize it — on small corpora (< ~122 ranges) the
-            # exact plan's bigger Arrow batches win (wand_bench: sloppy
-            # 10.8 s cogroup vs 6.7 s exact at 200k docs, while slop=0
-            # cogroup already wins there)
+            # sloppy phrases need enough ranges for the cogroup kernel
+            # to win: on small corpora (< ~122 ranges) the exact plan's
+            # bigger Arrow batches did (wand_bench: sloppy 10.8 s
+            # cogroup vs 6.7 s exact at 200k docs, while slop=0 cogroup
+            # already wins there)
             if force or (
                 total_df >= AUTO_PRUNING_MIN_DF
                 and (q.slop == 0 or n_docs >= PHRASE_COGROUP_MIN_DOCS)
@@ -1081,16 +1016,10 @@ class SparkSearcher:
             grouped = grouped.where(F.col(f"_q{j}").isNotNull())
         offsets = list(q.offsets)
         slop = q.slop
-        n_slots = len(q.terms)
 
-        # similarity hooks captured HERE (driver) so workers score with
-        # the similarity that planned the query; the 2-slot closed form
-        # is derived from the default 1/(d+1) and only applies then
-        two_slot_delta = (
-            offsets[1] - offsets[0] if n_slots == 2 and slop else None
-        )
-        sf, sf_np = sim.sloppy_freq, sim.sloppy_freq_np
-        default_sloppy = sim.is_default_sloppy()
+        # the similarity hook is captured HERE (driver) so workers score
+        # with the similarity that planned the query
+        sf_np = sim.sloppy_freq_np
 
         @F.pandas_udf(DoubleType())
         def freq_udf(*pos_cols: pd.Series) -> pd.Series:
@@ -1113,8 +1042,7 @@ class SparkSearcher:
                 qid_cache[j] = (rows, flat, lens, bounds)
             return pd.Series(
                 _phrase_freq_batch(
-                    qid_cache, slot_qid, offsets, slop, n_rows,
-                    sf, sf_np, default_sloppy, two_slot_delta,
+                    qid_cache, slot_qid, offsets, slop, n_rows, sf_np
                 )
             )
 
@@ -1182,8 +1110,7 @@ def _collect_terms(q: Query) -> list[Term]:
 # ------------------------------------------------- block-max top-k path
 
 PHRASE_COGROUP_MIN_DOCS = 1_000_000  # 'auto' routes SLOPPY phrases to
-# the cogroup kernel only past this corpus size (≥ ~122 doc ranges —
-# enough kernel groups to parallelize the per-doc sloppy fallback)
+# the cogroup kernel only past this corpus size (≥ ~122 doc ranges)
 
 AUTO_PRUNING_MIN_DF = 65536  # 'auto' pruning: below this, block skipping
 # can't amortize the extra metadata jobs
@@ -1606,12 +1533,7 @@ def topk_phrase_cogrouped(
     n_uniq = len(uniq)
     offsets = list(q.offsets)
     slop = int(q.slop)
-    n_slots = len(q.terms)
-    two_slot_delta = (
-        offsets[1] - offsets[0] if n_slots == 2 and slop else None
-    )
-    sf, sf_np = sim.sloppy_freq, sim.sloppy_freq_np
-    default_sloppy = sim.is_default_sloppy()
+    sf_np = sim.sloppy_freq_np
     N = index.n_docs
     idf = bm25_idf(min(index.doc_freq(t) for t in uniq), N)
     avgdl = float(index.avg_field_len(q.terms[0].field))
@@ -1691,19 +1613,16 @@ def topk_phrase_cogrouped(
             np.cumsum(lens_row, out=bounds[1:])
             qcache[j] = (rows_j, flat_j, lens_row, bounds)
         freq = _phrase_freq_batch(
-            qcache, slot_qid, offsets, slop, n_rows,
-            sf, sf_np, default_sloppy, two_slot_delta,
+            qcache, slot_qid, offsets, slop, n_rows, sf_np
         )
         dl_row = np.zeros(n_rows, dtype=np.float64)
         sel0 = row_q == 0
         dl_row[inv[sel0]] = dls0
         hit = freq > 0
         h_docs, fr, dl_h = uniq_docs[hit], freq[hit], dl_row[hit]
-        sc = (
-            boost
-            * idf
-            * (fr * (k1 + 1.0))
-            / (fr + k1 * ((1.0 - b) + b * dl_h / avgdl))
+        # the exact plan's association order, so scores match it bitwise
+        sc = (boost * idf) * (
+            (fr * (k1 + 1.0)) / (fr + k1 * ((1.0 - b) + b * dl_h / avgdl))
         )
         if len(h_docs) > k:
             order = np.lexsort((h_docs, -sc))[:k]

@@ -1,21 +1,27 @@
-"""Phrase frequency algorithms, shared by the pure-Python model and the
-Spark executor's pandas UDF (single source of truth for parity).
+"""Phrase frequency algorithms.
 
 Reference: exact — Phrase.php:378-415; sloppy — Phrase.php:425-491 with
 sloppyFreq(d)=1/(d+1) accumulation (DefaultSimilarity.php:62-65).
+
+:func:`sloppy_phrase_freq` is the reference's candidate queue, verbatim:
+the pure-Python model's scorer and the test oracle. The Spark executor
+scores sloppy phrases with :func:`sloppy_freq_batch`, the queue's value in
+closed form, polynomial in a doc's position counts.
 """
 
 from __future__ import annotations
+
+import numpy as np
 
 from lucene_spark.search.similarity import sloppy_freq
 
 
 class PhraseQueueBudgetExceeded(RuntimeError):
-    """The generic n-slot sloppy-phrase queue exceeded its candidate
-    budget. Subclasses RuntimeError so pre-existing broad handlers keep
-    working, but serving layers can catch THIS type to degrade
-    deliberately (e.g. re-run with a smaller slop or route to the
-    closed-form 2-slot path) instead of treating it as an engine bug."""
+    """The reference queue (:func:`sloppy_phrase_freq`) exceeded its
+    candidate budget. Only that queue raises it — the pure-Python model
+    and test oracles; the Spark executor computes the same value with
+    :func:`sloppy_freq_batch` and never builds the queue. Subclasses
+    RuntimeError so broad handlers keep working."""
 
 
 def exact_phrase_freq(positions: list[list[int]], offsets: list[int]) -> float:
@@ -52,8 +58,7 @@ def sloppy_phrase_freq(
             # The queue MULTIPLIES candidates per position — the
             # reference's own algorithm is exponential in a doc's
             # position counts. Failing loudly beats an hours-long
-            # hang / OOM inside an executor task; the 2-slot shape
-            # escapes to a closed form before ever reaching here.
+            # hang / OOM.
             if len(phrase_queue) > QUEUE_CANDIDATE_BUDGET:
                 raise PhraseQueueBudgetExceeded(
                     f"sloppy-phrase candidate queue exceeded "
@@ -92,246 +97,138 @@ def sloppy_phrase_freq(
     return freq
 
 
-def sloppy_phrase_freq_2slot(pos_a, pos_b, delta: int, slop: int) -> float:
-    """Vectorized 2-slot sloppy frequency, BIT-IDENTICAL to
-    :func:`sloppy_phrase_freq` (fuzz-asserted in test_properties) but
-    with no per-candidate Python: the queue's contribution sequence is
-    reconstructed with numpy and summed with ``np.cumsum`` — a strictly
-    sequential left-to-right float64 accumulation, the same adds in the
-    same order as the reference loop, so even the last-ulp float state
-    matches and rank parity on near-tied scores is preserved.
-
-    Queue structure for two slots (derived from Phrase.php:425-491, the
-    same control flow as sloppy_phrase_freq):
-    - term 0 builds anchors with queue multiplicities w_i: each later
-      position is appended once per snapshot candidate, so
-      w_0 = 1, w_i = 2^(i-1) — queue order [a_0, a_1, a_2 x2, a_3 x4 ..];
-    - term 1's FIRST position b_0 mutates every candidate in place (no
-      window check; contributes only where d = |b_0 - a - delta| <= slop,
-      and skipped candidates add nothing);
-    - each LATER position b_j appends a copy for every snapshot
-      candidate whose ANCHOR is in b_j's window, preserving snapshot
-      order — so segment S_j is the in-window subsequence of
-      S_0 ++ .. ++ S_{j-1}, and every appended candidate contributes
-      1/(d_ij + 1) (the append check is the scoring condition);
-    - for two slots min-shift distance reduces to |b - a - delta|.
-
-    ``pos_a``/``pos_b`` may be any int sequence (numpy arrays pass
-    through without copy); ``delta`` = offsets[1] - offsets[0].
-    """
-    import numpy as np
-
-    A = np.asarray(pos_a, dtype=np.int64)
-    B = np.asarray(pos_b, dtype=np.int64)
-    if A.size == 0 or B.size == 0:
-        return 0.0
-    if A.size + B.size > 24:
-        # The queue MULTIPLIES candidates (anchor i carries 2^(i-1)
-        # copies, each later-b append can double again), so
-        # materializing it — as the reference does, and as the
-        # reconstruction below does — is exponential in the position
-        # counts: a hot-hot pair on natural text (tf 40+) would
-        # allocate terabytes (observed: a 32 TiB np.repeat on the Zipf
-        # bench corpus). Past this bound (≈2^23 worst-case candidates,
-        # ~64 MB per kernel worker — near the memory comfort limit,
-        # though a patient reference could still run somewhat beyond
-        # it), compute the SAME value by the closed form (O(A·B),
-        # fuzz-asserted equal at 1e-9 in test_properties). The float
-        # ACCUMULATION ORDER differs from the queue, so last-ulp rank
-        # parity on exactly-tied scores is traded for feasibility in
-        # this regime — documented divergence, not an oversight.
-        return _sloppy_2slot_closed(A, B, delta, slop)
-    reps = np.ones(A.size, dtype=np.int64)
-    if A.size >= 2:
-        reps[1:] = np.left_shift(np.int64(1), np.arange(A.size - 1, dtype=np.int64))
-    s0 = np.repeat(np.arange(A.size, dtype=np.int64), reps)
-    d = np.abs(B[0] - A - delta)
-    segs = [np.where(d <= slop, 1.0 / (d + 1.0), 0.0)[s0][d[s0] <= slop]]
-    cur = s0
-    for j in range(1, B.size):
-        dj = np.abs(B[j] - A - delta)
-        sel = cur[(dj <= slop)[cur]]
-        if sel.size:
-            segs.append(1.0 / (dj[sel] + 1.0))
-            cur = np.concatenate([cur, sel])
-    contribs = np.concatenate(segs) if segs else np.empty(0)
-    return float(np.cumsum(contribs)[-1]) if contribs.size else 0.0
-
-
 QUEUE_CANDIDATE_BUDGET = 4_000_000  # hard cap on materialized sloppy-
-# queue candidates (n-slot generic path; ~hundreds of MB of dicts) —
-# past it the algorithm is infeasible in ANY implementation
+# queue candidates (~hundreds of MB of dicts)
 
 
-def _sloppy_2slot_closed(A, B, delta: int, slop: int, sf_np=None) -> float:
-    """Closed-form VALUE of the 2-slot queue freq (derivation mirrors
-    the fuzz-verified oracle SQL in __spark_entry__._FT_SLOPPY_SQL):
-
-        freq = Σ_{i,j: d_ij ≤ slop} 2^max(i−1, 0) · m_ij · sf(d_ij)
-
-    with d_ij = |B_j − A_i − delta|, m_i0 = 1 (the first b mutates
-    candidates in place), and m_ij (j ≥ 1) = 2^(r−1) where r ranks
-    B_j among anchor i's IN-WINDOW later positions. The multiplicity
-    structure counts queue candidates and is independent of the
-    sloppyFreq weighting, so ``sf_np`` (vectorized distance → weight;
-    default 1/(d+1)) supports custom Similarities too. O(A·B) time
-    and memory. In-window pairs are INDEXED out (never masked by
-    multiplying with 0.0: the 2^i multiplicities overflow to inf past
-    i≈1074 and inf·0.0 is NaN, which would silently drop the doc);
-    an inf total clamps below float max so BM25's partial stays
-    finite (freq that large saturates the partial at k1+1 anyway)."""
-    import numpy as np
-
-    if sf_np is None:
-        def sf_np(d):
-            return 1.0 / (d + 1.0)
-
-    d = np.abs(B[None, :] - A[:, None] - delta).astype(np.float64)
-    inw = d <= slop
-    with np.errstate(over="ignore"):  # overflow -> inf is intentional
-        # (clamped at return; zero-sf pairs are indexed out below)
-        wa = np.exp2(
-            np.maximum(np.arange(A.size, dtype=np.float64) - 1.0, 0.0)
-        )
-    sel0 = np.nonzero(inw[:, 0])[0]
-    s0 = sf_np(d[sel0, 0])
-    nz0 = s0 != 0.0  # index out zero-weight pairs too: a custom sf_np
-    # may return 0.0 for an in-window distance, and once the 2^i
-    # multiplicities overflow to inf, inf * 0.0 = NaN would silently
-    # drop the doc from the sum
-    total = float((wa[sel0[nz0]] * s0[nz0]).sum())
-    if B.size > 1:
-        later = inw[:, 1:]
-        ranks = np.cumsum(later, axis=1, dtype=np.float64)
-        ai, bj = np.nonzero(later)
-        if len(ai):
-            sv = sf_np(d[ai, bj + 1])
-            nz = sv != 0.0
-            with np.errstate(over="ignore"):  # rank multiplicities
-                # overflow to inf past ~1075 partners, same intentional
-                # clamp-at-return as the anchor weights above
-                total += float(
-                    (
-                        wa[ai[nz]]
-                        * np.exp2(ranks[ai[nz], bj[nz]] - 1.0)
-                        * sv[nz]
-                    ).sum()
-                )
-    return min(total, 1.7e308)
-
-
-def _sloppy_2slot_closed_batch(
-    fa,
-    sa,
-    na,
-    fb,
-    sb,
-    nb,
-    delta: int,
-    slop: int,
-    sf_np=None,
-    pair_budget: int = 2_000_000,
+def sloppy_freq_batch(
+    slots, offsets: list[int], slop: int, sf_np=None, budget: int = 1 << 20
 ):
-    """Batched :func:`_sloppy_2slot_closed` over MANY docs at once — the
-    round-5 fix for the last per-doc Python hot loop (VERDICT r4 #3):
-    the sloppy cogroup kernel called the per-doc closed form / queue
-    once per multi-position survivor, and at 149M turns that loop — not
-    the decode, not the shuffle — was the 23.7 s. This computes the
-    identical closed-form VALUE for every doc in one flat (doc, i, j)
-    pair expansion: same anchor weights 2^max(i−1,0), same first-b
-    in-place mutation (j = 0 contributes multiplicity 1), same
-    2^(rank−1) later-b multiplicities with rank = the in-window
-    cumulative count per (doc, anchor) run — only the float
-    ACCUMULATION order differs (np.bincount per-doc segment sums vs the
-    queue's strict append order), a ≤1e-9 value drift already accepted
-    and documented for the >24-position escape in
-    :func:`sloppy_phrase_freq_2slot`.
+    """Sloppy phrase frequency of many docs at once: the VALUE of
+    :func:`sloppy_phrase_freq`'s candidate queue for any number of slots,
+    in closed form and with no per-doc Python.
 
-    ``fa``/``fb``: flat ascending position arrays for slot 0/1 (all
-    docs concatenated); ``sa``/``na`` and ``sb``/``nb``: per-doc start
-    offsets and counts into them, aligned with each other. Returns a
-    float64 array of per-doc frequencies. Work and memory are O(Σ
-    na·nb), chunked at ``pair_budget`` pairs so a range full of hot-hot
-    docs never materializes more than ~16 MB per flat array; a single
-    doc above the budget still runs alone (same cost as the per-doc
-    closed form it replaces).
+    ``slots``: one ``(flat, starts, counts)`` per phrase slot; doc r's
+    positions in the slot are ``flat[starts[r]:starts[r] + counts[r]]``,
+    ascending (a repeated phrase word passes the same arrays twice).
+    Returns per-doc frequencies as float64, 0 where a slot is empty.
+
+    The queue holds 2^E copies of each position tuple (x_0..x_{n-1}) and
+    adds sf(d) per copy whose min-shift distance d ≤ slop:
+    - slot 0's i-th position appends one copy per earlier candidate, so
+      an anchor starts at E = max(i − 1, 0);
+    - a later slot's first position overwrites every candidate in place:
+      E += 0, no window test;
+    - its later position j copies every candidate whose previous-slot
+      position is within slop of it; those j form one range lo..hi and
+      the copies made at lo..j−1 are copied again, so E += j − lo;
+    - d = Σ_t |y_t − median(y)| with y_t = x_t − off_t − (x_0 − off_0).
+      As d ≥ |y_t|, a tuple is dropped once some |y_t| > slop, which
+      leaves at most 2·slop + 2 choices per slot.
+
+    Tuples grow slot by slot in doc order. A level holding more than
+    ``budget`` tuples runs in pieces cut at doc boundaries (a doc over
+    the budget alone is cut by its own counts), so a doc's float sum
+    depends on its own positions only, never on the batch around it.
+    Zero-weight tuples are indexed out (2^E overflows to inf past
+    E ≈ 1023 and inf · 0 is NaN); totals clamp at 1.7e308.
     """
-    import numpy as np
-
     if sf_np is None:
 
         def sf_np(d):
             return 1.0 / (d + 1.0)
 
-    sa = np.asarray(sa, dtype=np.int64)
-    na = np.asarray(na, dtype=np.int64)
-    sb = np.asarray(sb, dtype=np.int64)
-    nb = np.asarray(nb, dtype=np.int64)
-    n_docs = len(na)
+    n_slots, n_docs = len(slots), len(slots[0][1])
     out = np.zeros(n_docs, dtype=np.float64)
-    if n_docs == 0:
-        return out
-    pairs = na * nb
-    # chunk split points: each chunk's Σ pairs ≤ budget (single docs
-    # above the budget form their own chunk)
-    cum = np.cumsum(pairs)
-    lo = 0
-    while lo < n_docs:
-        base = cum[lo] - pairs[lo]
-        hi = int(np.searchsorted(cum, base + pair_budget, side="left")) + 1
-        hi = max(hi, lo + 1)
-        hi = min(hi, n_docs)
-        pc = pairs[lo:hi]
-        nc = hi - lo
-        P = int(pc.sum())
-        if P == 0:
-            lo = hi
-            continue
-        doc_of = np.repeat(np.arange(nc, dtype=np.int64), pc)
-        off = np.cumsum(pc) - pc
-        p_loc = np.arange(P, dtype=np.int64) - np.repeat(off, pc)
-        nb_rep = np.repeat(nb[lo:hi], pc)
-        i_loc = p_loc // nb_rep
-        j_loc = p_loc - i_loc * nb_rep
-        a = fa[np.repeat(sa[lo:hi], pc) + i_loc]
-        b = fb[np.repeat(sb[lo:hi], pc) + j_loc]
-        d = np.abs(b - a - delta).astype(np.float64)
-        inw = d <= slop
-        with np.errstate(over="ignore"):  # 2^i -> inf intentional,
-            # clamped at return exactly like _sloppy_2slot_closed
-            wa = np.exp2(np.maximum(i_loc.astype(np.float64) - 1.0, 0.0))
-        res = np.zeros(nc, dtype=np.float64)
-        sel0 = np.flatnonzero(inw & (j_loc == 0))
-        if len(sel0):
-            s0 = sf_np(d[sel0])
-            nz = s0 != 0.0  # index out zero-sf pairs: inf * 0.0 = NaN
-            sel0, s0 = sel0[nz], s0[nz]
-            res += np.bincount(
-                doc_of[sel0], weights=wa[sel0] * s0, minlength=nc
+    # each slot regathered doc by doc and keyed doc·2^32 + position, so
+    # one searchsorted bounds a window in any doc (a bound past the doc's
+    # ends falls among a neighbour's keys and is clipped back)
+    pos, keys, first, end = [], [], [], []
+    for flat, starts, counts in slots:
+        counts = np.asarray(counts, dtype=np.int64)
+        c0 = np.cumsum(counts) - counts
+        p = np.asarray(flat, dtype=np.int64)[
+            np.repeat(np.asarray(starts, dtype=np.int64) - c0, counts)
+            + np.arange(int(counts.sum()), dtype=np.int64)
+        ]
+        doc_of = np.repeat(np.arange(n_docs, dtype=np.int64), counts)
+        pos.append(p)
+        keys.append((doc_of << 32) + p)
+        first.append(c0)
+        end.append(c0 + counts)
+
+    def grow(t, doc, e, base, ys):
+        if not len(doc):
+            return
+        if t == n_slots:
+            y = np.stack(ys, axis=1)
+            med = np.sort(y, axis=1)[:, n_slots // 2]
+            d = np.abs(y - med[:, None]).sum(axis=1)
+            sel = np.flatnonzero(d <= slop)
+            w = sf_np(d[sel].astype(np.float64))
+            sel, w = sel[w != 0.0], w[w != 0.0]
+            if len(sel):
+                with np.errstate(over="ignore"):  # inf clamps at return
+                    w = np.exp2(e[sel].astype(np.float64)) * w
+                dd = doc[sel]
+                out[dd[0] : dd[-1] + 1] += np.bincount(dd - dd[0], weights=w)
+            return
+        key, c, s = doc << 32, base + offsets[t], first[t][doc]
+        y0 = pos[t][s] - c
+        take0 = (np.abs(y0) <= slop).astype(np.int64)
+        ks, hi_doc = keys[t], end[t][doc]
+        # later positions in the previous slot's window, then in |y| ≤ slop
+        win = key + c + ys[-1]
+        w_lo = np.clip(np.searchsorted(ks, win - slop), s + 1, hi_doc)
+        w_hi = np.clip(np.searchsorted(ks, win + slop, "right"), s + 1, hi_doc)
+        lo = np.clip(np.searchsorted(ks, key + c - slop), w_lo, w_hi)
+        hi = np.clip(np.searchsorted(ks, key + c + slop, "right"), lo, w_hi)
+        m = take0 + hi - lo
+        for a, b in _doc_pieces(doc, m, budget):
+            mm = m[a:b]
+
+            def rep(v):
+                return np.repeat(v[a:b], mm)
+
+            r = np.arange(int(mm.sum()), dtype=np.int64) - np.repeat(
+                np.cumsum(mm) - mm, mm
             )
-        inw1 = inw & (j_loc > 0)
-        sel1 = np.flatnonzero(inw1)
-        if len(sel1):
-            # rank of b_j among anchor i's in-window later positions:
-            # pairs are laid out (doc, i, j) with j fastest, so each
-            # (doc, i) run starts at its j==0 pair (global index
-            # p − j_loc) and the in-run inclusive cumsum of inw1 is the
-            # rank (inw1 is False at the run start by construction)
-            cs = np.cumsum(inw1.astype(np.int64))
-            ranks = cs[sel1] - cs[sel1 - j_loc[sel1]]
-            s1 = sf_np(d[sel1])
-            nz = s1 != 0.0
-            sel1, s1, ranks = sel1[nz], s1[nz], ranks[nz]
-            with np.errstate(over="ignore"):
-                contrib = (
-                    wa[sel1]
-                    * np.exp2(ranks.astype(np.float64) - 1.0)
-                    * s1
-                )
-            res += np.bincount(doc_of[sel1], weights=contrib, minlength=nc)
-        out[lo:hi] = np.minimum(res, 1.7e308)
-        lo = hi
-    return out
+            has0 = rep(take0)
+            is0 = r < has0
+            j = np.where(is0, rep(s), rep(lo) + r - has0)
+            grow(
+                t + 1,
+                rep(doc),
+                rep(e) + np.where(is0, 0, j - rep(w_lo)),
+                rep(base),
+                [rep(y) for y in ys] + [pos[t][j] - rep(c)],
+            )
+
+    # anchors: every slot-0 position of the docs where no slot is empty
+    live = np.flatnonzero(np.all([e > f for f, e in zip(first, end)], axis=0))
+    n0 = end[0][live] - first[0][live]
+    i = np.arange(int(n0.sum()), dtype=np.int64)
+    i -= np.repeat(np.cumsum(n0) - n0, n0)
+    base = pos[0][np.repeat(first[0][live], n0) + i] - offsets[0]
+    e0 = np.maximum(i - 1, 0)
+    grow(1, np.repeat(live, n0), e0, base, [np.zeros_like(base)])
+    return np.minimum(out, 1.7e308)
+
+
+def _doc_pieces(doc, m, budget: int):
+    """``(a, b)`` tuple ranges whose ``m`` sums stay within ``budget``,
+    cut at the starts of docs (``doc`` ascending); a doc whose own sum
+    exceeds the budget is cut by its own cumulative counts."""
+    cum = np.cumsum(m)
+    a, n = 0, len(m)
+    while a < n:
+        b = int(np.searchsorted(cum, cum[a] - m[a] + budget, "right"))
+        if b < n:
+            cut = int(np.searchsorted(doc, doc[b]))
+            b = cut if cut > a else b
+        b = max(b, a + 1)
+        yield a, b
+        a = b
 
 
 def phrase_freq(

@@ -120,15 +120,6 @@ class Similarity:
         """Vectorized :meth:`sloppy_freq` over a numpy distance array."""
         return 1.0 / (d + 1.0)
 
-    def is_default_sloppy(self) -> bool:
-        """True iff sloppy_freq is unoverridden. The executor's 2-slot
-        closed-form kernel is derived from 1/(d+1) and only applies
-        then; a custom sloppy_freq routes through the generic queue."""
-        return (
-            type(self).sloppy_freq is Similarity.sloppy_freq
-            and type(self).sloppy_freq_np is Similarity.sloppy_freq_np
-        )
-
 
 _default_similarity = Similarity()
 

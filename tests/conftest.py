@@ -69,10 +69,9 @@ def assert_rank_parity(got, want, msg="", score_abs=1e-6, tie_rel=1e-9):
     """Rank identity vs the pure-Python model, modulo FLOAT-TIE groups:
     docs whose model scores agree within ``tie_rel`` may permute (the
     engine breaks exact ties by doc_id; the model's queue-order
-    accumulation can split such a tie by one ulp — e.g. the batched
-    2-slot sloppy closed form computes the same value as the reference
-    queue in a different float accumulation order, the same documented
-    tradeoff as the >24-position escape in phrase.py). Outside tie
+    accumulation can split such a tie by one ulp — the engine's sloppy
+    kernel computes the same value as the reference queue in a
+    different float accumulation order). Outside tie
     groups order must match exactly, and every doc's score at
     ``score_abs``. ``got``/``want`` are rank-ordered (doc_id, score)
     lists."""

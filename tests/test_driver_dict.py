@@ -244,3 +244,36 @@ def test_tier_views_hold_the_per_tier_rows(tiered_index):
         assert view.count() == want.count() > 0, table
         assert view.exceptAll(want).count() == 0, table
         assert want.exceptAll(view).count() == 0, table
+
+
+# ------------------------------------------------------------ tombstones
+
+
+def test_tombstone_reads_run_no_spark_job(spark, transcripts_df, tmp_path):
+    """``deleted_count`` / ``num_docs`` / ``is_deleted`` read the
+    tombstones on the driver, and ``delete_docs`` numbers its generation
+    from the parquet footers' ``gen`` statistics, so its one job is the
+    tombstone write."""
+    from lucene_spark.index import IndexConfig, build_index
+    from lucene_spark.index.lifecycle import delete_docs, deleted_count
+
+    ix = build_index(
+        spark,
+        transcripts_df.where(F.col("conv_id") < "conv00000005"),
+        str(tmp_path / "ix"),
+        IndexConfig(seg_size=100),
+    )
+
+    def jobs(fn, *args):
+        first = _next_job_id(spark)
+        out = fn(*args)
+        return out, _next_job_id(spark) - first
+
+    assert jobs(deleted_count, ix) == (0, 0)
+    assert jobs(ix.is_deleted, 3) == (False, 0)
+    for gen, ids in enumerate([[3, 7], [7, 9, 11]]):
+        assert jobs(delete_docs, ix, ids) == (gen, 1)
+    assert jobs(deleted_count, ix) == (4, 0)
+    assert jobs(ix.num_docs) == (ix.n_docs - 4, 0)
+    assert jobs(ix.is_deleted, 9) == (True, 0)
+    assert jobs(ix.is_deleted, 8) == (False, 0)

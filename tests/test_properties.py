@@ -2,8 +2,9 @@
 
 1. The ft_phrase_sloppy SQL oracle's closed form equals the reference's
    candidate-queue algorithm (phrase.sloppy_phrase_freq) for two-slot
-   phrases — anchor multiplicity 2^max(i−2,0), later-in-window-b
-   multiplicity 2^(rank−1), contribution mult/(d+1).
+   phrases — anchor multiplicity 2^max(i−1,0), later-in-window-b
+   multiplicity 2^(rank−1), contribution mult/(d+1) — and so does the
+   engine's n-slot kernel (phrase.sloppy_freq_batch).
 2. The per-block Pareto impact frontier attains the block's true max
    BM25 impact for every (k1, b, avgdl) — the exactness premise of the
    WAND bound.
@@ -17,11 +18,11 @@ from hypothesis import strategies as st
 
 from lucene_spark.codec.varbyte import decode_blocks, encode_blocks
 from lucene_spark.index.builder import pareto_impacts
-from lucene_spark.search.phrase import sloppy_phrase_freq
+from lucene_spark.search.phrase import sloppy_freq_batch, sloppy_phrase_freq
 from lucene_spark.search.similarity import bm25_partial
 
 
-def _closed_form(pa, pb, delta, slop):
+def _closed_form(pa, pb, delta, slop, sf=lambda d: 1.0 / (d + 1)):
     """The ft_phrase_sloppy oracle's formula (mirrors the SQL)."""
     freq = 0.0
     for i, a in enumerate(pa):
@@ -31,12 +32,27 @@ def _closed_form(pa, pb, delta, slop):
             d = abs(b - a - delta)
             if j == 0:
                 if d <= slop:
-                    freq += w / (d + 1)
+                    freq += w * sf(d)
             else:
                 if d <= slop:
-                    freq += w * (2.0**r) / (d + 1)
+                    freq += w * (2.0**r) * sf(d)
                     r += 1
     return freq
+
+
+def _slots(docs):
+    """sloppy_freq_batch's ``(flat, starts, counts)`` per slot from
+    ``docs[r][t]`` = doc r's positions in slot t."""
+    out = []
+    for t in range(len(docs[0])):
+        counts = np.asarray([len(d[t]) for d in docs], np.int64)
+        flat = np.concatenate([np.asarray(d[t], np.int64) for d in docs])
+        out.append((flat, np.cumsum(counts) - counts, counts))
+    return out
+
+
+def _close(want, got):
+    return abs(want - got) < 1e-9 * max(1.0, abs(want))
 
 
 positions = st.lists(
@@ -49,37 +65,18 @@ positions = st.lists(
 def test_sloppy_closed_form_matches_queue(pa, pb, delta, slop):
     want = sloppy_phrase_freq([pa, pb], [0, delta], slop)
     got = _closed_form(pa, pb, delta, slop)
-    assert abs(want - got) < 1e-9 * max(1.0, abs(want))
-
-
-@settings(max_examples=500, deadline=None)
-@given(pa=positions, pb=positions, delta=st.integers(1, 4), slop=st.integers(0, 5))
-def test_sloppy_2slot_vectorized_bit_identical(pa, pb, delta, slop):
-    """The numpy queue reconstruction must match the Python queue
-    BITWISE (== on floats, not approx): np.cumsum adds the same
-    contributions in the same left-to-right order, so near-tied rank
-    parity survives the vectorization."""
-    from lucene_spark.search.phrase import sloppy_phrase_freq_2slot
-
-    want = sloppy_phrase_freq([pa, pb], [0, delta], slop)
-    got = sloppy_phrase_freq_2slot(np.asarray(pa), np.asarray(pb), delta, slop)
-    assert want == got
+    assert _close(want, got)
 
 
 @settings(max_examples=300, deadline=None)
 @given(pa=positions, pb=positions, delta=st.integers(1, 4), slop=st.integers(0, 5))
 def test_sloppy_2slot_closed_matches_queue(pa, pb, delta, slop):
-    """The numpy closed form (_sloppy_2slot_closed — the escape hatch
-    for position counts where the queue is exponentially infeasible)
-    must equal the queue's VALUE at float tolerance on every feasible
-    input (accumulation order differs, so == is not expected)."""
-    from lucene_spark.search.phrase import _sloppy_2slot_closed
-
+    """sloppy_freq_batch on one 2-slot doc equals the queue's VALUE at
+    float tolerance (accumulation order differs, so == is not
+    expected)."""
     want = sloppy_phrase_freq([pa, pb], [0, delta], slop)
-    got = _sloppy_2slot_closed(
-        np.asarray(pa, np.int64), np.asarray(pb, np.int64), delta, slop
-    )
-    assert abs(want - got) < 1e-9 * max(1.0, abs(want))
+    got = sloppy_freq_batch(_slots([[pa, pb]]), [0, delta], slop)
+    assert got.shape == (1,) and _close(want, got[0])
 
 
 @settings(max_examples=200, deadline=None)
@@ -89,64 +86,107 @@ def test_sloppy_2slot_closed_matches_queue(pa, pb, delta, slop):
     ),
     delta=st.integers(1, 4),
     slop=st.integers(0, 5),
-    budget=st.sampled_from([7, 2_000_000]),
+    budget=st.sampled_from([7, 1 << 20]),
 )
 def test_sloppy_2slot_closed_batch_matches_queue(docs, delta, slop, budget):
-    """The BATCHED closed form (round 5 — one flat (doc, i, j)
-    expansion replacing the per-doc Python loop in the phrase kernels)
-    must equal the reference queue's value per doc at float tolerance,
-    including with a pair budget small enough to force multi-chunk
-    processing and single-doc-over-budget chunks."""
-    from lucene_spark.search.phrase import _sloppy_2slot_closed_batch
-
-    fa = np.concatenate([np.asarray(a, np.int64) for a, _ in docs])
-    fb = np.concatenate([np.asarray(b, np.int64) for _, b in docs])
-    na = np.array([len(a) for a, _ in docs], np.int64)
-    nb = np.array([len(b) for _, b in docs], np.int64)
-    sa = np.cumsum(na) - na
-    sb = np.cumsum(nb) - nb
-    got = _sloppy_2slot_closed_batch(
-        fa, sa, na, fb, sb, nb, delta, slop, pair_budget=budget
+    """Many 2-slot docs in one call equal the reference queue per doc,
+    also with a tuple budget small enough to cut the work into pieces
+    and to cut single docs."""
+    got = sloppy_freq_batch(
+        _slots([list(d) for d in docs]), [0, delta], slop, budget=budget
     )
     for i, (pa, pb) in enumerate(docs):
         want = sloppy_phrase_freq([list(pa), list(pb)], [0, delta], slop)
-        assert abs(want - got[i]) < 1e-9 * max(1.0, abs(want))
+        assert _close(want, got[i])
 
 
 def test_sloppy_2slot_closed_batch_custom_sf():
-    """Custom vectorized sloppyFreq flows through the batch path (the
-    multiplicity structure is sf-independent); zero-weight in-window
-    pairs must be indexed out, not multiplied (inf · 0.0 = NaN)."""
-    from lucene_spark.search.phrase import (
-        _sloppy_2slot_closed,
-        _sloppy_2slot_closed_batch,
-    )
+    """A custom vectorized sloppyFreq flows through the kernel; zero-
+    weight in-window tuples must be indexed out, not multiplied
+    (inf · 0.0 = NaN)."""
 
     def sf_np(d):
         return np.where(d > 1, 0.0, 0.5 / (d + 1.0))
 
+    def sf(d):
+        return 0.0 if d > 1 else 0.5 / (d + 1.0)
+
     pa = np.arange(0, 40, dtype=np.int64)  # 40 anchors -> 2^i weights
     pb = pa + 1
-    got = _sloppy_2slot_closed_batch(
-        pa, np.array([0]), np.array([40]),
-        pb, np.array([0]), np.array([40]),
-        1, 2, sf_np=sf_np,
-    )
-    want = _sloppy_2slot_closed(pa, pb, 1, 2, sf_np=sf_np)
+    got = sloppy_freq_batch(_slots([[pa, pb]]), [0, 1], 2, sf_np=sf_np)
+    want = _closed_form(pa.tolist(), pb.tolist(), 1, 2, sf)
     assert np.isfinite(got[0]) and got[0] > 0
-    assert abs(got[0] - want) < 1e-9 * max(1.0, abs(want))
+    assert _close(want, got[0])
 
 
 def test_sloppy_2slot_hot_positions_feasible():
-    """tf-40 × tf-40 docs (natural hot-hot text) must compute in O(A·B)
-    instead of materializing the 2^A-candidate queue (observed as a
-    32 TiB allocation before the closed-form escape hatch)."""
-    from lucene_spark.search.phrase import sloppy_phrase_freq_2slot
-
+    """Hot docs (tf 40-80 in every slot, natural hot-hot text) compute
+    in polynomial time instead of materializing the 2^tf-candidate
+    queue, for two slots and for three."""
     pa = np.arange(0, 400, 10, dtype=np.int64)  # 40 positions
-    pb = pa + 1
-    got = sloppy_phrase_freq_2slot(pa, pb, 1, 2)
-    assert np.isfinite(got) and got > 0
+    got = sloppy_freq_batch(_slots([[pa, pa + 1]]), [0, 1], 2)
+    assert np.isfinite(got[0]) and got[0] > 0
+    rng = np.random.default_rng(3)
+    docs = [
+        [np.sort(rng.choice(2000, 80, replace=False)) for _ in range(3)]
+        for _ in range(200)
+    ]
+    got = sloppy_freq_batch(_slots(docs), [0, 1, 2], 2)
+    assert np.isfinite(got).all() and (got > 0).any()
+
+
+def _sf_shifted(d):
+    return 1.0 / (d + 2.0)
+
+
+def _sf_zero_at_1(d):
+    return np.where(d == 1, 0.0, 1.0 / (d + 1.0))
+
+
+_SF = {  # vectorized sloppyFreq -> the scalar one the queue takes
+    None: None,
+    _sf_shifted: _sf_shifted,
+    _sf_zero_at_1: lambda d: 0.0 if d == 1 else 1.0 / (d + 1.0),
+}
+_small_positions = st.lists(
+    st.integers(min_value=1, max_value=30), min_size=0, max_size=5, unique=True
+).map(sorted)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    data=st.data(),
+    n_slots=st.integers(2, 4),
+    gaps=st.lists(st.integers(1, 3), min_size=3, max_size=3),
+    n_docs=st.integers(1, 6),
+    slop=st.integers(0, 4),
+    sf_np=st.sampled_from(list(_SF)),
+    budget=st.sampled_from([1, 5, 1 << 20]),
+)
+def test_sloppy_freq_batch_matches_queue(
+    data, n_slots, gaps, n_docs, slop, sf_np, budget
+):
+    """The n-slot kernel equals the reference queue per doc at 1e-9:
+    2-4 slots, gapped offsets, slots sharing a term (the same position
+    list twice), empty slots, a custom sloppyFreq and tuple budgets
+    that cut the work down to single tuples."""
+    offsets = [0] + np.cumsum(gaps[: n_slots - 1]).tolist()
+    # slot t reads term term_of[t]; repeats model "a b a"-style phrases
+    term_of = data.draw(
+        st.lists(st.integers(0, n_slots - 1), min_size=n_slots, max_size=n_slots)
+    )
+    docs = []
+    for _ in range(n_docs):
+        terms = [data.draw(_small_positions) for _ in range(n_slots)]
+        docs.append([terms[t] for t in term_of])
+    got = sloppy_freq_batch(_slots(docs), offsets, slop, sf_np, budget=budget)
+    for r, doc in enumerate(docs):
+        want = (
+            0.0
+            if not all(doc)
+            else sloppy_phrase_freq(doc, offsets, slop, sf=_SF[sf_np])
+        )
+        assert _close(want, got[r]), (doc, offsets, slop)
 
 
 blocks = st.lists(

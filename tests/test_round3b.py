@@ -309,11 +309,11 @@ def test_set_default_roundtrip():
     set_default(custom)
     try:
         assert get_default() is custom
-        assert not custom.is_default_sloppy()
+        assert get_default().sloppy_freq(0) == 0.5
     finally:
         set_default(base)
     assert get_default() is base
-    assert base.is_default_sloppy()
+    assert get_default().sloppy_freq(0) == 1.0
 
 
 def test_custom_similarity_model_spark_parity(

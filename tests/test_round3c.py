@@ -139,3 +139,54 @@ def test_phrase_cogroup_on_tiered_index(spark, tmp_path_factory):
     q = _phrase_q(ix, '"alpha beta"')
     got, _ = topk_phrase_cogrouped(ix, q, k=50)
     assert any(r["doc_id"] >= 40 for r in got.collect())
+
+
+def test_hot_sloppy3_returns_on_both_plans(spark, tmp_path_factory):
+    """A 3-term sloppy phrase over hot terms (each term ~30 times per
+    doc, past what the reference queue can build) returns under
+    pruning='off' and 'force' with BIT-identical scores."""
+    import numpy as np
+
+    from lucene_spark.index.builder import IndexConfig, build_index
+    from lucene_spark.search.phrase import (
+        PhraseQueueBudgetExceeded,
+        sloppy_phrase_freq,
+    )
+
+    rng = np.random.default_rng(11)
+    rows = [
+        (
+            "c0", i, "user",
+            " ".join(rng.choice(["alpha", "beta", "gamma", "delta"], 120)),
+            None, None,
+        )
+        for i in range(30)
+    ]
+    tokens = rows[0][3].split()
+    positions = [
+        [p for p, w in enumerate(tokens) if w == t]
+        for t in ("alpha", "beta", "gamma")
+    ]
+    with pytest.raises(PhraseQueueBudgetExceeded):
+        sloppy_phrase_freq(positions, [0, 1, 2], 2)
+
+    d = str(tmp_path_factory.mktemp("hot_sloppy3"))
+    schema = (
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts string"
+    )
+    cfg = IndexConfig(field_policy={"text": "text"}, seg_size=8)
+    ix = build_index(spark, spark.createDataFrame(rows, schema), d, cfg)
+    s = SparkSearcher(ix)
+    got = {
+        mode: [
+            (r["doc_id"], r["score"])
+            for r in s.search(
+                '"alpha beta gamma"~2', k=20, score_mode="bm25",
+                default_field="text", pruning=mode,
+            ).collect()
+        ]
+        for mode in ("off", "force")
+    }
+    assert len(got["off"]) == 20
+    assert got["off"] == got["force"]

@@ -11,7 +11,7 @@ class TestSloppyClosedFormNaN:
         """A custom sf returning 0.0 for an in-window distance combined
         with inf-overflowed 2^i multiplicities (anchor i >= 1026) must
         not produce NaN (= silent doc dropout). ADVICE r3 item 1."""
-        from lucene_spark.search.phrase import _sloppy_2slot_closed
+        from lucene_spark.search.phrase import sloppy_freq_batch
 
         A = np.arange(1100, dtype=np.int64)
         B = np.array([1099], dtype=np.int64)
@@ -21,17 +21,18 @@ class TestSloppyClosedFormNaN:
             # anchor lands in-window at d == 0
             return np.where(d == 0, 0.0, 1.0 / (d + 1.0))
 
-        out = _sloppy_2slot_closed(A, B, 0, 2, sf_np=sf_np)
+        slots = [(A, [0], [len(A)]), (B, [0], [1])]
+        out = sloppy_freq_batch(slots, [0, 0], 2, sf_np=sf_np)[0]
         assert not np.isnan(out)
         # anchors 1097/1098 are in-window with nonzero sf and inf
         # multiplicity -> total clamps at the finite max
         assert out == 1.7e308
 
     def test_default_sf_parity_unchanged(self):
-        """The zero-indexing rewrite must not change the default-path
-        value (cross-check vs the reference queue on a small case)."""
+        """The zero-indexing must not change the default-path value
+        (cross-check vs the reference queue on small cases)."""
         from lucene_spark.search.phrase import (
-            _sloppy_2slot_closed,
+            sloppy_freq_batch,
             sloppy_phrase_freq,
         )
 
@@ -41,9 +42,8 @@ class TestSloppyClosedFormNaN:
             b = np.sort(rng.choice(60, size=rng.integers(1, 8), replace=False))
             slop = int(rng.integers(0, 6))
             want = sloppy_phrase_freq([list(a), list(b)], [0, 1], slop)
-            got = _sloppy_2slot_closed(
-                a.astype(np.int64), b.astype(np.int64), 1, slop
-            )
+            slots = [(a, [0], [len(a)]), (b, [0], [len(b)])]
+            got = sloppy_freq_batch(slots, [0, 1], slop)[0]
             assert got == pytest.approx(want, rel=1e-9, abs=1e-12)
 
 

@@ -133,8 +133,9 @@ def main() -> None:
         # Zipf rank 1 = w1 (hottest); w50 mid; w2000 rare. or_hot_rare
         # is WAND's favorable shape for bounds (θ set by the hot term);
         # or_mid is the uniform-impact shape; the phrases are hot-hot
-        # (no rare term — range pruning can't help the exact plan) and
-        # hot-mid, sloppy ones through the shared quirk-faithful kernel.
+        # (no rare term — range pruning can't help the exact plan),
+        # 2- and 3-term, and hot-mid, sloppy ones through the shared
+        # quirk-faithful kernel.
         cases = {
             "hot_term": "text:w1",
             "mid_term": "text:w50",
@@ -149,6 +150,7 @@ def main() -> None:
             "and_not": "+text:w1 +text:w5 -text:w2000",
             "phrase_hot_hot": '"w1 w2"',
             "phrase_hot_hot_sloppy": '"w1 w2"~3',
+            "phrase_hot3_sloppy": '"w1 w2 w3"~2',
             "phrase_hot_mid": '"w1 w50"~2',
         }
         for name, qs in cases.items():
