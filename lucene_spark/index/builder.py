@@ -72,6 +72,7 @@ import pyarrow.compute as pc
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from lucene_spark.analysis import Analyzer, default_analyzer
@@ -1049,17 +1050,27 @@ class SparkIndex:
             )
         elif os.path.exists(os.path.join(fc_path, "_SUCCESS")):
             self._fc_blocks = tiers.read_table(spark, fc_path, "term_dict_fc")
+        self._td_driver = self._driver_dataset("term_dict", _DRIVER_TD_SCHEMA)
+        self._postings_driver = self._driver_dataset(  # read_blocks
+            "postings", to_arrow_schema(POSTINGS_SCHEMA)
+        )
+
+    def _driver_dataset(self, table: str, schema: pa.Schema) -> pads.Dataset:
+        """A pyarrow view of ``table`` over the same tiers as the Spark
+        views, for driver-side reads."""
         parts = [
-            pads.dataset(d, schema=_DRIVER_TD_SCHEMA, format="parquet")
+            pads.dataset(d, schema=schema, format="parquet")
             for t in self.catalog.tiers
-            for d in t.table_dirs("term_dict")
+            for d in t.table_dirs(table)
             if os.path.isdir(d)
         ]
-        self._td_driver = parts[0] if len(parts) == 1 else pads.dataset(parts)
+        return parts[0] if len(parts) == 1 else pads.dataset(parts)
 
     def refresh_tombstones(self) -> None:
-        """(Re)load the logical-delete tombstone table if present."""
-        self.tombstones = tiers.read_tombstones(self.spark, self.index_dir)
+        """(Re)load the logically deleted doc ids — sorted int64, read on
+        the driver (no Spark job) — or None when nothing is deleted."""
+        ids = np.sort(tiers.tombstone_ids(self.index_dir).to_numpy())
+        self.tombstones = ids if len(ids) else None
 
     # ---------------------------------------------- IndexReader protocol
     @property
@@ -1125,6 +1136,16 @@ class SparkIndex:
                 found[(f, x)] = found.get((f, x), 0) + df
         for key in todo:
             self._df_cache[key] = found.get(key, 0)
+
+    def read_blocks(self, term, columns: list[str], doc_bases=None) -> pa.Table:
+        """``columns`` of ``term``'s posting blocks (only the blocks that
+        start at ``doc_bases``, if given), read with pyarrow on the
+        driver — no Spark job. Postings are sorted on (field, term,
+        doc_base), so row-group statistics skip the other terms' rows."""
+        flt = (pc.field("field") == term.field) & (pc.field("term") == term.text)
+        if doc_bases is not None:
+            flt &= pc.field("doc_base").isin(pa.array(doc_bases, pa.int64()))
+        return self._postings_driver.to_table(columns=columns, filter=flt)
 
     def has_term(self, term) -> bool:
         return self.doc_freq(term) > 0

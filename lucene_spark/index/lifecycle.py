@@ -14,10 +14,13 @@ Spark shape:
 - :func:`delete_docs` appends a generation-numbered tombstone parquet
   under ``tombstones/`` (≙ ``.del`` generations, numbered from the
   parquet footers' ``gen`` statistics; Iceberg row-level
-  deletes fill the same role on a real lakehouse). The searcher
-  anti-joins hits against tombstones at collection time — exactly where
-  the reference checks its bitmap — so scores (idf, norms, avgdl) are
-  untouched, reproducing the quirk.
+  deletes fill the same role on a real lakehouse). An id list is
+  written with pyarrow on the driver, a DataFrame by one Spark job.
+  The searcher loads the deleted ids on the driver and the postings
+  decode kernel drops their rows — every hit comes out of that decode,
+  so this is where the reference checks its bitmap while collecting
+  hits — and scores (idf, norms, avgdl) are untouched, reproducing the
+  quirk.
 - :func:`optimize_index` rebuilds the index from the surviving rows of
   the docs table into a fresh directory: one pass that re-tokenizes,
   re-assigns dense docIDs (the docMap), and rewrites postings/term_dict/
@@ -42,17 +45,17 @@ def delete_docs(index: SparkIndex, doc_ids: DataFrame | list[int]) -> int:
     """Logical delete: append (doc_id, gen) tombstone rows.
 
     ``doc_ids``: a DataFrame with a doc_id column (e.g. the result of
-    any query/filter over ``index.docs``) or an explicit id list.
+    any query/filter over ``index.docs``), written by one Spark job, or
+    an explicit id list, written with pyarrow on the driver (no job).
     Returns the new tombstone generation.
     """
-    spark = index.spark
-    p = tiers.tombstones_dir(index.index_dir)
     gen = tiers.next_tombstone_gen(index.index_dir)
     if isinstance(doc_ids, list):
-        df = spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
+        tiers.append_tombstones(index.index_dir, doc_ids, gen)
     else:
-        df = doc_ids.select(F.col("doc_id").cast("long"))
-    df.withColumn("gen", F.lit(gen).cast("long")).write.mode("append").parquet(p)
+        doc_ids.select(F.col("doc_id").cast("long")).withColumn(
+            "gen", F.lit(gen).cast("long")
+        ).write.mode("append").parquet(tiers.tombstones_dir(index.index_dir))
     index.refresh_tombstones()
     return gen
 
@@ -68,8 +71,8 @@ def undelete_all(index: SparkIndex) -> int:
     fans it out per sub-index). The reference declares the operation but
     ships an empty body ("@todo undeleteAll processing",
     src/Index.php:1286-1288); the tombstone design makes it exact here:
-    dropping the tombstone generations removes the collect-time
-    anti-join, and because deletes never touched idf/norms/avgdl (the
+    dropping the tombstone generations removes the in-kernel drop,
+    and because deletes never touched idf/norms/avgdl (the
     rank-critical quirk reproduced in delete_docs), restored docs come
     back with scores identical to pre-delete. Docs already expunged by
     ``optimize_index`` are gone for good — same as the reference, where

@@ -24,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 from dataclasses import dataclass, field as dc_field
 
 import pyarrow as pa
@@ -31,6 +32,7 @@ import pyarrow.compute as pc
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -134,6 +136,24 @@ def tombstone_ids(index_dir: str, doc_id: int | None = None) -> pa.Array:
     flt = None if doc_id is None else pads.field("doc_id") == int(doc_id)
     ids = pads.dataset(files, format="parquet").to_table(["doc_id"], filter=flt)
     return pc.unique(ids.column("doc_id"))
+
+
+def append_tombstones(index_dir: str, doc_ids: list[int], gen: int) -> None:
+    """Append tombstone generation ``gen`` for ``doc_ids``, written with
+    pyarrow on the driver: a hidden temp file renamed into place, then
+    ``_SUCCESS`` (as a Spark append leaves the directory)."""
+    p = tombstones_dir(index_dir)
+    os.makedirs(p, exist_ok=True)
+    ids = [int(d) for d in doc_ids]
+    tbl = pa.Table.from_pydict(
+        {"doc_id": ids, "gen": [int(gen)] * len(ids)},
+        schema=to_arrow_schema(_SCHEMAS["tombstones"]),
+    )
+    name = f"part-{int(gen):05d}-{uuid.uuid4()}-c000.snappy.parquet"
+    tmp = os.path.join(p, f".{name}.tmp")
+    pq.write_table(tbl, tmp)
+    os.replace(tmp, os.path.join(p, name))
+    open(os.path.join(p, SUCCESS), "w").close()
 
 
 def next_tombstone_gen(index_dir: str) -> int:

@@ -38,7 +38,8 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -90,31 +91,31 @@ def decode_postings(
     index: SparkIndex,
     terms: list[Term],
     need_positions: bool = False,
-    docs_only: bool = False,
     doc_filter: "np.ndarray | None" = None,
+    where: Column | None = None,
 ) -> DataFrame:
     """One scan+decode for all query terms → (qid, doc_id, tf, dl[, pos]).
 
     qid = position of the term in ``terms``. The filter is an OR of
-    (field, term) equalities — pushed down to the parquet scan.
-    ``docs_only`` skips the tf/dl streams entirely (constant 1s) — for
-    prohibited-clause membership checks that only need doc ids.
-    A term appearing TWICE in ``terms`` (e.g. the user query
-    '+table +table') gets its postings emitted once per qid, so
-    required-count checks and per-qid weights stay correct.
+    (field, term) equalities — pushed down to the parquet scan — and
+    ``where``, if given (WAND's block-bound filter). A term appearing
+    TWICE in ``terms`` (e.g. the user query '+table +table') gets its
+    postings emitted once per qid, so required-count checks and per-qid
+    weights stay correct.
 
-    ``doc_filter`` (an int64 array of doc ids — sorted here, broadcast
-    to the executors) drops every non-matching posting INSIDE the kernel,
-    before the Arrow transfer back to the JVM. This is the candidate-
-    fetch primitive: when a term's positions are needed only on a
-    known candidate set (a phrase next to a rare required term, the
-    '+conv_id:X +text:"a b"' shape), the blocks still
-    decode — delta/varbyte streams can't be entered mid-block — but
-    the rows that flow into the score aggregation shrink from df(term)
-    to |candidates ∩ postings|, often 100×+ fewer (BASELINE.md §6.1:
-    block-level pruning is provably impossible for uniformly scattered
-    mid terms — every block overlaps candidates — so row-level
-    filtering is the scale lever for those shapes).
+    Rows of the index's tombstoned docs are dropped inside the kernel:
+    a doc's score depends only on its own rows and every hit comes out
+    of this decode, so this is the reference's deletion-bitmap check
+    while collecting hits (src/Index.php:705-724), with no join.
+
+    ``doc_filter`` (doc ids, broadcast to the executors) is the
+    candidate set of a conjunction: any hit must carry the rarest
+    required term, whose ids the driver read (:func:`_candidate_docs`).
+    Blocks outside [min, max] of the set never leave the scan, blocks
+    whose [doc_base, max_docid] span holds no candidate are skipped
+    before decoding, and rows of other docs are dropped after it —
+    block-level pruning alone cannot cut rows for uniformly scattered
+    terms, where every block overlaps some candidate (BASELINE §6.1).
     """
     qid_lists: dict[tuple[str, str], list[int]] = {}
     for i, t in enumerate(terms):
@@ -125,71 +126,76 @@ def decode_postings(
     # without this select the parquet scan reads ALL columns — including
     # pos_bin, the largest in the index — even for non-phrase queries.
     # (.explain ReadSchema confirms the pruning.)
-    cols = ["field", "term", "doc_base", "n", "docs_bin"]
-    if not docs_only:
-        cols += ["tfs_bin", "dls_bin"]
+    cols = ["field", "term", "doc_base", "n", "docs_bin", "tfs_bin", "dls_bin"]
     if need_positions:
         cols.append("pos_bin")
-    blocks = index.postings.where(_terms_cond(terms)).select(*cols)
-    schema = _DECODE_POS_SCHEMA if need_positions else _DECODE_SCHEMA
-
-    flt_bc = None
+    cond = _terms_cond(terms)
+    if where is not None:
+        cond = cond & where
+    tomb = index.tombstones
+    cand = None
     if doc_filter is not None:
-        flt = np.sort(np.asarray(doc_filter, dtype=np.int64))
-        # one sc.broadcast, not a closure capture: the candidate set can
-        # be MBs and must ship to each executor once, not per task
-        flt_bc = blocks.sparkSession.sparkContext.broadcast(flt)
+        cand = np.unique(np.asarray(doc_filter, dtype=np.int64))
+        if tomb is not None:
+            cand, tomb = np.setdiff1d(cand, tomb, assume_unique=True), None
+        cols.append("max_docid")
+        cond = cond & (
+            (F.col("doc_base") <= int(cand[-1])) & (F.col("max_docid") >= int(cand[0]))
+            if len(cand)
+            else F.lit(False)
+        )
+    blocks = index.postings.where(cond).select(*cols)
+    schema = _DECODE_POS_SCHEMA if need_positions else _DECODE_SCHEMA
+    # one sc.broadcast each, not a closure capture: the id sets can be
+    # MBs and must ship to each executor once, not per task
+    sc = blocks.sparkSession.sparkContext
+    cand_bc = None if cand is None else sc.broadcast(cand)
+    tomb_bc = None if tomb is None else sc.broadcast(tomb)
 
     def decode(it):
         for pdf in it:
-            if len(pdf) == 0:
-                continue
             qids_row = np.array(
                 [qid_map.get((f, t), -1) for f, t in zip(pdf["field"], pdf["term"])],
                 dtype=np.int32,
             )
             keep = qids_row >= 0
+            if cand_bc is not None and len(pdf):
+                # skip blocks whose doc span holds no candidate
+                c = cand_bc.value
+                lo = np.searchsorted(c, pdf["doc_base"].to_numpy(np.int64))
+                hi = np.searchsorted(c, pdf["max_docid"].to_numpy(np.int64), "right")
+                keep &= hi > lo
             if not keep.any():
                 continue
-            pdf = pdf[keep]
-            qids_row = qids_row[keep]
+            pdf, qids_row = pdf[keep], qids_row[keep]
             n = pdf["n"].to_numpy(np.int64)
-            # positions decode BEFORE any doc_filter mask: varbyte
-            # streams can't be entered mid-block, and the per-doc splits
-            # derive from the UNfiltered tf run lengths
             docs, tfs, dls, pos = decode_blocks(
                 pdf["doc_base"],
                 n,
                 pdf["docs_bin"],
-                None if docs_only else pdf["tfs_bin"],
-                None if docs_only else pdf["dls_bin"],
+                pdf["tfs_bin"],
+                pdf["dls_bin"],
                 pdf["pos_bin"] if need_positions else None,
             )
-            if docs_only:
-                tfs = dls = np.ones(len(docs), dtype=np.int64)
-            data = {
-                "qid": np.repeat(qids_row, n),
-                "doc_id": docs,
-                "tf": tfs.astype(np.int32),
-                "dl": dls.astype(np.int32),
-            }
-            res = pd.DataFrame(data)
+            res = pd.DataFrame(
+                {
+                    "qid": np.repeat(qids_row, n),
+                    "doc_id": docs,
+                    "tf": tfs.astype(np.int32),
+                    "dl": dls.astype(np.int32),
+                }
+            )
             if need_positions:
+                # split on the decoded tf run lengths BEFORE the row mask
                 splits = np.cumsum(tfs)[:-1]
                 res["positions"] = np.split(pos.astype(np.int32), splits)
-            if flt_bc is not None:
-                # sorted-membership mask: rows off the candidate set
-                # never leave the kernel (cuts the Arrow transfer —
-                # for position decodes that's the heaviest column)
-                cand = flt_bc.value
-                idx = np.searchsorted(cand, docs)
-                idx[idx == len(cand)] = 0
-                keep_rows = (
-                    cand[idx] == docs
-                    if len(cand)
-                    else np.zeros(len(docs), dtype=bool)
-                )
-                res = res[keep_rows]
+            if cand_bc is not None or tomb_bc is not None:
+                rows = np.ones(len(docs), dtype=bool)
+                if cand_bc is not None:
+                    rows &= _member(cand_bc.value, docs)
+                if tomb_bc is not None:
+                    rows &= ~_member(tomb_bc.value, docs)
+                res = res[rows]
                 if len(res) == 0:
                     continue
             if dup_map:
@@ -203,6 +209,14 @@ def decode_postings(
             yield res
 
     return blocks.mapInPandas(decode, schema)
+
+
+def _member(sorted_ids: np.ndarray, docs: np.ndarray) -> np.ndarray:
+    """Mask of ``docs`` found in the sorted array ``sorted_ids``."""
+    if not len(sorted_ids):
+        return np.zeros(len(docs), dtype=bool)
+    idx = np.minimum(np.searchsorted(sorted_ids, docs), len(sorted_ids) - 1)
+    return sorted_ids[idx] == docs
 
 
 def dump_postings(index: SparkIndex, field: str) -> DataFrame:
@@ -324,66 +338,34 @@ PROHIBITED_BROADCAST_MAX_DF = 2_000_000  # ≈16 MB of doc ids — broadcast
 # join at all — prohibited TERMS merge into the scorable leaf scan with
 # value 0 and are dropped by the aggregate's max(_pro) flag (round 5)
 
-RANGE_PRUNE_QUANTUM = 64  # docs per conjunction-pruning bucket
-# engage when the rarest required term's docs can cover at most ~1/4 of
-# the doc space even if perfectly spread (df · Q · 4 ≤ N); clustered
-# terms (e.g. a conv_id keyword, whose docs are contiguous) cover far
-# fewer buckets and prune correspondingly more
+RANGE_PRUNE_QUANTUM = 64  # conjunction narrowing engages when the
+# rarest required term's docs could cover at most ~1/4 of the doc space
+# in buckets of this many docs even if perfectly spread (df · Q · 4 ≤ N)
 
-RAREST_FETCH_MAX_DF = 1_000_000  # collect the rarest required term's
-# doc ids to the driver (≤ 8 MB of int64) as the in-kernel doc_filter
-# of a sibling phrase's position decode — the '+conv_id:X +text:"a b"'
-# shape; above it only the block-span restriction applies
+RAREST_FETCH_MAX_DF = 1_000_000  # bound on the rarest required term's
+# doc ids read to the driver (≤ 8 MB of int64) as a conjunction's
+# candidate set; above it the conjunction is not narrowed
 
 
-def _conjunction_restricted_postings(ix, all_terms, rare, rare_buckets=None):
-    """Posting blocks of ``all_terms`` restricted to doc ranges where
-    the rarest REQUIRED term ``rare`` has documents — the distributed
-    analogue of driving a posting-list intersection by its shortest
-    list (skip-pointer intersection). Exact: a conjunction hit must
-    contain ``rare``, so blocks of other terms whose [doc_base,
-    max_docid] span misses every rare-doc bucket cannot contribute to
-    any hit. The rare term's doc ids decode first (docs_bin only — df
-    postings, tiny by the engagement gate), quantize to buckets, and a
-    metadata-only semi-join keeps overlapping blocks. Everything stays
-    distributed; nothing is collected — unless the caller ALREADY has
-    the rare doc ids (the scoped-phrase doc_filter shape), in which
-    case it passes the quantized ``rare_buckets`` int64 array and the
-    rare term's postings are not decoded a second time."""
-    import types
-
-    q = RANGE_PRUNE_QUANTUM
-    if rare_buckets is not None:
-        rb = ix.postings.sparkSession.createDataFrame(
-            pd.DataFrame({"_bkt": np.asarray(rare_buckets, np.int64)})
-        )
-    else:
-        rare_docs = decode_postings(ix, [rare], docs_only=True)
-        rb = rare_docs.select(
-            (F.col("doc_id") / q).cast("long").alias("_bkt")
-        ).distinct()
-    # per-field In filters (never a per-term OR chain — JVM stack
-    # overflow past ~300 terms when an expansion sits in the tree)
-    cond = _terms_cond(all_terms)
-    keys = (
-        ix.postings.where(cond)
-        .select(*_WAND_META_COLS, "max_docid")
-        .withColumn(
-            "_bkt",
-            F.explode(
-                F.sequence(
-                    (F.col("doc_base") / q).cast("long"),
-                    (F.col("max_docid") / q).cast("long"),
-                )
-            ),
-        )
-        .join(rb, "_bkt", "leftsemi")
-        .select(*_WAND_META_COLS)
-        .distinct()
+def _candidate_docs(ix: SparkIndex, req_terms: list[Term]) -> np.ndarray | None:
+    """Sorted doc ids of the rarest of ``req_terms`` when it is selective
+    (the gates above), else None — the distributed analogue of driving a
+    posting-list intersection by its shortest list. Exact: every hit of
+    a conjunction contains the rare term, so each decode under it may
+    drop other docs (``decode_postings(doc_filter=...)``). The ids are
+    decoded from the term's blocks read with pyarrow on the driver: no
+    Spark job."""
+    rare = min(req_terms, key=ix.doc_freq)
+    df = ix.doc_freq(rare)
+    if df * RANGE_PRUNE_QUANTUM * 4 > ix.n_docs or df > RAREST_FETCH_MAX_DF:
+        return None
+    t = ix.read_blocks(rare, ["doc_base", "n", "docs_bin"])
+    docs, _tf, _dl, _pos = decode_blocks(
+        t.column("doc_base").to_numpy(),
+        t.column("n").to_numpy(),
+        t.column("docs_bin").to_pylist(),
     )
-    return types.SimpleNamespace(
-        postings=ix.postings.where(cond).join(keys, _WAND_META_COLS)
-    )
+    return np.unique(docs)
 
 
 class SparkSearcher:
@@ -499,6 +481,17 @@ class SparkSearcher:
         normalization (classic) plus the final score sort run on the
         TRUNCATED set. Incompatible with pruning (WAND selects by score,
         not docId) — pruning is bypassed when a limit is set.
+
+        The exact plan schedules only its own jobs: the scan+decode, the
+        groupBy(doc_id) exchange and the final TakeOrdered. Conjunction
+        narrowing reads the rare term's doc ids on the driver, and
+        tombstoned docs drop inside the decode (:func:`decode_postings`).
+        Classic scores with k > 0 are normalized after the TakeOrdered:
+        dividing by the top score keeps the order, so those k rows are
+        the first k of the k = 0 result — unless two raw scores that
+        differ become equal after the division right at the k-th slot,
+        where the k = 0 order breaks the new tie by doc_id and may take
+        the doc this plan left out.
         """
         if pruning not in ("off", "auto", "force"):
             raise TypeError(
@@ -529,39 +522,33 @@ class SparkSearcher:
             df = self._node_df(q, 1.0, "bm25")
         if df is None:
             return self._empty()
+        # tombstoned docs never get here: decode_postings drops their rows
         out = df.where(F.col("score") != 0.0)
-        # logical deletes: skip tombstoned docs at hit-collection time,
-        # BEFORE top-score normalization — matching the reference, which
-        # checks its deletion bitmap while iterating matchedDocs
-        # (src/Index.php:705-724) and normalizes after (:731-735). Note
-        # idf/norms keep using pre-delete stats until optimize (W2 quirk).
-        if self.index.tombstones is not None:
-            out = out.join(
-                F.broadcast(self.index.tombstones.select("doc_id").distinct()),
-                "doc_id",
-                "left_anti",
-            )
+        order = (F.col("score").desc(), F.col("doc_id").asc())
         if result_set_limit:
             # QUIRK parity: truncate in docId order BEFORE normalization
             # and the score sort (src/Index.php:705-724) — the reference
             # stops collecting hits at the limit while iterating
             # matchedDocs (a docId-ordered array)
             out = out.orderBy(F.col("doc_id").asc()).limit(int(result_set_limit))
-        if score_mode == "classic" and classic_normalize:
-            # top-score normalization when top > 1 (src/Index.php:731-735);
-            # callers that re-rank across shards (global-stats
-            # MultiSearcher) normalize GLOBALLY instead and pass False
-            top = out.agg(F.max("score").alias("m"))
-            out = out.crossJoin(F.broadcast(top)).select(
-                "doc_id",
-                F.when(F.col("m") > 1.0, F.col("score") / F.col("m"))
-                .otherwise(F.col("score"))
-                .alias("score"),
-            )
-        out = out.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        if k:
-            out = out.limit(k)
-        return out
+        if score_mode != "classic" or not classic_normalize:
+            out = out.orderBy(*order)
+            return out.limit(k) if k else out
+        # top-score normalization when top > 1 (src/Index.php:731-735);
+        # callers that re-rank across shards (global-stats MultiSearcher)
+        # normalize GLOBALLY instead and pass classic_normalize=False
+        if k and not result_set_limit:
+            # the top row of the k best is the global max: normalize the
+            # k rows after TakeOrdered. They are one partition already, so
+            # one window group adds no exchange. Its key is true on every
+            # row (no score is null) but is not a literal, which Spark
+            # drops and then logs a single-partition warning per query
+            out = out.orderBy(*order).limit(k)
+            one = Window.partitionBy(F.col("score").isNotNull())
+            return _top_normalized(out, F.max("score").over(one))
+        top = out.agg(F.max("score").alias("m"))
+        out = _top_normalized(out.crossJoin(F.broadcast(top)), F.col("m"))
+        return out.limit(k) if k else out
 
     def _pruned_topk(self, q: Query, k: int, force: bool) -> DataFrame | None:
         """The routed pruned top-k plan for ``q``, or None for the exact
@@ -577,11 +564,9 @@ class SparkSearcher:
             uniq, _slots = _uniq_slots(q.terms)
             ix.prefetch_terms(uniq)
             total_df = sum(ix.doc_freq(t) for t in uniq)
-            # sloppy phrases need enough ranges for the cogroup kernel
-            # to win: on small corpora (< ~122 ranges) the exact plan's
-            # bigger Arrow batches did (wand_bench: sloppy 10.8 s
-            # cogroup vs 6.7 s exact at 200k docs, while slop=0 cogroup
-            # already wins there)
+            # sloppy phrases need enough doc ranges for the cogroup
+            # kernel to win (PHRASE_COGROUP_MIN_DOCS), while slop=0
+            # cogroup already wins at 200k docs
             if force or (
                 total_df >= AUTO_PRUNING_MIN_DF
                 and (q.slop == 0 or n_docs >= PHRASE_COGROUP_MIN_DOCS)
@@ -608,19 +593,18 @@ class SparkSearcher:
     # ---- leaf scoring -------------------------------------------------
     def _leaf_df(
         self, terms: list[Term], boosts: list[float], values: list[float],
-        mode: str, src=None,
+        mode: str, doc_filter=None,
     ) -> DataFrame:
         """Decoded postings for leaf terms with a per-row 'score' column.
 
         classic: score = sqrt(tf) · value_qid · norm(doc, field) · boost
         bm25:    score = boost · idf_qid · tf(k1+1)/(tf + k1(1−b+b·dl/avgdl))
         value/idf arrive as per-qid literal arrays (driver-computed).
-        ``src``: optional postings source (e.g. a conjunction-restricted
-        view) — defaults to the full index.
+        ``doc_filter``: an enclosing conjunction's candidate doc ids.
         """
         ix = self.index
         sim = get_default()  # pluggable classic hooks (setDefault)
-        df = decode_postings(src or ix, terms)
+        df = decode_postings(ix, terms, doc_filter=doc_filter)
         val_arr = F.array(*[F.lit(float(v)) for v in values])
         boost_arr = F.array(*[F.lit(float(b)) for b in boosts])
         if mode == "bm25":
@@ -673,21 +657,14 @@ class SparkSearcher:
 
     # ---- recursive node compilation -----------------------------------
     def _node_df(
-        self, q: Query, qn: float, mode: str, src=None, doc_filter=None
+        self, q: Query, qn: float, mode: str, doc_filter=None
     ) -> DataFrame | None:
         """DF (doc_id, score) with only score≠0 rows (matched docs).
 
-        ``src``: optional conjunction-restricted postings view handed
-        down by an enclosing required context (BooleanQuery with a
-        selective required term) — every decode in this subtree then
-        reads only blocks overlapping the rare term's doc buckets.
-
-        ``doc_filter``: optional candidate doc-id array (same enclosing
-        required context, row-level): any hit must carry the rare
-        required term, so every decode in the subtree may drop rows
-        outside the candidate set inside the kernel — phrase position
-        decodes (the heaviest) use it; block-span restriction alone
-        cannot cut rows for uniformly scattered terms (BASELINE §6.1).
+        ``doc_filter``: candidate doc ids handed down by an enclosing
+        conjunction with a selective required term (:func:`_candidate_docs`)
+        — any hit carries that term, so every decode in the subtree
+        drops the other docs inside the kernel.
         """
         ix = self.index
         N = ix.n_docs
@@ -700,11 +677,11 @@ class SparkSearcher:
         if isinstance(q, TermQuery):
             if mode == "classic":
                 v = term_value(q.term, q.boost, qn)
-                df = self._leaf_df([q.term], [q.boost], [v], mode, src=src)
+                df = self._leaf_df([q.term], [q.boost], [v], mode, doc_filter)
             else:
                 df = self._leaf_df(
                     [q.term], [q.boost], [bm25_idf(ix.doc_freq(q.term), N)],
-                    mode, src=src,
+                    mode, doc_filter,
                 )
             return df.select("doc_id", "score")
 
@@ -724,18 +701,13 @@ class SparkSearcher:
             req_terms = [
                 t for t, s in scorable if s is True or signs is None
             ]
-            # conjunction range pruning: when the rarest REQUIRED term is
-            # selective, restrict every term's decode (optional and
-            # prohibited included — hits must contain the rare term
-            # regardless) to blocks overlapping its doc buckets. The
-            # classic '+conv_id:X +text:hot' shape decodes a handful of
-            # blocks instead of the hot term's whole posting list.
-            if src is None and req_terms:
-                rare = min(req_terms, key=lambda t: ix.doc_freq(t))
-                if ix.doc_freq(rare) * RANGE_PRUNE_QUANTUM * 4 <= N:
-                    src = _conjunction_restricted_postings(
-                        ix, [t for t, _ in scorable] + prohibited, rare
-                    )
+            # conjunction narrowing: when the rarest REQUIRED term is
+            # selective, every term's decode (optional and prohibited
+            # included — hits must contain the rare term regardless)
+            # keeps only its docs. The '+conv_id:X +text:hot' shape
+            # decodes a handful of blocks instead of the hot term's list.
+            if doc_filter is None and req_terms:
+                doc_filter = _candidate_docs(ix, req_terms)
             # merged-scan NOT: prohibited terms ride in the SAME leaf
             # decode with value/boost 0 (zero score contribution). The
             # aggregate keeps a max-flag `_mp` of "any prohibited term
@@ -751,7 +723,7 @@ class SparkSearcher:
                 [1.0] * n_sc + [0.0] * len(prohibited),
                 values + [0.0] * len(prohibited),
                 mode,
-                src=src,
+                doc_filter,
             )
             req_ids = [
                 i for i, (_t, s) in enumerate(scorable) if s is True or signs is None
@@ -789,50 +761,18 @@ class SparkSearcher:
         if isinstance(q, BooleanQuery):
             signs = q.signs
             child_qn = qn * q.boost
-            # subtree conjunction pruning: a selective REQUIRED TermQuery
-            # child (e.g. '+conv_id:X' next to a phrase) restricts every
-            # sibling's decode — any doc matching the Boolean must
-            # contain it, so the proof from the MultiTerm case carries
-            # over to arbitrary subtrees (phrases included)
-            if src is None:
-                req_term_children = [
-                    sub.term
-                    for i, sub in enumerate(q.subqueries)
-                    if isinstance(sub, TermQuery)
-                    and (signs is None or signs[i] is True)
-                ]
-                if req_term_children:
-                    rare = min(req_term_children, key=lambda t: ix.doc_freq(t))
-                    if ix.doc_freq(rare) * RANGE_PRUNE_QUANTUM * 4 <= N:
-                        # row-level cut for phrase children: the
-                        # '+conv_id:X +text:"exact phrase"' shape — the
-                        # rare term's doc ids (df-bounded collect,
-                        # RAREST_FETCH_MAX_DF) filter the
-                        # phrase's position decode inside the kernel,
-                        # so its Arrow transfer shrinks from df(term)
-                        # rows to |candidates ∩ postings|. Collected
-                        # FIRST so the bucket restriction below derives
-                        # from the same single decode instead of
-                        # re-decoding the rare term's postings.
-                        rare_buckets = None
-                        if doc_filter is None and ix.doc_freq(
-                            rare
-                        ) <= RAREST_FETCH_MAX_DF and any(
-                            isinstance(sub, PhraseQuery) for sub in q.subqueries
-                        ):
-                            doc_filter = np.unique(
-                                decode_postings(ix, [rare], docs_only=True)
-                                .select("doc_id")
-                                .toPandas()["doc_id"]
-                                .to_numpy(np.int64)
-                            )
-                            rare_buckets = np.unique(
-                                doc_filter // RANGE_PRUNE_QUANTUM
-                            )
-                        src = _conjunction_restricted_postings(
-                            ix, _collect_terms(q), rare,
-                            rare_buckets=rare_buckets,
-                        )
+            # subtree conjunction narrowing: a selective REQUIRED
+            # TermQuery child (e.g. '+conv_id:X' next to a phrase)
+            # narrows every sibling's decode — any doc matching the
+            # Boolean must contain it, so the proof from the MultiTerm
+            # case carries over to arbitrary subtrees (phrases included)
+            req_term_children = [
+                sub.term
+                for i, sub in enumerate(q.subqueries)
+                if isinstance(sub, TermQuery) and (signs is None or signs[i] is True)
+            ]
+            if doc_filter is None and req_term_children:
+                doc_filter = _candidate_docs(ix, req_term_children)
             # Batch TermQuery children into ONE leaf decode: a fuzzy/
             # wildcard rewrite emits up to 1024 per-term-boosted
             # TermQuery clauses (Fuzzy.php:147-298 boost ordering), and
@@ -864,9 +804,7 @@ class SparkSearcher:
             pro = []
             pro_qs: list[Query] = []
             for sub, s in others:
-                df = self._node_df(
-                    sub, child_qn, mode, src=src, doc_filter=doc_filter
-                )
+                df = self._node_df(sub, child_qn, mode, doc_filter)
                 if s is False:
                     pro.append(df)
                     pro_qs.append(sub)
@@ -906,7 +844,7 @@ class SparkSearcher:
                     b_boosts + [0.0] * len(pro_batch),
                     b_values + [0.0] * len(pro_batch),
                     mode,
-                    src=src,
+                    doc_filter,
                 )
                 req_qids = [i for i, (_sub, s) in enumerate(batch) if s is True]
                 is_req = (
@@ -970,14 +908,14 @@ class SparkSearcher:
             return agg.select("doc_id", score.alias("score"))
 
         if isinstance(q, PhraseQuery):
-            return self._phrase_df(q, qn, mode, src=src, doc_filter=doc_filter)
+            return self._phrase_df(q, qn, mode, doc_filter)
 
         if isinstance(q, (Insignificant, EmptyResult)):
             return None
         raise TypeError(f"cannot execute {type(q).__name__}")
 
     def _phrase_df(
-        self, q: PhraseQuery, qn: float, mode: str, src=None, doc_filter=None
+        self, q: PhraseQuery, qn: float, mode: str, doc_filter=None
     ) -> DataFrame:
         """Phrase matching with ONE shuffle: decoded per-term positions
         are grouped by doc_id (collect_list of (qid, positions)) instead
@@ -991,15 +929,12 @@ class SparkSearcher:
         uniq, slot_qid = _uniq_slots(q.terms)
         n_uniq = len(uniq)
         # a phrase is a conjunction of its terms: when the rarest one is
-        # selective, restrict every term's (positions-bearing, so
-        # heaviest) decode to its doc buckets — same exactness argument
-        # as the MultiTerm conjunction pruning
-        rare = min(uniq, key=lambda t: ix.doc_freq(t))
-        if src is None and ix.doc_freq(rare) * RANGE_PRUNE_QUANTUM * 4 <= ix.n_docs:
-            src = _conjunction_restricted_postings(ix, uniq, rare)
-        posts = decode_postings(
-            src or ix, uniq, need_positions=True, doc_filter=doc_filter
-        )
+        # selective, every term's (positions-bearing, so heaviest)
+        # decode keeps only its docs — same exactness argument as the
+        # MultiTerm conjunction narrowing
+        if doc_filter is None:
+            doc_filter = _candidate_docs(ix, uniq)
+        posts = decode_postings(ix, uniq, need_positions=True, doc_filter=doc_filter)
         # pivot to one positions column per unique term (each (term,doc)
         # appears exactly once — blocks are doc-disjoint) — plain array
         # columns keep the freq kernel 100% numpy, no nested structs
@@ -1082,6 +1017,14 @@ class SparkSearcher:
         return joined.select("doc_id", score.alias("score"))
 
 
+def _top_normalized(hits: DataFrame, top: Column) -> DataFrame:
+    """``hits`` with scores divided by ``top`` when it exceeds 1, sorted."""
+    score = F.when(top > 1.0, F.col("score") / top).otherwise(F.col("score"))
+    return hits.select("doc_id", score.alias("score")).orderBy(
+        F.col("score").desc(), F.col("doc_id").asc()
+    )
+
+
 def _collect_terms(q: Query) -> list[Term]:
     out: list[Term] = []
     seen = set()
@@ -1110,7 +1053,11 @@ def _collect_terms(q: Query) -> list[Term]:
 # ------------------------------------------------- block-max top-k path
 
 PHRASE_COGROUP_MIN_DOCS = 1_000_000  # 'auto' routes SLOPPY phrases to
-# the cogroup kernel only past this corpus size (≥ ~122 doc ranges)
+# the cogroup kernel only past this corpus size. wand_bench medians,
+# routed vs exact (BASELINE §10.6): at 200k docs routed wins every
+# sloppy row (`"w1 w2"~3` 1.61 vs 2.40 s), at 50k it loses two of three
+# (1.07 vs 1.00 s, `"w1 w50"~2` 0.87 vs 0.81 s); sizes in between were
+# not measured, so the gate keeps its value
 
 AUTO_PRUNING_MIN_DF = 65536  # 'auto' pruning: below this, block skipping
 # can't amortize the extra metadata jobs
@@ -1178,10 +1125,10 @@ def _pruned_shape(
 
 
 # block identity MUST include doc_base: across streaming tiers a base
-# segment and a delta segment can share (seg_id, block_id), and
-# duplicate seed keys would double-decode a block and inflate θ above
-# every true bound (observed as an empty result). doc_base is globally
-# unique per (field, term) block — doc ids are disjoint across tiers.
+# segment and a delta segment can share (seg_id, block_id), and a
+# duplicated key joins a block twice. doc_base is globally unique per
+# (field, term) block — doc ids are disjoint across tiers — so
+# topk_wand reads its seed blocks back by doc_base alone.
 _WAND_META_COLS = ["field", "term", "seg_id", "block_id", "doc_base"]
 
 
@@ -1241,87 +1188,74 @@ def topk_wand(
     score(doc) = weight * bm25_partial(tf, dl).
 
     Per-block metadata gives ub = weight * max partial over the block's
-    Pareto (tf, dl) impact pairs. Two rounds, both provably exact, and
-    NOTHING block-sized ever reaches the driver — a stop-word term at
-    10^11 postings flows only through DataFrame aggregations over the
-    metadata columns (parquet column pruning keeps the binary streams
-    unread until decode):
+    Pareto (tf, dl) impact pairs. The driver reads the term's block
+    metadata with pyarrow and ranks the bounds in numpy (no job):
 
-    1. seed θ: TakeOrdered the top-k blocks by ub (≤ k KEY rows to the
-       driver — bounded by k, not by df), decode them; for one term a
-       doc's decoded score IS its complete score, so θ = kth-largest
-       seed score (−inf if < k docs) and the true kth score ≥ θ.
+    1. seed θ: decode the k highest-ub blocks on the driver; for one
+       term a doc's decoded score IS its complete score, so θ =
+       kth-largest live seed score (−inf if < k docs) and the true kth
+       score ≥ θ. θ is lowered one ulp so it never exceeds the score
+       Spark computes for the same doc.
     2. keep block b iff ub_b ≥ θ. Every doc d in a dropped block has
        score(d) ≤ ub_b < θ ≤ true kth score, so no doc of the true
        top-k (ties included — the filter is ≥, not >) is lost. Decode
-       survivors, TakeOrdered k.
+       survivors, TakeOrdered k: the one Spark job.
 
     Multi-term shapes run the co-grouped range kernel instead
     (:func:`topk_and_cogrouped`): on uniform-impact corpora bucket
     bounds cannot prune an OR (BASELINE.md §7.1, §10.2). Returns (top-k
-    DataFrame (doc_id, score), stats dict when ``collect_stats`` — two
-    extra metadata-only count jobs).
+    DataFrame (doc_id, score), stats dict when ``collect_stats`` — read
+    off the driver-side bounds, no job).
     """
-    import types
-
-    spark = index.spark
     k = max(int(k), 1)
-    cond = _terms_cond([term])
-    meta_cols = _WAND_META_COLS
-    meta = (
-        index.postings.where(cond)
-        .select(*meta_cols, "max_docid", "n", "imp_tfs", "imp_dls")
-        .withColumn("_ub", _ub_expr(index, term, weight))
-    )
     avgdl = float(index.avg_field_len(term.field))
+    k1, b = float(BM25_K1), float(BM25_B)
 
-    def score_blocks(blocks: DataFrame) -> DataFrame:
-        decoded = decode_postings(types.SimpleNamespace(postings=blocks), [term])
-        s = F.lit(float(weight)) * _partial(F.col("tf"), F.col("dl"), avgdl)
-        return decoded.groupBy("doc_id").agg(F.sum(s).alias("score"))
+    def score(tf, dl):  # _partial's association order, so bits match
+        return weight * ((tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + b * dl / avgdl)))
 
-    # seed θ from the k highest-ub blocks (TakeOrdered — the driver
-    # receives ≤ k key rows regardless of term df)
-    seed_keys = [
-        tuple(r[c] for c in meta_cols)
-        for r in meta.orderBy(F.col("_ub").desc())
-        .select(*meta_cols)
-        .limit(k)
-        .collect()
-    ]
-    if not seed_keys:
-        return (
-            spark.createDataFrame([], "doc_id long, score double"),
-            {"blocks_total": 0, "blocks_decoded": 0, "theta": None}
-            if collect_stats
-            else None,
+    meta = index.read_blocks(term, ["doc_base", "imp_tfs", "imp_dls"])
+    ub = np.empty(0)
+    if meta.num_rows:
+        lens = pc.list_value_length(meta.column("imp_tfs")).to_numpy()
+        flat = [
+            pc.list_flatten(meta.column(c)).to_numpy().astype(np.float64)
+            for c in ("imp_tfs", "imp_dls")
+        ]
+        ub = np.maximum.reduceat(score(*flat), np.cumsum(lens) - lens)
+    theta = float("-inf")
+    if len(ub):
+        seeds = np.argsort(-ub, kind="stable")[:k]
+        bases = meta.column("doc_base").to_numpy()[seeds]
+        t = index.read_blocks(
+            term, ["doc_base", "n", "docs_bin", "tfs_bin", "dls_bin"], bases
         )
-    keys_df = spark.createDataFrame(
-        seed_keys,
-        "field string, term string, seg_id long, block_id long, doc_base long",
+        docs, tfs, dls, _pos = decode_blocks(
+            t.column("doc_base").to_numpy(),
+            t.column("n").to_numpy(),
+            *(t.column(c).to_pylist() for c in ("docs_bin", "tfs_bin", "dls_bin")),
+        )
+        live = np.ones(len(docs), dtype=bool)
+        if index.tombstones is not None:
+            live = ~_member(index.tombstones, docs)
+        seed = score(tfs[live].astype(np.float64), dls[live].astype(np.float64))
+        if len(seed) >= k:
+            theta = float(np.nextafter(np.sort(seed)[-k], -np.inf))
+    survivors = decode_postings(
+        index, [term], where=_ub_expr(index, term, weight) >= F.lit(theta)
     )
-    seed_blocks = index.postings.where(cond).join(F.broadcast(keys_df), meta_cols)
-    seed_rows = (
-        score_blocks(seed_blocks)
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .collect()
-    )
-    theta = float(seed_rows[k - 1]["score"]) if len(seed_rows) >= k else float("-inf")
-    survivors = index.postings.where(cond).where(
-        _ub_expr(index, term, weight) >= F.lit(theta)
-    )
+    s = F.lit(float(weight)) * _partial(F.col("tf"), F.col("dl"), avgdl)
     out = (
-        score_blocks(survivors)
+        survivors.select("doc_id", s.alias("score"))
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)
     )
     stats = None
     if collect_stats:
         stats = {
-            "blocks_total": meta.count(),
-            "blocks_decoded": survivors.select(*meta_cols).count(),
-            "theta": theta,
+            "blocks_total": len(ub),
+            "blocks_decoded": int((ub >= theta).sum()),
+            "theta": theta if len(ub) else None,
         }
     return out, stats
 
@@ -1647,9 +1581,8 @@ def topk_term_pruned(
     index: SparkIndex, term: Term, k: int = 10, collect_stats: bool = True
 ) -> tuple[list, dict]:
     """Single-term convenience wrapper over :func:`topk_wand` (kept for
-    bench/gate compatibility): returns (collected top-k rows, stats).
-    ``collect_stats=False`` skips the two diagnostic metadata-count
-    jobs — use it when timing the serving path."""
+    bench/gate compatibility): returns (collected top-k rows, stats;
+    ``{}`` when ``collect_stats`` is False)."""
     index.prefetch_terms([term])
     idf = bm25_idf(index.doc_freq(term), index.n_docs)
     out, stats = topk_wand(index, term, idf, k=k, collect_stats=collect_stats)

@@ -252,8 +252,9 @@ def test_tier_views_hold_the_per_tier_rows(tiered_index):
 def test_tombstone_reads_run_no_spark_job(spark, transcripts_df, tmp_path):
     """``deleted_count`` / ``num_docs`` / ``is_deleted`` read the
     tombstones on the driver, and ``delete_docs`` numbers its generation
-    from the parquet footers' ``gen`` statistics, so its one job is the
-    tombstone write."""
+    from the parquet footers' ``gen`` statistics and writes an id list
+    with pyarrow, so a list delete runs no job; a DataFrame delete runs
+    one, its write."""
     from lucene_spark.index import IndexConfig, build_index
     from lucene_spark.index.lifecycle import delete_docs, deleted_count
 
@@ -272,8 +273,133 @@ def test_tombstone_reads_run_no_spark_job(spark, transcripts_df, tmp_path):
     assert jobs(deleted_count, ix) == (0, 0)
     assert jobs(ix.is_deleted, 3) == (False, 0)
     for gen, ids in enumerate([[3, 7], [7, 9, 11]]):
-        assert jobs(delete_docs, ix, ids) == (gen, 1)
+        assert jobs(delete_docs, ix, ids) == (gen, 0)
     assert jobs(deleted_count, ix) == (4, 0)
     assert jobs(ix.num_docs) == (ix.n_docs - 4, 0)
     assert jobs(ix.is_deleted, 9) == (True, 0)
     assert jobs(ix.is_deleted, 8) == (False, 0)
+    frame = spark.createDataFrame([(11,), (12,)], "doc_id long")
+    assert jobs(delete_docs, ix, frame) == (2, 1)
+    assert jobs(deleted_count, ix) == (5, 0)
+    assert ix.tombstones.tolist() == [3, 7, 9, 11, 12]
+
+
+# ------------------------------------------------------- query plans
+
+
+SHAPES = {  # name: (query, score mode); the scoped shapes narrow
+    "term": ("text:spark", "bm25"),
+    "and": ("+text:spark +text:index", "bm25"),
+    "or": ("text:spark text:index", "bm25"),
+    "not": ("+text:spark -text:index", "bm25"),
+    "phrase": ('text:"spark index"', "bm25"),
+    "sloppy": ('text:"spark index"~2', "bm25"),
+    "scoped": ("+conv_id:conv00000003 +text:spark", "bm25"),
+    "scoped_phrase": ('+conv_id:conv00000003 +text:"spark index"', "bm25"),
+    "rare_sloppy3": ('text:"timeout spark spark"~2', "bm25"),
+    "classic_term": ("text:spark", "classic"),
+    "classic_and": ("+text:spark +text:index", "classic"),
+}
+NARROWED = ("scoped", "scoped_phrase", "rare_sloppy3")
+
+
+def _query_jobs(ix, name: str, k: int = 10):
+    """(Spark jobs, ranked (doc_id, 9-decimal score) rows) of one search
+    + collect, the df cache warm."""
+    qstr, mode = SHAPES[name]
+    searcher = SparkSearcher(ix)
+    searcher.search(qstr, k=k, score_mode=mode)  # warm the df cache
+    first = _next_job_id(ix.spark)
+    rows = searcher.search(qstr, k=k, score_mode=mode).collect()
+    jobs = _next_job_id(ix.spark) - first
+    return jobs, [(r["doc_id"], round(r["score"], 9)) for r in rows]
+
+
+@pytest.fixture(scope="module")
+def plain_and_deleted(spark, transcripts_df, tmp_path_factory):
+    """Jobs and rows per shape on one base index before and after a
+    delete, conjunction narrowing forced (quantum 1)."""
+    import lucene_spark.search.executor as ex
+    from lucene_spark.index import IndexConfig, build_index
+    from lucene_spark.index.lifecycle import delete_docs
+
+    d = str(tmp_path_factory.mktemp("deletes"))
+    ix = build_index(spark, transcripts_df, d, IndexConfig(seg_size=100))
+    prev, ex.RANGE_PRUNE_QUANTUM = ex.RANGE_PRUNE_QUANTUM, 1
+    try:
+        plain = {name: _query_jobs(ix, name) for name in SHAPES}
+        delete_docs(ix, [plain["scoped"][1][0][0], plain["term"][1][0][0], 7])
+        deleted = {name: _query_jobs(ix, name) for name in SHAPES}
+    finally:
+        ex.RANGE_PRUNE_QUANTUM = prev
+    return ix, plain, deleted
+
+
+def test_query_runs_only_its_own_jobs(plain_and_deleted, tiered_index, monkeypatch):
+    """A query schedules its scan+decode, one groupBy(doc_id) exchange
+    and the final TakeOrdered: narrowing reads the rare term's ids on
+    the driver, tombstones drop inside the decode, classic normalizes
+    the k rows after the TakeOrdered (only its norms join adds a job)."""
+    import lucene_spark.search.executor as ex
+
+    ix, plain, deleted = plain_and_deleted
+    assert plain["term"][0] == 1
+    for name in ("and", "or", "not", "phrase", "sloppy", "scoped", "rare_sloppy3"):
+        assert plain[name][0] == 2, name
+    assert plain["classic_term"][0] <= plain["term"][0] + 1
+    assert plain["classic_and"][0] <= plain["and"][0] + 1
+    monkeypatch.setattr(ex, "RANGE_PRUNE_QUANTUM", 1)
+    tiered = {name: _query_jobs(tiered_index, name) for name in SHAPES}
+    for name in SHAPES:
+        assert deleted[name][0] == plain[name][0], name  # tombstones: +0
+        assert tiered[name][0] == plain[name][0], name
+    # narrowing engages (the candidate range reaches the scan) and costs
+    # no job over the same query left unnarrowed
+    for name in NARROWED:
+        qstr, mode = SHAPES[name]
+        narrowed = SparkSearcher(ix).search(qstr, k=10, score_mode=mode)
+        assert "max_docid" in narrowed._jdf.queryExecution().executedPlan().toString()
+        monkeypatch.setattr(ex, "RANGE_PRUNE_QUANTUM", 10**9)
+        assert _query_jobs(ix, name) == deleted[name], name
+        monkeypatch.setattr(ex, "RANGE_PRUNE_QUANTUM", 1)
+
+
+def test_deleted_docs_never_match(plain_and_deleted):
+    ix, plain, deleted = plain_and_deleted
+    gone = set(ix.tombstones.tolist())
+    assert len(gone) == 3
+    for name in SHAPES:
+        docs = [d for d, _s in deleted[name][1]]
+        assert not gone & set(docs), name
+        if name.startswith("classic"):
+            continue  # the top score, and so every normalized one, can move
+        kept = [r for r in plain[name][1] if r[0] not in gone]
+        assert deleted[name][1][: len(kept)] == kept[: len(deleted[name][1])], name
+
+
+@pytest.mark.parametrize("which", ["plain", "deleted"])
+def test_classic_top_k_is_the_head_of_the_full_ranking(
+    plain_and_deleted, spark_index, which
+):
+    """Classic scores with k > 0 are normalized after the TakeOrdered:
+    the result is the first k rows of the k = 0 ranking, and the plan
+    has no join for the top score."""
+    ix = spark_index if which == "plain" else plain_and_deleted[0]
+    searcher = SparkSearcher(ix)
+    raised = False
+    for qstr in ("text:spark", "+text:spark +text:index", "text:cache text:retry",
+                 "+text:spark -text:index", 'text:"spark index"'):
+        full = [
+            (r["doc_id"], r["score"])
+            for r in searcher.search(qstr, k=0, score_mode="classic").collect()
+        ]
+        raw = searcher.search(qstr, k=1, score_mode="classic", classic_normalize=False)
+        raised |= raw.collect()[0]["score"] > 1.0
+        for k in (1, 3, 10):
+            top = searcher.search(qstr, k=k, score_mode="classic")
+            plan = top._jdf.queryExecution().executedPlan().toString()
+            assert "NestedLoopJoin" not in plan and "CartesianProduct" not in plan
+            assert [(r["doc_id"], r["score"]) for r in top.collect()] == full[:k], (
+                qstr, k,
+            )
+    assert raised  # some top score exceeds 1, so normalization divides

@@ -91,9 +91,9 @@ def _scoped_df(e, spark, sf):
 
 
 def _scoped_phrase_df(e, spark, sf):
-    """Round-4: '+conv_id:X +text:"phrase"' — the conjunction hands the
-    rare term's candidate ids into the phrase's POSITION decode
-    (doc_filter inside the kernel), on top of the block restriction."""
+    """'+conv_id:X +text:"phrase"' — the conjunction hands the rare
+    term's candidate ids into the phrase's POSITION decode (doc_filter
+    inside the kernel)."""
     import lucene_spark.search.executor as ex
     from lucene_spark.search.executor import SparkSearcher
 
@@ -196,34 +196,38 @@ def build_sections(spark, e, sf):
             "wand",
             "Block-max WAND top-k (`text:table`, pruning=force)",
             _wand_df(ix),
-            "Round-2 survivor plan: the block filter is a codegen'd "
-            "max-impact expression over the stored Pareto (tf, dl) "
-            "pairs compared to θ — metadata columns only; the binary "
-            "posting streams are read exclusively by the decode of "
-            "SURVIVING blocks. No block metadata is collected.",
+            "Survivor plan: θ was seeded on the driver (block metadata "
+            "read with pyarrow, the k best blocks decoded in numpy), so "
+            "this is the query's one job. The block filter is a "
+            "codegen'd max-impact expression over the stored Pareto "
+            "(tf, dl) pairs compared to θ; the binary posting streams "
+            "are decoded only for SURVIVING blocks, and a single term "
+            "needs no aggregation.",
         ),
         (
             "scoped_and",
             "Conversation-scoped conjunction (`+conv_id:X +text:table`)",
             _scoped_df(e, spark, sf),
-            "Conjunction range pruning (bucket quantum forced small for "
+            "Conjunction narrowing (bucket quantum forced small for "
             "the tiny sf0.01 corpus — the production gate engages at "
-            "df·256 ≤ N): the rare conv_id term's doc ids decode first, "
-            "and BOTH terms' posting scans are joined against the "
-            "metadata-only survivor keys, so the hot term reads only "
-            "blocks overlapping the conversation's doc range.",
+            "df·256 ≤ N): the driver reads the rare conv_id term's doc "
+            "ids with pyarrow, and they reach the scan as a "
+            "[doc_base, max_docid] range predicate and the decode "
+            "kernel as a broadcast candidate set (blocks without a "
+            "candidate skipped, other rows dropped). Same plan shape "
+            "as the unnarrowed AND: no join, no extra job.",
         ),
         (
             "scoped_phrase",
             "Conversation-scoped phrase (`+conv_id:X +text:\"fast value\"`)",
             _scoped_phrase_df(e, spark, sf),
-            "Round 4: on top of the block-span restriction, the rare "
-            "required term's doc ids are broadcast into the phrase's "
-            "POSITION decode kernel (doc_filter with need_positions) — "
-            "position rows outside the conversation never cross Arrow. "
-            "Block pruning alone cannot cut rows for uniformly "
-            "scattered terms (BASELINE §6.1); this is the row-level "
-            "lever for the scoped-phrase shape.",
+            "The rare required term's doc ids, read on the driver, "
+            "narrow every decode under the conjunction: the term's own "
+            "and the phrase's POSITION decode (doc_filter with "
+            "need_positions) — position rows outside the conversation "
+            "never cross Arrow. Block pruning alone cannot cut rows for "
+            "uniformly scattered terms (BASELINE §6.1); this is the "
+            "row-level lever for the scoped-phrase shape.",
         ),
         (
             "phrase_cogroup",
