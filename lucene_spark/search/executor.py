@@ -344,7 +344,9 @@ RANGE_PRUNE_QUANTUM = 64  # conjunction narrowing engages when the
 
 RAREST_FETCH_MAX_DF = 1_000_000  # bound on the rarest required term's
 # doc ids read to the driver (≤ 8 MB of int64) as a conjunction's
-# candidate set; above it the conjunction is not narrowed
+# candidate set. Above it the conjunction is not narrowed at all, not
+# even by block spans: with the gate above that takes a corpus of
+# 256M+ docs, a case no benchmark covers
 
 
 def _candidate_docs(ix: SparkIndex, req_terms: list[Term]) -> np.ndarray | None:
@@ -486,8 +488,11 @@ class SparkSearcher:
         groupBy(doc_id) exchange and the final TakeOrdered. Conjunction
         narrowing reads the rare term's doc ids on the driver, and
         tombstoned docs drop inside the decode (:func:`decode_postings`).
-        Classic scores with k > 0 are normalized after the TakeOrdered:
-        dividing by the top score keeps the order, so those k rows are
+        Classic scores are normalized on one partition with no extra
+        job: a ``result_set_limit`` set after its truncation, else for
+        k > 0 the k rows after the TakeOrdered (only k = 0 takes a max
+        aggregate and a cross join). Dividing by the top score keeps
+        the order, so those k rows are
         the first k of the k = 0 result — unless two raw scores that
         differ become equal after the division right at the k-th slot,
         where the k = 0 order breaks the new tie by doc_id and may take
@@ -537,15 +542,20 @@ class SparkSearcher:
         # top-score normalization when top > 1 (src/Index.php:731-735);
         # callers that re-rank across shards (global-stats MultiSearcher)
         # normalize GLOBALLY instead and pass classic_normalize=False
-        if k and not result_set_limit:
+        if k or result_set_limit:
             # the top row of the k best is the global max: normalize the
-            # k rows after TakeOrdered. They are one partition already, so
-            # one window group adds no exchange. Its key is true on every
-            # row (no score is null) but is not a literal, which Spark
-            # drops and then logs a single-partition warning per query
-            out = out.orderBy(*order).limit(k)
+            # k rows after TakeOrdered (or the docId-truncated set). A
+            # limit leaves one partition, so one window group adds no
+            # exchange. Its key is true on every row (no score is null)
+            # but is not a literal: Spark drops a literal key, then logs
+            # a WARN about moving all data to one partition on every
+            # classic query, at the default log level, for a move that
+            # does not happen here
+            if not result_set_limit:
+                out = out.orderBy(*order).limit(k)
             one = Window.partitionBy(F.col("score").isNotNull())
-            return _top_normalized(out, F.max("score").over(one))
+            out = _top_normalized(out, F.max("score").over(one))
+            return out.limit(k) if k else out
         top = out.agg(F.max("score").alias("m"))
         out = _top_normalized(out.crossJoin(F.broadcast(top)), F.col("m"))
         return out.limit(k) if k else out
@@ -564,9 +574,8 @@ class SparkSearcher:
             uniq, _slots = _uniq_slots(q.terms)
             ix.prefetch_terms(uniq)
             total_df = sum(ix.doc_freq(t) for t in uniq)
-            # sloppy phrases need enough doc ranges for the cogroup
-            # kernel to win (PHRASE_COGROUP_MIN_DOCS), while slop=0
-            # cogroup already wins at 200k docs
+            # sloppy phrases need enough docs for the cogroup kernel to
+            # win (PHRASE_COGROUP_MIN_DOCS); slop=0 has no size gate
             if force or (
                 total_df >= AUTO_PRUNING_MIN_DF
                 and (q.slop == 0 or n_docs >= PHRASE_COGROUP_MIN_DOCS)
@@ -1052,12 +1061,11 @@ def _collect_terms(q: Query) -> list[Term]:
 
 # ------------------------------------------------- block-max top-k path
 
-PHRASE_COGROUP_MIN_DOCS = 1_000_000  # 'auto' routes SLOPPY phrases to
-# the cogroup kernel only past this corpus size. wand_bench medians,
-# routed vs exact (BASELINE §10.6): at 200k docs routed wins every
-# sloppy row (`"w1 w2"~3` 1.61 vs 2.40 s), at 50k it loses two of three
-# (1.07 vs 1.00 s, `"w1 w50"~2` 0.87 vs 0.81 s); sizes in between were
-# not measured, so the gate keeps its value
+PHRASE_COGROUP_MIN_DOCS = 200_000  # 'auto' routes SLOPPY phrases to
+# the cogroup kernel only past this corpus size: the smallest size
+# measured where routed beats exact on every sloppy row (wand_bench,
+# BASELINE §10.6: 1.5-2.6x at 200k docs; at 50k exact wins two of three
+# rows; sizes in between are unmeasured)
 
 AUTO_PRUNING_MIN_DF = 65536  # 'auto' pruning: below this, block skipping
 # can't amortize the extra metadata jobs
@@ -1200,6 +1208,13 @@ def topk_wand(
        score(d) ≤ ub_b < θ ≤ true kth score, so no doc of the true
        top-k (ties included — the filter is ≥, not >) is lost. Decode
        survivors, TakeOrdered k: the one Spark job.
+
+    What reaches the driver grows with df: the term's block metadata,
+    about 144 bytes per ≤128-doc block (a term in 3.8M of 4M docs:
+    30k blocks, 4.4 MB, read in 35 ms — BASELINE §10.6), plus the k
+    seed blocks. A term in 10^9 docs would read about 1.1 GB; seeding
+    from a Spark TakeOrdered instead sends only k rows, for one more
+    job per query.
 
     Multi-term shapes run the co-grouped range kernel instead
     (:func:`topk_and_cogrouped`): on uniform-impact corpora bucket

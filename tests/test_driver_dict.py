@@ -383,7 +383,8 @@ def test_classic_top_k_is_the_head_of_the_full_ranking(
 ):
     """Classic scores with k > 0 are normalized after the TakeOrdered:
     the result is the first k rows of the k = 0 ranking, and the plan
-    has no join for the top score."""
+    has no join for the top score. A result_set_limit set is normalized
+    after its truncation, also without that join."""
     ix = spark_index if which == "plain" else plain_and_deleted[0]
     searcher = SparkSearcher(ix)
     raised = False
@@ -402,4 +403,15 @@ def test_classic_top_k_is_the_head_of_the_full_ranking(
             assert [(r["doc_id"], r["score"]) for r in top.collect()] == full[:k], (
                 qstr, k,
             )
+        limited = [
+            searcher.search(qstr, k=k, score_mode="classic", result_set_limit=5)
+            for k in (0, 2)
+        ]
+        for top in limited:
+            plan = top._jdf.queryExecution().executedPlan().toString()
+            assert "NestedLoopJoin" not in plan and "CartesianProduct" not in plan
+        head, whole = (
+            [(r["doc_id"], r["score"]) for r in top.collect()] for top in limited[::-1]
+        )
+        assert head == whole[:2], qstr
     assert raised  # some top score exceeds 1, so normalization divides
