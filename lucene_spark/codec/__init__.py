@@ -8,13 +8,6 @@ from lucene_spark.codec.varbyte import (
     freq_stream_encode,
     freq_stream_decode,
 )
-from lucene_spark.codec.frontcode import (
-    TERMS_PER_BLOCK,
-    decode_term_block,
-    encode_term_block,
-    pack_term_runs,
-    write_dict_blocks,
-)
 from lucene_spark.codec.norms import (
     NORM_TABLE,
     encode_norm,
@@ -33,11 +26,6 @@ __all__ = [
     "decode_blocks",
     "freq_stream_encode",
     "freq_stream_decode",
-    "TERMS_PER_BLOCK",
-    "decode_term_block",
-    "encode_term_block",
-    "pack_term_runs",
-    "write_dict_blocks",
     "NORM_TABLE",
     "encode_norm",
     "decode_norm",

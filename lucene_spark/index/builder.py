@@ -47,8 +47,8 @@ meta rows, durability markers — and every table schema)::
     postings/      field, term, seg_id, block_id, doc_base, max_docid,
                    n, imp_tfs, imp_dls, cf, docs_bin, tfs_bin, dls_bin,
                    pos_bin   (sorted by field, term, doc_base)
-    term_dict/     field, term, df, cf
-    term_dict_fc/  field, first_term, n_terms, terms_bin (front-coded)
+    term_dict/     field, term, df, cf   (sorted by field, term; the term
+                   column prefix-coded — see ``write_term_dict``)
     segments/      seg_chunk=<c>/ phase-A posting blocks, per resume chunk
     manifests/     seg_id, chunk, lineage   (one row per segment, written
                    on the driver once the chunk's blocks are)
@@ -59,6 +59,7 @@ meta rows, durability markers — and every table schema)::
 
 from __future__ import annotations
 
+import heapq
 import json
 import math
 import os
@@ -88,7 +89,7 @@ BLOCK_DOC_RANGE = 8192  # max doc-id span per block: sparse terms split
 # _invert_segment packing comment)
 MAX_BUILD_CHUNKS = 512  # cap on serial resume-chunk jobs in phase A
 CHUNK_CONCURRENCY = 3  # phase-A chunk jobs in flight at once
-# the term_dict columns SparkIndex.prefetch_terms reads on the driver
+# the term_dict columns SparkIndex.prefetch_terms/terms_from read on the driver
 _DRIVER_TD_SCHEMA = pa.schema(
     [("field", pa.string()), ("term", pa.string()), ("df", pa.int64())]
 )
@@ -409,14 +410,23 @@ def pareto_impacts(t: np.ndarray, dl: np.ndarray) -> tuple[np.ndarray, np.ndarra
     return pt[keep_mask], pd_[keep_mask]
 
 
-def postings_term_dict(postings: DataFrame) -> DataFrame:
-    """The term dictionary rows (field, term, df, cf) of a postings
-    table — the one aggregation every writer (build, delta batch,
-    generation promote, merge) stores as ``term_dict``. Per-block
-    counters only (n, cf): no posting stream is read."""
-    return postings.groupBy("field", "term").agg(
+def write_term_dict(postings: DataFrame, path: str, n_part: int | None = None) -> None:
+    """Write the term dictionary (field, term, df, cf) of ``postings``,
+    summed from the per-block counters, to ``path``: the one writer of
+    every tier's ``term_dict``. Each file is sorted on (field, term)
+    (``n_part`` range-partitions first, so files hold disjoint ranges)
+    and written by the Parquet v2 writer, which stores the sorted term
+    column as DELTA_BYTE_ARRAY, prefix length plus suffix: the
+    reference's ``.tis`` (AbstractSegmentWriter.php:404-496), with
+    row-group min/max stats as its sparse ``.tii``. No extra job."""
+    td = postings.groupBy("field", "term").agg(
         F.sum("n").alias("df"), F.sum("cf").alias("cf")
     )
+    if n_part:
+        td = td.repartitionByRange(n_part, "field", "term")
+    td.sortWithinPartitions("field", "term").write.option(
+        "parquet.writer.version", "v2"
+    ).mode("overwrite").parquet(path)
 
 
 def _invert_segment(cfg: IndexConfig):
@@ -947,30 +957,7 @@ def build_index(
     _mark("merge")
 
     # ---- term dictionary (tiny rows: S per term, not posting-sized) ----
-    td = (
-        postings_term_dict(seg_blocks)
-        .repartitionByRange(max(1, n_merge // 4), "field", "term")
-        .sortWithinPartitions("field", "term")
-    )
-    td = td.persist()
-    td.write.mode("overwrite").parquet(dict_path)
-    # two-level dictionary (≙ the reference's .tii/.tis pair,
-    # AbstractSegmentWriter.php:404-496): 128-term front-coded blocks
-    # keyed by first_term — dictionary range scans read ~128x fewer
-    # rows than the flat term_dict (see SparkIndex.terms_from).
-    # Fed from the persisted td (not a re-read of dict_path): the flat
-    # write, the fc grouping, and its range sampling share one
-    # materialization — this phase is small-data and almost pure
-    # scheduling overhead, so the saved jobs are the saved time.
-    from lucene_spark.codec.frontcode import write_dict_blocks
-
-    # assume_sorted: td's declared plan IS repartitionByRange + sort on
-    # (field, term) (above), so the fc pass packs straight off those
-    # partitions — no second shuffle of every term string.
-    write_dict_blocks(
-        td, os.path.join(index_dir, "term_dict_fc"), assume_sorted=True
-    )
-    td.unpersist()
+    write_term_dict(seg_blocks, dict_path, max(1, n_merge // 4))
     _mark("term_dict")
 
     # ---- stats ----
@@ -1017,6 +1004,7 @@ class SparkIndex:
         with open(os.path.join(index_dir, "stats.json")) as fh:
             self.stats = json.load(fh)
         self._attach_tiers()
+        self._tombstones_bc = None
         self.refresh_tombstones()
         a = dict(self.stats["analyzer"])  # the Analyzer fields, as built
         a["stop_words"] = frozenset(a["stop_words"])
@@ -1028,8 +1016,9 @@ class SparkIndex:
         """Open every view over the index's tiers (``index/tiers.py``; an
         unmerged reference index is likewise searchable across its whole
         segment list): the Spark postings/docs/term_dict views and the
-        driver-side dictionary behind :meth:`prefetch_terms` see the same
-        tiers. Doc counts and field lengths sum across them. No job."""
+        driver-side dictionary behind :meth:`prefetch_terms` and
+        :meth:`terms_from` see the same tiers. Doc counts and field
+        lengths sum across them. No job."""
         spark = self.spark
         self.catalog = tiers.read_catalog(self.index_dir)
         self._fields = self.catalog.field_totals(self.stats["fields"])
@@ -1040,16 +1029,10 @@ class SparkIndex:
         # source, summed driver-side (index/expansion.py) — expanding
         # over the aggregate below would add a shuffle job per field
         self._tier_term_dict = self.term_dict
-        # front-coded dictionary blocks (B6/.tii): used by terms_from on
-        # a base-only index (tier terms aren't packed until merge_delta)
-        fc_path = os.path.join(self.index_dir, "term_dict_fc")
-        self._fc_blocks = None
         if self.catalog.upper:
             self.term_dict = self.term_dict.groupBy("field", "term").agg(
                 F.sum("df").alias("df"), F.sum("cf").alias("cf")
             )
-        elif os.path.exists(os.path.join(fc_path, "_SUCCESS")):
-            self._fc_blocks = tiers.read_table(spark, fc_path, "term_dict_fc")
         self._td_driver = self._driver_dataset("term_dict", _DRIVER_TD_SCHEMA)
         self._postings_driver = self._driver_dataset(  # read_blocks
             "postings", to_arrow_schema(POSTINGS_SCHEMA)
@@ -1068,9 +1051,24 @@ class SparkIndex:
 
     def refresh_tombstones(self) -> None:
         """(Re)load the logically deleted doc ids — sorted int64, read on
-        the driver (no Spark job) — or None when nothing is deleted."""
+        the driver (no Spark job) — or None when nothing is deleted.
+
+        The decode kernels read the ids from one broadcast per refresh
+        (:meth:`tombstones_broadcast`), not per query. A refresh destroys
+        the previous one, so a query plan built before a delete is stale
+        (running it can fail on that broadcast): build it again."""
         ids = np.sort(tiers.tombstone_ids(self.index_dir).to_numpy())
         self.tombstones = ids if len(ids) else None
+        if self._tombstones_bc is not None:
+            self._tombstones_bc.destroy()
+        self._tombstones_bc = None
+
+    def tombstones_broadcast(self):
+        """:attr:`tombstones` as a Spark broadcast, made on first use
+        after a refresh; None when nothing is deleted."""
+        if self._tombstones_bc is None and self.tombstones is not None:
+            self._tombstones_bc = self.spark.sparkContext.broadcast(self.tombstones)
+        return self._tombstones_bc
 
     # ---------------------------------------------- IndexReader protocol
     @property
@@ -1112,8 +1110,8 @@ class SparkIndex:
         job, the in-process lookup the reference does against its
         .tii/.tis pair (SegmentInfo.php:916-1039). One pyarrow scan per
         field with an ``==`` / range / ``isin`` filter (row-group and
-        file pruning on the sorted term column); df sums across tiers,
-        like the Spark view's groupBy."""
+        file pruning on every tier's sorted term column); df sums across
+        tiers, like the Spark view's groupBy."""
         todo = [(t.field, t.text) for t in terms if (t.field, t.text) not in self._df_cache]
         if not todo:
             return
@@ -1157,96 +1155,34 @@ class SparkIndex:
         return self._df_cache[key]
 
     def terms_from(self, field: str, start: str = "", page_size: int = 8192):
-        """Sorted term iterator for dictionary expansion (wildcard/fuzzy/
-        range). Paginates a pushed-down range scan with a last-key
-        cursor so callers see the WHOLE term range — the reference scans
-        the full dictionary and caps only the MATCH count
-        (Wildcard.php:137, Fuzzy.php:210, Range.php:177); a fixed
-        single-call limit silently dropped matches past the window on
-        vocabularies over ~1k terms.
+        """Sorted distinct terms of ``field`` from ``start`` on, across
+        every tier — the reference's terms stream with skipTo
+        (TermStreamsPriorityQueue.php:222-330). Each term_dict file is
+        sorted on (field, term) (:func:`write_term_dict`), so each is
+        read on the driver as a lazy stream of ``page_size``-row batches
+        (row-group statistics skip the rows before ``start``) and the
+        streams are k-way merged, duplicates collapsed. No Spark job;
+        a caller that stops early never reads later row groups."""
+        flt = (pc.field("field") == field) & (pc.field("term") >= start)
 
-        When the index carries front-coded dictionary blocks
-        (term_dict_fc — the ``.tii``/``.tis`` two-level layout,
-        DictionaryLoader.php:34-243), pages are fetched as packed
-        128-term blocks keyed by first_term: ~128x fewer scan rows per
-        page, decoded driver-side. Falls back to the flat term_dict scan
-        (parquet row-group pruning on the sorted term column) when
-        blocks are absent or a streaming delta is attached. Both paths
-        are lazy — callers that break early (prefix exhausted, >1024
-        matches raised) never pay for later pages."""
-        if self._fc_blocks is not None:
-            yield from self._terms_from_fc(field, start, page_size)
-            return
-        cursor = start
-        inclusive = True
-        while True:
-            cond = (F.col("field") == field) & (
-                (F.col("term") >= cursor) if inclusive else (F.col("term") > cursor)
-            )
-            rows = (
-                self.term_dict.where(cond)
-                .orderBy("term")
-                .select("term")
-                .limit(page_size)
-                .collect()
-            )
-            for r in rows:
-                yield r["term"]
-            if len(rows) < page_size:
-                return
-            cursor = rows[-1]["term"]
-            inclusive = False
+        def stream(fragment):
+            for batch in fragment.to_batches(
+                columns=["term"], filter=flt, batch_size=page_size
+            ):
+                yield from batch.column(0).to_pylist()
 
-    def _terms_from_fc(self, field: str, start: str, page_size: int):
-        """Dictionary range scan over front-coded blocks: first locate
-        the block COVERING ``start`` (greatest first_term <= start — one
-        TakeOrdered of a single row), then page forward by first_term
-        cursor, decoding each packed block on the driver."""
-        from lucene_spark.codec.frontcode import TERMS_PER_BLOCK, decode_term_block
-
-        fc = self._fc_blocks
-        fcond = F.col("field") == field
-        blocks_per_page = max(1, page_size // TERMS_PER_BLOCK)
-        pre = (
-            fc.where(fcond & (F.col("first_term") <= start))
-            .orderBy(F.col("first_term").desc())
-            .select("first_term")
-            .limit(1)
-            .collect()
-        )
-        cursor = pre[0]["first_term"] if pre else None
-        inclusive = True
-        while True:
-            cond = fcond
-            if cursor is not None:
-                cond = cond & (
-                    (F.col("first_term") >= cursor)
-                    if inclusive
-                    else (F.col("first_term") > cursor)
-                )
-            rows = (
-                fc.where(cond)
-                .orderBy("first_term")
-                .select("first_term", "terms_bin")
-                .limit(blocks_per_page)
-                .collect()
-            )
-            for r in rows:
-                for t in decode_term_block(bytes(r["terms_bin"])):
-                    if t >= start:
-                        yield t
-            if len(rows) < blocks_per_page:
-                return
-            cursor = rows[-1]["first_term"]
-            inclusive = False
+        last = None
+        for t in heapq.merge(*map(stream, self._td_driver.get_fragments())):
+            if t != last:
+                last = t
+                yield t
 
     # ---- distributed dictionary expansion (index/expansion.py) ----
     # The predicate runs INSIDE the term_dict scan (JVM rlike /
     # levenshtein over the pushed-down prefix slice), so wildcard/
     # fuzzy/range rewrites collect only matching terms — bounded by the
     # 1024-term query limit, never the vocabulary size. terms_from
-    # remains the generic sorted iterator (reference parity fallback,
-    # used by readers without a term_dict DataFrame).
+    # remains the generic sorted iterator (reference parity).
 
     def match_terms_regex(
         self, field, prefix, java_regex, limit, is_match=None

@@ -39,8 +39,8 @@ _COLLECT_MARGIN = 64
 
 
 def _field_slice(td: DataFrame, field: str, prefix: str) -> DataFrame:
-    """term_dict rows of ``field`` under ``prefix`` — range bounds on the
-    sorted term column so parquet row-group pruning applies."""
+    """term_dict rows of ``field`` under ``prefix`` — range bounds on
+    every tier's sorted term column, so row-group pruning applies."""
     cond = F.col("field") == field
     if prefix:
         cond = (

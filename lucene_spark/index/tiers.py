@@ -2,8 +2,8 @@
 laid out (≙ the segments file ``Index::_readSegmentsFile()`` reads
 in-process, src/Index.php:294-380). Every view unions the TIERS, base first:
 
-    <index_dir>/                  base: docs postings term_dict term_dict_fc
-                                  tombstones stats.json
+    <index_dir>/                  base: docs postings term_dict tombstones
+                                  stats.json
     gens/gen=<g>/                 sealed generation: docs postings term_dict meta
     delta/<table>/batch=<b>/      live micro-batch: docs postings term_dict meta
 
@@ -45,7 +45,7 @@ from pyspark.sql.types import (
 
 DELTA_DIR, GENS_DIR, META, SUCCESS = "delta", "gens", "meta", "_SUCCESS"
 MERGE_MARKER = "_merge_commit.json"
-BASE_TABLES = ("postings", "term_dict", "term_dict_fc", "docs")  # merge restages
+BASE_TABLES = ("postings", "term_dict", "docs")  # merge restages
 
 
 def _struct(**cols) -> StructType:
@@ -67,11 +67,8 @@ POSTINGS_SCHEMA = _struct(
 _SCHEMAS = {
     "postings": POSTINGS_SCHEMA,
     "term_dict": _struct(field=_S, term=_S, df=_L, cf=_L),
-    # front-coded blocks (codec.frontcode.write_dict_blocks)
-    "term_dict_fc": _struct(field=_S, first_term=_S, n_terms=_I, terms_bin=_B),
     "tombstones": _struct(doc_id=_L, gen=_L),
 }
-TERM_DICT_FC_SCHEMA = _SCHEMAS["term_dict_fc"]
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 # meta rows; field_stats is JSON {field: {sum_len, n_docs_with_field}}
 DELTA_META_SCHEMA = pa.schema(

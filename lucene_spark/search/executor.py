@@ -132,12 +132,12 @@ def decode_postings(
     cond = _terms_cond(terms)
     if where is not None:
         cond = cond & where
-    tomb = index.tombstones
+    tomb_bc = index.tombstones_broadcast() if doc_filter is None else None
     cand = None
     if doc_filter is not None:
         cand = np.unique(np.asarray(doc_filter, dtype=np.int64))
-        if tomb is not None:
-            cand, tomb = np.setdiff1d(cand, tomb, assume_unique=True), None
+        if index.tombstones is not None:
+            cand = np.setdiff1d(cand, index.tombstones, assume_unique=True)
         cols.append("max_docid")
         cond = cond & (
             (F.col("doc_base") <= int(cand[-1])) & (F.col("max_docid") >= int(cand[0]))
@@ -146,11 +146,11 @@ def decode_postings(
         )
     blocks = index.postings.where(cond).select(*cols)
     schema = _DECODE_POS_SCHEMA if need_positions else _DECODE_SCHEMA
-    # one sc.broadcast each, not a closure capture: the id sets can be
-    # MBs and must ship to each executor once, not per task
+    # broadcasts, not closure captures: the id sets can be MBs and must
+    # ship to each executor once, not per task. The tombstones' is the
+    # index's, made once per refresh; a candidate set is this query's.
     sc = blocks.sparkSession.sparkContext
     cand_bc = None if cand is None else sc.broadcast(cand)
-    tomb_bc = None if tomb is None else sc.broadcast(tomb)
 
     def decode(it):
         for pdf in it:

@@ -37,7 +37,7 @@ from lucene_spark.index.builder import (
     _docs_with_lengths,
     _invert_segment,
     load_index,
-    postings_term_dict,
+    write_term_dict,
 )
 # DELTA_DIR is re-exported for callers that locate the live delta
 from lucene_spark.index.tiers import DELTA_DIR, MERGE_MARKER as _MERGE_MARKER  # noqa: F401
@@ -93,8 +93,9 @@ class IncrementalIndexWriter:
             _invert_segment(cfg), POSTINGS_SCHEMA
         )
         blocks.write.mode("overwrite").parquet(path("postings"))
-        td = postings_term_dict(tiers.read_table(spark, path("postings"), "postings"))
-        td.write.mode("overwrite").parquet(path("term_dict"))
+        write_term_dict(
+            tiers.read_table(spark, path("postings"), "postings"), path("term_dict")
+        )
         # meta row LAST — its presence marks the batch durable
         tiers.write_delta_meta(self.index_dir, batch_id, n, base, fields)
         docs.unpersist()
@@ -167,9 +168,7 @@ def _write_sorted(spark, postings: DataFrame, n_part: int, out: str, td_out: str
     postings.repartitionByRange(n_part, "field", "term", "doc_base").sortWithinPartitions(
         "field", "term", "doc_base"
     ).write.mode("overwrite").parquet(out)
-    postings_term_dict(tiers.read_table(spark, out, "postings")).write.mode(
-        "overwrite"
-    ).parquet(td_out)
+    write_term_dict(tiers.read_table(spark, out, "postings"), td_out)
 
 
 def promote_delta(index: SparkIndex, cfg: IndexConfig | None = None) -> SparkIndex:
@@ -260,14 +259,6 @@ def merge_delta(index: SparkIndex, cfg: IndexConfig | None = None) -> SparkIndex
     _write_sorted(
         spark, catalog.read(spark, "postings"), n_merge,
         staged("postings"), staged("term_dict"),
-    )
-    from lucene_spark.codec.frontcode import write_dict_blocks
-
-    # write_dict_blocks re-sorts its input itself (ordering is its own
-    # correctness requirement)
-    write_dict_blocks(
-        tiers.read_table(spark, staged("term_dict"), "term_dict"),
-        staged("term_dict_fc"),
     )
     catalog.read(spark, "docs").write.mode("overwrite").parquet(staged("docs"))
 

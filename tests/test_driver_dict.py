@@ -8,7 +8,8 @@ lookup), so parse → rewrite → optimize → execute plans a term, AND, NOT
 or phrase query without scheduling anything. Dictionary expansion
 (wildcard / fuzzy / range) is the one compile step that scans on the
 cluster: one job per field, however many terms it matches, because the
-collected df seeds the driver cache.
+collected df seeds the driver cache. ``terms_from`` merges the same
+sorted term_dict files on the driver and runs no job either.
 """
 
 from __future__ import annotations
@@ -47,8 +48,9 @@ def _compile_jobs(ix, qstr: str, **kw) -> int:
 
 
 @pytest.fixture(scope="module")
-def tiered_index(spark, transcripts_df, tmp_path_factory):
-    """Base + one promoted generation + one live delta batch + tombstones."""
+def tiered_build(spark, transcripts_df, tmp_path_factory):
+    """Base + one promoted generation + one live delta batch + tombstones,
+    and the Spark jobs each writer step ran."""
     from lucene_spark.index import IndexConfig, build_index, load_index
     from lucene_spark.index.lifecycle import delete_docs
     from lucene_spark.streaming import IncrementalIndexWriter
@@ -60,17 +62,30 @@ def tiered_index(spark, transcripts_df, tmp_path_factory):
     live = transcripts_df.where(conv >= "conv00000030")
     d = str(tmp_path_factory.mktemp("tiered"))
     cfg = IndexConfig(seg_size=100)
-    n_base = build_index(spark, base, d, cfg).n_docs
+    jobs = {}
+
+    def run(step, fn, *args):
+        first = _next_job_id(spark)
+        out = fn(*args)
+        jobs[step] = _next_job_id(spark) - first
+        return out
+
+    n_base = run("build", build_index, spark, base, d, cfg).n_docs
     w = IncrementalIndexWriter(d, cfg)
-    w.process_batch(gen, 0)
-    promote_delta(load_index(spark, d), cfg)
+    run("process_batch", w.process_batch, gen, 0)
+    run("promote_delta", promote_delta, load_index(spark, d), cfg)
     w.process_batch(live, 1)
     ix = load_index(spark, d)
     delete_docs(ix, [0, 5, n_base + 1])
     assert os.path.exists(os.path.join(d, "gens", "gen=0", "meta", "_SUCCESS"))
     assert os.path.isdir(os.path.join(d, "delta", "term_dict", "batch=1"))
     assert ix.tombstones is not None
-    return ix
+    return ix, jobs
+
+
+@pytest.fixture(scope="module")
+def tiered_index(tiered_build):
+    return tiered_build[0]
 
 
 def _spark_dict(ix) -> dict[tuple[str, str], int]:
@@ -167,6 +182,83 @@ def test_limit_sized_wildcard_is_one_dictionary_job(spark, tmp_path):
     assert got == want
 
 
+# ----------------------------------------------------- term dictionary
+
+
+def _assert_dicts_sorted_and_prefix_coded(root: str) -> int:
+    """Every term_dict parquet file under ``root`` is sorted on (field,
+    term), and its footer says the term column is DELTA_BYTE_ARRAY
+    (prefix length + suffix). Returns the number of files."""
+    import pyarrow.parquet as pq
+
+    from lucene_spark.index import tiers
+
+    files = tiers._parquet_files(root)
+    for f in files:
+        t = pq.read_table(f, columns=["field", "term"])
+        keys = list(zip(t.column("field").to_pylist(), t.column("term").to_pylist()))
+        assert keys == sorted(keys), f
+        meta = pq.ParquetFile(f).metadata
+        col = meta.schema.to_arrow_schema().get_field_index("term")
+        for rg in range(meta.num_row_groups):
+            assert meta.row_group(rg).column(col).encodings == ("DELTA_BYTE_ARRAY",), f
+    return len(files)
+
+
+@pytest.fixture(scope="module")
+def merged_tiers(tiered_build, tmp_path_factory):
+    """A copy of ``tiered_index`` with every tier merged into the base,
+    and the Spark jobs ``merge_delta`` ran."""
+    import shutil
+
+    from lucene_spark.index import load_index
+    from lucene_spark.streaming.incremental import merge_delta
+
+    ix, _jobs = tiered_build
+    copy = str(tmp_path_factory.mktemp("merged") / "ix")
+    shutil.copytree(ix.index_dir, copy)
+    opened = load_index(ix.spark, copy)
+    first = _next_job_id(ix.spark)
+    merged = merge_delta(opened)
+    assert not merged.catalog.upper
+    return merged, _next_job_id(ix.spark) - first
+
+
+def test_every_tier_dictionary_is_sorted_and_prefix_coded(tiered_index, merged_tiers):
+    """The base, a promoted generation and a live delta batch each write
+    their term_dict sorted and front-coded, and so does a merge."""
+    d = tiered_index.index_dir
+    for sub in ("", "gens/gen=0", "delta"):
+        assert _assert_dicts_sorted_and_prefix_coded(os.path.join(d, sub, "term_dict"))
+    merged = merged_tiers[0].index_dir
+    assert _assert_dicts_sorted_and_prefix_coded(os.path.join(merged, "term_dict"))
+
+
+def test_writer_job_counts(tiered_build, merged_tiers):
+    """Each writer writes one term dictionary, and only its own jobs:
+    sorting within partitions and the v2 writer add none."""
+    jobs = tiered_build[1]
+    assert jobs["build"] <= 20
+    assert jobs["process_batch"] == 7
+    assert jobs["promote_delta"] == 6
+    assert merged_tiers[1] <= 6
+
+
+@pytest.mark.parametrize("which", ["tiered", "base"])
+def test_terms_from_merges_every_tier_without_a_job(tiered_index, spark_index, which):
+    """terms_from k-way merges the tiers' sorted dictionary files on the
+    driver: the distinct terms of the Spark view, in order, from any
+    start, lazily paged, with no Spark job."""
+    ix = tiered_index if which == "tiered" else spark_index
+    rows = ix.term_dict.where(F.col("field") == "text").select("term").collect()
+    vocab = sorted({r["term"] for r in rows})
+    for start in ("", "s", "sp", "spark", "zzz"):
+        first = _next_job_id(ix.spark)
+        got = list(ix.terms_from("text", start, page_size=7))
+        assert _next_job_id(ix.spark) - first == 0
+        assert got == [t for t in vocab if t >= start], start
+
+
 # ------------------------------------------------------------ opening
 
 
@@ -193,7 +285,7 @@ def test_declared_schemas_equal_inferred(tiered_index):
     from lucene_spark.index import tiers
 
     spark, d = tiered_index.spark, tiered_index.index_dir
-    base = ("docs", "postings", "term_dict", "term_dict_fc", "tombstones")
+    base = ("docs", "postings", "term_dict", "tombstones")
     tables = [(os.path.join(d, t), t) for t in base]
     tables.append((os.path.join(d, "segments"), "postings"))  # build phase A
     for sub in ("gens/gen=0", "delta"):
@@ -375,6 +467,24 @@ def test_deleted_docs_never_match(plain_and_deleted):
             continue  # the top score, and so every normalized one, can move
         kept = [r for r in plain[name][1] if r[0] not in gone]
         assert deleted[name][1][: len(kept)] == kept[: len(deleted[name][1])], name
+
+
+def test_one_tombstone_broadcast_per_refresh(plain_and_deleted):
+    """Queries on a tombstoned index reuse the index's tombstone
+    broadcast. PySpark keeps each broadcast's value in a file under the
+    context's temp dir until it is destroyed, so a broadcast per query
+    would leave a file per query behind; a refresh destroys the old one."""
+    ix = plain_and_deleted[0]
+    tmp = ix.spark.sparkContext._temp_dir
+    searcher = SparkSearcher(ix)
+    searcher.search("text:spark text:index", k=10).collect()
+    before = len(os.listdir(tmp))
+    for _ in range(20):
+        searcher.search("text:spark text:index", k=10).collect()
+    assert len(os.listdir(tmp)) == before
+    ix.refresh_tombstones()
+    searcher.search("text:spark text:index", k=10).collect()
+    assert len(os.listdir(tmp)) == before
 
 
 @pytest.mark.parametrize("which", ["plain", "deleted"])

@@ -128,7 +128,7 @@ def test_cogroup_conjunction_plan_shape(spark_index, searcher):
 def test_every_postings_column_is_read(searcher):
     """The postings schema holds no write-only column: every column is
     read by some query plan — exact or pruned — or by the term
-    dictionary aggregation (cf, builder.postings_term_dict). A column
+    dictionary aggregation (cf, builder.write_term_dict). A column
     no reader touches is index bytes paid on every build for nothing."""
     import re
 

@@ -30,8 +30,8 @@ def wide_vocab_index(spark, tmp_path_factory):
         field_policy={"text": "text"},
         analyzer=Analyzer("[a-zA-Z0-9]+", lowercase=True, name="alnum"),
         seg_size=400,
-        # many dictionary files: exercises the fc packer's ordering
-        # guarantee across file boundaries (size-ordered read packing)
+        # several term_dict files: terms_from merges their sorted
+        # streams across file boundaries
         merge_partitions=8,
     )
     return build_index(spark, df, d, cfg, order_cols=["doc_id"])
@@ -78,21 +78,14 @@ def test_fuzzy_scans_past_old_window(wide_vocab_index):
 def test_terms_from_skipto_edges(wide_vocab_index):
     """Mirrors the reference's terms-stream skipTo edge cases
     (IndexTest.php:374-480): before-first, between-terms, past-last,
-    unknown field — plus fc-path ≡ flat-path equivalence."""
+    unknown field."""
     ix = wide_vocab_index
     assert list(ix.terms_from("text", "zzzz")) == []  # past last
     assert next(iter(ix.terms_from("text", "t00000a"))) == "t00001"  # between
     assert next(iter(ix.terms_from("text", ""))) == "filler"  # before first
     assert list(ix.terms_from("nope", "")) == []  # unknown field
-    fc = ix._fc_blocks
-    assert fc is not None  # the build wrote front-coded blocks
-    try:
-        ix._fc_blocks = None
-        flat = list(ix.terms_from("text", "t01379", page_size=50))
-    finally:
-        ix._fc_blocks = fc
-    assert list(ix.terms_from("text", "t01379", page_size=50)) == flat
-    assert flat == [f"t{i:05d}" for i in range(1379, 1500)]
+    got = list(ix.terms_from("text", "t01379", page_size=50))
+    assert got == [f"t{i:05d}" for i in range(1379, 1500)]
 
 
 def test_range_limit_still_raises(wide_vocab_index):

@@ -73,7 +73,6 @@ class TestDistributedExpansion:
             raise AssertionError("driver dictionary pagination used")
 
         monkeypatch.setattr(SparkIndex, "terms_from", boom)
-        monkeypatch.setattr(SparkIndex, "_terms_from_fc", boom)
         q = FuzzyQuery(Term("spark", "text"), 0.5, prefix_length=0)
         out = q.rewrite(spark_index)
         terms = {t.text for t in out.query_terms()}
@@ -87,7 +86,6 @@ class TestDistributedExpansion:
             raise AssertionError("driver dictionary pagination used")
 
         monkeypatch.setattr(SparkIndex, "terms_from", boom)
-        monkeypatch.setattr(SparkIndex, "_terms_from_fc", boom)
         q = WildcardQuery(Term("sea*", "text"))
         out = q.rewrite(spark_index)
         assert {t.text for t in out.query_terms()} >= {"search"}
