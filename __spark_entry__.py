@@ -71,7 +71,7 @@ from lucene_spark.search.query import FuzzyQuery, Term
 
 # ---------------------------------------------------------------- config
 
-_VERSION = "r7"  # bump to invalidate cached gate indexes (and on every index-format change)
+_VERSION = "r8"  # bump to invalidate cached gate indexes (and on every index-format change)
 TOKEN_SQL = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 K1, B = 1.2, 0.75
 TOPK = 20

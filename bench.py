@@ -131,10 +131,8 @@ def main() -> None:
             runs.append(time.time() - t0)
         timings["q_wand_term"] = round(min(runs), 3)
 
-        # pruned hot conjunction: 'force' routes every multi-term shape
-        # to the co-grouped range kernel at any corpus size (the plan
-        # 'auto' picks past its thresholds) — measured vs q_not's exact
-        # plan
+        # pruned hot conjunction: the co-grouped range kernel, the plan
+        # 'auto' and 'force' both route every multi-term shape to
         runs = []
         for _ in range(reps):
             t0 = time.time()

@@ -44,9 +44,9 @@ owns the whole layout — sealed generations, the live delta, tombstones,
 meta rows, durability markers — and every table schema)::
 
     docs/          doc_id + stored cols + len_<f>/norm_<f> per text field
-    postings/      field, term, seg_id, block_id, doc_base, max_docid,
-                   n, imp_tfs, imp_dls, cf, docs_bin, tfs_bin, dls_bin,
-                   pos_bin   (sorted by field, term, doc_base)
+    postings/      field, term, doc_base, max_docid, n, imp_tfs, imp_dls,
+                   cf, docs_bin, tfs_bin, dls_bin, pos_bin
+                   (sorted by field, term, doc_base)
     term_dict/     field, term, df, cf   (sorted by field, term; the term
                    column prefix-coded — see ``write_term_dict``)
     segments/      seg_chunk=<c>/ phase-A posting blocks, per resume chunk
@@ -59,6 +59,7 @@ meta rows, durability markers — and every table schema)::
 
 from __future__ import annotations
 
+import hashlib
 import heapq
 import json
 import math
@@ -439,8 +440,7 @@ def _invert_segment(cfg: IndexConfig):
     policy = cfg.field_policy
     store_pos = cfg.store_positions
 
-    def invert(key, pdf):
-        seg_id = int(key[0])
+    def invert(_key, pdf):
         pdf = pdf.sort_values("doc_id")
         doc_ids_all = pdf["doc_id"].to_numpy(np.int64)
         out_rows = []
@@ -535,7 +535,6 @@ def _invert_segment(cfg: IndexConfig):
                 | (np.diff(np.append(-1, block_of)) != 0)
                 | (np.diff(np.append(range_of[0] - 1, range_of)) != 0)
             )
-            blk_ids = np.cumsum(blk_change) - 1
             blk_starts = np.flatnonzero(blk_change)
             blk_ends = np.append(blk_starts[1:], len(g_terms))
             docs_bins, tfs_bins, dls_bins, pos_bins = encode_blocks(
@@ -562,8 +561,6 @@ def _invert_segment(cfg: IndexConfig):
                         {
                             "field": fname,
                             "term": g_terms[bs].astype(object),
-                            "seg_id": seg_id,
-                            "block_id": blk_ids[bs],
                             "doc_base": s_doc,
                             "max_docid": s_doc,
                             "n": 1,
@@ -597,8 +594,6 @@ def _invert_segment(cfg: IndexConfig):
                     (
                         fname,
                         str(g_terms[s]),
-                        seg_id,
-                        int(blk_ids[s]),
                         int(g_docs[s]),
                         int(g_docs[e - 1]),
                         int(e - s),
@@ -1005,6 +1000,7 @@ class SparkIndex:
             self.stats = json.load(fh)
         self._attach_tiers()
         self._tombstones_bc = None
+        self._ids_bcs: dict = {}
         self.refresh_tombstones()
         a = dict(self.stats["analyzer"])  # the Analyzer fields, as built
         a["stop_words"] = frozenset(a["stop_words"])
@@ -1062,6 +1058,9 @@ class SparkIndex:
         if self._tombstones_bc is not None:
             self._tombstones_bc.destroy()
         self._tombstones_bc = None
+        for bc in self._ids_bcs.values():
+            bc.destroy()
+        self._ids_bcs = {}
 
     def tombstones_broadcast(self):
         """:attr:`tombstones` as a Spark broadcast, made on first use
@@ -1069,6 +1068,18 @@ class SparkIndex:
         if self._tombstones_bc is None and self.tombstones is not None:
             self._tombstones_bc = self.spark.sparkContext.broadcast(self.tombstones)
         return self._tombstones_bc
+
+    def ids_broadcast(self, ids: np.ndarray):
+        """Sorted doc ``ids`` (a conjunction's candidate set) as a Spark
+        broadcast, made once per distinct set: PySpark keeps each
+        broadcast in a file of the driver's temp dir until it is
+        destroyed, so a repeated query reuses its set's instead of
+        leaving a file per run. :meth:`refresh_tombstones` destroys
+        them with the tombstones' own."""
+        key = hashlib.blake2b(ids.tobytes(), digest_size=16).digest()
+        if key not in self._ids_bcs:
+            self._ids_bcs[key] = self.spark.sparkContext.broadcast(ids)
+        return self._ids_bcs[key]
 
     # ---------------------------------------------- IndexReader protocol
     @property

@@ -54,7 +54,7 @@ def _struct(**cols) -> StructType:
 
 _S, _L, _I, _B = StringType(), LongType(), IntegerType(), BinaryType()
 POSTINGS_SCHEMA = _struct(
-    field=_S, term=_S, seg_id=_L, block_id=_L, doc_base=_L, max_docid=_L, n=_I,
+    field=_S, term=_S, doc_base=_L, max_docid=_L, n=_I,
     # Pareto-optimal (tf, dl) impact pairs of the block's docs — no doc
     # has higher tf AND lower dl than a stored pair. The block score
     # bound is max over pairs of partial(tf, dl), far tighter than

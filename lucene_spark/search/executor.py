@@ -23,13 +23,15 @@ into a declarative DataFrame plan that Catalyst executes:
 - top-k: ORDER BY score DESC, doc_id ASC LIMIT k (Spark's TakeOrdered)
 
 Two pruned BM25 top-k kernels sit next to the exact plan, both exact by
-construction: single-term block-max WAND (:func:`topk_wand`) scans only
-block METADATA first, derives a provable score threshold from the k best
-block upper bounds, and decodes only surviving blocks; every multi-term
-shape (OR, AND, AND-NOT) and every phrase runs a co-grouped range kernel
-(:func:`topk_and_cogrouped`, :func:`topk_phrase_cogrouped`) that shuffles
-the compressed block binaries once by doc range and emits each range's
-top-k.
+construction, and which one a query takes depends on its shape:
+single-term block-max WAND (:func:`topk_wand`) ranks block upper bounds
+on the driver and decodes only blocks that can reach the top-k; every
+multi-term shape (OR, AND, AND-NOT) and every phrase runs a co-grouped
+range kernel (:func:`topk_and_cogrouped`, :func:`topk_phrase_cogrouped`)
+that shuffles the compressed block binaries once by doc range and emits
+each range's top-k. A selective required term narrows a range kernel's
+scan the way it narrows the exact plan's (:func:`_candidate_docs`), and
+both kernels drop tombstoned docs themselves.
 """
 
 from __future__ import annotations
@@ -147,10 +149,10 @@ def decode_postings(
     blocks = index.postings.where(cond).select(*cols)
     schema = _DECODE_POS_SCHEMA if need_positions else _DECODE_SCHEMA
     # broadcasts, not closure captures: the id sets can be MBs and must
-    # ship to each executor once, not per task. The tombstones' is the
-    # index's, made once per refresh; a candidate set is this query's.
-    sc = blocks.sparkSession.sparkContext
-    cand_bc = None if cand is None else sc.broadcast(cand)
+    # ship to each executor once, not per task. Both are the index's:
+    # the tombstones' made once per refresh, a candidate set's once per
+    # distinct set (a repeated query reuses it)
+    cand_bc = None if cand is None else index.ids_broadcast(cand)
 
     def decode(it):
         for pdf in it:
@@ -403,9 +405,9 @@ class SparkSearcher:
         instead of score.
 
         ``pruning``: pruned top-k policy for eligible BM25 queries —
-        'off' (exact plan), 'auto' (the routed plan — single-term WAND
-        or a cogroup kernel — past the df and corpus-size thresholds) or
-        'force' (the same routed plan, thresholds ignored); see
+        'off' (exact plan), 'auto' (the routed plan: a range kernel for
+        a phrase or a multi-term shape, WAND for a single term past its
+        df gate) or 'force' (the same, WAND's df gate ignored); see
         :meth:`execute`.
 
         ``default_operator``: 'OR' | 'AND' — bare query terms optional
@@ -454,25 +456,22 @@ class SparkSearcher:
         """Execute an optimized primitive tree.
 
         ``pruning`` selects a pruned top-k plan for eligible queries
-        (BM25, k>0, no tombstones; a phrase, a single term, a pure-OR
-        MultiTerm, or a MultiTerm with at least one required term). The
-        routed plan is block-max WAND for a single term and the
-        co-grouped range kernel for a phrase and for every multi-term
-        shape:
+        (BM25, k>0; a phrase, a single term, a pure-OR MultiTerm, or a
+        MultiTerm with at least one required term). The routed plan
+        depends on the shape only: the co-grouped range kernel for a
+        phrase and for every multi-term shape, block-max WAND for a
+        single term. Each runs 2 Spark jobs (WAND 1), with or without
+        tombstones, and the results equal the exact plan's:
 
         - ``'off'``   — always the exact full-scan plan;
-        - ``'auto'``  (default) — the routed plan only where measured
-          to win: exact phrases past AUTO_PRUNING_MIN_DF (sloppy ones
-          also need PHRASE_COGROUP_MIN_DOCS); terms and MultiTerms past
-          AUTO_PRUNING_MIN_DF and n_docs >= AUTO_PRUNING_MIN_DOCS,
-          because below that the exact decode is already faster than
-          the extra jobs (measured at 868k turns: exact term 0.57 s vs
-          WAND 1.67 s, while at 40M+ WAND/cogroup win 2-25x —
-          BASELINE.md §7.5/§8.1); results are identical either way
-          (the strategies are exact);
-        - ``'force'`` — the same routed plan, ignoring the df and
-          n_docs thresholds (bench/validation). It never selects a
-          plan 'auto' cannot reach.
+        - ``'auto'``  (default) — the routed plan, except that a single
+          term below AUTO_PRUNING_MIN_DF keeps the exact plan. Without
+          the presence join the range kernels run 2 jobs to the exact
+          plan's 2 and measured faster on every multi-term and phrase
+          row tried at 4k docs (BASELINE.md §10.8);
+        - ``'force'`` — the same routed plan, WAND's df gate ignored
+          (bench/validation). It never selects a plan 'auto' cannot
+          reach.
 
         The value must be one of these strings — a boolean raises, so a
         caller can never pass True and silently get 'off'.
@@ -509,7 +508,6 @@ class SparkSearcher:
             and k
             and not result_set_limit
             and score_mode == "bm25"
-            and self.index.tombstones is None  # bounds ignore deletes
         ):
             out = self._pruned_topk(q, k, force=pruning == "force")
             if out is not None:
@@ -564,36 +562,18 @@ class SparkSearcher:
         """The routed pruned top-k plan for ``q``, or None for the exact
         plan: phrases → :func:`topk_phrase_cogrouped`; a single term →
         :func:`topk_wand`; every other eligible MultiTerm (pure OR, AND,
-        AND-NOT) → :func:`topk_and_cogrouped`. ``force`` skips the df and
-        corpus-size thresholds, never the shape check."""
+        AND-NOT) → :func:`topk_and_cogrouped`. ``force`` skips WAND's df
+        gate, never the shape check."""
         ix = self.index
-        # per-SHARD size under MultiSearcher (routing_n_docs): the
-        # kernels' parallelism and job overheads are local properties
-        n_docs = getattr(ix, "routing_n_docs", ix.n_docs)
         if isinstance(q, PhraseQuery):
-            uniq, _slots = _uniq_slots(q.terms)
-            ix.prefetch_terms(uniq)
-            total_df = sum(ix.doc_freq(t) for t in uniq)
-            # sloppy phrases need enough docs for the cogroup kernel to
-            # win (PHRASE_COGROUP_MIN_DOCS); slop=0 has no size gate
-            if force or (
-                total_df >= AUTO_PRUNING_MIN_DF
-                and (q.slop == 0 or n_docs >= PHRASE_COGROUP_MIN_DOCS)
-            ):
-                return topk_phrase_cogrouped(ix, q, k=k)[0]
-            return None
+            return topk_phrase_cogrouped(ix, q, k=k)[0]
         shape = _pruned_shape(ix, q)
         if shape is None:
             return None
         terms, weights, required, pro = shape
-        total_df = sum(ix.doc_freq(t) for t in terms)
-        if not force and (
-            total_df < AUTO_PRUNING_MIN_DF or n_docs < AUTO_PRUNING_MIN_DOCS
-        ):
-            return None
         if len(terms) == 1 and not pro:
-            # single term: bounds separate here (0.36% of blocks decoded
-            # at scale, BASELINE.md §7.5)
+            if not force and ix.doc_freq(terms[0]) < AUTO_PRUNING_MIN_DF:
+                return None
             return topk_wand(ix, terms[0], weights[0], k=k)[0]
         # every multi-term shape: one binary-level shuffle whose cost
         # does not depend on the impact distribution (BASELINE.md §10.2)
@@ -1061,27 +1041,10 @@ def _collect_terms(q: Query) -> list[Term]:
 
 # ------------------------------------------------- block-max top-k path
 
-PHRASE_COGROUP_MIN_DOCS = 200_000  # 'auto' routes SLOPPY phrases to
-# the cogroup kernel only past this corpus size: the smallest size
-# measured where routed beats exact on every sloppy row (wand_bench,
-# BASELINE §10.6: 1.5-2.6x at 200k docs; at 50k exact wins two of three
-# rows; sizes in between are unmeasured)
-
-AUTO_PRUNING_MIN_DF = 65536  # 'auto' pruning: below this, block skipping
-# can't amortize the extra metadata jobs
-AUTO_PRUNING_MIN_DOCS = 4_000_000  # 'auto' WAND / multi-term cogroup
-# corpus-size gate: at 868k turns every pruned boolean/term strategy
-# measured SLOWER than the exact plan (extra bound-evaluation jobs
-# dominate a sub-second decode: term 1.67 s vs 0.57 s exact, OR 6.9 s
-# vs 0.94 s), while at 40M+ they win 2-25x (BASELINE.md §7.5/§8.1);
-# the geometric midpoint of those calibration points, rounded down to
-# stay conservative. The cogroup PHRASE kernel is NOT behind this gate
-# — it already wins at 200k docs (df-gated only; sloppy phrases keep
-# their own PHRASE_COGROUP_MIN_DOCS range-parallelism gate).
-WAND_BUCKET = 2048  # docs per presence bucket (~16 blocks) for the
-# cogroup kernels' metadata-only presence filter: fine enough that a
-# regionally absent required term drops its neighbours' blocks, coarse
-# enough that the bucket table stays ~n_blocks/16 rows of metadata
+AUTO_PRUNING_MIN_DF = 65536  # 'auto' routes a single term to WAND from
+# this df on: forced WAND matched the exact plan on `w1` at 200k Zipf
+# docs and beat it 3x on `w1` and `w50` at 4M (BASELINE.md §10.6); below
+# this df no size was measured where WAND wins
 
 
 def _pruned_shape(
@@ -1130,14 +1093,6 @@ def _pruned_shape(
     ]
     required = [r for _t, _m, r in merged.values()]
     return terms, weights, required, prohibited
-
-
-# block identity MUST include doc_base: across streaming tiers a base
-# segment and a delta segment can share (seg_id, block_id), and a
-# duplicated key joins a block twice. doc_base is globally unique per
-# (field, term) block — doc ids are disjoint across tiers — so
-# topk_wand reads its seed blocks back by doc_base alone.
-_WAND_META_COLS = ["field", "term", "seg_id", "block_id", "doc_base"]
 
 
 def _terms_cond(terms: list[Term]) -> Column:
@@ -1304,21 +1259,21 @@ def topk_and_cogrouped(
     not exploded posting rows — at 40M turns that is ~50 MB moved for
     a 30M-posting query instead of a 30M-row Arrow+exchange — and the
     final global TakeOrdered sees ≤ k rows per range. Exactness needs
-    no bounds: every range is processed (presence filtering at bucket
-    granularity drops ranges where a required term is wholly absent —
-    metadata-only and exact).
+    no bounds: every range that can hold a hit is processed. When a
+    required term is selective, only the ranges of its docs can
+    (:func:`_range_blocks`), and tombstoned docs are dropped in the
+    kernel, as :func:`decode_postings` drops them.
 
     Reference semantics anchor: MultiTerm required-conjunction scoring
     (src/Search/Query/MultiTerm.php:333-401); this is its
     doc-partitioned equivalent.
     """
     pro_terms = list(pro_terms or [])
-    spark = index.spark
     k = max(int(k), 1)
     req_ids = [i for i, r in enumerate(required) if r]
     n_req = len(req_ids)
-    # n_req == 0 is the pure disjunction: no presence filter (every
-    # range can host a hit), hit = any scorable match not prohibited
+    # n_req == 0 is the pure disjunction: every range can host a hit,
+    # hit = any scorable match not prohibited
     k1, b = float(BM25_K1), float(BM25_B)
     all_terms = list(terms) + pro_terms
     # (field, term) → (qid, weight, avgdl); prohibited map to qid -1
@@ -1335,20 +1290,11 @@ def topk_and_cogrouped(
             raise ValueError(f"term {t} is both scorable and prohibited")
         qmap[(t.field, t.text)] = (-1, 0.0, 1.0)
     req_set = set(req_ids)
-
-    cond = _terms_cond(all_terms)
-    # bucket-granular presence (shared with the phrase kernel): ranges
-    # where some required term has no overlapping block cannot host
-    # hits — their blocks drop before the shuffle (metadata-only;
-    # prunes when a required term is regionally absent, e.g. a delta
-    # tier or a clustered keyword). n_req == 0 skips the filter.
-    src = _presence_filtered_src(
-        index, all_terms, [terms[i] for i in req_ids]
+    blocks = _range_blocks(
+        index, all_terms, [terms[i] for i in req_ids],
+        "field", "term", "doc_base", "n", "docs_bin", "tfs_bin", "dls_bin",
     )
-    blocks = src.select(
-        "field", "term", "doc_base", "n",
-        "docs_bin", "tfs_bin", "dls_bin",
-    ).withColumn("_rng", (F.col("doc_base") / BLOCK_DOC_RANGE).cast("long"))
+    tomb_bc = index.tombstones_broadcast()
 
     def kern(pdf):
         if len(pdf) == 0:
@@ -1386,6 +1332,8 @@ def topk_and_cogrouped(
         np.add.at(nreq_of, inv[req_rows], 1)
         banned = np.zeros(len(uniq), bool)
         banned[inv[row_q < 0]] = True
+        if tomb_bc is not None:
+            banned |= _member(tomb_bc.value, uniq)
         hit = (nreq_of == n_req) & ~banned
         h_docs, h_sc = uniq[hit], score[hit]
         if len(h_docs) > k:
@@ -1399,50 +1347,33 @@ def topk_and_cogrouped(
     if collect_stats:
         stats = {
             "path": "cogroup",
-            "blocks_total": index.postings.where(cond).count(),
+            "blocks_total": index.postings.where(_terms_cond(all_terms)).count(),
             "blocks_decoded": blocks.count(),
         }
     return out, stats
 
 
-def _presence_filtered_src(index: SparkIndex, all_terms, req_terms):
-    """Postings of ``all_terms`` minus blocks confined to WAND_BUCKET
-    buckets where some term of ``req_terms`` has no block — the
-    presence step shared by the cogroup kernels (conjunction and
-    phrase), pruning on each block's [doc_base, max_docid] span.
-    Metadata-only and exact: a doc containing every required term has,
-    for each one, a posting block spanning the doc's own bucket, so all
-    of a hit's blocks always survive. One span explode serves both
-    sides (required-term presence and the candidate blocks); the
-    semi-join runs on _WAND_META_COLS keys only and binary columns are
-    joined back by key — never deduped or exploded (binary-column
-    distinct corrupts; see PLANS.md)."""
-    src = index.postings.where(_terms_cond(all_terms))
-    if not req_terms:
-        # pure disjunction: every range can host a hit
-        return src
-    spans = src.select(
-        *_WAND_META_COLS,
-        F.explode(
-            F.sequence(
-                (F.col("doc_base") / WAND_BUCKET).cast("long"),
-                (F.col("max_docid") / WAND_BUCKET).cast("long"),
-            )
-        ).alias("_bkt"),
-    )
-    present = (
-        spans.where(_terms_cond(req_terms))
-        .groupBy("_bkt")
-        .agg(F.countDistinct("field", "term").alias("_np"))
-        .where(F.col("_np") == len(req_terms))
-        .select("_bkt")
-    )
-    keep_keys = (
-        spans.join(present, "_bkt", "leftsemi")
-        .select(*_WAND_META_COLS)
-        .distinct()
-    )
-    return src.join(keep_keys, _WAND_META_COLS)
+def _range_blocks(index: SparkIndex, terms, req_terms, *cols) -> DataFrame:
+    """``cols`` of the posting blocks of ``terms`` plus ``_rng``, each
+    block's BLOCK_DOC_RANGE range: the input of a range kernel. Every
+    hit holds all of ``req_terms``, so when the rarest of them is
+    selective (:func:`_candidate_docs`, the exact plan's narrowing) only
+    the ranges of its docs can hold one: the scan keeps the blocks
+    inside the candidates' [min, max] (pushed down on doc_base and
+    max_docid) and the filter the ranges that hold a candidate, so no
+    other range reaches the shuffle."""
+    rng = (F.col("doc_base") / BLOCK_DOC_RANGE).cast("long")
+    cond = _terms_cond(terms)
+    cand = _candidate_docs(index, req_terms) if req_terms else None
+    if cand is not None:
+        cond &= (
+            (F.col("doc_base") <= int(cand[-1]))
+            & (F.col("max_docid") >= int(cand[0]))
+            & rng.isin(np.unique(cand // BLOCK_DOC_RANGE).tolist())
+            if len(cand)
+            else F.lit(False)
+        )
+    return index.postings.where(cond).select(*cols, rng.alias("_rng"))
 
 
 def topk_phrase_cogrouped(
@@ -1468,14 +1399,12 @@ def topk_phrase_cogrouped(
     the range's top-k. The shuffle carries varbyte bytes; the global
     TakeOrdered sees ≤ k rows per range.
 
-    Presence filtering (metadata-only, exact): a phrase hit contains
-    EVERY unique term, so buckets where some term has no overlapping
-    block cannot host hits and their blocks drop before the
-    shuffle. Reference semantics anchor: Phrase.php:378-491 (exact and
+    A phrase hit contains EVERY unique term, so a selective one narrows
+    the shuffle to the ranges of its docs (:func:`_range_blocks`), and
+    tombstoned docs are dropped in the kernel. Reference semantics anchor: Phrase.php:378-491 (exact and
     sloppy freq), scored as the MultiTerm bm25 path scores phrases
     (idf of the min-df term).
     """
-    spark = index.spark
     k = max(int(k), 1)
     sim = get_default()
     uniq, slot_qid = _uniq_slots(q.terms)
@@ -1490,9 +1419,6 @@ def topk_phrase_cogrouped(
     k1, b = float(BM25_K1), float(BM25_B)
     qmap = {(t.field, t.text): j for j, t in enumerate(uniq)}
 
-    cond = _terms_cond(uniq)
-    # presence: every unique phrase term is required
-    src = _presence_filtered_src(index, uniq, uniq)
     # the kernel consumes doc lengths from term 0's postings only —
     # the other terms' dls streams would be shuffled, decoded, and
     # discarded ((n-1)/n of a whole varbyte stream for an n-term hot
@@ -1502,10 +1428,11 @@ def topk_phrase_cogrouped(
         (F.col("field") == uniq[0].field) & (F.col("term") == uniq[0].text),
         F.col("dls_bin"),
     ).otherwise(F.lit(b""))
-    blocks = src.select(
-        "field", "term", "doc_base", "n",
+    blocks = _range_blocks(
+        index, uniq, uniq, "field", "term", "doc_base", "n",
         "docs_bin", "tfs_bin", dls_proj.alias("dls_bin"), "pos_bin",
-    ).withColumn("_rng", (F.col("doc_base") / BLOCK_DOC_RANGE).cast("long"))
+    )
+    tomb_bc = index.tombstones_broadcast()
 
     def kern(pdf):
         if len(pdf) == 0:
@@ -1568,6 +1495,8 @@ def topk_phrase_cogrouped(
         sel0 = row_q == 0
         dl_row[inv[sel0]] = dls0
         hit = freq > 0
+        if tomb_bc is not None:
+            hit &= ~_member(tomb_bc.value, uniq_docs)
         h_docs, fr, dl_h = uniq_docs[hit], freq[hit], dl_row[hit]
         # the exact plan's association order, so scores match it bitwise
         sc = (boost * idf) * (
@@ -1586,7 +1515,7 @@ def topk_phrase_cogrouped(
     if collect_stats:
         stats = {
             "path": "phrase_cogroup",
-            "blocks_total": index.postings.where(cond).count(),
+            "blocks_total": index.postings.where(_terms_cond(uniq)).count(),
             "blocks_decoded": blocks.count(),
         }
     return out, stats

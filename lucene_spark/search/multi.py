@@ -66,16 +66,6 @@ class _GlobalStatsView:
     def n_docs(self) -> int:
         return self._owner.total_docs
 
-    @property
-    def routing_n_docs(self) -> int:
-        """LOCAL shard size, for strategy-routing decisions: pruned
-        paths pay per-shard decode volume, so a tiny shard must not
-        route into a strategy calibrated to lose below 4M docs just
-        because the MERGED corpus is large (the executor consults this
-        before AUTO_PRUNING_MIN_DOCS; scoring math keeps the global
-        n_docs above)."""
-        return self._sub.n_docs
-
     def doc_freq(self, term) -> int:
         return self._owner.global_doc_freq(term)
 

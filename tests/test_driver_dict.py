@@ -391,6 +391,7 @@ SHAPES = {  # name: (query, score mode); the scoped shapes narrow
     "rare_sloppy3": ('text:"timeout spark spark"~2', "bm25"),
     "classic_term": ("text:spark", "classic"),
     "classic_and": ("+text:spark +text:index", "classic"),
+    "wand": ("text:spark", "bm25", "force"),
 }
 NARROWED = ("scoped", "scoped_phrase", "rare_sloppy3")
 
@@ -398,11 +399,12 @@ NARROWED = ("scoped", "scoped_phrase", "rare_sloppy3")
 def _query_jobs(ix, name: str, k: int = 10):
     """(Spark jobs, ranked (doc_id, 9-decimal score) rows) of one search
     + collect, the df cache warm."""
-    qstr, mode = SHAPES[name]
+    qstr, mode, pruning = (*SHAPES[name], "auto")[:3]
     searcher = SparkSearcher(ix)
-    searcher.search(qstr, k=k, score_mode=mode)  # warm the df cache
+    kw = dict(k=k, score_mode=mode, pruning=pruning)
+    searcher.search(qstr, **kw)  # warm the df cache
     first = _next_job_id(ix.spark)
-    rows = searcher.search(qstr, k=k, score_mode=mode).collect()
+    rows = searcher.search(qstr, **kw).collect()
     jobs = _next_job_id(ix.spark) - first
     return jobs, [(r["doc_id"], round(r["score"], 9)) for r in rows]
 
@@ -428,14 +430,18 @@ def plain_and_deleted(spark, transcripts_df, tmp_path_factory):
 
 
 def test_query_runs_only_its_own_jobs(plain_and_deleted, tiered_index, monkeypatch):
-    """A query schedules its scan+decode, one groupBy(doc_id) exchange
-    and the final TakeOrdered: narrowing reads the rare term's ids on
-    the driver, tombstones drop inside the decode, classic normalizes
-    the k rows after the TakeOrdered (only its norms join adds a job)."""
+    """A query schedules its scan+decode, one exchange and the final
+    TakeOrdered. The exchange is the routed range kernel's (AND, OR,
+    NOT, phrases, the scoped AND) or the exact plan's groupBy(doc_id)
+    (a Boolean with a phrase child); WAND has none. Narrowing reads the
+    rare term's ids on the driver, tombstones drop inside the decode or
+    kernel, classic normalizes the k rows after the TakeOrdered (only
+    its norms join adds a job)."""
     import lucene_spark.search.executor as ex
 
     ix, plain, deleted = plain_and_deleted
     assert plain["term"][0] == 1
+    assert plain["wand"][0] == 1
     for name in ("and", "or", "not", "phrase", "sloppy", "scoped", "rare_sloppy3"):
         assert plain[name][0] == 2, name
     assert plain["classic_term"][0] <= plain["term"][0] + 1
@@ -482,9 +488,60 @@ def test_one_tombstone_broadcast_per_refresh(plain_and_deleted):
     for _ in range(20):
         searcher.search("text:spark text:index", k=10).collect()
     assert len(os.listdir(tmp)) == before
-    ix.refresh_tombstones()
+    ix.refresh_tombstones()  # also destroys earlier tests' candidate sets
     searcher.search("text:spark text:index", k=10).collect()
+    assert len(os.listdir(tmp)) <= before
+
+
+def test_one_candidate_broadcast_per_set(plain_and_deleted, monkeypatch):
+    """A narrowed exact-plan query reuses the index's broadcast of its
+    candidate set, so repeating it leaves the driver's temp dir as the
+    first run left it (PySpark keeps a file there per live broadcast)."""
+    import lucene_spark.search.executor as ex
+
+    monkeypatch.setattr(ex, "RANGE_PRUNE_QUANTUM", 1)
+    ix = plain_and_deleted[0]
+    tmp = ix.spark.sparkContext._temp_dir
+    searcher = SparkSearcher(ix)
+    qstr = "+conv_id:conv00000003 +text:spark"
+    top = searcher.search(qstr, k=10, score_mode="classic")
+    assert "max_docid" in top._jdf.queryExecution().executedPlan().toString()
+    top.collect()
+    before = len(os.listdir(tmp))
+    for _ in range(30):
+        searcher.search(qstr, k=10, score_mode="classic").collect()
     assert len(os.listdir(tmp)) == before
+
+
+PARITY = {
+    "term": "text:spark",
+    "or": "text:spark text:index",
+    "and": "+text:spark +text:index",
+    "and_not": "+text:spark +text:index -text:merge",
+    "scoped": "+conv_id:conv00000025 +text:spark",
+    "phrase": 'text:"spark index"',
+    "sloppy2": 'text:"spark index"~2',
+    "sloppy3": 'text:"timeout spark spark"~2',
+}
+
+
+@pytest.mark.parametrize("qstr", list(PARITY.values()), ids=list(PARITY))
+def test_routed_equals_exact_on_tiers(tiered_index, qstr, monkeypatch):
+    """On base + generation + live delta + tombstones, the routed plan
+    (WAND for the term, a range kernel for the rest, narrowing forced)
+    returns the exact plan's ids and scores."""
+    import lucene_spark.search.executor as ex
+
+    monkeypatch.setattr(ex, "RANGE_PRUNE_QUANTUM", 1)
+    searcher = SparkSearcher(tiered_index)
+    routed, exact = (
+        [(r["doc_id"], r["score"]) for r in
+         searcher.search(qstr, k=25, pruning=p).collect()]
+        for p in ("force", "off")
+    )
+    assert exact
+    assert [d for d, _s in routed] == [d for d, _s in exact]
+    assert [s for _d, s in routed] == pytest.approx([s for _d, s in exact], abs=1e-9)
 
 
 @pytest.mark.parametrize("which", ["plain", "deleted"])

@@ -46,12 +46,12 @@ def test_phrase_single_arrow_eval(searcher):
     # filter+project would evaluate the Python kernel twice per row
     # (the round-2 double-ArrowEvalPython regression)
     for q in ('text:"spark index"', 'text:"spark index"~2'):
-        p = _plan(searcher.search(q, k=10))
+        p = _plan(searcher.search(q, k=10, pruning="off"))
         assert p.count("ArrowEvalPython") == 1, q
 
 
 def test_multi_term_single_scan_single_exchange(searcher):
-    p = _plan(searcher.search("+text:spark +text:index", k=10))
+    p = _plan(searcher.search("+text:spark +text:index", k=10, pruning="off"))
     # both terms arrive via ONE scan (OR-pushed filter)…
     assert p.count("FileScan parquet") == 1
     # …and one hash exchange on doc_id for the aggregation
@@ -63,7 +63,7 @@ def test_prohibited_terms_merge_into_one_scan(searcher):
     second postings scan or any join — it rides in the scorable leaf
     decode with value 0 and is dropped by the max(_pro) flag filter,
     so the NOT plan is shape-identical to AND."""
-    p = _plan(searcher.search("+text:spark -text:merge", k=10))
+    p = _plan(searcher.search("+text:spark -text:merge", k=10, pruning="off"))
     assert "LeftAnti" not in p and "Join" not in p
     assert p.count("FileScan") == 1
     assert p.count("MapInPandas") == 1
@@ -100,24 +100,35 @@ def test_dedup_lsh_never_cross_joins(spark, spark_index):
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 
 
-def test_cogroup_conjunction_plan_shape(spark_index, searcher):
+def test_cogroup_conjunction_plan_shape(spark_index, searcher, monkeypatch):
     """The co-grouped range intersection must shuffle the block
     BINARIES once (hashpartitioning on _rng into one
     FlatMapGroupsInPandas kernel) and never explode postings into a
     row-level exchange — the property that makes hot-hot conjunctions
     viable at 100 TB (shuffle bytes ≈ compressed posting lists). Every
-    multi-term shape routed with pruning='force' (pure OR, AND-NOT)
-    must get that same plan."""
+    multi-term shape and every phrase 'auto' routes (pure OR, AND,
+    AND-NOT, narrowed AND, exact and sloppy phrases) must get that same
+    plan, and none of them a join."""
+    import lucene_spark.search.executor as ex
     from lucene_spark.search.executor import topk_and_cogrouped
     from lucene_spark.search.similarity import bm25_idf
 
+    monkeypatch.setattr(ex, "RANGE_PRUNE_QUANTUM", 1)  # narrow the scoped AND
     terms = [Term("spark", "text"), Term("index", "text")]
     w = [bm25_idf(spark_index.doc_freq(t), spark_index.n_docs) for t in terms]
     df, _ = topk_and_cogrouped(spark_index, terms, w, [True, True], k=10)
     plans = {"direct": _plan(df)}
-    for q in ("text:spark text:index", "+text:spark +text:index -text:merge"):
-        plans[q] = _plan(searcher.search(q, k=10, pruning="force"))
+    for q in (
+        "text:spark text:index",
+        "+text:spark +text:index",
+        "+text:spark +text:index -text:merge",
+        "+conv_id:conv00000003 +text:spark",
+        'text:"spark index"',
+        'text:"spark index"~2',
+    ):
+        plans[q] = _plan(searcher.search(q, k=10))
     for q, p in plans.items():
+        assert "Join" not in p, q
         assert p.count("FlatMapGroupsInPandas") == 1, q
         assert p.count("Exchange hashpartitioning(_rng") == 1, q
         # no per-posting exchange: doc_id exists only AFTER the kernel,
@@ -125,21 +136,26 @@ def test_cogroup_conjunction_plan_shape(spark_index, searcher):
         assert "Exchange hashpartitioning(doc_id" not in p, q
 
 
-def test_every_postings_column_is_read(searcher):
+def test_every_postings_column_is_read(searcher, monkeypatch):
     """The postings schema holds no write-only column: every column is
     read by some query plan — exact or pruned — or by the term
     dictionary aggregation (cf, builder.write_term_dict). A column
-    no reader touches is index bytes paid on every build for nothing."""
+    no reader touches is index bytes paid on every build for nothing.
+    Narrowing is forced (quantum 1) so the narrowed plans' reader of
+    max_docid is seen on this small corpus."""
     import re
 
+    import lucene_spark.search.executor as ex
     from lucene_spark.index.builder import POSTINGS_SCHEMA
 
+    monkeypatch.setattr(ex, "RANGE_PRUNE_QUANTUM", 1)
     queries = (
         "text:spark",
         "+text:spark +text:index",
         "text:spark text:index",
         "+text:spark -text:merge",
         'text:"spark index"',
+        "+conv_id:conv00000003 +text:spark",
         '+conv_id:conv00000003 +text:"spark index"',
     )
     read = {"cf"}

@@ -165,9 +165,8 @@ def test_wand_and_on_tiered_index(spark, tmp_path_factory):
     for q in ["+text:alpha +text:beta", "+text:alpha +text:beta -text:gamma"]:
         _assert_and_parity(s, q, 30)
     assert any(doc >= 40 for doc, _ in _ranked(s, "+text:alpha +text:beta", "off", k=30))
-    # cogroup kernel across tiers: ranges key on doc_base, which is
-    # globally unique across tiers, so shared (seg_id, block_id) pairs
-    # cannot collide
+    # cogroup kernel across tiers: a range holds every tier's blocks of
+    # its docs (doc ids are disjoint across tiers)
     from lucene_spark.search.executor import topk_and_cogrouped
 
     terms, weights, req, pro = _and_query_parts(

@@ -677,30 +677,6 @@ class TestContamination:
                                 min_shared=0)
 
 
-class TestRoutingNDocsGate:
-    def test_global_stats_view_routes_on_local_size(self, spark, tmp_path):
-        """Under MultiSearcher(global_stats=True) the AUTO_PRUNING_MIN_DOCS
-        gate must see the LOCAL shard size, not the merged corpus — a
-        tiny shard in a huge federation must keep its exact plan
-        (review fix: _GlobalStatsView.routing_n_docs)."""
-        from lucene_spark.index import IndexConfig, build_index
-        from lucene_spark.search.multi import MultiSearcher, _GlobalStatsView
-
-        df = spark.createDataFrame(
-            [(i, f"conv{i:08d}", 0, "user", "alpha beta gamma", None)
-             for i in range(8)],
-            "doc_id long, conv_id string, turn_idx int, role string, "
-            "text string, tool string",
-        )
-        d = str(tmp_path / "shard")
-        ix = build_index(spark, df, d, IndexConfig(seg_size=4))
-        ms = MultiSearcher([ix])
-        ms.total_docs = 10_000_000  # pretend the federation is huge
-        view = _GlobalStatsView(ix, ms)
-        assert view.n_docs == 10_000_000          # scoring stats: global
-        assert view.routing_n_docs == ix.n_docs   # routing: local shard
-
-
 class TestQuantizeEmbeddings:
     def test_dequant_error_and_edges(self, spark):
         import math

@@ -109,16 +109,6 @@ def _scoped_phrase_df(e, spark, sf):
         ex.RANGE_PRUNE_QUANTUM = prev
 
 
-def _phrase_cogroup_df(e, spark, sf):
-    from lucene_spark.search.executor import topk_phrase_cogrouped
-    from lucene_spark.search.parser import parse_query
-
-    ix = e._index_for(spark, sf)
-    q = parse_query('"fast value"').rewrite(ix).optimize(ix)
-    df, _ = topk_phrase_cogrouped(ix, q, k=10)
-    return df
-
-
 def _fuzzy_expansion_df(e, spark, sf):
     """The distributed fuzzy-expansion dictionary scan (round 4): the
     levenshtein similarity filter runs INSIDE the term_dict scan — the
@@ -165,16 +155,28 @@ def build_sections(spark, e, sf):
         ),
         (
             "bool_and",
-            "Boolean AND (`+table +spark`)",
+            "Boolean AND, exact plan (`+table +spark`, pruning=off)",
+            s.search("+table +spark", k=10, pruning="off"),
+            "The plan classic scoring, k = 0, sort fields and nested "
+            "Booleans take: both terms decoded in ONE scan (OR-pushed "
+            "filter), map-side partial aggregation, a single hash "
+            "exchange on doc_id, required-count filter, TakeOrdered.",
+        ),
+        (
+            "bool_and_cogroup",
+            "Boolean AND, routed (`+table +spark`, range kernel)",
             s.search("+table +spark", k=10),
-            "Both terms decoded in ONE scan (OR-pushed filter), "
-            "map-side partial aggregation, a single hash exchange on "
-            "doc_id, required-count filter, TakeOrdered.",
+            "What 'auto' serves every BM25 top-k multi-term shape (OR, "
+            "AND, AND-NOT): the compressed block binaries shuffle ONCE "
+            "grouped by 8192-doc ranges (one Exchange + one "
+            "FlatMapGroupsInPandas, no MapInPandas, no join); each "
+            "range decodes, intersects, scores and emits its own exact "
+            "top-k.",
         ),
         (
             "phrase",
-            "Exact phrase (`\"fast value\"`)",
-            s.search('"fast value"', k=10),
+            "Exact phrase, exact plan (`\"fast value\"`, pruning=off)",
+            s.search('"fast value"', k=10, pruning="off"),
             "Positions read only here (pos_bin joins the ReadSchema); "
             "one groupBy pivot to per-term position arrays (single "
             "shuffle), vectorized freq kernel evaluated ONCE "
@@ -183,8 +185,8 @@ def build_sections(spark, e, sf):
         ),
         (
             "bool_not",
-            "Boolean NOT (`+table -vector`)",
-            s.search("+table -vector", k=10),
+            "Boolean NOT, exact plan (`+table -vector`, pruning=off)",
+            s.search("+table -vector", k=10, pruning="off"),
             "Merged-scan NOT (round 5): the prohibited term rides in "
             "the SAME pushed-down scan + decode as the scorable terms "
             "with value 0, and the aggregate's max(_pro) flag filters "
@@ -208,14 +210,14 @@ def build_sections(spark, e, sf):
             "scoped_and",
             "Conversation-scoped conjunction (`+conv_id:X +text:table`)",
             _scoped_df(e, spark, sf),
-            "Conjunction narrowing (bucket quantum forced small for "
-            "the tiny sf0.01 corpus — the production gate engages at "
-            "df·256 ≤ N): the driver reads the rare conv_id term's doc "
-            "ids with pyarrow, and they reach the scan as a "
-            "[doc_base, max_docid] range predicate and the decode "
-            "kernel as a broadcast candidate set (blocks without a "
-            "candidate skipped, other rows dropped). Same plan shape "
-            "as the unnarrowed AND: no join, no extra job.",
+            "The routed range kernel, narrowed (bucket quantum forced "
+            "small for the tiny sf0.01 corpus — the production gate "
+            "engages at df·256 ≤ N): the driver reads the rare conv_id "
+            "term's doc ids with pyarrow; they reach the scan as a "
+            "[doc_base, max_docid] range predicate, and a filter keeps "
+            "only the 8192-doc ranges holding a candidate, so no other "
+            "range reaches the shuffle. Same plan shape as the "
+            "unnarrowed AND: no join, no extra job.",
         ),
         (
             "scoped_phrase",
@@ -231,9 +233,9 @@ def build_sections(spark, e, sf):
         ),
         (
             "phrase_cogroup",
-            "Co-grouped phrase kernel (`\"fast value\"`, range kernel)",
-            _phrase_cogroup_df(e, spark, sf),
-            "The hot-hot phrase plan at scale: compressed position "
+            "Exact phrase, routed (`\"fast value\"`, range kernel)",
+            s.search('"fast value"', k=10),
+            "What 'auto' serves every BM25 top-k phrase: compressed position "
             "binaries shuffle ONCE grouped by 8192-doc ranges "
             "(one Exchange + one FlatMapGroupsInPandas, no "
             "ArrowEvalPython, no per-posting row exchange); each range "
