@@ -89,6 +89,15 @@ _DECODE_POS_SCHEMA = StructType(
 )
 
 
+def _cand_span_cond(cand: np.ndarray):
+    """Scan predicate keeping the posting blocks whose doc span overlaps
+    the sorted candidate ids ``cand`` (pushed down on doc_base and
+    max_docid); no block for an empty set."""
+    if not len(cand):
+        return F.lit(False)
+    return (F.col("doc_base") <= int(cand[-1])) & (F.col("max_docid") >= int(cand[0]))
+
+
 def decode_postings(
     index: SparkIndex,
     terms: list[Term],
@@ -141,11 +150,7 @@ def decode_postings(
         if index.tombstones is not None:
             cand = np.setdiff1d(cand, index.tombstones, assume_unique=True)
         cols.append("max_docid")
-        cond = cond & (
-            (F.col("doc_base") <= int(cand[-1])) & (F.col("max_docid") >= int(cand[0]))
-            if len(cand)
-            else F.lit(False)
-        )
+        cond = cond & _cand_span_cond(cand)
     blocks = index.postings.where(cond).select(*cols)
     schema = _DECODE_POS_SCHEMA if need_positions else _DECODE_SCHEMA
     # broadcasts, not closure captures: the id sets can be MBs and must
@@ -468,7 +473,8 @@ class SparkSearcher:
           term below AUTO_PRUNING_MIN_DF keeps the exact plan. Without
           the presence join the range kernels run 2 jobs to the exact
           plan's 2 and measured faster on every multi-term and phrase
-          row tried at 4k docs (BASELINE.md §10.8);
+          row at 4k-200k Zipf docs and 868k-4.34M turns (BASELINE.md
+          §10.8);
         - ``'force'`` — the same routed plan, WAND's df gate ignored
           (bench/validation). It never selects a plan 'auto' cannot
           reach.
@@ -1042,9 +1048,10 @@ def _collect_terms(q: Query) -> list[Term]:
 # ------------------------------------------------- block-max top-k path
 
 AUTO_PRUNING_MIN_DF = 65536  # 'auto' routes a single term to WAND from
-# this df on: forced WAND matched the exact plan on `w1` at 200k Zipf
-# docs and beat it 3x on `w1` and `w50` at 4M (BASELINE.md §10.6); below
-# this df no size was measured where WAND wins
+# this df on: WAND read 0.288 s vs exact 0.306 s on `w1` at 200k Zipf
+# docs, 0.270 vs 0.335 s on `table` at 868k turns (BASELINE.md §10.8)
+# and beat exact 3x on `w1` and `w50` at 4M (§10.6); below this df no
+# size was measured where WAND wins
 
 
 def _pruned_shape(
@@ -1366,13 +1373,9 @@ def _range_blocks(index: SparkIndex, terms, req_terms, *cols) -> DataFrame:
     cond = _terms_cond(terms)
     cand = _candidate_docs(index, req_terms) if req_terms else None
     if cand is not None:
-        cond &= (
-            (F.col("doc_base") <= int(cand[-1]))
-            & (F.col("max_docid") >= int(cand[0]))
-            & rng.isin(np.unique(cand // BLOCK_DOC_RANGE).tolist())
-            if len(cand)
-            else F.lit(False)
-        )
+        cond &= _cand_span_cond(cand)
+        if len(cand):
+            cond &= rng.isin(np.unique(cand // BLOCK_DOC_RANGE).tolist())
     return index.postings.where(cond).select(*cols, rng.alias("_rng"))
 
 

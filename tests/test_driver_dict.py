@@ -477,20 +477,27 @@ def test_deleted_docs_never_match(plain_and_deleted):
 
 def test_one_tombstone_broadcast_per_refresh(plain_and_deleted):
     """Queries on a tombstoned index reuse the index's tombstone
-    broadcast. PySpark keeps each broadcast's value in a file under the
-    context's temp dir until it is destroyed, so a broadcast per query
-    would leave a file per query behind; a refresh destroys the old one."""
+    broadcast, on the range kernel (``'auto'``) and on the exact decode
+    (``'off'``) alike. PySpark keeps each broadcast's value in a file
+    under the context's temp dir until it is destroyed, so a broadcast
+    per query would leave a file per query behind; a refresh destroys
+    the old one."""
     ix = plain_and_deleted[0]
     tmp = ix.spark.sparkContext._temp_dir
     searcher = SparkSearcher(ix)
-    searcher.search("text:spark text:index", k=10).collect()
+    qstr = "text:spark text:index"
+    # start from one live broadcast: the refresh also destroys the
+    # candidate sets earlier tests left, which would mask a leak below
+    ix.refresh_tombstones()
+    searcher.search(qstr, k=10).collect()
     before = len(os.listdir(tmp))
-    for _ in range(20):
-        searcher.search("text:spark text:index", k=10).collect()
+    for pruning in ("auto", "off"):
+        for _ in range(10):
+            searcher.search(qstr, k=10, pruning=pruning).collect()
+        assert len(os.listdir(tmp)) == before, pruning
+    ix.refresh_tombstones()
+    searcher.search(qstr, k=10, pruning="off").collect()
     assert len(os.listdir(tmp)) == before
-    ix.refresh_tombstones()  # also destroys earlier tests' candidate sets
-    searcher.search("text:spark text:index", k=10).collect()
-    assert len(os.listdir(tmp)) <= before
 
 
 def test_one_candidate_broadcast_per_set(plain_and_deleted, monkeypatch):
